@@ -12,9 +12,17 @@ Two hash families, chosen per use:
 ANSI-mode care (Spark 4 default): all modular arithmetic is kept below 2^62
 so bigint multiplication never overflows; ``sequence()`` is guarded so a
 short document can't produce a descending sequence.
+
+The JVM expressions ``tokens``, ``word_shingles``, ``md5_hash60`` and
+``md5_hash56`` are the gram-format spec the DuckDB oracles mirror. Their
+Python twins :func:`grams`, :func:`md5_60` and :func:`md5_56` are the one
+kernel that every Arrow-side gram pass in the operators reduces over, so
+each engine encodes the format once.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under future-annotations
 from pyspark.sql import Column, functions as F
@@ -67,6 +75,35 @@ def md5_hash56(s: Column, part: int = 0) -> Column:
     return F.conv(F.substring(F.md5(s), 1 + 14 * part, 14), 16, 10).cast("long")
 
 
+def grams(text, k: int, distinct: bool = True) -> list[str]:
+    """Python twin of ``word_shingles(tokens(text), k)``: the k-token windows
+    of ``text`` split on single spaces, joined by one space. ``distinct``
+    keeps each window's first occurrence, in order (the spec's
+    ``array_distinct``); ``distinct=False`` keeps every window position.
+    Null text and texts with fewer than k tokens give ``[]``, so for
+    k >= 1 an empty result means exactly "null or shorter than k"."""
+    if not isinstance(text, str):
+        return []
+    w = text.split(" ")
+    g = (" ".join(w[i : i + k]) for i in range(len(w) - k + 1))
+    return list(dict.fromkeys(g) if distinct else g)
+
+
+def md5_60(strs) -> list[int]:
+    """Python twin of :func:`md5_hash60` over each string: md5 of the UTF-8
+    bytes (what the JVM ``md5`` hashes), first 15 hex chars as a long."""
+    md5 = hashlib.md5
+    return [int(md5(s.encode()).hexdigest()[:15], 16) for s in strs]
+
+
+def md5_56(strs) -> tuple[list[int], list[int]]:
+    """Python twin of ``md5_hash56(s, 0)`` and ``md5_hash56(s, 1)`` over each
+    string, from ONE md5 per string: hex chars [0, 14) and [14, 28)."""
+    md5 = hashlib.md5
+    hexes = [md5(s.encode()).hexdigest() for s in strs]
+    return [int(h[:14], 16) for h in hexes], [int(h[14:28], 16) for h in hexes]
+
+
 def minhash_perms(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the universal hash family
     h_j(x) = (a_j * x + b_j) mod p, a_j in [1, p)."""
@@ -86,11 +123,11 @@ def minhash_signature(shingles: Column, perms: list[tuple[int, int]]) -> Column:
 
     NOTE: fine up to ~32 permutations; beyond that the generated code for the
     nested lambdas exceeds the JIT/codegen budget and Catalyst falls back to
-    interpreted evaluation (~100x slower). Operators default to
+    interpreted evaluation (~100x slower). ``minhash_lsh_pairs`` runs
     ``minhash_signature_map`` (JVM base hashes + numpy mod-min, shuffle-free)
-    for the full-width signature, with ``minhash_signature_agg`` (explode +
-    128 independent min-aggregates) as the Python-worker-free fallback —
-    both bit-identical to this expression form (test-pinned).
+    for the full-width signature; ``minhash_signature_agg`` (explode + 128
+    independent min-aggregates) is the pure-JVM reference — both
+    bit-identical to this expression form (test-pinned).
     """
     base = shingle_hashes(shingles)
     perms_lit = F.array(
@@ -124,8 +161,8 @@ def minhash_signature_agg(
     consistent with the generated consume() exceeding the JVM's
     huge-method JIT limit: 27k exploded rows took 1.3-1.6s warm where
     JIT'd arithmetic would take ~10ms. ``minhash_signature_map`` avoids
-    the question entirely (and the shuffle) and is the operators'
-    default; this form remains for Python-worker-free clusters.
+    the question entirely (and the shuffle) and is what the operators
+    run; this form remains the pure-JVM reference the tests pin it to.
     """
     p = F.lit(MERSENNE_P)
     exploded = sets.select(
@@ -175,8 +212,9 @@ def minhash_signature_map(
     to >= 1 window) and skips the empty-set filter. Plan rationale (r15
     optimization, guide §4.4): on an UN-checkpointed Arrow-shingler
     input, Catalyst pushes ``size(sh) > 0`` below the projection by
-    duplicating the shingle UDF, shingling every document twice — see
-    ``dedup.simhash_signatures_wide_map`` for the measured effect.
+    duplicating the shingle UDF, shingling every document twice (measured
+    on the r15 simhash map form: dedup_simhash 1.78 -> 1.36 s median at
+    sf0.1, n=5, once the duplicate eval was gone).
     Results are identical on inputs honoring the declaration."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -217,149 +255,6 @@ def minhash_signature_map(
         .select(F.col(id_col).alias("id"), base_hashes(F.col(shingle_col)).alias("hs"))
     )
     return hashed.select("id", _sig(F.col("hs")).alias("sig"))
-
-
-def minhash_signature_map_fused(
-    sets,  # DataFrame with (id, sh) columns
-    perms: list[tuple[int, int]],
-    id_col: str = "id",
-    shingle_col: str = "sh",
-    input_nonempty: bool = False,
-):
-    """(id, sig) in ONE Arrow pass: XXH64 base hashes + mod-min in numpy.
-
-    Bit-identical to ``minhash_signature_map`` with the default xxhash64
-    ``base_hashes`` (test-pinned): :mod:`..functions.xxh64_np` reproduces
-    Spark's ``xxhash64`` exactly, so the hash family — and therefore every
-    LSH band collision downstream — is unchanged. The per-gram base hash
-    leaves the interpreted ``transform(sh, s -> pmod(xxhash64(s), p))``
-    higher-order function and fuses with the mod-min reduction into a
-    single ``mapInArrow`` pass that reads the gram bytes straight from
-    the Arrow values buffer — no per-gram Python string objects, no
-    second JVM->Python crossing.
-
-    MEASURED NEGATIVE (r16, pinned — the split form stays the production
-    default): sf0.1 sig stage 0.338 (split) vs 0.332 s (wash) and a 20x
-    replica 0.77 vs 1.07 s (interleaved, idle, fused loses every pair).
-    Spark's xxhash64 is a fast native intrinsic even inside the
-    interpreted HOF, and this fusion trades the split form's 8 B/gram
-    *long* crossing for a ~25 B/gram *string* crossing — more Arrow bytes
-    than the HOF costs. Kept (with its Spark-parity test pins) because
-    the trade flips wherever the gram strings must cross the boundary
-    anyway or the JVM is not available to hash; the reduceat mod-min
-    this kernel introduced now also powers ``minhash_signature_map``.
-
-    Contract: shingle arrays and their elements must be non-null
-    (``shingle_sets`` output satisfies both); rows reaching the kernel
-    must have non-empty shingle sets (``input_nonempty=True`` asserts the
-    caller guarantees it, otherwise a JVM-side size filter is applied
-    first, exactly as in ``minhash_signature_map``).
-    """
-    import numpy as np
-
-    a_np = np.asarray([ab[0] for ab in perms], dtype=np.int64)
-    b_np = np.asarray([ab[1] for ab in perms], dtype=np.int64)
-    num_perm = len(perms)
-
-    src = sets if input_nonempty else sets.filter(F.size(F.col(shingle_col)) > 0)
-    proj = src.select(F.col(id_col).alias("id"), F.col(shingle_col).alias("sh"))
-    id_type = proj.schema["id"].dataType.simpleString()
-
-    def _fused(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from kafka_custom_transforms_spark.functions.xxh64_np import (
-            _xxh64_mat,
-            xxh64_short,
-        )
-
-        # Keep the (grams x num_perm) permutation matrix cache-resident:
-        # 2^13 grams x 128 perms x 8 B = 8 MB per reduceat chunk (measured
-        # 1.4x faster than a 64 MB chunk — the three passes over the
-        # chunk run from L2/L3 instead of DRAM).
-        chunk_grams = 1 << 13
-
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            ids = batch.column(0)
-            sh = batch.column(1)
-            flat = sh.values
-            if sh.null_count or flat.null_count:
-                raise ValueError(
-                    "minhash_signature_map_fused: null shingle arrays/"
-                    "elements are outside the shingle_sets contract"
-                )
-            # List offsets -> logical gram index range of this batch
-            # (buffers are shared across slices; account for .offset).
-            lo = np.frombuffer(
-                sh.buffers()[1], dtype="<i4", count=len(sh) + 1 + sh.offset
-            )[sh.offset :].astype(np.int64)
-            g0, g1 = int(lo[0]), int(lo[-1])
-            counts = np.diff(lo)
-            if counts.min() <= 0:
-                raise ValueError(
-                    "minhash_signature_map_fused: empty shingle set reached "
-                    "the fused kernel (caller must filter or declare "
-                    "input_nonempty only when true)"
-                )
-            off_dtype = "<i8" if pa.types.is_large_string(flat.type) else "<i4"
-            so = np.frombuffer(
-                flat.buffers()[1], dtype=off_dtype, count=len(flat) + 1 + flat.offset
-            )[flat.offset :].astype(np.int64)
-            data = np.frombuffer(flat.buffers()[2], dtype=np.uint8)
-            gl = so[g0 + 1 : g1 + 1] - so[g0 : g1]  # per-gram byte lengths
-            n_grams = g1 - g0
-
-            # Hash the gram bytes IN PLACE in the Arrow values buffer when
-            # every gram is < 32 bytes (virtually always for word
-            # shingles): xxh64_short gathers each gram's 32-byte window
-            # straight from the shared buffer — no padded matrix, no
-            # scatter, garbage past each gram's length is never read into
-            # the result. Long grams fall back to the padded-matrix path.
-            max_len = int(gl.max())
-            if max_len < 32:
-                if data.size < int(so[g1]) + 31:
-                    data = np.concatenate([data, np.zeros(32, dtype=np.uint8)])
-                hv = xxh64_short(data, so[g0:g1], gl, 42)
-            else:
-                width = ((max_len + 31) // 32) * 32 + 32
-                mat = np.zeros((n_grams, width), dtype=np.uint8)
-                mat[np.arange(width)[None, :] < gl[:, None]] = data[
-                    int(so[g0]) : int(so[g1])
-                ]
-                hv = _xxh64_mat(mat, gl, 42)
-            hv = hv % MERSENNE_P  # floored == Spark pmod
-
-            starts = np.zeros(n, dtype=np.int64)
-            np.cumsum(counts[:-1], out=starts[1:])
-            sig = np.empty((n, num_perm), dtype=np.int64)
-            d0 = 0
-            gbase = 0
-            while d0 < n:
-                d1 = d0 + 1
-                g = int(counts[d0])
-                while d1 < n and g + counts[d1] <= chunk_grams:
-                    g += int(counts[d1])
-                    d1 += 1
-                big = hv[gbase : gbase + g, None] * a_np
-                big += b_np
-                big %= MERSENNE_P
-                sig[d0:d1] = np.minimum.reduceat(big, starts[d0:d1] - gbase, axis=0)
-                gbase += g
-                d0 = d1
-
-            sig_col = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * num_perm, num_perm, dtype=np.int32)
-                ),
-                pa.array(sig.ravel()),
-            )
-            yield pa.RecordBatch.from_arrays([ids, sig_col], ["id", "sig"])
-
-    return proj.mapInArrow(_fused, schema=f"id {id_type}, sig array<bigint>")
 
 
 def band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:

@@ -21,7 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kafka_custom_transforms_spark.operators.dedup import shingle_sets
+from kafka_custom_transforms_spark.functions.texthash import grams, md5_60
+from kafka_custom_transforms_spark.operators.dedup import _text_fanout, shingle_sets
 
 __all__ = ["contamination_flags", "bloom_contamination_flags"]
 
@@ -43,36 +44,27 @@ def _bloom_bits(g, k_hashes: int, m_bits: int):
 def _bloom_probe_rows(k: int, m_bits: int, k_hashes: int):
     """mapInPandas generator: one (id, b1..bk) row per distinct k-gram of
     each document — tokenize, shingle, and ALL k md5 bit probes in one
-    Arrow pass (r16, guide §4.1/§4.2). hashlib md5 of the same UTF-8
-    bytes is bit-identical to the JVM md5 and ``int(hexdigest()[:15],16)
-    % m_bits`` equals ``md5_hash60(concat(lit(f"{j}:"), g)) % m_bits``
-    (both operands non-negative) — the exact :func:`_bloom_bits` values,
-    so the oracle's bit replay is untouched. Replaces the shape that
-    shipped the gram STRINGS back to the JVM just to explode them and
-    hash each three times in codegen. Docs with < k tokens emit nothing
-    (the caller's resurrection join zero-fills them)."""
-    import hashlib
-
+    Arrow pass over the ``texthash`` kernel (r16, guide §4.1/§4.2).
+    ``md5_60(f"{j}:" + g) % m_bits`` equals the JVM spec
+    ``md5_hash60(concat(lit(f"{j}:"), g)) % m_bits`` (both operands
+    non-negative) — the exact :func:`_bloom_bits` values, so the oracle's
+    bit replay is untouched. Replaces the shape that shipped the gram
+    STRINGS back to the JVM just to explode them and hash each three
+    times in codegen. Null and sub-k docs emit nothing (the caller's
+    resurrection join zero-fills them)."""
     import pandas as pd
 
     def gen(batches):
-        md5 = hashlib.md5
         for pdf in batches:
             ids = []
             cols: dict[str, list[int]] = {f"b{j}": [] for j in range(1, k_hashes + 1)}
             for did, t in zip(pdf["id"], pdf["_txt"]):
-                w = t.split(" ") if isinstance(t, str) else []
-                if len(w) < k:
-                    continue
-                for g in dict.fromkeys(
-                    " ".join(w[i : i + k]) for i in range(len(w) - k + 1)
-                ):
-                    ids.append(did)
-                    for j in range(1, k_hashes + 1):
-                        cols[f"b{j}"].append(
-                            int(md5((f"{j}:" + g).encode()).hexdigest()[:15], 16)
-                            % m_bits
-                        )
+                gs = grams(t, k)
+                ids.extend([did] * len(gs))
+                for j in range(1, k_hashes + 1):
+                    cols[f"b{j}"].extend(
+                        h % m_bits for h in md5_60(f"{j}:{g}" for g in gs)
+                    )
             if ids:
                 yield pd.DataFrame({"id": ids, **cols})
 
@@ -123,10 +115,6 @@ def bloom_contamination_flags(
     importance_scores / duplicate_spans).
     """
     bench_text = bench_text_col or text_col
-    from kafka_custom_transforms_spark.functions.skew import ensure_min_partitions
-    from kafka_custom_transforms_spark.operators.dedup import SHINGLE_FANOUT_CAP
-
-    fan = min(SHINGLE_FANOUT_CAP, docs.sparkSession.sparkContext.defaultParallelism)
     # The BENCH side runs the same fused probe kernel as the corpus side
     # (r16, guide §2.4): tokenize + shingle + all k md5 bit positions in
     # one Arrow pass, then one distinct over the exploded bit columns.
@@ -138,11 +126,8 @@ def bloom_contamination_flags(
     # to the JVM md5_hash60 family (probe-kernel docstring; test-pinned),
     # so the filter — false positives included — is byte-for-byte the
     # oracle's.
-    bench_probes = ensure_min_partitions(
-        benchmark.select(
-            F.lit(0).alias("id"), F.col(bench_text).alias("_txt")
-        ),
-        fan,
+    bench_probes = _text_fanout(
+        benchmark, F.lit(0).alias("id"), F.col(bench_text).alias("_txt")
     ).mapInPandas(
         _bloom_probe_rows(ngram, m_bits, k_hashes),
         schema=", ".join(
@@ -166,9 +151,7 @@ def bloom_contamination_flags(
         .localCheckpoint(eager=False)
     )
     id_t = docs.schema[id_col].dataType.simpleString()
-    src = ensure_min_partitions(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt")), fan
-    )
+    src = _text_fanout(docs, F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
     probe_schema = ", ".join(
         [f"id {id_t}"] + [f"b{j} long" for j in range(1, k_hashes + 1)]
     )

@@ -44,10 +44,12 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from kafka_custom_transforms_spark.functions.texthash import (
     MERSENNE_P,
     band_hashes,
+    grams,
+    md5_56,
+    md5_60,
     md5_hash56,
     md5_hash60,
     minhash_perms,
-    minhash_signature_agg,
     minhash_signature_map,
     tokens,
     word_shingles,
@@ -149,6 +151,28 @@ SHINGLE_FANOUT_CAP = 16
 BROADCAST_SCORE_PARTITION_CAP = 8
 
 
+def _text_fanout(
+    df: DataFrame, *cols: Column, text_col: str | None = None, min_tokens: int = 0
+) -> DataFrame:
+    """The preamble of every Python gram pass: keep documents with at least
+    ``min_tokens`` tokens of ``text_col`` (when given), project to ``cols``
+    (when given), then fan out to min(SHINGLE_FANOUT_CAP,
+    defaultParallelism) partitions. A one-file corpus scans as 1-2 tasks,
+    which would serialize the gram pass on 1-2 cores; projecting first
+    ships only what the pass needs through the round-robin (guide §2.3,
+    §2.6). No-op at cluster scale: ensure_min_partitions only ADDS
+    partitions."""
+    from kafka_custom_transforms_spark.functions.skew import ensure_min_partitions
+
+    if min_tokens:
+        df = df.filter(F.size(tokens(F.col(text_col))) >= min_tokens)
+    if cols:
+        df = df.select(*cols)
+    return ensure_min_partitions(
+        df, min(SHINGLE_FANOUT_CAP, df.sparkSession.sparkContext.defaultParallelism)
+    )
+
+
 def shingle_sets(
     df: DataFrame,
     id_col: str,
@@ -159,21 +183,18 @@ def shingle_sets(
 ) -> DataFrame:
     """(id, shingles) with empty-shingle docs removed (shorter than k words).
 
-    Shingling (array slice + concat per window) is the CPU hot spot of every
-    text-dedup pipeline and runs as interpreted higher-order functions
-    (SCALE.md: HOF lambdas don't codegen), so degenerate scan parallelism —
-    one small parquet file scanning as one task — serializes it on a single
-    core. ensure_min_partitions fans it out locally and is a no-op at
-    cluster scale.
+    Shingling is the CPU hot spot of every text-dedup pipeline, so
+    degenerate scan parallelism — one small parquet file scanning as one
+    task — would serialize it on a single core; :func:`_text_fanout` fans
+    it out locally and is a no-op at cluster scale.
 
-    ``shingler`` picks the route (r3 verdict #6): ``"arrow"`` (default,
-    measured ~5x faster per core locally — see :func:`_shingle_udf`) runs
-    Python workers in the hot path; ``"jvm"`` is the pure-JVM
-    higher-order-function expression (:func:`word_shingles`) for clusters
-    where Python worker startup/transfer dominates or Python workers are
-    unavailable. Output is bit-identical (insertion-ordered distinct —
-    equality test-pinned on the minhash oracle), so the choice never
-    affects results.
+    ``shingler`` picks the route: ``"arrow"`` (default, measured ~5x faster
+    per core locally — see :func:`_shingle_udf`) runs the Python kernel
+    ``texthash.grams``; ``"jvm"`` is the pure-JVM spec expression
+    (:func:`word_shingles`), which the benchmark's traced stage split runs
+    because its stages are public functions. Output is bit-identical
+    (insertion-ordered distinct, test-pinned), so the choice never affects
+    results.
 
     ``nondet=True`` marks the Arrow shingler non-deterministic (guide
     §4.4, r15 optimization; same device as ``functions.vector.cosine``).
@@ -187,8 +208,6 @@ def shingle_sets(
     because it also blocks pushing CALLER-written filters on derived
     columns past the projection — the dedup pipelines instead break the
     pushdown with a checkpoint or the ``input_nonempty`` declaration."""
-    from kafka_custom_transforms_spark.functions.skew import ensure_min_partitions
-
     if shingler not in ("arrow", "jvm"):
         raise ValueError(f"shingler must be 'arrow' or 'jvm', got {shingler!r}")
 
@@ -198,11 +217,7 @@ def shingle_sets(
     # substituting the alias, which would re-evaluate the whole interpreted
     # shingling expression on the unparallelized scan side (measured: the
     # single-task duplicate eval dominated the signature job).
-    spark = df.sparkSession
-    target = min(SHINGLE_FANOUT_CAP, spark.sparkContext.defaultParallelism)
-    filtered = ensure_min_partitions(
-        df.filter(F.size(tokens(F.col(text_col))) >= k), target
-    )
+    filtered = _text_fanout(df, text_col=text_col, min_tokens=k)
     if shingler == "jvm":
         sh = word_shingles(tokens(F.col(text_col)), k)
     else:
@@ -212,32 +227,19 @@ def shingle_sets(
 
 @functools.lru_cache(maxsize=8)
 def _shingle_udf(k: int, nondet: bool = False):
-    """Arrow-vectorized k-shingler. Python string slicing beats the
+    """Arrow-vectorized k-shingler over ``texthash.grams``: null and sub-k
+    texts give ``[]``. Python string slicing beats the
     F.transform/slice/concat_ws expression ~5x per core (measured at sf0.1:
     0.8 s vs 4.2 s single-task for 5000 docs / 260k shingles) because
     higher-order-function lambdas run interpreted with per-window object
     churn, while this is one tight loop per Arrow batch. Output is
-    bit-identical to :func:`word_shingles` (insertion-ordered distinct —
-    both keep first occurrence; tests pin equality), so the SQL oracle is
-    unaffected. Trade-off flag: this puts Python workers in the hot path
-    of the shingle-based dedup operators; on a cluster where Python
-    worker startup/transfer dominates (many small tasks) or a Spark build
-    with faster HOF codegen, swap in the pure-JVM
-    :func:`functions.texthash.word_shingles` route — results identical."""
+    bit-identical to :func:`word_shingles` (tests pin equality), so the SQL
+    oracle is unaffected."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
     def shingle(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            w = t.split(" ")
-            if len(w) < k:
-                out.append([])
-            else:
-                out.append(
-                    list(dict.fromkeys(" ".join(w[i : i + k]) for i in range(len(w) - k + 1)))
-                )
-        return pd.Series(out)
+        return pd.Series([grams(t, k) for t in texts])
 
     # Marked inside the factory (nondet is part of the lru_cache key):
     # UserDefinedFunction.asNondeterministic mutates the instance, so
@@ -255,7 +257,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     seed: int = 42,
     checkpoint: str = "local",
-    shingler: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate pairs (a_id, b_id) with exact Jaccard >= threshold,
     found via MinHash/LSH candidates and exactly verified.
@@ -278,39 +279,33 @@ def minhash_lsh_pairs(
     # self-join. Materialize each once (both are small: one row per doc /
     # 'bands' rows per doc) instead of recomputing the upstream pipeline
     # per consumer.
-    sets = _materialize(shingle_sets(df, id_col, text_col, shingle_k, shingler), checkpoint)
+    sets = _materialize(shingle_sets(df, id_col, text_col, shingle_k), checkpoint)
     perms = minhash_perms(num_perm, seed)
     # Checkpoint the compact signatures (one row per doc), not the exploded
     # bucket rows (bands x docs) — measured 2x faster end-to-end; the band
     # derivation from materialized signatures is cheap to run per join side.
-    # Signature form follows the shingler trade-off flag: the Arrow map form
-    # (no explode, no shuffle, numpy mod-min) is bit-identical to the agg
-    # form but skips both the 50x explode amplification and the 128-min
-    # aggregate whose generated method runs at bytecode-interpreter speed
-    # (too large to JIT — measured in texthash.minhash_signature_agg);
-    # 'jvm' keeps Python workers fully out of the pipeline.
+    # The Arrow map form (no explode, no shuffle, numpy mod-min) is
+    # bit-identical to the agg form but skips both the 50x explode
+    # amplification and the 128-min aggregate whose generated method runs
+    # at bytecode-interpreter speed (too large to JIT — measured in
+    # texthash.minhash_signature_agg).
     # input_nonempty=True: shingle_sets output rows are non-empty by its
     # >= k-token filter (here the sets checkpoint also already blocks UDF
     # duplication; the skipped filter is just a vacuous pass over the
     # checkpoint read).
     # r16 NEGATIVE A/B (pinned, do not retry): a fully-fused signature
-    # kernel — tokenless xxh64 reproduced bit-exactly in numpy
-    # (functions.xxh64_np) so base hash + mod-min run in ONE mapInArrow
-    # pass over the shingle arrays (texthash.minhash_signature_map_fused)
-    # — LOSES to this split shape both at sf0.1 (wash, 0.338 vs 0.332
-    # median) and 2:1 at a 20x replica (0.77 vs 1.07 s sig stage,
-    # interleaved, idle): Spark's xxhash64 is a fast native intrinsic
-    # even under the interpreted transform() HOF, and the fusion trades
-    # an 8 B/gram long crossing for a ~25 B/gram STRING crossing — the
-    # extra Arrow bytes cost more than the HOF saves. What DID transfer
-    # from that work: the split kernel's Python side now runs the
-    # batch-flattened reduceat mod-min (see _sig in texthash) instead of
-    # a per-document loop.
-    if shingler == "arrow":
-        raw_sig = minhash_signature_map(sets, perms, input_nonempty=True)
-    else:
-        raw_sig = minhash_signature_agg(sets, perms)
-    sig = _materialize(raw_sig, checkpoint)
+    # kernel — xxh64 reproduced bit-exactly in numpy so base hash + mod-min
+    # run in ONE mapInArrow pass over the shingle arrays (deleted since;
+    # OPTIMIZATION_r16.md and git history keep it) — LOSES to this split
+    # shape both at sf0.1 (wash, 0.338 vs 0.332 median) and 2:1 at a 20x
+    # replica (0.77 vs 1.07 s sig stage, interleaved, idle): Spark's
+    # xxhash64 is a fast native intrinsic even under the interpreted
+    # transform() HOF, and the fusion trades an 8 B/gram long crossing
+    # for a ~25 B/gram STRING crossing — the extra Arrow bytes cost more
+    # than the HOF saves. The split kernel's Python side keeps its
+    # per-document mod-min loop: a batch-flattened reduceat lost its own
+    # A/B ~2x (see _sig in texthash.minhash_signature_map).
+    sig = _materialize(minhash_signature_map(sets, perms, input_nonempty=True), checkpoint)
     buckets = sig.select(
         "id", F.explode(band_hashes(F.col("sig"), bands, r)).alias("b")
     ).select("id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
@@ -424,7 +419,6 @@ def ngram_jaccard_pairs(
     shingle_k: int = 3,
     threshold: float = 0.5,
     checkpoint: str = "local",
-    shingler: str = "arrow",
 ) -> DataFrame:
     """Exact Jaccard >= threshold pairs via a prefix-filtered inverted index.
 
@@ -438,7 +432,7 @@ def ngram_jaccard_pairs(
     window (keyed by id), prefix equi-join (rare keys by construction),
     candidate distinct, two verify joins on id. No cross join anywhere.
     """
-    sets = _materialize(shingle_sets(df, id_col, text_col, shingle_k, shingler), checkpoint)
+    sets = _materialize(shingle_sets(df, id_col, text_col, shingle_k), checkpoint)
     cand = prefix_filter_candidates(sets, threshold)
     return _verify_jaccard(sets, cand, threshold)
 
@@ -481,7 +475,6 @@ def simhash_pairs(
     max_hamming: int = 5,
     chunks: int = 10,
     checkpoint: str = "local",
-    shingler: str = "arrow",
 ) -> DataFrame:
     """Pairs with SimHash hamming distance <= max_hamming.
 
@@ -498,7 +491,7 @@ def simhash_pairs(
         raise ValueError("bits must be divisible by chunks")
     w = bits // chunks
     mask = (1 << w) - 1
-    sets = shingle_sets(df, id_col, text_col, shingle_k, shingler)
+    sets = shingle_sets(df, id_col, text_col, shingle_k)
     # Materialize the signatures (one small row per doc): both sides of the
     # banded self-join would otherwise recompute the explode+agg pipeline.
     sigs = _materialize(simhash_signatures(sets, bits), checkpoint)
@@ -531,122 +524,44 @@ def simhash_pairs(
     )
 
 
-def simhash_signatures_wide_map(
-    sets: DataFrame, bits_per_long: int = 56, n_longs: int = 2,
-    input_nonempty: bool = False,
-) -> DataFrame:
-    """(id, sig0, sig1) as a pure per-doc MAP — no explode, no shuffle.
-
-    The wide-SimHash analogue of ``texthash.minhash_signature_map``: the
-    md5 base hashes stay JVM-side (DuckDB bit-parity untouched — same
-    ``md5_hash56`` halves the agg form uses), and the per-bit majority
-    votes run as one numpy pass per Arrow batch. Bit-identical to
-    :func:`simhash_signatures_wide` (pinned in tests/test_dedup.py):
-    vote positive iff 2*set_count > n_shingles, ties vote 0. Rows with
-    empty shingle sets are dropped, matching the agg form. Docs with
-    >= 32768 shingles raise the agg form's ValueError too — numpy has no
-    lane-counter limit, but the two forms must fail identically so a
-    pipeline validated on one can switch to the other.
-
-    ``input_nonempty=True`` declares that every input row already has a
-    non-empty shingle set — true by construction for :func:`shingle_sets`
-    output (it keeps only docs with >= k tokens, which always shingle to
-    >= 1 window) — and skips the empty-set filter. This is a PLAN fix,
-    not just a micro-skip (r15 optimization, guide §4.4): when ``sets``
-    is the un-checkpointed Arrow shingler output, Catalyst pushes the
-    ``size(sh) > 0`` filter below the projection by DUPLICATING the
-    shingle UDF, so every document was being shingled twice (two
-    ArrowEvalPython nodes; measured idle at sf0.1: dedup_simhash 1.78 ->
-    1.36 s median, n=5, once the duplicate eval is gone). Identical results
-    on any input that honors the declaration; the default keeps the
-    drop-empty contract for arbitrary frames."""
-    if n_longs != 2 or bits_per_long != 56:
-        raise ValueError("wide signatures are fixed at 2 x 56 bits (one md5)")
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    def _half(part: int):
-        # NOT `lambda s, part=part: ...`: F.transform treats a two-parameter
-        # lambda as (element, index) and would bind the array INDEX column
-        # over the default.
-        return lambda s: md5_hash56(s, part)
-
-    hashed = (sets if input_nonempty else sets.filter(F.size(F.col("sh")) > 0)).select(
-        "id",
-        *[F.transform(F.col("sh"), _half(i)).alias(f"h{i}") for i in range(n_longs)],
-    )
-
-    @pandas_udf("array<long>")
-    def _sig(h0: pd.Series, h1: pd.Series) -> pd.Series:
-        shifts = np.arange(bits_per_long, dtype=np.int64)
-        out = []
-        for halves in zip(h0, h1):
-            sig = []
-            for arr in halves:
-                hv = np.asarray(arr, dtype=np.int64)
-                if hv.size >= 32768:
-                    # Behavioral parity with the agg form's 16-bit lane
-                    # limit (numpy itself has none).
-                    raise ValueError(
-                        "simhash_signatures_wide: >32767 shingles in one doc"
-                    )
-                cnt = ((hv[:, None] >> shifts) & 1).sum(axis=0)
-                sig.append(int(((2 * cnt > len(hv)) * (np.int64(1) << shifts)).sum()))
-            out.append(sig)
-        return pd.Series(out)
-
-    return hashed.select("id", _sig("h0", "h1").alias("s")).select(
-        "id", F.col("s")[0].alias("sig0"), F.col("s")[1].alias("sig1")
-    )
-
-
 @functools.lru_cache(maxsize=8)
 def _simhash_text_sig_udf(k: int, bits_per_long: int = 56, n_longs: int = 2):
-    """Merged text -> wide-SimHash signature: tokenize, k-shingle
-    (insertion-ordered distinct), BOTH md5 halves, and the per-bit
-    majority votes in ONE Arrow pass (r16, guide §4.1/§4.2). The split
-    chain (_shingle_udf -> JVM transform(md5_hash56) -> signature
-    pandas_udf) crossed the Python boundary twice — the shingle STRINGS
-    shipped back to the JVM just to be md5'd by an interpreted
+    """Text -> wide-SimHash signature in ONE Arrow pass over the
+    ``texthash`` kernel: distinct k-grams (:func:`grams`), both md5 halves
+    (:func:`md5_56`), and the per-bit majority votes (r16, guide
+    §4.1/§4.2). The split chain (shingler -> JVM transform(md5_hash56) ->
+    signature pandas_udf) crossed the Python boundary twice — the shingle
+    STRINGS shipped back to the JVM just to be md5'd by an interpreted
     higher-order lambda, then the hash longs shipped to Python again for
-    the votes. hashlib.md5 of the same UTF-8 bytes is bit-identical to
-    the JVM md5 (same convention as :func:`_gram_hash_udf`), distinct is
-    applied to the shingle strings BEFORE hashing (vote counts match the
-    split form even under an md5 collision), and the vote rule is the
-    same 2*set_count > n_shingles with ties to 0 — equality with the
-    split chain is test-pinned. Docs with < k tokens yield NULL (callers
-    pre-filter, same contract as shingle_sets). Docs with >= 32768
-    shingles raise, matching both existing forms."""
+    the votes. Distinct is applied to the shingle strings BEFORE hashing
+    (vote counts match the spec even under an md5 collision), and the
+    vote rule is the agg form's 2*set_count > n_shingles with ties to 0 —
+    equality with :func:`simhash_signatures_wide` over the JVM spec is
+    test-pinned. Null and sub-k texts yield NULL (callers pre-filter,
+    same contract as shingle_sets). Docs with >= 32768 shingles raise,
+    matching the agg form's lane limit."""
     if n_longs != 2 or bits_per_long != 56:
         raise ValueError("wide signatures are fixed at 2 x 56 bits (one md5)")
-    import hashlib
-
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def text_sig(texts: pd.Series) -> pd.Series:
-        md5 = hashlib.md5
         shifts = np.arange(bits_per_long, dtype=np.int64)
         lanes = np.int64(1) << shifts
         out = []
         for t in texts:
-            w = t.split(" ") if isinstance(t, str) else []
-            if len(w) < k:
+            gs = grams(t, k)
+            if not gs:
                 out.append(None)
                 continue
-            wins = dict.fromkeys(" ".join(w[i : i + k]) for i in range(len(w) - k + 1))
-            if len(wins) >= 32768:
+            if len(gs) >= 32768:
                 raise ValueError(
                     "simhash_signatures_wide: >32767 shingles in one doc"
                 )
-            hexes = [md5(s.encode()).hexdigest() for s in wins]
             sig = []
-            for lo, hi in ((0, 14), (14, 28)):
-                hv = np.fromiter(
-                    (int(h[lo:hi], 16) for h in hexes), dtype=np.int64, count=len(hexes)
-                )
+            for half in md5_56(gs):
+                hv = np.array(half, dtype=np.int64)
                 cnt = ((hv[:, None] >> shifts) & 1).sum(axis=0)
                 sig.append(int(((2 * cnt > len(hv)) * lanes).sum()))
             out.append(sig)
@@ -871,25 +786,19 @@ def simhash_pairs_wide(
         )
     if chunks is None:
         chunks = 16
-    # Signature form follows the shingler trade-off flag (same rule as the
-    # MinHash pipeline): 'arrow' fuses tokenize + shingle + md5 + votes
-    # into ONE Arrow pass (r16, guide §4.1/§4.2 — the split chain crossed
-    # the Python boundary twice with an interpreted per-shingle md5 HOF
-    # between; see _simhash_text_sig_udf); 'jvm' keeps the explode +
-    # packed-lane aggregate. Bit-identical, test-pinned. The >= k-token
-    # pre-filter and the projection-first fan-out mirror shingle_sets
-    # (project to (id, text) BEFORE the round-robin so only those columns
-    # ship — guide §2.3).
+    # Signature form: 'arrow' fuses tokenize + shingle + md5 + votes into
+    # ONE Arrow pass (r16, guide §4.1/§4.2 — the split chain crossed the
+    # Python boundary twice with an interpreted per-shingle md5 HOF
+    # between; see _simhash_text_sig_udf); 'jvm' is the pure-JVM spec
+    # (word_shingles -> explode + packed-lane aggregate). Bit-identical,
+    # test-pinned.
     if shingler == "arrow":
-        from kafka_custom_transforms_spark.functions.skew import (
-            ensure_min_partitions,
-        )
-
-        src = ensure_min_partitions(
-            df.filter(F.size(tokens(F.col(text_col))) >= shingle_k).select(
-                F.col(id_col).alias("id"), F.col(text_col).alias("_txt")
-            ),
-            min(SHINGLE_FANOUT_CAP, df.sparkSession.sparkContext.defaultParallelism),
+        src = _text_fanout(
+            df,
+            F.col(id_col).alias("id"),
+            F.col(text_col).alias("_txt"),
+            text_col=text_col,
+            min_tokens=shingle_k,
         )
         s = _simhash_text_sig_udf(shingle_k, bits_per_long, n_longs)(F.col("_txt"))
         raw_sigs = src.select("id", s.alias("_s")).select(
@@ -1387,37 +1296,19 @@ def semantic_dup_pairs(
 
 @functools.lru_cache(maxsize=8)
 def _gram_hash_udf(k: int):
-    """Arrow-vectorized k-token-gram hasher: one tight hashlib loop per
-    batch, bit-identical to the JVM expression form
-    ``md5_hash60(concat_ws(" ", slice(tokens, i, k)))`` — Python
-    ``" ".join(w[i:i+k])`` equals ``concat_ws`` on never-null tokens, and
-    ``int(md5(s).hexdigest()[:15], 16)`` equals
-    ``conv(substr(md5(s),1,15),16,10)``. Same trade-off flag story as
-    :func:`_shingle_udf`: hashlib.md5 runs at C speed where the
-    higher-order-function lambda pays interpreted per-window object
+    """Arrow-vectorized k-token-gram hasher over the ``texthash`` kernel:
+    the md5-60 of EVERY window position (``grams(distinct=False)`` then
+    :func:`md5_60`), bit-identical to the JVM spec
+    ``transform(sequence(1, n-k+1), i -> md5_hash60(concat_ws(" ",
+    slice(tokens, i, k))))`` (test-pinned). Null and sub-k texts give
+    ``[]``, as the spec's when() does. hashlib.md5 runs at C speed where
+    the higher-order-function lambda pays interpreted per-window object
     churn."""
-    import hashlib
-
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def gram_hashes(texts: pd.Series) -> pd.Series:
-        md5 = hashlib.md5
-        out = []
-        for t in texts:
-            # null text -> no windows, matching the expression form (its
-            # when() falls through to the empty-array branch on null)
-            w = t.split(" ") if isinstance(t, str) else []
-            if len(w) < k:
-                out.append([])
-            else:
-                out.append(
-                    [
-                        int(md5(" ".join(w[i : i + k]).encode()).hexdigest()[:15], 16)
-                        for i in range(len(w) - k + 1)
-                    ]
-                )
-        return pd.Series(out)
+        return pd.Series([md5_60(grams(t, k, distinct=False)) for t in texts])
 
     return gram_hashes
 
@@ -1427,7 +1318,6 @@ def duplicate_spans(
     k: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    gram_hasher: str = "arrow",
 ) -> DataFrame:
     """Exact substring-span duplication, the k-token-gram re-expression of
     suffix-array training-data dedup ("Deduplicating Training Data Makes
@@ -1444,9 +1334,9 @@ def duplicate_spans(
     same order of magnitude the suffix-array approach sorts — but never
     materializes strings past the map stage: each window is folded to a
     60-bit md5 prefix (cross-engine exact, so the DuckDB oracle reruns the
-    identical pipeline). ``gram_hasher='arrow'`` (default) hashes windows
-    in an Arrow-batched hashlib loop; ``'jvm'`` keeps the pure-expression
-    form (bit-identical, test-pinned) for Python-worker-free clusters.
+    identical pipeline) by an Arrow-batched hashlib pass
+    (:func:`_gram_hash_udf`, bit-identical to the JVM expression spec,
+    test-pinned).
     Skew is handled by aggregating per (doc, gram) FIRST: a document
     repeating one slogan 10^6 times contributes ONE row to the global
     count, so the per-gram stage sees distinct (doc, gram) pairs and its
@@ -1470,35 +1360,13 @@ def duplicate_spans(
     ids are MERGED into one row where the pre-r16 join form emitted one
     row per input doc row (neither is meaningful on duplicate ids).
     """
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    if gram_hasher == "arrow":
-        windows = _gram_hash_udf(k)(F.col(text_col))
-    elif gram_hasher == "jvm":
-        windows = F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(1), n - k + 1),
-                lambda i: md5_hash60(F.concat_ws(" ", F.slice(toks, i, k))),
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-    else:
-        raise ValueError(f"duplicate_spans: unknown gram_hasher {gram_hasher!r}")
     # Fan the gram hashing out before the Python stage (guide §2.6, r16):
-    # a one-file corpus scans as 1-2 tasks, which serialized the Arrow
-    # hasher on 1-2 cores (the r15 plan had ArrowEvalPython directly on
-    # the scan). Project to (id, text) first so the round-robin ships
-    # only what the hasher needs; no-op at cluster scale, same device and
-    # cap as shingle_sets. Idle A/B at sf0.1 (noop, n=6): 1.146 ->
-    # 0.941 s median.
-    from kafka_custom_transforms_spark.functions.skew import ensure_min_partitions
-
-    src = ensure_min_partitions(
-        df.select(F.col(id_col), F.col(text_col)),
-        min(SHINGLE_FANOUT_CAP, df.sparkSession.sparkContext.defaultParallelism),
-    )
-    grams = src.select(F.col(id_col), F.explode_outer(windows).alias("h"))
-    per_doc_gram = grams.groupBy(id_col, "h").agg(F.count(F.lit(1)).alias("m"))
+    # the r15 plan had ArrowEvalPython directly on a 1-2 task scan. Idle
+    # A/B at sf0.1 (noop, n=6): 1.146 -> 0.941 s median.
+    src = _text_fanout(df, F.col(id_col), F.col(text_col))
+    windows = _gram_hash_udf(k)(F.col(text_col))
+    gram_rows = src.select(F.col(id_col), F.explode_outer(windows).alias("h"))
+    per_doc_gram = gram_rows.groupBy(id_col, "h").agg(F.count(F.lit(1)).alias("m"))
     # Corpus-wide occurrence count per gram hash, WITHOUT a join: a
     # whole-partition window over h. Null-hash rows (gram-less docs) get
     # a per-doc partition key so they cannot form one giant null
@@ -1533,22 +1401,18 @@ def duplicate_spans(
 
 @functools.lru_cache(maxsize=8)
 def _minhash_text_sig_udf(k: int, num_perm: int, seed: int):
-    """Merged text -> md5-based MinHash signature: tokenize, k-shingle
-    (insertion-ordered distinct), md5 base hashes, and the universal-hash
-    mod-min reduction in ONE Arrow pass (r16, guide §4.1/§4.2 — the
-    simhash fusion applied to the store pipeline). The split chain
-    (_shingle_udf -> interpreted transform(pmod(md5_hash60)) HOF ->
-    minhash_signature_map's pandas_udf) crossed the Python boundary twice
-    per document. hashlib md5 over the same UTF-8 bytes is bit-identical
-    to the JVM md5 and ``int(hexdigest()[:15], 16) % MERSENNE_P`` equals
-    ``pmod(md5_hash60(s), p)`` (both operands non-negative — the
-    _gram_hash_udf convention); the numpy mod-min is the exact
-    minhash_signature_map reduction. Only the md5-based STORE pipeline
-    fuses: the xxhash64 batch pipeline has no bit-identical Python
-    counterpart here, and changing its hash family would change LSH
-    candidates. Docs with < k tokens yield NULL (callers pre-filter)."""
-    import hashlib
-
+    """Text -> md5-based MinHash signature in ONE Arrow pass over the
+    ``texthash`` kernel: distinct k-grams (:func:`grams`), md5-60 base
+    hashes (:func:`md5_60`) reduced mod p, and the universal-hash mod-min
+    reduction of ``minhash_signature_map`` (r16, guide §4.1/§4.2 — the
+    split chain crossed the Python boundary twice per document with an
+    interpreted md5 HOF between). numpy ``%`` on non-negative operands
+    equals ``pmod``, so the result is bit-identical to the JVM spec
+    ``transform(sh, s -> pmod(md5_hash60(s), p))`` + min-aggregates
+    (test-pinned). Only the md5-based STORE pipeline runs this: the
+    xxhash64 batch pipeline has no Python twin, and changing its hash
+    family would change LSH candidates. Null and sub-k texts yield NULL
+    (callers pre-filter)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -1558,19 +1422,13 @@ def _minhash_text_sig_udf(k: int, num_perm: int, seed: int):
 
     @pandas_udf("array<long>")
     def text_sig(texts: pd.Series) -> pd.Series:
-        md5 = hashlib.md5
         out = []
         for t in texts:
-            w = t.split(" ") if isinstance(t, str) else []
-            if len(w) < k:
+            gs = grams(t, k)
+            if not gs:
                 out.append(None)
                 continue
-            wins = dict.fromkeys(" ".join(w[i : i + k]) for i in range(len(w) - k + 1))
-            hv = np.fromiter(
-                (int(md5(s.encode()).hexdigest()[:15], 16) % MERSENNE_P for s in wins),
-                dtype=np.int64,
-                count=len(wins),
-            )
+            hv = np.array(md5_60(gs), dtype=np.int64) % MERSENNE_P
             out.append(((hv[:, None] * av + bv) % MERSENNE_P).min(axis=0))
         return pd.Series(out)
 
@@ -1584,7 +1442,6 @@ def minhash_store(
     shingle_k: int = 3,
     num_perm: int = 32,
     seed: int = 42,
-    shingler: str = "arrow",
 ) -> DataFrame:
     """(id, sig) MinHash signature table — the PERSISTED side of
     incremental near-dedup. ``num_perm`` longs per document (256 B at the
@@ -1595,48 +1452,20 @@ def minhash_store(
     in DuckDB), NOT xxhash64, so the whole incremental pipeline is
     oracle-checkable end-to-end; the universal-hash permutations
     ``(a*h + b) mod p`` with p = 2^31-1 stay inside int64 under ANSI
-    mode. Signature form follows the ``shingler`` trade-off flag like the
-    batch pipeline: 'arrow' (default) uses the shuffle-free numpy map
-    form, 'jvm' the explode + per-permutation min-aggregate plan."""
-    if shingler == "arrow":
-        # Fused form (r16): tokenize + shingle + md5 base hashes + mod-min
-        # in one Arrow pass — one Python boundary crossing per document
-        # instead of two with an interpreted md5 HOF between (see
-        # _minhash_text_sig_udf; bit-parity with the split chain is
-        # test-pinned). Pre-filter and projection-first fan-out mirror
-        # shingle_sets (guide §2.3/§2.6, no-ops at cluster scale).
-        from kafka_custom_transforms_spark.functions.skew import (
-            ensure_min_partitions,
-        )
-
-        src = ensure_min_partitions(
-            df.filter(F.size(tokens(F.col(text_col))) >= shingle_k).select(
-                F.col(id_col).alias("id"), F.col(text_col).alias("_txt")
-            ),
-            min(SHINGLE_FANOUT_CAP, df.sparkSession.sparkContext.defaultParallelism),
-        )
-        return src.select(
-            "id",
-            _minhash_text_sig_udf(shingle_k, num_perm, seed)(F.col("_txt")).alias("sig"),
-        )
-    sets = shingle_sets(df, id_col, text_col, shingle_k, shingler)
-    perms = minhash_perms(num_perm, seed)
-    p = F.lit(MERSENNE_P)
-
-    def _md5_base(sh: Column) -> Column:
-        return F.transform(sh, lambda s: F.pmod(md5_hash60(s), p))
-    exploded = sets.select(F.col("id"), F.explode(_md5_base(F.col("sh"))).alias("h"))
-    mins = [
-        F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), p)).alias(f"m{j}")
-        for j, (a, b) in enumerate(perms)
-    ]
-    return (
-        exploded.groupBy("id")
-        .agg(*mins)
-        .select(
-            "id",
-            F.array(*[F.col(f"m{j}") for j in range(num_perm)]).alias("sig"),
-        )
+    mode. The signature is one Arrow pass per document
+    (:func:`_minhash_text_sig_udf`) after the shingle_sets pre-filter
+    and projection-first fan-out (guide §2.3/§2.6, no-ops at cluster
+    scale); documents shorter than ``shingle_k`` tokens are dropped."""
+    src = _text_fanout(
+        df,
+        F.col(id_col).alias("id"),
+        F.col(text_col).alias("_txt"),
+        text_col=text_col,
+        min_tokens=shingle_k,
+    )
+    return src.select(
+        "id",
+        _minhash_text_sig_udf(shingle_k, num_perm, seed)(F.col("_txt")).alias("sig"),
     )
 
 

@@ -92,7 +92,6 @@ def importance_scores(
     ngram: int = 2,
     n_buckets: int = 4096,
     scale: int = 1000,
-    shingler: str = "arrow",
 ) -> DataFrame:
     """Per-document integer importance: (id_col, n_grams, score_milli,
     selected). ``selected`` keeps documents whose average per-gram ratio
@@ -100,21 +99,19 @@ def importance_scores(
     are not selected. Integer sums make the score independent of
     partitioning and join order.
 
-    ``shingler`` picks the gram route exactly as in ``dedup.shingle_sets``:
-    ``"arrow"`` (default) runs the Arrow-vectorized shingler — output
-    bit-identical to the ``"jvm"`` higher-order-function form (equality
-    test-pinned there), ~5x faster per core because HOF lambdas run
-    interpreted; ``"jvm"`` keeps Python workers out of the hot path.
-    Bucket hashing stays JVM-side md5 either way, so the DuckDB oracle
-    is untouched by the choice.
+    Grams come from the Arrow-vectorized shingler (``dedup._shingle_udf``
+    over ``texthash.grams``, bit-identical to the ``word_shingles`` spec
+    that :func:`bucket_ratio_table` uses, ~5x faster per core because HOF
+    lambdas run interpreted). Bucket hashing stays JVM-side md5, so the
+    DuckDB oracle replays it unchanged.
 
     Contract: ``id_col`` must be unique and non-null per document — the
     output is one row per distinct id (a groupBy on it), so duplicate or
     null ids are silently MERGED into a single aggregated row rather
     than scored separately (neither form of the operator is meaningful
     on duplicate ids; the pre-r15 join form emitted one row each)."""
-    if shingler not in ("arrow", "jvm"):
-        raise ValueError(f"shingler must be 'arrow' or 'jvm', got {shingler!r}")
+    from kafka_custom_transforms_spark.operators.dedup import _shingle_udf, _text_fanout
+
     # ONE tokenize/shingle/md5 pass over the corpus text (guide §2.4/§6,
     # r16): the gram stream — (_imp_id, _t, bucket), ~17 B/gram — is
     # lazily localCheckpoint-ed and feeds BOTH the ratio table and the
@@ -124,32 +121,16 @@ def importance_scores(
     # re-running the interpreted shingle HOFs and md5, for one logical
     # gram stream. Same device as bitmap_gsets / duplicate_spans; the
     # checkpoint is within-query (fresh per build), never cross-run.
-    pre = docs.select(
+    # Same fan-out + non-determinism devices as dedup.shingle_sets (guide
+    # §2.6/§4.4): nondet stops Catalyst duplicating the UDF below pushed
+    # filters.
+    pre = _text_fanout(
+        docs,
         F.col(id_col).alias("_imp_id"),
         target_cond.alias("_t"),
         F.col(text_col).alias("_imp_txt"),
     )
-    if shingler == "arrow":
-        # Same fan-out + non-determinism devices as dedup.shingle_sets
-        # (guide §2.6/§4.4): a one-file corpus scans as 1-2 tasks, which
-        # would serialize the Python shingle stage; nondet stops Catalyst
-        # duplicating the UDF below pushed filters. Both are no-ops at
-        # cluster scale (ensure_min_partitions only ADDS partitions).
-        from kafka_custom_transforms_spark.functions.skew import (
-            ensure_min_partitions,
-        )
-        from kafka_custom_transforms_spark.operators.dedup import (
-            SHINGLE_FANOUT_CAP,
-            _shingle_udf,
-        )
-
-        pre = ensure_min_partitions(
-            pre,
-            min(SHINGLE_FANOUT_CAP, docs.sparkSession.sparkContext.defaultParallelism),
-        )
-        sh = _shingle_udf(ngram, nondet=True)(F.col("_imp_txt"))
-    else:
-        sh = word_shingles(tokens(F.col("_imp_txt")), ngram)
+    sh = _shingle_udf(ngram, nondet=True)(F.col("_imp_txt"))
     grams = (
         pre.select("_imp_id", "_t", F.explode_outer(sh).alias("gram"))
         .select(

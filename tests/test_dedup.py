@@ -24,6 +24,25 @@ def _pairs(df):
     return sorted((r.a_id, r.b_id) for r in df.collect())
 
 
+def _text_sigs(df, k=3):
+    """The production wide-SimHash signature path of simhash_pairs_wide:
+    the >= k-token pre-filter, then the one-pass text UDF."""
+    s = dedup._simhash_text_sig_udf(k)(F.col("text"))
+    return {
+        r.id: (r.s[0], r.s[1])
+        for r in df.filter(F.size(dedup.tokens(F.col("text"))) >= k)
+        .select(F.col("doc_id").alias("id"), s.alias("s"))
+        .collect()
+    }
+
+
+def _spec_sigs(df, k=3):
+    """The JVM expression spec of the same signature: word_shingles, then
+    md5_hash56 halves and the packed-lane vote aggregate."""
+    sets = dedup.shingle_sets(df, "doc_id", "text", k, shingler="jvm")
+    return {r.id: (r.sig0, r.sig1) for r in dedup.simhash_signatures_wide(sets).collect()}
+
+
 def test_dedup_exact_deterministic_survivor(spark):
     df = spark.createDataFrame(
         [(1, "x"), (2, "x"), (3, "y")], "id long, k string"
@@ -509,52 +528,39 @@ def test_signature_map_variants_on_adversarial_text(spark):
     agg = {r.id: list(r.sig) for r in texthash.minhash_signature_agg(sets, perms).collect()}
     mp = {r.id: list(r.sig) for r in texthash.minhash_signature_map(sets, perms).collect()}
     assert mp == agg and len(agg) == len(rows)
-    wagg = {r.id: (r.sig0, r.sig1) for r in dedup.simhash_signatures_wide(sets).collect()}
-    wmap = {r.id: (r.sig0, r.sig1) for r in dedup.simhash_signatures_wide_map(sets).collect()}
-    assert wmap == wagg and len(wagg) == len(rows)
+    wide = _text_sigs(df)
+    assert wide == _spec_sigs(df) and len(wide) == len(rows)
 
 
 def test_simhash_wide_map_variant_matches_agg(spark, sf_dir):
-    """The shuffle-free wide-SimHash map signature must be bit-identical
-    to the packed-lane aggregate form on real corpus text."""
+    """The production one-pass wide-SimHash map signature must be
+    bit-identical to the JVM spec's packed-lane aggregate on real corpus
+    text, keeping the same documents (>= k tokens)."""
     from kafka_custom_transforms_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(200)
-    sets = dedup.shingle_sets(docs, "doc_id", "text", 3)
-    agg_sigs = {
-        r.id: (r.sig0, r.sig1)
-        for r in dedup.simhash_signatures_wide(sets).collect()
-    }
-    map_sigs = {
-        r.id: (r.sig0, r.sig1)
-        for r in dedup.simhash_signatures_wide_map(sets).collect()
-    }
-    assert map_sigs == agg_sigs
+    wide = _text_sigs(docs)
+    assert wide == _spec_sigs(docs) and len(wide) > 0
 
 
-def test_simhash_fused_text_sig_matches_split_chain(spark, sf_dir):
-    """The r16 fused text->signature Arrow pass (tokenize + shingle +
-    hashlib md5 + votes in one UDF) must be bit-identical to the split
-    chain (shingle_sets -> JVM md5 transform -> vote UDF) on real corpus
-    text, including which docs it drops (< k tokens -> NULL)."""
-    from pyspark.sql import functions as F
-
-    from kafka_custom_transforms_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    sets = dedup.shingle_sets(docs, "doc_id", "text", 3)
-    split_sigs = {
-        r.id: (r.sig0, r.sig1)
-        for r in dedup.simhash_signatures_wide_map(sets).collect()
-    }
+def test_simhash_fused_text_sig_matches_split_chain(spark):
+    """The one-pass text->signature UDF must equal the JVM spec chain on
+    null, empty, whitespace-run and sub-k texts: those yield NULL from the
+    UDF and no row from the spec, every other text the same signature."""
+    rows = [
+        (1, None),
+        (2, ""),
+        (3, "a b"),              # sub-k
+        (4, "a  b  c"),          # runs of spaces give empty tokens
+        (5, "   "),              # only empty tokens, still >= k of them
+        (6, "x y z x y z w"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     s = dedup._simhash_text_sig_udf(3)(F.col("text"))
-    fused = (
-        docs.filter(F.size(dedup.tokens(F.col("text"))) >= 3)
-        .select(F.col("doc_id").alias("id"), s.alias("_s"))
-        .select("id", F.col("_s")[0].alias("sig0"), F.col("_s")[1].alias("sig1"))
-    )
-    fused_sigs = {r.id: (r.sig0, r.sig1) for r in fused.collect()}
-    assert fused_sigs == split_sigs and len(fused_sigs) > 0
+    raw = {r.doc_id: r.s for r in df.select("doc_id", s.alias("s")).collect()}
+    assert raw[1] is None and raw[2] is None and raw[3] is None
+    wide = _text_sigs(df)
+    assert wide == _spec_sigs(df) and sorted(wide) == [4, 5, 6]
 
 
 def test_input_nonempty_signatures_identical_and_single_shingle_eval(
@@ -585,18 +591,6 @@ def test_input_nonempty_signatures_identical_and_single_shingle_eval(
     }
     assert nonempty_mh == default_mh and len(default_mh) > 0
 
-    default_sh = {
-        r.id: (r.sig0, r.sig1)
-        for r in dedup.simhash_signatures_wide_map(sets).collect()
-    }
-    nonempty_sh = {
-        r.id: (r.sig0, r.sig1)
-        for r in dedup.simhash_signatures_wide_map(
-            sets, input_nonempty=True
-        ).collect()
-    }
-    assert nonempty_sh == default_sh
-
     # Plan pin: one ArrowEvalPython (the shingler) with the declaration,
     # two without (the duplicated eval the flag removes).
     def n_arrow(df):
@@ -605,9 +599,9 @@ def test_input_nonempty_signatures_identical_and_single_shingle_eval(
         )
 
     fresh = dedup.shingle_sets(docs, "doc_id", "text", 3)
-    dup = dedup.simhash_signatures_wide_map(fresh)
-    single = dedup.simhash_signatures_wide_map(fresh, input_nonempty=True)
-    # The vote UDF is one ArrowEvalPython of its own in both plans.
+    dup = texthash.minhash_signature_map(fresh, perms)
+    single = texthash.minhash_signature_map(fresh, perms, input_nonempty=True)
+    # The mod-min UDF is one ArrowEvalPython of its own in both plans.
     assert n_arrow(single) == n_arrow(dup) - 1
 
 
@@ -813,12 +807,24 @@ def test_semantic_dup_pairs_single_cluster_is_exact(spark, sf_dir):
 
 
 def test_shingler_routes_identical(docs):
-    """r3 verdict #6: the Arrow and JVM shingle routes must produce the
-    same pairs on the minhash oracle query (bit-identical shingle sets:
-    both keep first-occurrence-ordered distinct k-shingles)."""
-    arrow = _pairs(dedup.minhash_lsh_pairs(docs, shingler="arrow"))
-    jvm = _pairs(dedup.minhash_lsh_pairs(docs, shingler="jvm"))
-    assert arrow == jvm and len(arrow) > 0
+    """The production (Arrow) shingle sets equal the JVM word_shingles spec
+    row for row, in order, and the minhash oracle query's pairs equal the
+    brute-force exact-Jaccard pairs over the spec's sets."""
+    arrow = {r.id: list(r.sh) for r in dedup.shingle_sets(docs, "doc_id", "text", 3).collect()}
+    spec = {
+        r.id: list(r.sh)
+        for r in dedup.shingle_sets(docs, "doc_id", "text", 3, shingler="jvm").collect()
+    }
+    assert arrow == spec
+    ids = sorted(spec)
+    sets = {i: set(spec[i]) for i in ids}
+    brute = sorted(
+        (a, b)
+        for n, a in enumerate(ids)
+        for b in ids[n + 1 :]
+        if len(sets[a] & sets[b]) >= 0.5 * len(sets[a] | sets[b])
+    )
+    assert _pairs(dedup.minhash_lsh_pairs(docs)) == brute and len(brute) > 0
 
 
 def test_shingler_rejects_unknown_route(docs):
@@ -828,33 +834,38 @@ def test_shingler_rejects_unknown_route(docs):
         dedup.shingle_sets(docs, "doc_id", "text", 3, shingler="magic").collect()
 
 
-def test_duplicate_spans_gram_hashers_identical(spark, sf_dir):
-    """Arrow and JVM gram hashers must produce identical span stats on
-    real corpus text (and the arrow path must handle sub-k documents)."""
+def test_duplicate_spans_window_hashes_match_spec(spark, sf_dir):
+    """duplicate_spans' Arrow gram hasher must equal the JVM expression
+    spec (md5_hash60 of every k-token window, [] under k tokens or on
+    null) on real corpus text plus null and sub-k documents, and the
+    operator must give null text (0 spans, 0 dups) rather than crash."""
     from kafka_custom_transforms_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents").limit(150)
-    a = {
-        r.doc_id: (r.n_spans, r.dup_spans, r.dup_ratio_milli)
-        for r in dedup.duplicate_spans(docs, k=8, gram_hasher="arrow").collect()
-    }
-    j = {
-        r.doc_id: (r.n_spans, r.dup_spans, r.dup_ratio_milli)
-        for r in dedup.duplicate_spans(docs, k=8, gram_hasher="jvm").collect()
-    }
-    assert a == j and len(a) == 150
-    with pytest.raises(ValueError):
-        dedup.duplicate_spans(docs, gram_hasher="nope")
-    # null text: both hashers must yield (0 spans, 0 dups), not crash
-    nulls = spark.createDataFrame(
-        [(1, None), (2, "a b c d e f g h i j")], "doc_id long, text string"
+    k = 8
+    extra = spark.createDataFrame(
+        [(-1, None), (-2, "a b c"), (-3, "a b c d e f g h i j")], "doc_id long, text string"
     )
-    for hasher in ("arrow", "jvm"):
-        got = {
-            r.doc_id: (r.n_spans, r.dup_spans)
-            for r in dedup.duplicate_spans(nulls, k=8, gram_hasher=hasher).collect()
-        }
-        assert got[1] == (0, 0), (hasher, got)
+    docs = (
+        load_table(spark, sf_dir, "documents").limit(150).select("doc_id", "text").union(extra)
+    )
+    toks = dedup.tokens(F.col("text"))
+    n = F.size(toks)
+    spec = F.when(
+        n >= k,
+        F.transform(
+            F.sequence(F.lit(1), n - k + 1),
+            lambda i: dedup.md5_hash60(F.concat_ws(" ", F.slice(toks, i, k))),
+        ),
+    ).otherwise(F.array().cast("array<bigint>"))
+    both = docs.select(
+        spec.alias("spec"), dedup._gram_hash_udf(k)(F.col("text")).alias("udf")
+    ).collect()
+    assert len(both) == 153 and all(r.spec == r.udf for r in both)
+    got = {
+        r.doc_id: (r.n_spans, r.dup_spans)
+        for r in dedup.duplicate_spans(extra, k=k).collect()
+    }
+    assert got == {-1: (0, 0), -2: (0, 0), -3: (3, 0)}
 
 
 def test_duplicate_spans_hand_computed(spark):
@@ -982,10 +993,10 @@ def test_map_forms_fail_loudly_on_bad_inputs(spark):
     from kafka_custom_transforms_spark.functions import texthash
 
     big = spark.createDataFrame(
-        [(1, [f"s{i}" for i in range(32768)])], "id long, sh array<string>"
+        [(" ".join(f"s{i}" for i in range(32768)),)], "text string"
     )
     with pytest.raises(Exception, match="32767 shingles"):
-        dedup.simhash_signatures_wide_map(big).collect()
+        big.select(dedup._simhash_text_sig_udf(1)(F.col("text"))).collect()
 
     sets = spark.createDataFrame(
         [(1, ["a b c", "b c d"])], "id long, sh array<string>"
@@ -1059,13 +1070,32 @@ def test_plan_srp_lsh_contract_property():
 
 
 def test_minhash_store_fused_matches_jvm(spark, sf_dir):
-    """minhash_store's r16 fused arrow route (tokenize + shingle + hashlib
-    md5 + mod-min in one UDF) must be bit-identical to the pure-JVM
-    explode+agg route on real corpus text — same ids kept (>= k tokens),
-    same 32-long signatures."""
+    """minhash_store's one-pass Arrow signature (tokenize + shingle +
+    hashlib md5 + mod-min in one UDF) must be bit-identical to the JVM
+    expression spec (word_shingles -> pmod(md5_hash60) -> explode +
+    per-permutation min aggregates) on real corpus text plus null and
+    sub-k documents — same ids kept (>= k tokens), same 32-long
+    signatures."""
     from kafka_custom_transforms_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents").limit(200)
+    extra = spark.createDataFrame(
+        [(-1, None), (-2, "a b"), (-3, "a  b  c")], "doc_id long, text string"
+    )
+    docs = load_table(spark, sf_dir, "documents").limit(200).select("doc_id", "text").union(extra)
     fused = {r.id: list(r.sig) for r in dedup.minhash_store(docs).collect()}
-    jvm = {r.id: list(r.sig) for r in dedup.minhash_store(docs, shingler="jvm").collect()}
-    assert fused == jvm and len(fused) > 0
+
+    p = F.lit(dedup.MERSENNE_P)
+    sets = dedup.shingle_sets(docs, "doc_id", "text", 3, shingler="jvm")
+    exploded = sets.select(
+        "id", F.explode(F.transform("sh", lambda s: F.pmod(dedup.md5_hash60(s), p))).alias("h")
+    )
+    perms = dedup.minhash_perms(32, 42)
+    mins = [
+        F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), p)).alias(f"m{j}")
+        for j, (a, b) in enumerate(perms)
+    ]
+    spec = {
+        r.id: [r[f"m{j}"] for j in range(32)]
+        for r in exploded.groupBy("id").agg(*mins).collect()
+    }
+    assert fused == spec and -3 in fused and -1 not in fused and -2 not in fused
