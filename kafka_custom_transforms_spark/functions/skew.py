@@ -67,6 +67,20 @@ def salted_join_keys(df: DataFrame, key: str, salt_buckets: int, explode_side: b
     )
 
 
+# Fan-out target cap for every small-input Python stage (Arrow gram passes,
+# exact top-k scoring, hyperplane bucketing, multimodal synth+decode). Each
+# extra task of a Python stage pays ~6 ms of SERIALIZED runner dispatch
+# (worker spawn plus numpy/pandas import) and an AQE stage round, against
+# only a few ms of per-task compute at local corpus sizes, so past this
+# knee the dispatch costs more than the parallelism buys. Measured at sf0.1,
+# idle medians: shingling 2.8 s at 32 parts vs 0.4 s at 8; exact top-k
+# scoring 0.92 / 0.78 / 0.84 / 0.94 s at 8 / 16 / 24 / 32; png synth+decode
+# 0.46 / 0.49 / 0.72 s and jpeg-420 1.20 / 0.77 / 0.87 s at 8 / 16 / 32.
+# A cluster scan already exceeds the cap, so it only ever bounds how many
+# partitions a fan-out ADDS to a small input.
+PYTHON_FANOUT_CAP = 16
+
+
 def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
     """Fan out degenerate source parallelism before a compute-heavy per-row
     pipeline.

@@ -136,14 +136,9 @@ def _materialize(df: DataFrame, mode: str) -> DataFrame:
     raise ValueError(f"checkpoint mode must be local|reliable|none, got {mode!r}")
 
 
-# Local-sandbox-tuned fan-out/partition caps, lifted to module level so a
-# cluster deployment can override them without code edits (r3 verdict #8).
-# SHINGLE_FANOUT_CAP: repartition target cap for the shingle hot path —
-# each extra partition costs a Python worker spawn (numpy/pandas import)
-# that dwarfs the Arrow-vectorized shingling at local corpus sizes
-# (measured sf0.1: 2.8 s at 32 parts vs 0.4 s at 8). On a cluster the scan
-# already exceeds the cap and the fan-out guard is a no-op by construction.
-SHINGLE_FANOUT_CAP = 16
+# Local-sandbox-tuned partition cap, lifted to module level so a cluster
+# deployment can override it without code edits (r3 verdict #8); the gram
+# passes' fan-out cap is functions.skew.PYTHON_FANOUT_CAP.
 # BROADCAST_SCORE_PARTITION_CAP: partition count for the driver-broadcast
 # embedding-score path (worker spawn + numpy import dominates: measured
 # 0.7 s at 8 parts vs 16.8 s at 32 on the same data). Only reachable below
@@ -156,20 +151,23 @@ def _text_fanout(
 ) -> DataFrame:
     """The preamble of every Python gram pass: keep documents with at least
     ``min_tokens`` tokens of ``text_col`` (when given), project to ``cols``
-    (when given), then fan out to min(SHINGLE_FANOUT_CAP,
+    (when given), then fan out to min(PYTHON_FANOUT_CAP,
     defaultParallelism) partitions. A one-file corpus scans as 1-2 tasks,
     which would serialize the gram pass on 1-2 cores; projecting first
     ships only what the pass needs through the round-robin (guide §2.3,
     §2.6). No-op at cluster scale: ensure_min_partitions only ADDS
     partitions."""
-    from kafka_custom_transforms_spark.functions.skew import ensure_min_partitions
+    from kafka_custom_transforms_spark.functions.skew import (
+        PYTHON_FANOUT_CAP,
+        ensure_min_partitions,
+    )
 
     if min_tokens:
         df = df.filter(F.size(tokens(F.col(text_col))) >= min_tokens)
     if cols:
         df = df.select(*cols)
     return ensure_min_partitions(
-        df, min(SHINGLE_FANOUT_CAP, df.sparkSession.sparkContext.defaultParallelism)
+        df, min(PYTHON_FANOUT_CAP, df.sparkSession.sparkContext.defaultParallelism)
     )
 
 

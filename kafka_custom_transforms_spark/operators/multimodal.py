@@ -2,24 +2,35 @@
 
 The engine treats images/audio/video as ``binary`` columns bundled with a
 metadata struct — the schema, partitioning, Arrow batch shape, and UDF
-signatures here are the real, tested artifact. Six decoders are REAL
-byte-level parsers needing only the stdlib: ``decode_bmp`` (24-bit BMP —
-signature, pixel offset, padded BGR rows), ``decode_png`` (chunk CRCs,
-zlib IDAT, all five scanline filters), ``decode_gif`` (block walk + full
-GIF-variant LZW inflate), ``decode_wav`` (RIFF chunk walk + 16-bit PCM)
-``decode_mp4`` (ISO BMFF box walk to ftyp/mvhd), and ``decode_jpeg``
-/ ``decode_jpeg_color`` / ``decode_jpeg_420`` (DCT JPEG: baseline AND
-full progressive — spectral selection and successive approximation
-(Ah/Al point transforms, DC refinement bits, AC correction-bit
-refinement scans) — grayscale, YCbCr 4:4:4 and 4:2:0
-subsampled, DRI restart markers — Huffman entropy decode, dequant,
-zigzag, IDCT, chroma upsampling, BT.601 conversion), all
-oracle-verified against analytically recomputed features. The generic
-``decode_payload`` stays a deterministic stand-in for codecs that
-genuinely need external libraries (H.264 video): it
+signatures here are the real, tested artifact. Every codec below is a
+REAL byte-level parser needing only the stdlib (plus numpy for the JPEG
+IDCT), oracle-verified against analytically recomputed features:
+
+  - images: ``decode_bmp`` (24-bit BMP — signature, pixel offset, padded
+    BGR rows), ``decode_png`` (chunk CRCs, zlib IDAT, all five scanline
+    filters), ``decode_gif`` (block walk + full GIF-variant LZW inflate),
+    ``decode_jpeg`` / ``decode_jpeg_color`` / ``decode_jpeg_420`` (DCT
+    JPEG: baseline AND full progressive — spectral selection and
+    successive approximation — grayscale, YCbCr 4:4:4 and 4:2:0, DRI
+    restart markers, Huffman decode, dequant, zigzag, IDCT, chroma
+    upsampling, BT.601 conversion);
+  - audio: ``decode_wav`` (RIFF chunk walk + 16-bit PCM) and
+    ``audio_features`` (framewise energy, zero crossings, peak frame);
+  - video: ``decode_mp4`` (ISO BMFF box walk to ftyp/mvhd),
+    ``decode_mp4_tracks`` (stts/stsz sample tables), ``parse_h264``
+    (Annex-B + Exp-Golomb SPS) and ``decode_h264_ipcm`` (I_PCM frames).
+
+Each codec is one plain row function (``bytes -> tuple``) and each
+synthesizer one ``int -> bytes`` function; :func:`_decode_rows` and
+:func:`_synth` are the only Arrow batch loops that drive them. A payload
+too short or too corrupt for a codec raises ``ValueError`` naming the
+codec and the row's ``doc_id`` (:func:`_decode_row`), never a bare
+``struct.error``/``IndexError`` from inside the parser.
+
+The generic ``decode_payload`` stays a deterministic stand-in for codecs
+that genuinely need external libraries (compressed H.264 frames): it
 hashes the full payload (features are functions of the bytes, not the
-length) and raises ``NotImplementedError`` if a real codec is requested.
-Swap ``_fake_decode`` for PIL/torchaudio/pyav inside the same
+length). Swap ``_fake_decode`` for PIL/torchaudio/pyav inside the same
 ``mapInPandas`` body and nothing else changes.
 
 Scale notes:
@@ -33,10 +44,16 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import math
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from kafka_custom_transforms_spark.functions.skew import PYTHON_FANOUT_CAP
 
 MIMES = ("image/png", "audio/wav", "video/mp4")
 
@@ -88,17 +105,10 @@ def _fake_decode(doc_id: int, mime: str, data: bytes) -> dict:
     return {"magic": data[:4].hex(), "payload_hash": h, **feats}
 
 
-def decode_payload(df: DataFrame, real_decoder: bool = False) -> DataFrame:
-    """Arrow-batched decode over ``mapInPandas``. ``real_decoder=True``
-    requires media libraries and raises in this environment."""
-    if real_decoder:
-        try:
-            import PIL  # noqa: F401
-        except ImportError as exc:  # pragma: no cover - environment-dependent
-            raise NotImplementedError(
-                "real media decoding needs PIL/torchaudio/pyav, which are not "
-                "installed in this container; use the deterministic stub"
-            ) from exc
+def decode_payload(df: DataFrame) -> DataFrame:
+    """Arrow-batched stub decode over ``mapInPandas`` (see
+    :func:`_fake_decode`); reads ``meta.mime`` per row, so it keeps its
+    own batch loop rather than :func:`_decode_rows`."""
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -118,20 +128,11 @@ def decode_payload(df: DataFrame, real_decoder: bool = False) -> DataFrame:
 RESIZED_SCHEMA = "doc_id bigint, mime string, out_width int, out_height int, data binary"
 
 
-def resize_images(df: DataFrame, width: int = 224, height: int = 224, real_decoder: bool = False) -> DataFrame:
+def resize_images(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
     """Resize plan for image rows: Arrow-batched ``mapInPandas`` whose body
-    would call PIL's thumbnail/resize. STUB: no media libs in this container,
-    so the payload passes through and only the target geometry is attached —
-    the schema, batch shape, and partition behavior are the real artifact.
-    ``real_decoder=True`` raises NotImplementedError here."""
-    if real_decoder:
-        try:
-            import PIL  # noqa: F401
-        except ImportError as exc:  # pragma: no cover - environment-dependent
-            raise NotImplementedError(
-                "real image resize needs PIL, which is not installed in this "
-                "container; the stub passes payloads through"
-            ) from exc
+    would call PIL's thumbnail/resize. STUB: the payload passes through and
+    only the target geometry is attached — the schema, batch shape, row
+    filter and partition behavior are the real artifact."""
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -160,6 +161,68 @@ def frame_sample(df: DataFrame, every_nth: int = 10) -> DataFrame:
     return vids.select("doc_id", F.explode(idxs).alias("frame_idx"))
 
 
+# ------------------------------------------------- record-at-a-time batch loops
+#
+# Every real codec below is a stateless per-record map, like the SMTs: one
+# plain function per record. These helpers are the only Arrow batch loops
+# that apply them; each public synth_*/decode_* is a one-line call.
+
+
+def _spread_ids(df: DataFrame, id_col: str) -> DataFrame:
+    """Round-robin the id projection across min(PYTHON_FANOUT_CAP,
+    default parallelism) before payload synthesis. The synth+decode stages
+    are CPU-bound Python per row, but the upstream documents table is tiny
+    (one parquet file -> 1-2 input partitions), so without this the whole
+    decode family runs on 1-2 cores. Shuffling ONLY the id column (a long
+    per row) costs ~nothing at any scale; at 100 TB real payloads arrive
+    already partitioned by the scan and the decoders consume them directly.
+    Unconditional (not ensure_min_partitions): stream_multimodal_decode
+    feeds a streaming DataFrame here, which has no ``.rdd`` to count."""
+    sc = df.sparkSession.sparkContext
+    return df.select(id_col).repartition(min(PYTHON_FANOUT_CAP, sc.defaultParallelism))
+
+
+def _synth(df: DataFrame, id_col: str, make: Callable[[int], bytes]) -> DataFrame:
+    """(doc_id, data) with ``make(id)`` as each row's payload."""
+
+    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf[id_col].astype("int64")
+            yield pd.DataFrame({"doc_id": ids, "data": [make(int(i)) for i in ids]})
+
+    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+
+
+def _decode_row(one: Callable[[bytes], tuple], doc_id: int, data: bytes) -> tuple:
+    """``one(data)``, with the parser's low-level failures on a short or
+    corrupt payload (``struct.error`` from an unpack past the end,
+    ``IndexError`` from a byte read past it) re-raised as one named
+    ``ValueError`` carrying the codec and the row. The ValueErrors the
+    codecs raise themselves pass through unchanged."""
+    try:
+        return one(data)
+    except (struct.error, IndexError) as exc:
+        # "_bmp_row" -> "bmp"; a functools.partial names its function in .func
+        codec = getattr(one, "func", one).__name__.strip("_").removesuffix("_row")
+        raise ValueError(f"{codec}: malformed payload (doc_id={doc_id})") from exc
+
+
+def _decode_rows(df: DataFrame, one: Callable[[bytes], tuple], schema: str) -> DataFrame:
+    """Apply the row decoder ``one`` to every ``data`` payload of a
+    (doc_id, data) frame. ``schema`` is flat DDL whose first column is
+    ``doc_id`` and whose remaining columns are ``one``'s tuple fields."""
+    cols = [field.split()[0] for field in schema.split(",")][1:]
+
+    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [_decode_row(one, i, d) for i, d in zip(pdf["doc_id"], pdf["data"])]
+            out = pd.DataFrame.from_records(rows, columns=cols)
+            out.insert(0, "doc_id", pdf["doc_id"].values)
+            yield out
+
+    return df.mapInPandas(_decode, schema=schema)
+
+
 # ---------------------------------------------------------------- real decode
 #
 # The stub above stands in for codec libraries this container lacks; BMP
@@ -180,8 +243,6 @@ BMP_DECODED_SCHEMA = (
 def _bmp_bytes(doc_id: int, width: int, height: int) -> bytes:
     """Minimal 24-bit bottom-up BMP. File-row j, column x:
     B=(7x+13j+id)%256, G=+85, R=+170 (BGR byte order on disk)."""
-    import struct
-
     row_size = (3 * width + 3) & ~3
     pixel_bytes = row_size * height
     header = struct.pack(
@@ -198,58 +259,34 @@ def _bmp_bytes(doc_id: int, width: int, height: int) -> bytes:
     return header + bytes(rows)
 
 
-# Fan-out target cap for the synth-demo spread (r15 optimization, guide
-# §2.6/§4 measured-dispatch): each extra task of a Python stage pays ~6 ms
-# of SERIALIZED runner dispatch plus an AQE stage round, while the synth+
-# decode work is only ~1-4 ms of Python per image — so past the knee the
-# dispatch costs more than the parallelism buys. Measured at sf0.1
-# (5000 images, idle 7-sample medians): png pipeline 0.46 s at 8 parts,
-# 0.49 s at 16, 0.72 s at 32; jpeg-420 1.20 / 0.77 / 0.87. 16 is the knee
-# for the heavier decoders and within noise of 8 for the light ones.
-# Module-level so a cluster deployment can override without code edits
-# (same precedent as SHINGLE_FANOUT_CAP / BROADCAST_SCORE_PARTITION_CAP in
-# dedup.py). The cap governs ONLY this synthesis scaffolding: at 100 TB
-# real payloads arrive already partitioned by the scan and the decode
-# family consumes them directly — _spread_ids is not in that path.
-MULTIMODAL_SPREAD_CAP = 16
-
-
-def _spread_ids(df: DataFrame, id_col: str) -> DataFrame:
-    """Round-robin the id projection across min(MULTIMODAL_SPREAD_CAP,
-    default parallelism) before payload synthesis. The synth+decode stages
-    are CPU-bound Python per row, but the upstream documents table is tiny
-    (one parquet file -> 1-2 input partitions), so without this the whole
-    decode family runs on 1-2 cores of a 32-core session. Shuffling ONLY
-    the id column (a long per row) costs ~nothing at any scale; at 100 TB
-    a real binary column would already arrive in many partitions and the
-    caller would decode it directly rather than synthesize (see
-    MULTIMODAL_SPREAD_CAP for why the target is capped)."""
-    sc = df.sparkSession.sparkContext
-    return df.select(id_col).repartition(
-        min(MULTIMODAL_SPREAD_CAP, sc.defaultParallelism)
-    )
-
-
 def synth_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, data) with a deterministic real BMP per row; geometry
     8+id%9 x 6+id%7 keeps payloads tiny while exercising every row
     padding residue (width mod 4 varies)."""
-    from collections.abc import Iterator as _It
+    return _synth(df, id_col, lambda i: _bmp_bytes(i, 8 + i % 9, 6 + i % 7))
 
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "data": [
-                        _bmp_bytes(int(i), 8 + int(i) % 9, 6 + int(i) % 7)
-                        for i in ids
-                    ],
-                }
-            )
 
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+def _bmp_row(data: bytes) -> tuple:
+    sig, _, _, _, offset = struct.unpack_from("<2sIHHI", data, 0)
+    if sig != b"BM":
+        raise ValueError("not a BMP payload")
+    _, width, height, _, bpp = struct.unpack_from("<IiiHH", data, 14)
+    if bpp != 24:
+        raise ValueError(f"only 24bpp supported, got {bpp}")
+    if width <= 0 or height == 0:
+        raise ValueError(f"bad BMP geometry {width}x{height}")
+    row_size = (3 * width + 3) & ~3
+    if len(data) < offset + row_size * abs(height):
+        raise ValueError("truncated BMP pixel array")
+    sr = sg = sb = 0
+    for j in range(abs(height)):
+        base = offset + j * row_size
+        row = data[base : base + 3 * width]
+        sb += sum(row[0::3])
+        sg += sum(row[1::3])
+        sr += sum(row[2::3])
+    npx = width * abs(height)
+    return (width, abs(height), sr * 1000 // npx, sg * 1000 // npx, sb * 1000 // npx)
 
 
 def decode_bmp(df: DataFrame) -> DataFrame:
@@ -257,52 +294,7 @@ def decode_bmp(df: DataFrame) -> DataFrame:
     offset from the file header, 24bpp geometry from BITMAPINFOHEADER,
     padded bottom-up BGR rows. Integer milli means keep the result exact
     and order-free. Arrow-batched like every decode in this module."""
-    import struct
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        sig, _, _, _, offset = struct.unpack_from("<2sIHHI", data, 0)
-        if sig != b"BM":
-            raise ValueError("not a BMP payload")
-        _, width, height, _, bpp = struct.unpack_from("<IiiHH", data, 14)
-        if bpp != 24:
-            raise ValueError(f"only 24bpp supported, got {bpp}")
-        if width <= 0 or height == 0:
-            raise ValueError(f"bad BMP geometry {width}x{height}")
-        row_size = (3 * width + 3) & ~3
-        if len(data) < offset + row_size * abs(height):
-            raise ValueError("truncated BMP pixel array")
-        sr = sg = sb = 0
-        for j in range(abs(height)):
-            base = offset + j * row_size
-            row = data[base : base + 3 * width]
-            sb += sum(row[0::3])
-            sg += sum(row[1::3])
-            sr += sum(row[2::3])
-        npx = width * abs(height)
-        return (
-            width,
-            abs(height),
-            sr * 1000 // npx,
-            sg * 1000 // npx,
-            sb * 1000 // npx,
-        )
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "mean_r_milli": [f[2] for f in feats],
-                    "mean_g_milli": [f[3] for f in feats],
-                    "mean_b_milli": [f[4] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=BMP_DECODED_SCHEMA)
+    return _decode_rows(df, _bmp_row, BMP_DECODED_SCHEMA)
 
 
 # PNG: stdlib-only too — zlib inflates the IDAT stream and the five PNG
@@ -340,9 +332,6 @@ def _png_filter_row(ftype: int, raw: bytes, prev: bytes, bpp: int) -> bytes:
 def _png_bytes(doc_id: int, width: int, height: int) -> bytes:
     """Minimal 8-bit RGB PNG. Pixel (x, y): R=(7x+13y+id)%256, G=+85,
     B=+170 (top-down). Scanline y is encoded with filter type y % 5."""
-    import struct
-    import zlib
-
     def chunk(typ: bytes, body: bytes) -> bytes:
         return (
             struct.pack(">I", len(body))
@@ -377,22 +366,7 @@ def synth_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, data) with a deterministic real PNG per row; 5+id%8 x 6+id%7
     geometry keeps payloads tiny while every height >= 6 exercises all
     five scanline filter types at least once."""
-    from collections.abc import Iterator as _It
-
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "data": [
-                        _png_bytes(int(i), 5 + int(i) % 8, 6 + int(i) % 7)
-                        for i in ids
-                    ],
-                }
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+    return _synth(df, id_col, lambda i: _png_bytes(i, 5 + i % 8, 6 + i % 7))
 
 
 # Unfiltering dispatch: the bench's synthetic PNGs are tiny (stride <= 36
@@ -491,6 +465,48 @@ def _png_unfilter_sums_numpy(raw: bytes, height: int, stride: int) -> tuple:
     return int(totals[0]), int(totals[1]), int(totals[2])
 
 
+def _png_row(data: bytes) -> tuple:
+    if data[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError("not a PNG payload")
+    pos, ihdr, idat = 8, None, bytearray()
+    while pos + 8 <= len(data):
+        (clen,) = struct.unpack_from(">I", data, pos)
+        typ = data[pos + 4 : pos + 8]
+        body = data[pos + 8 : pos + 8 + clen]
+        if len(body) != clen:
+            raise ValueError("truncated PNG chunk")
+        (crc,) = struct.unpack_from(">I", data, pos + 8 + clen)
+        if crc != (zlib.crc32(typ + body) & 0xFFFFFFFF):
+            raise ValueError(f"bad CRC on {typ!r} chunk")
+        if typ == b"IHDR":
+            ihdr = struct.unpack(">IIBBBBB", body)
+        elif typ == b"IDAT":
+            idat += body
+        elif typ == b"IEND":
+            break
+        pos += 12 + clen
+    if ihdr is None or not idat:
+        raise ValueError("missing IHDR or IDAT chunk")
+    width, height, depth, ctype, _, _, interlace = ihdr
+    if (depth, ctype, interlace) != (8, 2, 0):
+        raise ValueError(
+            f"only 8-bit RGB non-interlaced supported, got "
+            f"depth={depth} color_type={ctype} interlace={interlace}"
+        )
+    if width == 0 or height == 0:
+        raise ValueError("zero-dimension PNG")
+    stride = 3 * width
+    raw = zlib.decompress(bytes(idat))
+    if len(raw) != height * (stride + 1):
+        raise ValueError("IDAT length does not match geometry")
+    if stride >= _PNG_NUMPY_MIN_STRIDE:
+        sr, sg, sb = _png_unfilter_sums_numpy(raw, height, stride)
+    else:
+        sr, sg, sb = _png_unfilter_sums_py(raw, height, stride)
+    npx = width * height
+    return (width, height, sr * 1000 // npx, sg * 1000 // npx, sb * 1000 // npx)
+
+
 def decode_png(df: DataFrame) -> DataFrame:
     """Parse REAL PNG bytes with only the stdlib: signature, chunk walk
     with CRC verification, IHDR geometry, zlib-inflated IDAT, and full
@@ -498,66 +514,7 @@ def decode_png(df: DataFrame) -> DataFrame:
     (color type 2), non-interlaced images are supported — anything else
     raises. Output shape matches decode_bmp (integer milli channel
     means), Arrow-batched like every decode in this module."""
-    import struct
-    import zlib
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        if data[:8] != b"\x89PNG\r\n\x1a\n":
-            raise ValueError("not a PNG payload")
-        pos, ihdr, idat = 8, None, bytearray()
-        while pos + 8 <= len(data):
-            (clen,) = struct.unpack_from(">I", data, pos)
-            typ = data[pos + 4 : pos + 8]
-            body = data[pos + 8 : pos + 8 + clen]
-            if len(body) != clen:
-                raise ValueError("truncated PNG chunk")
-            (crc,) = struct.unpack_from(">I", data, pos + 8 + clen)
-            if crc != (zlib.crc32(typ + body) & 0xFFFFFFFF):
-                raise ValueError(f"bad CRC on {typ!r} chunk")
-            if typ == b"IHDR":
-                ihdr = struct.unpack(">IIBBBBB", body)
-            elif typ == b"IDAT":
-                idat += body
-            elif typ == b"IEND":
-                break
-            pos += 12 + clen
-        if ihdr is None or not idat:
-            raise ValueError("missing IHDR or IDAT chunk")
-        width, height, depth, ctype, _, _, interlace = ihdr
-        if (depth, ctype, interlace) != (8, 2, 0):
-            raise ValueError(
-                f"only 8-bit RGB non-interlaced supported, got "
-                f"depth={depth} color_type={ctype} interlace={interlace}"
-            )
-        if width == 0 or height == 0:
-            raise ValueError("zero-dimension PNG")
-        stride = 3 * width
-        raw = zlib.decompress(bytes(idat))
-        if len(raw) != height * (stride + 1):
-            raise ValueError("IDAT length does not match geometry")
-        if stride >= _PNG_NUMPY_MIN_STRIDE:
-            sr, sg, sb = _png_unfilter_sums_numpy(raw, height, stride)
-        else:
-            sr, sg, sb = _png_unfilter_sums_py(raw, height, stride)
-        npx = width * height
-        return (width, height, sr * 1000 // npx, sg * 1000 // npx, sb * 1000 // npx)
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "mean_r_milli": [f[2] for f in feats],
-                    "mean_g_milli": [f[3] for f in feats],
-                    "mean_b_milli": [f[4] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=PNG_DECODED_SCHEMA)
+    return _decode_rows(df, _png_row, PNG_DECODED_SCHEMA)
 
 
 # WAV: the audio counterpart of decode_bmp — RIFF/fmt/data chunk walking
@@ -572,8 +529,6 @@ WAV_DECODED_SCHEMA = (
 
 def _wav_bytes(doc_id: int, n_samples: int, rate: int = 8000) -> bytes:
     """Minimal mono 16-bit PCM WAV. Sample i = ((37*i + 11*id) % 4096) - 2048."""
-    import struct
-
     frames = b"".join(
         struct.pack("<h", ((37 * i + 11 * doc_id) % 4096) - 2048)
         for i in range(n_samples)
@@ -589,29 +544,13 @@ def _wav_bytes(doc_id: int, n_samples: int, rate: int = 8000) -> bytes:
 
 def synth_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, data) with a deterministic real WAV per row; 400+id%50 samples."""
-    from collections.abc import Iterator as _It
-
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "data": [
-                        _wav_bytes(int(i), 400 + int(i) % 50) for i in ids
-                    ],
-                }
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+    return _synth(df, id_col, lambda i: _wav_bytes(i, 400 + i % 50))
 
 
 def _wav_pcm(data):
     """Shared RIFF chunk walk for every WAV consumer: validate the
     header, find fmt (mono 16-bit PCM only) and data, reject truncated
     chunks, and return (sample_rate, samples tuple)."""
-    import struct
-
     riff, _, wave = struct.unpack_from("<4sI4s", data, 0)
     if riff != b"RIFF" or wave != b"WAVE":
         raise ValueError("not a WAV payload")
@@ -634,33 +573,18 @@ def _wav_pcm(data):
     return rate, struct.unpack(f"<{n}h", frames[: 2 * n])
 
 
+def _wav_row(data: bytes) -> tuple:
+    rate, samples = _wav_pcm(data)
+    n = len(samples)
+    sum_abs = sum(abs(s) for s in samples)
+    return (rate, n, n * 1000 // rate, sum_abs * 1000 // max(n, 1))
+
+
 def decode_wav(df: DataFrame) -> DataFrame:
     """Parse REAL WAV bytes: walk RIFF chunks to fmt (rate, channels,
     bits) and data (PCM frames); integer mean |amplitude| in milli units.
     Only mono 16-bit PCM is supported — anything else raises."""
-    import struct
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        rate, samples = _wav_pcm(data)
-        n = len(samples)
-        sum_abs = sum(abs(s) for s in samples)
-        return (rate, n, n * 1000 // rate, sum_abs * 1000 // max(n, 1))
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "sample_rate": [f[0] for f in feats],
-                    "n_samples": [f[1] for f in feats],
-                    "duration_ms": [f[2] for f in feats],
-                    "mean_abs_milli": [f[3] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=WAV_DECODED_SCHEMA)
+    return _decode_rows(df, _wav_row, WAV_DECODED_SCHEMA)
 
 
 # MP4: the video counterpart — ISO BMFF box walking (ftyp brand, moov ->
@@ -677,8 +601,6 @@ MP4_DECODED_SCHEMA = (
 def _mp4_bytes(doc_id: int) -> bytes:
     """Minimal ISO BMFF file: ftyp(isom) + moov{mvhd v0}. timescale =
     600 + (id%5)*100; duration units = (97*id) % 100000."""
-    import struct
-
     ftyp = struct.pack(">I4s4sI4s", 20, b"ftyp", b"isom", 512, b"isom")
     timescale = 600 + (doc_id % 5) * 100
     duration = (97 * doc_id) % 100_000
@@ -697,77 +619,56 @@ def _mp4_bytes(doc_id: int) -> bytes:
 
 
 def synth_mp4(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from collections.abc import Iterator as _It
+    return _synth(df, id_col, _mp4_bytes)
 
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "data": [_mp4_bytes(int(i)) for i in ids]}
-            )
 
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+def _mp4_boxes(data: bytes, start: int, end: int):
+    """Yield (type, body_start, box_end) for the ISO BMFF boxes in
+    ``data[start:end]``."""
+    pos = start
+    while pos + 8 <= end:
+        size, typ = struct.unpack_from(">I4s", data, pos)
+        body = pos + 8
+        if size == 0:  # legal: box extends to end of enclosing scope
+            yield typ, body, end
+            return
+        if size == 1:  # legal: 64-bit largesize follows the type
+            (size,) = struct.unpack_from(">Q", data, body)
+            body += 8
+            if size < 16:
+                raise ValueError("bad largesize box")
+        elif size < 8:
+            raise ValueError("bad box size")
+        yield typ, body, pos + size
+        pos += size
+
+
+def _mp4_row(data: bytes) -> tuple:
+    brand, mvhd_span = None, None
+    for typ, body, bend in _mp4_boxes(data, 0, len(data)):
+        if typ == b"ftyp":
+            brand = data[body : body + 4].decode("ascii")
+        elif typ == b"moov":
+            for t2, b2, e2 in _mp4_boxes(data, body, bend):
+                if t2 == b"mvhd":
+                    mvhd_span = (b2, e2)
+    if brand is None or mvhd_span is None:
+        raise ValueError("not an MP4: missing ftyp or moov/mvhd")
+    b2 = mvhd_span[0]
+    version = data[b2]
+    if version == 0:
+        _, _, timescale, duration = struct.unpack_from(">IIII", data, b2 + 4)
+    else:
+        _, _, timescale = struct.unpack_from(">QQI", data, b2 + 4)
+        (duration,) = struct.unpack_from(">Q", data, b2 + 24)
+    return (brand, timescale, duration, duration * 1000 // timescale)
 
 
 def decode_mp4(df: DataFrame) -> DataFrame:
     """Walk REAL ISO BMFF boxes: top level to ftyp (brand) and moov, then
     moov's children to mvhd (version 0/1 both handled); duration_ms from
     the header's timescale."""
-    import struct
-    from collections.abc import Iterator as _It
-
-    def _boxes(data: bytes, start: int, end: int):
-        pos = start
-        while pos + 8 <= end:
-            size, typ = struct.unpack_from(">I4s", data, pos)
-            body = pos + 8
-            if size == 0:  # legal: box extends to end of enclosing scope
-                yield typ, body, end
-                return
-            if size == 1:  # legal: 64-bit largesize follows the type
-                (size,) = struct.unpack_from(">Q", data, body)
-                body += 8
-                if size < 16:
-                    raise ValueError("bad largesize box")
-            elif size < 8:
-                raise ValueError("bad box size")
-            yield typ, body, pos + size
-            pos += size
-
-    def _one(data: bytes) -> tuple:
-        brand, mvhd_span = None, None
-        for typ, body, bend in _boxes(data, 0, len(data)):
-            if typ == b"ftyp":
-                brand = data[body : body + 4].decode("ascii")
-            elif typ == b"moov":
-                for t2, b2, e2 in _boxes(data, body, bend):
-                    if t2 == b"mvhd":
-                        mvhd_span = (b2, e2)
-        if brand is None or mvhd_span is None:
-            raise ValueError("not an MP4: missing ftyp or moov/mvhd")
-        b2 = mvhd_span[0]
-        version = data[b2]
-        if version == 0:
-            _, _, timescale, duration = struct.unpack_from(">IIII", data, b2 + 4)
-        else:
-            _, _, timescale = struct.unpack_from(">QQI", data, b2 + 4)
-            (duration,) = struct.unpack_from(">Q", data, b2 + 24)
-        return (brand, timescale, duration, duration * 1000 // timescale)
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "brand": [f[0] for f in feats],
-                    "timescale": [f[1] for f in feats],
-                    "duration_units": [f[2] for f in feats],
-                    "duration_ms": [f[3] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=MP4_DECODED_SCHEMA)
+    return _decode_rows(df, _mp4_row, MP4_DECODED_SCHEMA)
 
 
 # GIF: the third stdlib-only image format — the pixel stream is LZW
@@ -893,8 +794,6 @@ def _gif_bytes(doc_id: int, width: int, height: int, n_frames: int) -> bytes:
     palette: color c -> R=(37c+id)%256, G=+85, B=+170. Frame f pixel
     (x, y) -> index (7x+13y+id+29f) % 8. Full-screen frames, no
     interlace, no local color tables."""
-    import struct
-
     hdr = b"GIF89a" + struct.pack("<HH", width, height) + bytes(
         (0x80 | 0x02, 0, 0)  # GCT present, size field 2 -> 8 colors
     )
@@ -925,22 +824,69 @@ def synth_gif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, data) with a deterministic real GIF per row: 6+id%7 x 5+id%6
     pixels, 1 + id%3 frames — multi-frame files exercise the block walk,
     and the varying geometry exercises LZW dictionary growth."""
-    from collections.abc import Iterator as _It
+    return _synth(df, id_col, lambda i: _gif_bytes(i, 6 + i % 7, 5 + i % 6, 1 + i % 3))
 
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "data": [
-                        _gif_bytes(int(i), 6 + int(i) % 7, 5 + int(i) % 6, 1 + int(i) % 3)
-                        for i in ids
-                    ],
-                }
-            )
 
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+def _gif_row(data: bytes) -> tuple:
+    if data[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF payload")
+    sw, sh = struct.unpack_from("<HH", data, 6)
+    packed = data[10]
+    if not packed & 0x80:
+        raise ValueError("GIF without a global color table unsupported")
+    gct_n = 2 << (packed & 0x07)
+    pos = 13
+    palette = data[pos : pos + 3 * gct_n]
+    if len(palette) < 3 * gct_n:
+        raise ValueError("truncated global color table")
+    pos += 3 * gct_n
+    n_frames = 0
+    sr = sg = sb = npx = 0
+    while pos < len(data):
+        block = data[pos]
+        pos += 1
+        if block == 0x3B:  # trailer
+            break
+        if block == 0x21:  # extension: label + sub-blocks
+            pos += 1
+            while data[pos]:
+                pos += 1 + data[pos]
+            pos += 1
+            continue
+        if block != 0x2C:
+            raise ValueError(f"unknown GIF block 0x{block:02x}")
+        _, _, fw, fh = struct.unpack_from("<HHHH", data, pos)
+        fpacked = data[pos + 8]
+        pos += 9
+        if fpacked & 0x80:
+            raise ValueError("local color tables unsupported")
+        if fpacked & 0x40:
+            raise ValueError("interlaced GIF unsupported")
+        min_code = data[pos]
+        pos += 1
+        lzw = bytearray()
+        while data[pos]:
+            ln = data[pos]
+            lzw += data[pos + 1 : pos + 1 + ln]
+            pos += 1 + ln
+        pos += 1
+        indices = _gif_lzw_decode(bytes(lzw), min_code)
+        if len(indices) != fw * fh:
+            raise ValueError("decoded pixel count does not match frame geometry")
+        n_frames += 1
+        for idx in indices:
+            if idx >= gct_n:
+                raise ValueError("pixel index beyond palette")
+            sr += palette[3 * idx]
+            sg += palette[3 * idx + 1]
+            sb += palette[3 * idx + 2]
+        npx += fw * fh
+    if n_frames == 0 or npx == 0:
+        raise ValueError("GIF with no image frames")
+    return (
+        sw, sh, n_frames,
+        sr * 1000 // npx, sg * 1000 // npx, sb * 1000 // npx,
+    )
 
 
 def decode_gif(df: DataFrame) -> DataFrame:
@@ -951,86 +897,7 @@ def decode_gif(df: DataFrame) -> DataFrame:
     Channel means aggregate palette-mapped pixels over ALL frames as
     exact integer milli values. Interlaced frames and local color tables
     raise (out of scope, like non-24bpp BMP)."""
-    import struct
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        if data[:6] not in (b"GIF87a", b"GIF89a"):
-            raise ValueError("not a GIF payload")
-        sw, sh = struct.unpack_from("<HH", data, 6)
-        packed = data[10]
-        if not packed & 0x80:
-            raise ValueError("GIF without a global color table unsupported")
-        gct_n = 2 << (packed & 0x07)
-        pos = 13
-        palette = data[pos : pos + 3 * gct_n]
-        if len(palette) < 3 * gct_n:
-            raise ValueError("truncated global color table")
-        pos += 3 * gct_n
-        n_frames = 0
-        sr = sg = sb = npx = 0
-        while pos < len(data):
-            block = data[pos]
-            pos += 1
-            if block == 0x3B:  # trailer
-                break
-            if block == 0x21:  # extension: label + sub-blocks
-                pos += 1
-                while data[pos]:
-                    pos += 1 + data[pos]
-                pos += 1
-                continue
-            if block != 0x2C:
-                raise ValueError(f"unknown GIF block 0x{block:02x}")
-            _, _, fw, fh = struct.unpack_from("<HHHH", data, pos)
-            fpacked = data[pos + 8]
-            pos += 9
-            if fpacked & 0x80:
-                raise ValueError("local color tables unsupported")
-            if fpacked & 0x40:
-                raise ValueError("interlaced GIF unsupported")
-            min_code = data[pos]
-            pos += 1
-            lzw = bytearray()
-            while data[pos]:
-                ln = data[pos]
-                lzw += data[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            indices = _gif_lzw_decode(bytes(lzw), min_code)
-            if len(indices) != fw * fh:
-                raise ValueError("decoded pixel count does not match frame geometry")
-            n_frames += 1
-            for idx in indices:
-                if idx >= gct_n:
-                    raise ValueError("pixel index beyond palette")
-                sr += palette[3 * idx]
-                sg += palette[3 * idx + 1]
-                sb += palette[3 * idx + 2]
-            npx += fw * fh
-        if n_frames == 0 or npx == 0:
-            raise ValueError("GIF with no image frames")
-        return (
-            sw, sh, n_frames,
-            sr * 1000 // npx, sg * 1000 // npx, sb * 1000 // npx,
-        )
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_frames": [f[2] for f in feats],
-                    "mean_r_milli": [f[3] for f in feats],
-                    "mean_g_milli": [f[4] for f in feats],
-                    "mean_b_milli": [f[5] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=GIF_DECODED_SCHEMA)
+    return _decode_rows(df, _gif_row, GIF_DECODED_SCHEMA)
 
 
 # JPEG: the capstone stdlib-only decoder — baseline grayscale JFIF.
@@ -1110,8 +977,6 @@ def _jpeg_idct_2d(coefs):
     constant block value computed with EXACTLY the same operation order
     as the general loop ((c0 * ((c0 * F00) / 2)) / 2, not F00/8 — c0^2
     is one ulp off 0.5 in doubles), so the shortcut is bit-identical."""
-    import math
-
     cos = _jpeg_idct_cos()
     c = _jpeg_idct_c()
     if not any(coefs[1:]):
@@ -1135,23 +1000,16 @@ def _jpeg_idct_2d(coefs):
     return out
 
 
-import functools as _functools
-
-
-@_functools.lru_cache(maxsize=1)
+@functools.lru_cache(maxsize=1)
 def _jpeg_idct_cos():
-    import math
-
     return [
         [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
         for x in range(8)
     ]
 
 
-@_functools.lru_cache(maxsize=1)
+@functools.lru_cache(maxsize=1)
 def _jpeg_idct_c():
-    import math
-
     return [1 / math.sqrt(2)] + [1.0] * 7
 
 
@@ -1187,22 +1045,23 @@ class _JpegBitWriter:
         return bytes(self.out)
 
 
+def _jpeg_category(v):
+    return v.bit_length() if v > 0 else (-v).bit_length()
+
+
+def _jpeg_coeff_bits(v, s):
+    return v if v >= 0 else v + (1 << s) - 1
+
+
 def _jpeg_write_block(w, blk, dc_huff, ac_huff, prev_dc):
     """Entropy-encode one NATURAL-order quantized block; returns the new
     DC predictor (per-component in interleaved scans)."""
-
-    def category(v):
-        return v.bit_length() if v > 0 else (-v).bit_length()
-
-    def coeff_bits(v, s):
-        return v if v >= 0 else v + (1 << s) - 1
-
     zz = [blk[_JPEG_ZIGZAG[i]] for i in range(64)]
     diff = zz[0] - prev_dc
-    s = category(diff)
+    s = _jpeg_category(diff)
     w.write(*dc_huff[s])
     if s:
-        w.write(coeff_bits(diff, s), s)
+        w.write(_jpeg_coeff_bits(diff, s), s)
     last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
     run = 0
     for i in range(1, last_nz + 1):
@@ -1212,9 +1071,9 @@ def _jpeg_write_block(w, blk, dc_huff, ac_huff, prev_dc):
         while run > 15:
             w.write(*ac_huff[0xF0])
             run -= 16
-        s = category(zz[i])
+        s = _jpeg_category(zz[i])
         w.write(*ac_huff[(run << 4) | s])
-        w.write(coeff_bits(zz[i], s), s)
+        w.write(_jpeg_coeff_bits(zz[i], s), s)
         run = 0
     if last_nz < 63:
         w.write(*ac_huff[0x00])
@@ -1222,8 +1081,6 @@ def _jpeg_write_block(w, blk, dc_huff, ac_huff, prev_dc):
 
 
 def _jpeg_seg(marker, body):
-    import struct
-
     return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 
 
@@ -1246,8 +1103,6 @@ def _jpeg_encode_gray(width, height, blocks, qtable, restart_interval=0):
     ``restart_interval`` > 0 emits a DRI segment and RST0-7 markers every
     that many MCUs (byte-aligned, DC predictor reset) — the resync
     mechanism real encoders use for error resilience and parallelism."""
-    import struct
-
     dc_huff = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_huff = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
     w = _JpegBitWriter()
@@ -1274,27 +1129,39 @@ def _jpeg_encode_gray(width, height, blocks, qtable, restart_interval=0):
     )
 
 
-def _jpeg_encode_color(width, height, comp_blocks, qy, qc):
-    """Baseline YCbCr 4:4:4 JFIF: ``comp_blocks`` = (y, cb, cr) lists of
-    row-major NATURAL-order quantized blocks. MCUs interleave one block
-    per component with per-component DC predictors; Y uses quant table 0,
-    chroma table 1; all components share the (legal) luminance Huffman
-    tables."""
-    import struct
-
+def _jpeg_encode_ycbcr(width, height, yblocks, cbblocks, crblocks, qy, qc, sampling=1):
+    """Baseline YCbCr JFIF with luma sampled ``sampling`` x ``sampling``
+    against 1x1 chroma: 1 is 4:4:4 (8x8 MCUs of one block per
+    component), 2 is 4:2:0 (16x16 MCUs carrying 4 Y blocks, row-major,
+    + 1 Cb + 1 Cr). ``yblocks`` is the row-major global list of
+    NATURAL-order quantized 8-px blocks; chroma lists are row-major over
+    MCUs. Per-component DC predictors; Y uses quant table 0, chroma
+    table 1; all components share the (legal) luminance Huffman tables.
+    Geometry must be a multiple of the MCU size."""
+    # explicit raise, not assert: `python -O` strips asserts, and a
+    # geometry off the MCU grid here would silently index blocks wrong
+    if width % (8 * sampling) or height % (8 * sampling):
+        raise ValueError(f"YCbCr synthesis needs width/height multiples of {8 * sampling}")
     dc_huff = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_huff = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
     w = _JpegBitWriter()
     preds = [0, 0, 0]
-    n_mcu = (width // 8) * (height // 8)
-    for m in range(n_mcu):
-        for c in range(3):
-            preds[c] = _jpeg_write_block(w, comp_blocks[c][m], dc_huff, ac_huff, preds[c])
+    ybw = width // 8
+    n_mcu_x, n_mcu_y = width // (8 * sampling), height // (8 * sampling)
+    for my in range(n_mcu_y):
+        for mx in range(n_mcu_x):
+            for by2 in range(sampling):
+                for bx2 in range(sampling):
+                    blk = yblocks[(sampling * my + by2) * ybw + (sampling * mx + bx2)]
+                    preds[0] = _jpeg_write_block(w, blk, dc_huff, ac_huff, preds[0])
+            m = my * n_mcu_x + mx
+            preds[1] = _jpeg_write_block(w, cbblocks[m], dc_huff, ac_huff, preds[1])
+            preds[2] = _jpeg_write_block(w, crblocks[m], dc_huff, ac_huff, preds[2])
     scan = w.flush()
     sof = _jpeg_seg(
         0xC0,
         struct.pack(">BHHB", 8, height, width, 3)
-        + bytes((1, 0x11, 0))
+        + bytes((1, 0x11 * sampling, 0))
         + bytes((2, 0x11, 1))
         + bytes((3, 0x11, 1)),
     )
@@ -1328,8 +1195,6 @@ def _jpeg_decode_planes(data):
     verified in sequence; DC predictors and EOB runs reset). Rejects
     geometry not a multiple of the MCU size (out of scope, like
     interlaced GIF)."""
-    import struct
-
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (no SOI)")
     pos, qtables, huff = 2, {}, {}
@@ -1692,8 +1557,6 @@ def _jpeg_ycbcr_to_rgb(y, cb, cr):
     """ITU-R BT.601 full-range conversion with floor(x + 0.5) rounding —
     explicitly NOT Python's banker's round, so the DuckDB oracle's
     floor(x + 0.5) reproduces every value bit-exactly."""
-    import math
-
     def cl(v):
         f = math.floor(v + 0.5)
         return 0 if f < 0 else (255 if f > 255 else int(f))
@@ -1748,42 +1611,19 @@ def _jpeg_bytes(doc_id: int) -> bytes:
 
 
 def synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from collections.abc import Iterator as _It
+    return _synth(df, id_col, _jpeg_bytes)
 
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "data": [_jpeg_bytes(int(i)) for i in ids]}
-            )
 
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+def _jpeg_gray_row(data: bytes) -> tuple:
+    w, h, px = _jpeg_decode_gray(data)
+    return (w, h, (w // 8) * (h // 8), sum(px) * 1000 // (w * h))
 
 
 def decode_jpeg(df: DataFrame) -> DataFrame:
     """Arrow-batched full baseline JPEG decode (see
     :func:`_jpeg_decode_gray`); exact integer mean over the decoded
     pixels."""
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        w, h, px = _jpeg_decode_gray(data)
-        return (w, h, (w // 8) * (h // 8), sum(px) * 1000 // (w * h))
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_blocks": [f[2] for f in feats],
-                    "mean_gray_milli": [f[3] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=JPEG_DECODED_SCHEMA)
+    return _decode_rows(df, _jpeg_gray_row, JPEG_DECODED_SCHEMA)
 
 
 JPEG_COLOR_DECODED_SCHEMA = (
@@ -1808,20 +1648,17 @@ def _jpeg_color_bytes(doc_id: int) -> bytes:
             ys.append([((5 * bx + 11 * by + doc_id) % 161) - 80] + [0] * 63)
             cbs.append([((3 * bx + 7 * by + doc_id) % 101) - 50] + [0] * 63)
             crs.append([((7 * bx + 5 * by + doc_id) % 101) - 50] + [0] * 63)
-    return _jpeg_encode_color(bw * 8, bh * 8, (ys, cbs, crs), qy, qc)
+    return _jpeg_encode_ycbcr(bw * 8, bh * 8, ys, cbs, crs, qy, qc)
 
 
 def synth_jpeg_color(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from collections.abc import Iterator as _It
+    return _synth(df, id_col, _jpeg_color_bytes)
 
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "data": [_jpeg_color_bytes(int(i)) for i in ids]}
-            )
 
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+def _jpeg_rgb_row(data: bytes) -> tuple:
+    w, h, rp, gp, bp = _jpeg_decode_rgb(data)
+    n = w * h
+    return (w, h, sum(rp) * 1000 // n, sum(gp) * 1000 // n, sum(bp) * 1000 // n)
 
 
 def decode_jpeg_color(df: DataFrame) -> DataFrame:
@@ -1829,70 +1666,7 @@ def decode_jpeg_color(df: DataFrame) -> DataFrame:
     MCUs with per-component DC predictors and quant tables, then BT.601
     conversion (see :func:`_jpeg_ycbcr_to_rgb`); exact integer channel
     means."""
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        w, h, rp, gp, bp = _jpeg_decode_rgb(data)
-        n = w * h
-        return (w, h, sum(rp) * 1000 // n, sum(gp) * 1000 // n, sum(bp) * 1000 // n)
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "mean_r_milli": [f[2] for f in feats],
-                    "mean_g_milli": [f[3] for f in feats],
-                    "mean_b_milli": [f[4] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=JPEG_COLOR_DECODED_SCHEMA)
-
-
-def _jpeg_encode_420(width, height, yblocks, cbblocks, crblocks, qy, qc):
-    """Baseline YCbCr 4:2:0 JFIF: Y sampled 2x2, chroma 1x1 — each MCU
-    covers 16x16 pixels and carries 4 Y blocks (row-major) + 1 Cb + 1 Cr
-    with per-component DC predictors. ``yblocks`` is the row-major
-    global list over 8-px blocks; chroma lists are row-major over MCUs.
-    Geometry must be a multiple of 16."""
-    import struct
-
-    # explicit raise, not assert: `python -O` strips asserts, and a
-    # non-multiple-of-16 geometry here would silently index blocks wrong
-    if width % 16 or height % 16:
-        raise ValueError("4:2:0 synthesis needs width/height multiples of 16")
-    dc_huff = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_huff = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    w = _JpegBitWriter()
-    preds = [0, 0, 0]
-    ybw = width // 8
-    n_mcu_x, n_mcu_y = width // 16, height // 16
-    for my in range(n_mcu_y):
-        for mx in range(n_mcu_x):
-            for by2 in range(2):
-                for bx2 in range(2):
-                    blk = yblocks[(2 * my + by2) * ybw + (2 * mx + bx2)]
-                    preds[0] = _jpeg_write_block(w, blk, dc_huff, ac_huff, preds[0])
-            m = my * n_mcu_x + mx
-            preds[1] = _jpeg_write_block(w, cbblocks[m], dc_huff, ac_huff, preds[1])
-            preds[2] = _jpeg_write_block(w, crblocks[m], dc_huff, ac_huff, preds[2])
-    scan = w.flush()
-    sof = _jpeg_seg(
-        0xC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes((1, 0x22, 0))
-        + bytes((2, 0x11, 1))
-        + bytes((3, 0x11, 1)),
-    )
-    sos = _jpeg_seg(0xDA, bytes((3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0)))
-    return (
-        b"\xff\xd8" + _jpeg_dqt_seg(0, qy) + _jpeg_dqt_seg(1, qc) + sof
-        + _jpeg_dht_segs() + sos + scan + b"\xff\xd9"
-    )
+    return _decode_rows(df, _jpeg_rgb_row, JPEG_COLOR_DECODED_SCHEMA)
 
 
 def _jpeg_420_bytes(doc_id: int) -> bytes:
@@ -1912,20 +1686,11 @@ def _jpeg_420_bytes(doc_id: int) -> bytes:
         for mx in range(mw):
             cbs.append([((3 * mx + 7 * my + doc_id) % 101) - 50] + [0] * 63)
             crs.append([((7 * mx + 5 * my + doc_id) % 101) - 50] + [0] * 63)
-    return _jpeg_encode_420(mw * 16, mh * 16, ys, cbs, crs, qy, qc)
+    return _jpeg_encode_ycbcr(mw * 16, mh * 16, ys, cbs, crs, qy, qc, sampling=2)
 
 
 def synth_jpeg_420(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from collections.abc import Iterator as _It
-
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "data": [_jpeg_420_bytes(int(i)) for i in ids]}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+    return _synth(df, id_col, _jpeg_420_bytes)
 
 
 def decode_jpeg_420(df: DataFrame) -> DataFrame:
@@ -1933,28 +1698,7 @@ def decode_jpeg_420(df: DataFrame) -> DataFrame:
     :func:`decode_jpeg_color`; the subsampled chroma planes are
     replication-upsampled before BT.601 conversion (semantics defined in
     :func:`_jpeg_decode_planes`)."""
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        w, h, rp, gp, bp = _jpeg_decode_rgb(data)
-        n = w * h
-        return (w, h, sum(rp) * 1000 // n, sum(gp) * 1000 // n, sum(bp) * 1000 // n)
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "mean_r_milli": [f[2] for f in feats],
-                    "mean_g_milli": [f[3] for f in feats],
-                    "mean_b_milli": [f[4] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=JPEG_COLOR_DECODED_SCHEMA)
+    return _decode_rows(df, _jpeg_rgb_row, JPEG_COLOR_DECODED_SCHEMA)
 
 
 # Progressive AC scans need EOBn symbols (r<<4 for r=1..14) that the
@@ -1970,14 +1714,6 @@ _JPEG_AC_PROG_VALS = tuple(
     + [(run << 4) | s for run in range(16) for s in range(1, 11)]
 )
 _JPEG_AC_PROG_BITS = (0,) + (0,) * 8 + (len(_JPEG_AC_PROG_VALS),) + (0,) * 7
-
-
-def _jpeg_category(v):
-    return v.bit_length() if v > 0 else (-v).bit_length()
-
-
-def _jpeg_coeff_bits(v, s):
-    return v if v >= 0 else v + (1 << s) - 1
 
 
 def _jpeg_write_dc_first_scan(blocks, al, dc_huff):
@@ -2117,8 +1853,6 @@ def _jpeg_write_ac_refine_scan(blocks, ss, se, al, ac_huff):
 
 
 def _jpeg_progressive_headers(width, height, qtable):
-    import struct
-
     sof = _jpeg_seg(0xC2, struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0)))
     dht = _jpeg_seg(
         0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS[1:]) + bytes(_JPEG_DC_VALS)
@@ -2195,16 +1929,7 @@ def _jpeg_progressive_bytes(doc_id: int) -> bytes:
 
 
 def synth_jpeg_progressive(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from collections.abc import Iterator as _It
-
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "data": [_jpeg_progressive_bytes(int(i)) for i in ids]}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+    return _synth(df, id_col, _jpeg_progressive_bytes)
 
 
 def _jpeg_sa_bytes(doc_id: int) -> bytes:
@@ -2224,16 +1949,7 @@ def _jpeg_sa_bytes(doc_id: int) -> bytes:
 
 
 def synth_jpeg_sa(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from collections.abc import Iterator as _It
-
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "data": [_jpeg_sa_bytes(int(i)) for i in ids]}
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+    return _synth(df, id_col, _jpeg_sa_bytes)
 
 
 # H.264/AVC: the metadata layer is REAL byte-level parsing — Annex-B
@@ -2504,16 +2220,24 @@ def _h264_bytes(doc_id: int) -> bytes:
 
 
 def synth_h264(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from collections.abc import Iterator as _It
+    return _synth(df, id_col, _h264_bytes)
 
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "data": [_h264_bytes(int(i)) for i in ids]}
-            )
 
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+def _h264_sps_row(data: bytes) -> tuple:
+    sps = None
+    n_nal = n_idr = 0
+    for typ, payload in _h264_annexb_nals(bytes(data)):
+        n_nal += 1
+        if typ == 7 and sps is None:
+            sps = _h264_parse_sps(_h264_ep_remove(payload))
+        elif typ == 5:
+            n_idr += 1
+    if sps is None:
+        raise ValueError("no SPS NAL in stream")
+    return (
+        sps["width"], sps["height"], sps["profile_idc"], sps["level_idc"],
+        n_nal, n_idr,
+    )
 
 
 def parse_h264(df: DataFrame) -> DataFrame:
@@ -2521,40 +2245,7 @@ def parse_h264(df: DataFrame) -> DataFrame:
     strip emulation prevention from the SPS, and run the Exp-Golomb
     header parse — resolution, profile, level, NAL/IDR counts. Frame
     decode stays with the external-codec stub (:func:`decode_payload`)."""
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        sps = None
-        n_nal = n_idr = 0
-        for typ, payload in _h264_annexb_nals(bytes(data)):
-            n_nal += 1
-            if typ == 7 and sps is None:
-                sps = _h264_parse_sps(_h264_ep_remove(payload))
-            elif typ == 5:
-                n_idr += 1
-        if sps is None:
-            raise ValueError("no SPS NAL in stream")
-        return (
-            sps["width"], sps["height"], sps["profile_idc"], sps["level_idc"],
-            n_nal, n_idr,
-        )
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "profile_idc": [f[2] for f in feats],
-                    "level_idc": [f[3] for f in feats],
-                    "n_nal_units": [f[4] for f in feats],
-                    "n_idr_slices": [f[5] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=H264_PARSED_SCHEMA)
+    return _decode_rows(df, _h264_sps_row, H264_PARSED_SCHEMA)
 
 
 # H.264/AVC FRAME decode — the I_PCM profile subset. I_PCM macroblocks
@@ -2785,16 +2476,40 @@ def _h264_ipcm_bytes(doc_id: int) -> bytes:
 
 
 def synth_h264_ipcm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from collections.abc import Iterator as _It
+    return _synth(df, id_col, _h264_ipcm_bytes)
 
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "data": [_h264_ipcm_bytes(int(i)) for i in ids]}
-            )
 
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+def _h264_ipcm_row(data: bytes) -> tuple:
+    sps = pps = None
+    n_frames = n_mbs = sum_y = sum_cb = sum_cr = 0
+    width = height = 0
+    for nal_hdr, payload in _h264_annexb_nals(bytes(data)):
+        rbsp = _h264_ep_remove(payload)
+        if nal_hdr == 7:
+            sps = _h264_parse_sps(rbsp)
+        elif nal_hdr == 8:
+            pps = _h264_parse_pps(rbsp)
+        elif nal_hdr == 5:
+            if sps is None or pps is None:
+                raise ValueError("slice before SPS/PPS activation")
+            # _h264_annexb_nals strips the header byte; rebuild the
+            # fields the slice layer needs (ref_idc=3, type=5)
+            y, cb, cr = _h264_decode_ipcm_slice(rbsp, sps, pps, 0x65)
+            cl, crx, ct, cbm = sps["crop_px"]
+            width, height = sps["width"], sps["height"]
+            full_w = sps["mb_width"] * 16
+            for row in range(ct, ct + height):
+                sum_y += sum(y[row * full_w + cl : row * full_w + cl + width])
+            cw, ch = width // 2, height // 2
+            ccl, cct, cfw = cl // 2, ct // 2, full_w // 2
+            for row in range(cct, cct + ch):
+                sum_cb += sum(cb[row * cfw + ccl : row * cfw + ccl + cw])
+                sum_cr += sum(cr[row * cfw + ccl : row * cfw + ccl + cw])
+            n_frames += 1
+            n_mbs += sps["mb_width"] * sps["mb_height"]
+    if n_frames == 0:
+        raise ValueError("no decodable IDR picture in stream")
+    return (width, height, n_frames, n_mbs, sum_y, sum_cb, sum_cr)
 
 
 def decode_h264_ipcm(df: DataFrame) -> DataFrame:
@@ -2806,57 +2521,7 @@ def decode_h264_ipcm(df: DataFrame) -> DataFrame:
     geometry, crop, plane interleave, alignment — changes the output.
     mapInPandas keeps decode embarrassingly parallel (one task per
     input split, no shuffle) at any corpus size."""
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        sps = pps = None
-        n_frames = n_mbs = sum_y = sum_cb = sum_cr = 0
-        width = height = 0
-        for nal_hdr, payload in _h264_annexb_nals(bytes(data)):
-            rbsp = _h264_ep_remove(payload)
-            if nal_hdr == 7:
-                sps = _h264_parse_sps(rbsp)
-            elif nal_hdr == 8:
-                pps = _h264_parse_pps(rbsp)
-            elif nal_hdr == 5:
-                if sps is None or pps is None:
-                    raise ValueError("slice before SPS/PPS activation")
-                # _h264_annexb_nals strips the header byte; rebuild the
-                # fields the slice layer needs (ref_idc=3, type=5)
-                y, cb, cr = _h264_decode_ipcm_slice(rbsp, sps, pps, 0x65)
-                cl, crx, ct, cbm = sps["crop_px"]
-                width, height = sps["width"], sps["height"]
-                full_w = sps["mb_width"] * 16
-                for row in range(ct, ct + height):
-                    sum_y += sum(y[row * full_w + cl : row * full_w + cl + width])
-                cw, ch = width // 2, height // 2
-                ccl, cct, cfw = cl // 2, ct // 2, full_w // 2
-                for row in range(cct, cct + ch):
-                    sum_cb += sum(cb[row * cfw + ccl : row * cfw + ccl + cw])
-                    sum_cr += sum(cr[row * cfw + ccl : row * cfw + ccl + cw])
-                n_frames += 1
-                n_mbs += sps["mb_width"] * sps["mb_height"]
-        if n_frames == 0:
-            raise ValueError("no decodable IDR picture in stream")
-        return (width, height, n_frames, n_mbs, sum_y, sum_cb, sum_cr)
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_frames": [f[2] for f in feats],
-                    "n_mbs": [f[3] for f in feats],
-                    "sum_y": [f[4] for f in feats],
-                    "sum_cb": [f[5] for f in feats],
-                    "sum_cr": [f[6] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=H264_FRAME_SCHEMA)
+    return _decode_rows(df, _h264_ipcm_row, H264_FRAME_SCHEMA)
 
 
 # Audio feature extraction over REAL decoded PCM — the DSP layer a
@@ -2874,6 +2539,20 @@ AUDIO_FEATURES_SCHEMA = (
 AUDIO_FRAME_SIZE = 160  # 20 ms at the synth's 8 kHz; final partial frame kept
 
 
+def _audio_features_row(data: bytes, frame_size: int) -> tuple:
+    _, samples = _wav_pcm(data)
+    n = len(samples)
+    zc = sum(1 for i in range(1, n) if (samples[i - 1] < 0) != (samples[i] < 0))
+    n_frames = (n + frame_size - 1) // frame_size
+    peak_idx, peak_e, total = 0, -1, 0
+    for fi in range(n_frames):
+        e = sum(s * s for s in samples[fi * frame_size : (fi + 1) * frame_size])
+        total += e
+        if e > peak_e:
+            peak_idx, peak_e = fi, e
+    return (n, n_frames, zc, total, peak_idx, max(peak_e, 0))
+
+
 def audio_features(df: DataFrame, frame_size: int = AUDIO_FRAME_SIZE) -> DataFrame:
     """Framewise audio features from real WAV bytes: RIFF chunk walk
     (same rules as :func:`decode_wav` — mono 16-bit PCM only), then
@@ -2882,44 +2561,8 @@ def audio_features(df: DataFrame, frame_size: int = AUDIO_FRAME_SIZE) -> DataFra
     zero-crossing count (sign change between consecutive samples, zero
     counted as non-negative), and the peak-energy frame (ties -> lowest
     index). mapInPandas keeps it shuffle-free at any corpus size."""
-    import struct
-    from collections.abc import Iterator as _It
-
-    def _one(data: bytes) -> tuple:
-        _, samples = _wav_pcm(data)
-        n = len(samples)
-        zc = sum(
-            1
-            for i in range(1, n)
-            if (samples[i - 1] < 0) != (samples[i] < 0)
-        )
-        n_frames = (n + frame_size - 1) // frame_size
-        peak_idx, peak_e, total = 0, -1, 0
-        for fi in range(n_frames):
-            e = sum(
-                s * s for s in samples[fi * frame_size : (fi + 1) * frame_size]
-            )
-            total += e
-            if e > peak_e:
-                peak_idx, peak_e = fi, e
-        return (n, n_frames, zc, total, peak_idx, max(peak_e, 0))
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "n_samples": [f[0] for f in feats],
-                    "n_frames": [f[1] for f in feats],
-                    "zero_crossings": [f[2] for f in feats],
-                    "sum_sq": [f[3] for f in feats],
-                    "peak_frame_idx": [f[4] for f in feats],
-                    "peak_frame_energy": [f[5] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=AUDIO_FEATURES_SCHEMA)
+    row = functools.partial(_audio_features_row, frame_size=frame_size)
+    return _decode_rows(df, row, AUDIO_FEATURES_SCHEMA)
 
 
 # MP4 sample tables: the layer a video pipeline actually schedules work
@@ -2941,8 +2584,6 @@ def _mp4_track_bytes(doc_id: int) -> bytes:
     stsz}}}}}. n = 10 + id%20 samples in two stts runs (deltas
     100+id%7 / 200+id%11); stsz is uniform (id%4==0) or per-sample
     size(i) = 500 + (13*id + 29*i) % 1000."""
-    import struct
-
     def box(typ: bytes, body: bytes) -> bytes:
         return struct.pack(">I4s", 8 + len(body), typ) + body
 
@@ -2997,16 +2638,49 @@ def _mp4_track_bytes(doc_id: int) -> bytes:
 
 
 def synth_mp4_tracks(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from collections.abc import Iterator as _It
+    return _synth(df, id_col, _mp4_track_bytes)
 
-    def _gen(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "data": [_mp4_track_bytes(int(i)) for i in ids]}
-            )
 
-    return _spread_ids(df, id_col).mapInPandas(_gen, schema="doc_id bigint, data binary")
+def _mp4_child(data: bytes, span: tuple, typ: bytes) -> tuple:
+    """(body_start, box_end) of the first ``typ`` box inside ``span``."""
+    for t, b, e in _mp4_boxes(data, *span):
+        if t == typ:
+            return b, e
+    raise ValueError(f"missing {typ.decode()} box")
+
+
+def _mp4_tracks_row(data: bytes) -> tuple:
+    trak = _mp4_child(data, _mp4_child(data, (0, len(data)), b"moov"), b"trak")
+    mdia = _mp4_child(data, trak, b"mdia")
+    b, _ = _mp4_child(data, mdia, b"mdhd")
+    if data[b]:
+        (ts,) = struct.unpack_from(">I", data, b + 20)
+    else:
+        (ts,) = struct.unpack_from(">I", data, b + 12)
+    stbl = _mp4_child(data, _mp4_child(data, mdia, b"minf"), b"stbl")
+    b, e = _mp4_child(data, stbl, b"stts")
+    (n_ent,) = struct.unpack_from(">I", data, b + 4)
+    if b + 8 + 8 * n_ent > e:
+        raise ValueError("stts overruns its box")
+    n_stts, dur = 0, 0
+    for i in range(n_ent):
+        cnt, delta = struct.unpack_from(">II", data, b + 8 + 8 * i)
+        n_stts += cnt
+        dur += cnt * delta
+    b, e = _mp4_child(data, stbl, b"stsz")
+    uniform, n = struct.unpack_from(">II", data, b + 4)
+    if uniform:
+        total, mx = uniform * n, uniform
+    else:
+        if b + 12 + 4 * n > e:
+            raise ValueError("stsz overruns its box")
+        sizes = struct.unpack_from(f">{n}I", data, b + 12)
+        total, mx = sum(sizes), max(sizes) if sizes else 0
+    if n != n_stts:
+        raise ValueError(f"stsz/stts sample counts disagree: {n} vs {n_stts}")
+    if ts == 0:
+        raise ValueError("bad mdhd timescale")
+    return (ts, n, dur, dur * 1000 // ts, total, mx)
 
 
 def decode_mp4_tracks(df: DataFrame) -> DataFrame:
@@ -3015,90 +2689,4 @@ def decode_mp4_tracks(df: DataFrame) -> DataFrame:
     read stsz in both its uniform and per-sample forms, and cross-check
     the two tables' sample counts (a real demuxer must — they disagree
     in corrupt files). Exact integers only."""
-    import struct
-    from collections.abc import Iterator as _It
-
-    def _boxes(data: bytes, start: int, end: int):
-        pos = start
-        while pos + 8 <= end:
-            size, typ = struct.unpack_from(">I4s", data, pos)
-            body = pos + 8
-            if size == 0:
-                yield typ, body, end
-                return
-            if size == 1:
-                (size,) = struct.unpack_from(">Q", data, body)
-                body += 8
-                if size < 16:
-                    raise ValueError("bad largesize box")
-            elif size < 8:
-                raise ValueError("bad box size")
-            yield typ, body, pos + size
-            pos += size
-
-    def _find(data, start, end, typ):
-        for t, b, e in _boxes(data, start, end):
-            if t == typ:
-                return b, e
-        return None
-
-    def _one(data: bytes) -> tuple:
-        moov = _find(data, 0, len(data), b"moov")
-        if moov is None:
-            raise ValueError("missing moov")
-        trak = _find(data, *moov, b"trak")
-        if trak is None:
-            raise ValueError("missing trak")
-        mdia = _find(data, *trak, b"mdia")
-        mdhd = _find(data, *mdia, b"mdhd")
-        b, _ = mdhd
-        if data[b]:
-            (ts,) = struct.unpack_from(">I", data, b + 20)
-        else:
-            (ts,) = struct.unpack_from(">I", data, b + 12)
-        minf = _find(data, *mdia, b"minf")
-        stbl = _find(data, *minf, b"stbl")
-        stts = _find(data, *stbl, b"stts")
-        stsz = _find(data, *stbl, b"stsz")
-        if stts is None or stsz is None:
-            raise ValueError("missing stts or stsz")
-        b, e = stts
-        (n_ent,) = struct.unpack_from(">I", data, b + 4)
-        if b + 8 + 8 * n_ent > e:
-            raise ValueError("stts overruns its box")
-        n_stts, dur = 0, 0
-        for i in range(n_ent):
-            cnt, delta = struct.unpack_from(">II", data, b + 8 + 8 * i)
-            n_stts += cnt
-            dur += cnt * delta
-        b, e = stsz
-        uniform, n = struct.unpack_from(">II", data, b + 4)
-        if uniform:
-            total, mx = uniform * n, uniform
-        else:
-            if b + 12 + 4 * n > e:
-                raise ValueError("stsz overruns its box")
-            sizes = struct.unpack_from(f">{n}I", data, b + 12)
-            total, mx = sum(sizes), max(sizes) if sizes else 0
-        if n != n_stts:
-            raise ValueError(f"stsz/stts sample counts disagree: {n} vs {n_stts}")
-        if ts == 0:
-            raise ValueError("bad mdhd timescale")
-        return (ts, n, dur, dur * 1000 // ts, total, mx)
-
-    def _decode(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            feats = [_one(d) for d in pdf["data"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_timescale": [f[0] for f in feats],
-                    "n_samples": [f[1] for f in feats],
-                    "duration_units": [f[2] for f in feats],
-                    "duration_ms": [f[3] for f in feats],
-                    "total_bytes": [f[4] for f in feats],
-                    "max_sample_bytes": [f[5] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=MP4_TRACK_SCHEMA)
+    return _decode_rows(df, _mp4_tracks_row, MP4_TRACK_SCHEMA)

@@ -32,15 +32,8 @@ import warnings
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from kafka_custom_transforms_spark.functions.skew import PYTHON_FANOUT_CAP
 from kafka_custom_transforms_spark.functions.vector import as_double, cosine, cosine_arrow
-
-# Fan-out target cap for the exact top-k degenerate-scan guard (r15
-# optimization): the measured knee of per-task Python-runner dispatch
-# (~6 ms serialized per task) against the Arrow scoring stage's per-task
-# compute — see the call site in topk_neighbors for the sweep numbers.
-# Module-level so a cluster deployment can override without code edits
-# (precedent: dedup.SHINGLE_FANOUT_CAP, multimodal.MULTIMODAL_SPREAD_CAP).
-EXACT_SCORE_FANOUT_CAP = 16
 
 
 def _pair_cosine(qv: Column, bv: Column, cos_dim: int | None) -> Column:
@@ -149,18 +142,17 @@ def topk_neighbors(
     # locally (trivial shuffle of the raw vectors, exactly when the
     # corpus is small) and is a guaranteed no-op at cluster scale, so
     # "the base table never shuffles" still holds where it matters.
-    # The target is capped at EXACT_SCORE_FANOUT_CAP, not the session's
-    # full parallelism: each Python-stage task costs ~6 ms of serialized
-    # dispatch (the same measured knee as multimodal.MULTIMODAL_SPREAD_CAP
-    # and dedup.SHINGLE_FANOUT_CAP), and the fanned stage here is one
-    # numpy matmul per batch — sf0.1 idle 7-sample sweep: 0.92 s at 8
-    # parts, 0.78 at 16, 0.84 at 24, 0.94 at 32. No-op at cluster scale
-    # (the guard only ADDS partitions, never removes them).
+    # The target is capped at PYTHON_FANOUT_CAP, not the session's full
+    # parallelism: each Python-stage task costs ~6 ms of serialized
+    # dispatch, and the fanned stage here is one numpy matmul per batch
+    # (sf0.1 idle 7-sample sweep: 0.92 s at 8 parts, 0.78 at 16, 0.84 at
+    # 24, 0.94 at 32). No-op at cluster scale (the guard only ADDS
+    # partitions, never removes them).
     from kafka_custom_transforms_spark.functions.skew import ensure_min_partitions
 
     spark_ctx = base.sparkSession.sparkContext
     b = ensure_min_partitions(
-        b, min(EXACT_SCORE_FANOUT_CAP, spark_ctx.defaultParallelism)
+        b, min(PYTHON_FANOUT_CAP, spark_ctx.defaultParallelism)
     )
     q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
     scored = b.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id") if not include_self else F.lit(True))
@@ -405,7 +397,7 @@ def hyperplane_buckets(
         # scan already exceeds the cap, so this only ever ADDS partitions.
         vecs = ensure_min_partitions(
             vecs,
-            min(EXACT_SCORE_FANOUT_CAP, df.sparkSession.sparkContext.defaultParallelism),
+            min(PYTHON_FANOUT_CAP, df.sparkSession.sparkContext.defaultParallelism),
         )
     id_type = df.schema[id_col].dataType.simpleString()
     return vecs.mapInPandas(_assign, schema=f"id {id_type}, table int, bucket long")

@@ -1,21 +1,28 @@
 """Property-based tests for the pure-Python codec layer (no Spark):
 the GIF LZW codec and the JPEG entropy-coding/IDCT path under random
-inputs. Complements the fixed-case byte-sensitivity tests in
+inputs, every row decoder on every prefix of its synthesized payloads,
+and golden digests of the synthesized payload bytes. Complements the fixed-case byte-sensitivity tests in
 test_multimodal.py — hypothesis hunts the corners (alphabet edges,
 dictionary growth boundaries, zero runs, category-size boundaries)."""
 
 from __future__ import annotations
 
+import functools
+import hashlib
+
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from kafka_custom_transforms_spark.operators import multimodal as mm
 from kafka_custom_transforms_spark.operators.multimodal import (
+    _decode_row,
     _gif_lzw_decode,
     _gif_lzw_encode,
     _jpeg_bytes,
     _jpeg_decode_gray,
     _jpeg_decode_planes,
-    _jpeg_encode_420,
     _jpeg_encode_gray,
+    _jpeg_encode_ycbcr,
     _jpeg_idct_2d,
 )
 
@@ -104,7 +111,7 @@ def test_jpeg_420_planes_roundtrip(data):
     ys = [_rand_block(data) for _ in range(4)]  # one 16x16 MCU
     cbs = [_rand_block(data)]
     crs = [_rand_block(data)]
-    payload = _jpeg_encode_420(16, 16, ys, cbs, crs, QY, QC)
+    payload = _jpeg_encode_ycbcr(16, 16, ys, cbs, crs, QY, QC, sampling=2)
     w, h, planes = _jpeg_decode_planes(payload)
     assert (w, h, len(planes)) == (16, 16, 3)
     for by in range(2):
@@ -218,3 +225,74 @@ def test_png_unfilter_numpy_matches_python(data):
     got_np = _png_unfilter_sums_numpy(bytes(raw), height, stride)
     assert got_py == expected
     assert got_np == expected
+
+
+# (payload synthesizer as its synth_* calls it, row decoder) for every
+# codec; the synthesizer's name is the test id.
+PAYLOAD_CODECS = {
+    "bmp": (lambda i: mm._bmp_bytes(i, 8 + i % 9, 6 + i % 7), mm._bmp_row),
+    "png": (lambda i: mm._png_bytes(i, 5 + i % 8, 6 + i % 7), mm._png_row),
+    "wav": (lambda i: mm._wav_bytes(i, 400 + i % 50), mm._wav_row),
+    "wav_audio_features": (
+        lambda i: mm._wav_bytes(i, 400 + i % 50),
+        functools.partial(mm._audio_features_row, frame_size=mm.AUDIO_FRAME_SIZE),
+    ),
+    "mp4": (mm._mp4_bytes, mm._mp4_row),
+    "gif": (lambda i: mm._gif_bytes(i, 6 + i % 7, 5 + i % 6, 1 + i % 3), mm._gif_row),
+    "jpeg": (mm._jpeg_bytes, mm._jpeg_gray_row),
+    "jpeg_color": (mm._jpeg_color_bytes, mm._jpeg_rgb_row),
+    "jpeg_420": (mm._jpeg_420_bytes, mm._jpeg_rgb_row),
+    "jpeg_progressive": (mm._jpeg_progressive_bytes, mm._jpeg_gray_row),
+    "jpeg_sa": (mm._jpeg_sa_bytes, mm._jpeg_gray_row),
+    "h264": (mm._h264_bytes, mm._h264_sps_row),
+    "h264_ipcm": (mm._h264_ipcm_bytes, mm._h264_ipcm_row),
+    "mp4_track": (mm._mp4_track_bytes, mm._mp4_tracks_row),
+}
+
+
+@pytest.mark.parametrize("codec", sorted(PAYLOAD_CODECS))
+@settings(max_examples=8, deadline=None)
+@given(doc_id=st.integers(0, 10_000))
+def test_every_payload_prefix_decodes_or_raises_value_error(codec, doc_id):
+    """A truncated payload is what a cut-off object-store read or a
+    partial upload looks like: every prefix of a real payload must either
+    decode or raise ValueError — never struct.error or IndexError from
+    inside the parser. Where the parser tripped on the missing bytes, the
+    error names the codec and the row."""
+    make, row = PAYLOAD_CODECS[codec]
+    payload = make(doc_id)
+    _decode_row(row, doc_id, payload)  # the whole payload decodes
+    for k in range(len(payload)):
+        try:
+            _decode_row(row, doc_id, payload[:k])
+        except ValueError as exc:
+            if exc.__cause__ is not None:
+                assert str(exc).endswith(f": malformed payload (doc_id={doc_id})")
+
+
+# md5 of b"".join(payload(i) for i in range(200)) per synthesizer, with the
+# geometry arguments its synth_* passes. Every oracle row built on a
+# synthesizer recomputes its features from the generation formulas, so a
+# changed byte anywhere in the encoders shows up here first.
+SYNTH_DIGESTS = {
+    "bmp": "a1a2c98049f811534a95f939022d4223",
+    "png": "85aa238feea4e576026d29ccbbdbac5f",
+    "wav": "57074ac24005f9ba94910bf99249fe1e",
+    "mp4": "11f5097d56f6e5388389dadf1793e8d1",
+    "gif": "ad97af5f3c6d414982815862fbd39a06",
+    "jpeg": "e49ccd2bf82d47fdf95dc21bd9a9e5b5",
+    "jpeg_color": "0c2ab643bbbdf757e2940bc493a1a663",
+    "jpeg_420": "e25081db2e7f0be40bfe3e07e2876c42",
+    "jpeg_progressive": "48f79136b726916f378fd6894c1d74cd",
+    "jpeg_sa": "edc12031b7d32809ce5b31769c9f5807",
+    "h264": "99750ac6e78709a16c4dee01fa023ec9",
+    "h264_ipcm": "d3021da835337af6345cf27656459447",
+    "mp4_track": "be914bd223829b6a461b7e0db2e04f82",
+}
+
+
+@pytest.mark.parametrize("codec", sorted(SYNTH_DIGESTS))
+def test_synth_payload_bytes_match_golden_digest(codec):
+    make, _ = PAYLOAD_CODECS[codec]
+    digest = hashlib.md5(b"".join(make(i) for i in range(200))).hexdigest()
+    assert digest == SYNTH_DIGESTS[codec]

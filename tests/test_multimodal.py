@@ -63,11 +63,6 @@ def test_decode_reads_bytes_not_length(spark):
     assert a.magic == b.magic  # same 4-byte prefix, as a real sniffer would see
 
 
-def test_real_decoder_raises_without_media_libs(docs):
-    with pytest.raises(NotImplementedError, match="media"):
-        multimodal.decode_payload(multimodal.attach_payload(docs), real_decoder=True)
-
-
 def test_frame_sample(docs):
     decoded = multimodal.decode_payload(multimodal.attach_payload(docs))
     frames = multimodal.frame_sample(decoded, every_nth=10)
@@ -86,12 +81,6 @@ def test_resize_stub_plumbing(docs):
     assert all((r.out_width, r.out_height) == (128, 128) for r in rows)
     n_images = att.filter(F.col("meta.mime") == "image/png").count()
     assert len(rows) == n_images
-
-
-def test_resize_real_decoder_raises(docs):
-    att = multimodal.attach_payload(docs)
-    with pytest.raises(NotImplementedError, match="PIL"):
-        multimodal.resize_images(att, real_decoder=True)
 
 
 def test_bmp_decoder_parses_real_bytes(spark):
@@ -116,15 +105,13 @@ def test_bmp_decoder_parses_real_bytes(spark):
     assert rows[1]["mean_r_milli"] == rows[2]["mean_r_milli"]
 
 
-def test_bmp_decoder_rejects_non_bmp(spark):
-    import pandas as pd
-    import pytest
+def test_bmp_decoder_rejects_non_bmp():
+    from kafka_custom_transforms_spark.operators.multimodal import _bmp_row, _decode_row
 
-    from kafka_custom_transforms_spark.operators.multimodal import decode_bmp
-
-    df = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "data": [b"PNG9999"]}))
-    with pytest.raises(Exception):
-        decode_bmp(df).collect()
+    with pytest.raises(ValueError, match="bmp: malformed payload"):
+        _decode_row(_bmp_row, 1, b"PNG9999")
+    with pytest.raises(ValueError, match="not a BMP"):
+        _decode_row(_bmp_row, 1, b"PNG9" + bytes(60))
 
 
 def test_wav_decoder_parses_real_bytes(spark):
@@ -150,23 +137,21 @@ def test_wav_decoder_parses_real_bytes(spark):
     assert rows[1]["mean_abs_milli"] != rows[2]["mean_abs_milli"]
 
 
-def test_wav_decoder_rejects_stereo_and_non_wav(spark):
+def test_wav_decoder_rejects_stereo_and_non_wav():
     import struct
 
-    import pandas as pd
-    import pytest
-
     from kafka_custom_transforms_spark.operators.multimodal import (
+        _decode_row,
         _wav_bytes,
-        decode_wav,
+        _wav_row,
     )
 
     stereo = bytearray(_wav_bytes(1, 10))
     struct.pack_into("<H", stereo, 22, 2)  # channels = 2
-    for bad in (b"OggS1234", bytes(stereo)):
-        df = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "data": [bad]}))
-        with pytest.raises(Exception):
-            decode_wav(df).collect()
+    with pytest.raises(ValueError, match="mono 16-bit"):
+        _decode_row(_wav_row, 1, bytes(stereo))
+    with pytest.raises(ValueError, match="wav: malformed payload"):
+        _decode_row(_wav_row, 1, b"OggS1234")
 
 
 def test_mp4_decoder_walks_real_boxes(spark):
@@ -304,32 +289,40 @@ def test_png_decoder_analytic_means(spark):
         assert r["mean_b_milli"] == sb * 1000 // (w * h)
 
 
-def test_png_decoder_rejects_unsupported(spark):
-    import pandas as pd
-    import pytest
+def test_png_decoder_rejects_unsupported():
+    from kafka_custom_transforms_spark.operators.multimodal import _decode_row, _png_row
 
-    from kafka_custom_transforms_spark.operators.multimodal import decode_png
-
-    df = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "data": [b"BM123456"]}))
-    with pytest.raises(Exception):
-        decode_png(df).collect()
+    with pytest.raises(ValueError, match="not a PNG"):
+        _decode_row(_png_row, 1, b"BM123456")
 
 
-def test_bmp_decoder_rejects_truncated(spark):
+def test_bmp_decoder_rejects_truncated():
     """Advisor r3: a truncated pixel array must raise, not silently skew."""
+    from kafka_custom_transforms_spark.operators.multimodal import (
+        _bmp_bytes,
+        _bmp_row,
+        _decode_row,
+    )
+
+    good = _bmp_bytes(1, 5, 3)
+    with pytest.raises(ValueError, match="truncated BMP pixel array"):
+        _decode_row(_bmp_row, 1, good[:-4])
+
+
+def test_malformed_payload_error_names_codec_and_doc_id(spark):
+    """Through Spark, a payload cut off inside its header fails the job
+    with the named per-row error — codec and doc_id in the job's error
+    message — instead of a bare struct.error from the Arrow worker."""
     import pandas as pd
-    import pytest
 
     from kafka_custom_transforms_spark.operators.multimodal import (
         _bmp_bytes,
         decode_bmp,
     )
 
-    good = _bmp_bytes(1, 5, 3)
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "data": [good[:-4]]})
-    )
-    with pytest.raises(Exception):
+    good, cut = _bmp_bytes(41, 5, 3), _bmp_bytes(42, 5, 3)[:20]
+    df = spark.createDataFrame(pd.DataFrame({"doc_id": [41, 42], "data": [good, cut]}))
+    with pytest.raises(Exception, match=r"bmp: malformed payload \(doc_id=42\)"):
         decode_bmp(df).collect()
 
 
@@ -404,21 +397,18 @@ def test_gif_decoder_analytic_means(spark):
         assert r["mean_b_milli"] == sb * 1000 // npx
 
 
-def test_gif_decoder_rejects_corrupt(spark):
-    import pandas as pd
-    import pytest
-
+def test_gif_decoder_rejects_corrupt():
     from kafka_custom_transforms_spark.operators.multimodal import (
+        _decode_row,
         _gif_bytes,
-        decode_gif,
+        _gif_row,
     )
 
     good = _gif_bytes(1, 6, 5, 1)
     truncated = good[:-6]  # cuts into the LZW stream / terminator
     for bad in (b"NOTG1234", truncated):
-        df = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "data": [bad]}))
-        with pytest.raises(Exception):
-            decode_gif(df).collect()
+        with pytest.raises(ValueError):
+            _decode_row(_gif_row, 1, bad)
 
 
 def test_jpeg_decoder_dc_only_exact(spark):
@@ -550,7 +540,7 @@ def test_jpeg_color_ac_blocks_roundtrip():
 
     from kafka_custom_transforms_spark.operators.multimodal import (
         _jpeg_decode_planes,
-        _jpeg_encode_color,
+        _jpeg_encode_ycbcr,
         _jpeg_idct_2d,
     )
 
@@ -564,7 +554,7 @@ def test_jpeg_color_ac_blocks_roundtrip():
             for _ in range(5):
                 blk[rnd.randrange(1, 64)] = rnd.randrange(-7, 8)
             comp_blocks[c].append(blk)
-    data = _jpeg_encode_color(16, 16, comp_blocks, qy, qc)
+    data = _jpeg_encode_ycbcr(16, 16, *comp_blocks, qy, qc)
     w, h, planes = _jpeg_decode_planes(data)
     assert (w, h, len(planes)) == (16, 16, 3)
     for c, q in ((0, qy), (1, qc), (2, qc)):
@@ -640,7 +630,7 @@ def test_jpeg_420_ac_blocks_decode():
 
     from kafka_custom_transforms_spark.operators.multimodal import (
         _jpeg_decode_planes,
-        _jpeg_encode_420,
+        _jpeg_encode_ycbcr,
         _jpeg_idct_2d,
     )
 
@@ -657,7 +647,7 @@ def test_jpeg_420_ac_blocks_decode():
     ys = [rand_block() for _ in range(8)]  # 2x1 MCUs -> 4x2 Y blocks
     cbs = [rand_block() for _ in range(2)]
     crs = [rand_block() for _ in range(2)]
-    data = _jpeg_encode_420(32, 16, ys, cbs, crs, qy, qc)
+    data = _jpeg_encode_ycbcr(32, 16, ys, cbs, crs, qy, qc, sampling=2)
     w, h, planes = _jpeg_decode_planes(data)
     assert (w, h, len(planes)) == (32, 16, 3)
 
