@@ -14,9 +14,7 @@ Each query is fully materialized and run ``SAMPLES`` times; the reported
 per-query time is the MEDIAN. The action is ``.count()`` (the r1-r15
 methodology) except for the five rows in ``NOOP_SINK_QUERIES``, whose
 count-plans Catalyst reduces to a bare row count (guide §1.4) — those use
-the noop sink, with their legacy count timings still recorded under
-"legacy_count_values" in bench_full.json. Round-2
-adjudication showed single-shot timings on this sandbox swing up to 2.3x on
+the noop sink. Round-2 adjudication showed single-shot timings on this sandbox swing up to 2.3x on
 identical code (machine contention) and fold one-time Janino/JIT compile
 into whichever query runs first — medians measure the plans. The per-query
 min/max spread is emitted under "spread" so a reader can see the noise
@@ -152,9 +150,6 @@ BENCH_QUERIES = (
     "multimodal_h264_metadata",
 )
 
-# The headline set r1-r3 benched; rows added later are reported separately
-# so cross-round totals stay apples-to-apples.
-R3_COMPARABLE = BENCH_QUERIES[:27]
 # Engine rows (headline "value"): everything that is a query-engine /
 # pipeline operator. Codec rows are a separate metric ("decode_value"):
 # their cost is deliberate interpreter-bound Python decode, and folding
@@ -163,14 +158,12 @@ R3_COMPARABLE = BENCH_QUERIES[:27]
 ENGINE_QUERIES = BENCH_QUERIES[:58]
 DECODE_QUERIES = BENCH_QUERIES[58:]
 
-# The three sets above are positional slices — a query inserted in the
+# The two sets above are positional slices — a query inserted in the
 # wrong spot would silently misclassify rows between the engine headline
 # and decode_value. Pin the boundaries so a misplaced insertion fails
 # loudly instead (advisor finding, round 5). Explicit raises, not bare
 # asserts: `python -O` strips asserts and would silently disable the
 # guard (advisor finding, round 6).
-if R3_COMPARABLE[-1] != "importance_score_docs":
-    raise RuntimeError("R3_COMPARABLE slice boundary moved")
 if ENGINE_QUERIES[-1] != "similarity_ivf_upsert":
     raise RuntimeError("ENGINE_QUERIES slice boundary moved")
 if DECODE_QUERIES[0] != "multimodal_png_decode":
@@ -195,11 +188,7 @@ if DECODE_QUERIES[0] != "multimodal_png_decode":
 #                          whole ratio-table subtree (2 of 3 corpus scans)
 # These rows are timed with the noop sink instead (computes EVERY column
 # of every row, §1.4); every other row keeps `.count()` so its series
-# stays comparable with BENCH_r1-r15. The legacy count-action timings for
-# these five rows are still measured each run and recorded in
-# bench_full.json / bench_diag.json under "legacy_count_values" so the
-# old series remains continuable (driver-contract provision for
-# measurement-bug fixes; see OPTIMIZATION_r15.md).
+# stays comparable with BENCH_r1-r15 (see OPTIMIZATION_r15.md).
 NOOP_SINK_QUERIES = frozenset({
     "decontaminate_bloom",
     "dedup_substring_spans",
@@ -518,37 +507,8 @@ def main() -> None:
         timings[name] = round(statistics.median(samples), 3)
         spread[name] = [min(samples), max(samples)]
 
-    # Legacy `.count()` timings for the noop-sink rows, so the r1-r15
-    # count-action series stays continuable next to the honest numbers.
-    # Same per-sample steal gate as the primary loop (r15 advice: an
-    # ungated legacy series could be contaminated by the hypervisor
-    # bursts the main methodology discards).
-    legacy_count: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        if name not in NOOP_SINK_QUERIES:
-            continue
-        legacy_samples: list[float] = []
-        legacy_retries = 0
-        while len(legacy_samples) < SAMPLES:
-            s0 = _steal_jiffies()
-            t0 = time.time()
-            queries[name](spark, sf_dir).count()
-            dt = time.time() - t0
-            s1 = _steal_jiffies()
-            if (
-                s0 is not None
-                and s1 is not None
-                and (s1 - s0) / _HZ / max(dt, 1e-3) > 1.0
-                and legacy_retries < SAMPLES
-            ):
-                legacy_retries += 1
-                continue
-            legacy_samples.append(dt)
-        legacy_count[name] = round(statistics.median(legacy_samples), 3)
-
     engine_total = round(sum(timings[n] for n in ENGINE_QUERIES), 3)
     decode_total = round(sum(timings[n] for n in DECODE_QUERIES), 3)
-    r3_subset = round(sum(timings[n] for n in R3_COMPARABLE), 3)
     # Diagnostics (cold-run times, min/max spread) go to stderr and a sidecar
     # file: round 3's record shows the driver captures only the stdout TAIL,
     # so a single long line gets its head (and the opening brace) truncated
@@ -561,8 +521,7 @@ def main() -> None:
                    "probe_retries": probe_retried,
                    "probe_discarded_samples": probe_discarded,
                    "probe_best_sec": round(probe_best, 4),
-                   "cold_unreliable": cold_unreliable,
-                   "legacy_count_values": legacy_count}
+                   "cold_unreliable": cold_unreliable}
     print(json.dumps(diagnostics), file=sys.stderr)
     try:
         with open(
@@ -577,7 +536,6 @@ def main() -> None:
         "value": engine_total,
         "unit": "sec",
         "decode_value": decode_total,
-        "value_r3_subset": r3_subset,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "loadavg_start": loadavg_start,
         "foreign_busy_cores": foreign_cores,
@@ -588,7 +546,6 @@ def main() -> None:
     # is the file to bless as BENCH_r{N}_repro.json.
     full = dict(common)
     full["queries"] = timings
-    full["legacy_count_values"] = legacy_count
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json"),
@@ -605,13 +562,6 @@ def main() -> None:
     slim = dict(common)
     del slim["host_speed"]
     del slim["foreign_busy_cores"]
-    # Reconstructible-on-demand: value_r3_subset is BY DEFINITION the sum
-    # of the R3_COMPARABLE prefix of the named queries dict printed below,
-    # so it carries zero information the line does not already have. It
-    # left the stdout line at the r16 lift (the 66th row name pushed the
-    # worst-case line to 1961 chars, 1 over budget); it stays in
-    # bench_full.json / the blessed repro sidecars for series continuity.
-    del slim["value_r3_subset"]
     slim["queries"] = {n: round(timings[n], 2) for n in BENCH_QUERIES}
     line = json.dumps(slim, separators=(",", ":"))
     if len(line) > STDOUT_BUDGET:

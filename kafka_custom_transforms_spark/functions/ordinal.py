@@ -43,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from kafka_custom_transforms_spark.plans.stats import plan_bytes
+
 __all__ = ["global_ordinal", "ORDINAL_WINDOW_MAX_BYTES"]
 
 _PID = "_go_pid"
@@ -59,20 +61,6 @@ _OFF = "_go_offset"
 # distributed path. Same promote-the-measured-crossover move as
 # dedup.AND_BAND_CROSSOVER / similarity.UNROLL_MIN_ROWS.
 ORDINAL_WINDOW_MAX_BYTES = 64 << 20
-
-
-def _plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst optimizedPlan sizeInBytes — no Spark job (same pattern as
-    dedup._estimate_rows). None when statistics are the UNKNOWN sentinel
-    (Long.MaxValue, e.g. mapInPandas-backed plans) or unavailable."""
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        size = raw if isinstance(raw, int) else int(raw.toString())
-    except Exception:
-        return None
-    if size >= 1 << 62:
-        return None
-    return size
 
 
 def global_ordinal(
@@ -92,7 +80,7 @@ def global_ordinal(
     distributed plan regardless of size (what the registry row does, so
     its plan shape is the scale path)."""
     if n_parts is None:
-        size = _plan_bytes(df)
+        size = plan_bytes(df)
         if size is not None and size < ORDINAL_WINDOW_MAX_BYTES:
             return df.withColumn(
                 out_col,

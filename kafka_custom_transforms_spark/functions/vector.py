@@ -5,6 +5,11 @@ stay inside whole-stage codegen. The fold is *sequential in array order*,
 which makes results bit-reproducible — the DuckDB oracles replicate the same
 left-fold so comparisons are exact, not tolerance-based.
 
+The numpy side of the same contract lives here too: :func:`fold_dot_rows`
+and :func:`fold_dot_matrix` are the one sequential per-dimension fold every
+Arrow-batched vector operator (cosines, SRP signatures, norms) runs on, so
+its values are bit-identical to the JVM fold and the oracle's.
+
 Scale: these are per-row map-side expressions; the cost model is O(dim) per
 pair with zero shuffle. Pair-generation strategy (broadcast, LSH buckets,
 IVF cells) is the responsibility of the calling operator.
@@ -12,12 +17,36 @@ IVF cells) is the responsibility of the calling operator.
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, functions as F
 
 
-import functools
+def fold_dot_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise ``a·b`` of two (n x dim) matrices as a sequential left fold:
+    ``out[r] = ((0.0 + A[r,0]*B[r,0]) + A[r,1]*B[r,1]) + ...`` — vectorized
+    ACROSS rows, ordered WITHIN each dot. ``0.0 + x == x`` exactly in IEEE,
+    so every value is bit-identical to :func:`dot`'s fold and to the
+    oracle's ``list_reduce``; ``np.sum``'s pairwise reduction and a BLAS
+    matmul (blocked/SIMD/FMA order) are not."""
+    out = np.zeros(A.shape[0])
+    for d in range(A.shape[1]):
+        out += A[:, d] * B[:, d]
+    return out
+
+
+def fold_dot_matrix(A: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n x m) ``A·Cᵀ`` of an (n x dim) and an (m x dim) matrix with the
+    same sequential per-dimension fold as :func:`fold_dot_rows`: one
+    outer-product accumulation per dimension, so cell (r, c) is the exact
+    left fold of ``A[r]·C[c]``."""
+    out = np.zeros((A.shape[0], C.shape[0]))
+    for d in range(A.shape[1]):
+        out += A[:, d, None] * C[None, :, d]
+    return out
 
 
 def as_double(vec: Column) -> Column:
@@ -71,7 +100,6 @@ def cosine_arrow(a: Column, b: Column) -> Column:
     (pandas->Arrow maps NaN to null); ANN callers guarantee non-zero
     embeddings. Arrays must have uniform length within a batch (fixed-dim
     embedding columns)."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -104,16 +132,8 @@ def cosine_arrow(a: Column, b: Column) -> Column:
                     f"length within a batch; got lengths a={sorted(a_lens)} "
                     f"b={sorted(b_lens)}"
                 ) from None
-            dots = np.zeros(A.shape[0])
-            na = np.zeros(A.shape[0])
-            nb = np.zeros(A.shape[0])
-            for i in range(A.shape[1]):
-                x = A[:, i]
-                y = B[:, i]
-                dots += x * y
-                na += x * x
-                nb += y * y
-            out[valid] = dots / (np.sqrt(na) * np.sqrt(nb))
+            na, nb = fold_dot_rows(A, A), fold_dot_rows(B, B)
+            out[valid] = fold_dot_rows(A, B) / (np.sqrt(na) * np.sqrt(nb))
         return pd.Series(out)
 
     # asNondeterministic stops the optimizer DUPLICATING the evaluation

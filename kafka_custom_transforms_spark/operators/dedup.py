@@ -23,8 +23,8 @@ Five families, each picked for a different scale/accuracy trade-off:
     collide on at least one of c > t signature chunks, so banding loses no
     recall — the banded plan is exactly equivalent to the O(n^2) scan.
   - :func:`embedding_dup_pairs` — cosine near-duplicate pairs over an
-    embedding column; broadcast nested-loop at test scale, LSH
-    (random-hyperplane) bucketing as the 100 TB path in similarity.py.
+    embedding column; an exact distributed block self-join up to 2M rows,
+    SRP-LSH (random-hyperplane) bucketing from similarity.py above it.
 
 All pair outputs are (a_id, b_id) with a_id < b_id, integer-only — chosen so
 DuckDB oracles compare exactly (no float formatting in the hashed output).
@@ -55,6 +55,7 @@ from kafka_custom_transforms_spark.functions.texthash import (
     word_shingles,
 )
 from kafka_custom_transforms_spark.functions.vector import as_double, cosine
+from kafka_custom_transforms_spark.plans.stats import plan_bytes
 
 
 def dedup_exact(
@@ -134,16 +135,6 @@ def _materialize(df: DataFrame, mode: str) -> DataFrame:
     if mode == "none":
         return df
     raise ValueError(f"checkpoint mode must be local|reliable|none, got {mode!r}")
-
-
-# Local-sandbox-tuned partition cap, lifted to module level so a cluster
-# deployment can override it without code edits (r3 verdict #8); the gram
-# passes' fan-out cap is functions.skew.PYTHON_FANOUT_CAP.
-# BROADCAST_SCORE_PARTITION_CAP: partition count for the driver-broadcast
-# embedding-score path (worker spawn + numpy import dominates: measured
-# 0.7 s at 8 parts vs 16.8 s at 32 on the same data). Only reachable below
-# max_broadcast_rows, so it never constrains cluster-scale jobs.
-BROADCAST_SCORE_PARTITION_CAP = 8
 
 
 def _text_fanout(
@@ -621,7 +612,8 @@ def simhash_signatures_wide(
     # doc (the exploded shingle stream is already collapsed map-side), is
     # pure int64 numpy — bit-identical to the expression form and to the
     # DuckDB oracle's recomputation — and keeps every per-shingle operation
-    # in codegen. Same shape as hyperplane_buckets' SRP signature step.
+    # in codegen. hyperplane_buckets computes its SRP signatures the same
+    # way: one Arrow numpy pass, with no JVM expression form.
     import numpy as np
 
     pack_cols = [f"p{i}_{p}" for i in range(n_longs) for p in range(packs_per_long)]
@@ -693,20 +685,10 @@ _EST_DOC_ROW_BYTES = 256
 
 
 def _estimate_rows(df: DataFrame, assumed_row_bytes: int = _EST_DOC_ROW_BYTES) -> int | None:
-    """Corpus-size estimate from Catalyst's optimizedPlan sizeInBytes —
-    no Spark job (same pattern as similarity._auto_cos_dim). Returns None
-    when statistics are the UNKNOWN sentinel (Long.MaxValue, e.g.
-    mapInPandas-backed plans) or unavailable."""
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        # py4j returns scala BigInt as a JavaObject (str() it) or, on some
-        # paths, an already-converted Python int — accept both.
-        size = raw if isinstance(raw, int) else int(raw.toString())
-    except Exception:
-        return None
-    if size >= 1 << 62:
-        return None
-    return size // max(assumed_row_bytes, 1)
+    """Corpus-size estimate from plan statistics (:func:`plan_bytes`, no
+    Spark job). None when the statistics are unknown."""
+    size = plan_bytes(df)
+    return None if size is None else size // max(assumed_row_bytes, 1)
 
 
 def simhash_pairs_wide(
@@ -1002,7 +984,6 @@ def embedding_dup_pairs(
     dim: int | None = None,
     method: str = "auto",
     n_blocks: int | None = None,
-    max_broadcast_rows: int = 1_000_000,
     auto_lsh_rows: int = 2_000_000,
     task_mem_bytes: int = 64 << 20,
     lsh_tables: int | None = None,
@@ -1059,12 +1040,9 @@ def embedding_dup_pairs(
     shipping a quadratic or near-zero-recall configuration.
 
     ``method="join"``: pure-JVM broadcast nested-loop self-join with the
-    unrolled cosine expression — no Python anywhere, but broadcasts the
-    whole table; only for small dims.
-
-    ``method="broadcast"``: the closure-broadcast numpy scorer (fastest at
-    small scale; dot products fold per-dimension, bit-identical to the
-    oracle). Guarded: raises if the table exceeds ``max_broadcast_rows``.
+    sequential-fold cosine expression — no Python anywhere and bit-identical
+    to the oracle, but broadcasts the whole table; the exact reference the
+    other methods are tested against, for small tables only.
     """
     vecs = df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
     id_sql_type = df.schema[id_col].dataType.simpleString()
@@ -1139,109 +1117,63 @@ def embedding_dup_pairs(
         )
         return verified.select("a_id", "b_id")
 
-    import numpy as np
-    import pandas as pd
-
-    if method == "block":
-        if n_blocks is None:
-            n_blocks = _derive_n_blocks(
-                vecs.count(),
-                dim or 64,
-                task_mem_bytes,
-                df.sparkSession.sparkContext.defaultParallelism,
-            )
-        # Each unordered block pair (g0 <= g1) is one group; a row in block k
-        # joins every group containing k, i.e. exactly n_blocks groups.
-        # xxhash64 of the id, not the raw id value: works for string/UUID
-        # ids and is uniform even when numeric ids are strided.
-        tagged = vecs.withColumn(
-            "blk", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
-        )
-        partners = F.array(*[F.lit(p) for p in range(n_blocks)])
-        replicated = (
-            tagged.select("id", "v", "blk", F.explode(partners).alias("p"))
-            .select(
-                "id",
-                "v",
-                "blk",
-                F.least("blk", "p").alias("g0"),
-                F.greatest("blk", "p").alias("g1"),
-            )
-            # no dedup needed: for a row in block k, each partner p yields a
-            # distinct group {k,p}, so the explode emits every group exactly once
-        )
-
-        def _score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(pdf):
-                return pd.DataFrame({"a_id": [], "b_id": []})
-            g0, g1 = int(pdf["g0"].iloc[0]), int(pdf["g1"].iloc[0])
-            ids = pdf["id"].to_numpy()  # dtype follows the id column's type
-            mat = np.stack(pdf["v"].to_numpy())
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            norms = np.where(norms == 0.0, np.inf, norms)  # zero-norm never pairs
-            blk = pdf["blk"].to_numpy()
-            if g0 == g1:
-                cos = (mat @ mat.T) / (norms[:, None] * norms[None, :])
-                ai, bi = np.nonzero((cos >= threshold) & (ids[:, None] < ids[None, :]))
-                return pd.DataFrame({"a_id": ids[ai], "b_id": ids[bi]})
-            la, ra = blk == g0, blk == g1
-            cos = (mat[la] @ mat[ra].T) / (norms[la][:, None] * norms[ra][None, :])
-            xi, yi = np.nonzero(cos >= threshold)
-            left, right = ids[la][xi], ids[ra][yi]
-            return pd.DataFrame(
-                {"a_id": np.minimum(left, right), "b_id": np.maximum(left, right)}
-            )
-
-        return replicated.groupBy("g0", "g1").applyInPandas(
-            _score_group, schema=pair_schema
-        )
-
-    if method != "broadcast":
+    if method != "block":
         raise ValueError(f"embedding_dup_pairs: unknown method {method!r}")
 
-    n_rows = vecs.count()
-    if n_rows > max_broadcast_rows:
-        raise ValueError(
-            f"embedding_dup_pairs: method='broadcast' collects the table to the "
-            f"driver; {n_rows} rows exceeds max_broadcast_rows={max_broadcast_rows}. "
-            "Use method='block' (exact, distributed) instead."
+    import numpy as np
+
+    if n_blocks is None:
+        n_blocks = _derive_n_blocks(
+            vecs.count(),
+            dim or 64,
+            task_mem_bytes,
+            df.sparkSession.sparkContext.defaultParallelism,
         )
-    rows = vecs.collect()  # guarded above: the small-side optimization only
-    all_ids = np.array([r["id"] for r in rows])
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
-    d = mat.shape[1]
-    sq = np.zeros(len(all_ids))
-    for i in range(d):  # left-fold per dimension: (0 + x1) + x2 + ...
-        sq = sq + mat[:, i] * mat[:, i]
-    norms = np.sqrt(sq)
-    norms = np.where(norms == 0.0, np.inf, norms)
-
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["id"].to_numpy()
-            a = np.stack(pdf["v"].to_numpy())
-            dots = np.zeros((len(ids), len(all_ids)))
-            asq = np.zeros(len(ids))
-            for i in range(d):  # in-place += keeps the same IEEE fold order
-                dots += a[:, i : i + 1] * mat[None, :, i]
-                asq += a[:, i] * a[:, i]
-            qn = np.sqrt(asq)
-            qn = np.where(qn == 0.0, np.inf, qn)
-            cos = dots / (qn[:, None] * norms[None, :])
-            ai, bi = np.nonzero((cos >= threshold) & (ids[:, None] < all_ids[None, :]))
-            yield pd.DataFrame({"a_id": ids[ai], "b_id": all_ids[bi]})
-
-    # Spread the row side across a few workers; the matrix rides in the
-    # closure. Capped at 8: each extra partition costs a python worker
-    # spawn + numpy import, which dominates this compute (measured: 8 parts
-    # 0.7s, 32 parts 16.8s on the same data).
-    n_parts = min(
-        BROADCAST_SCORE_PARTITION_CAP,
-        max(vecs.sparkSession.sparkContext.defaultParallelism // 2, 1),
+    # Each unordered block pair (g0 <= g1) is one group; a row in block k
+    # joins every group containing k, i.e. exactly n_blocks groups.
+    # xxhash64 of the id, not the raw id value: works for string/UUID
+    # ids and is uniform even when numeric ids are strided.
+    tagged = vecs.withColumn(
+        "blk", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
     )
-    return vecs.repartition(n_parts).mapInPandas(_score, schema=pair_schema)
+    partners = F.array(*[F.lit(p) for p in range(n_blocks)])
+    replicated = (
+        tagged.select("id", "v", "blk", F.explode(partners).alias("p"))
+        .select(
+            "id",
+            "v",
+            "blk",
+            F.least("blk", "p").alias("g0"),
+            F.greatest("blk", "p").alias("g1"),
+        )
+        # no dedup needed: for a row in block k, each partner p yields a
+        # distinct group {k,p}, so the explode emits every group exactly once
+    )
+
+    def _score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(pdf):
+            return pd.DataFrame({"a_id": [], "b_id": []})
+        g0, g1 = int(pdf["g0"].iloc[0]), int(pdf["g1"].iloc[0])
+        ids = pdf["id"].to_numpy()  # dtype follows the id column's type
+        mat = np.stack(pdf["v"].to_numpy())
+        norms = np.sqrt((mat * mat).sum(axis=1))
+        norms = np.where(norms == 0.0, np.inf, norms)  # zero-norm never pairs
+        blk = pdf["blk"].to_numpy()
+        if g0 == g1:
+            cos = (mat @ mat.T) / (norms[:, None] * norms[None, :])
+            ai, bi = np.nonzero((cos >= threshold) & (ids[:, None] < ids[None, :]))
+            return pd.DataFrame({"a_id": ids[ai], "b_id": ids[bi]})
+        la, ra = blk == g0, blk == g1
+        cos = (mat[la] @ mat[ra].T) / (norms[la][:, None] * norms[ra][None, :])
+        xi, yi = np.nonzero(cos >= threshold)
+        left, right = ids[la][xi], ids[ra][yi]
+        return pd.DataFrame(
+            {"a_id": np.minimum(left, right), "b_id": np.maximum(left, right)}
+        )
+
+    return replicated.groupBy("g0", "g1").applyInPandas(
+        _score_group, schema=pair_schema
+    )
 
 
 def semantic_dup_pairs(
@@ -1269,7 +1201,6 @@ def semantic_dup_pairs(
     all-pairs. Every stage is deterministic, so a DuckDB oracle re-runs
     the entire pipeline (seeds, assignment, pairs) bit-exactly.
     """
-    from kafka_custom_transforms_spark.functions.vector import as_double, cosine
     from kafka_custom_transforms_spark.operators.similarity import (
         _assign_cells,
         _seed_centroids,

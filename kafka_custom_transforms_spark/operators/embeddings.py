@@ -147,15 +147,18 @@ def arrow_vector_norms(df: DataFrame, vec_col: str = "embedding", id_col: str = 
     a pandas Series of Python lists for array columns).
 
     Exactness contract: the float32 column is cast to double JVM-side
-    (exact), and the fold runs dimension-sequentially (``acc += m[:, d]``,
-    vectorized ACROSS rows, ordered WITHIN the vector) — bit-identical to
-    a SQL left fold ``list_reduce`` over the same doubles, which is what
-    the oracle computes. np.sum's pairwise reduction would NOT match.
+    (exact), and the fold is the shared dimension-sequential kernel
+    (``functions.vector.fold_dot_rows``: vectorized ACROSS rows, ordered
+    WITHIN the vector) — bit-identical to a SQL left fold ``list_reduce``
+    over the same doubles, which is what the oracle computes. np.sum's
+    pairwise reduction would NOT match.
 
     Scale: embarrassingly parallel; one Arrow batch in, one out; memory
     bounded by the Arrow batch size knob like every decode in this
     engine."""
     import pyarrow as pa
+
+    from kafka_custom_transforms_spark.functions.vector import fold_dot_rows
 
     cast_df = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
@@ -174,10 +177,8 @@ def arrow_vector_norms(df: DataFrame, vec_col: str = "embedding", id_col: str = 
                 raise ValueError("ragged embedding lengths")
             dim = int(widths[0]) if len(widths) else 0
             n_rows = len(widths)
-            mat = flat.reshape(n_rows, dim) if dim else flat.reshape(n_rows, 0)
-            acc = np.zeros(n_rows, dtype=np.float64)
-            for d in range(dim):  # sequential fold == SQL list_reduce
-                acc += mat[:, d] * mat[:, d]
+            mat = flat.reshape(n_rows, dim)
+            acc = fold_dot_rows(mat, mat)  # sequential fold == SQL list_reduce
             yield pa.RecordBatch.from_arrays(
                 [ids, pa.array([dim] * len(acc), type=pa.int32()), pa.array(acc)],
                 [id_col, "n_dims", "norm_sq"],

@@ -9,8 +9,9 @@ Behavior branches replicated:
       ``{field: original}`` (ExtendedHoistField.java:75-79).
   H2  schemaless with keep_in_root: names in the keep list stay at root, the
       rest move under ``field``; when nothing moves, ``field`` is omitted
-      entirely (ExtendedHoistField.java:80-97). Non-object input raises,
-      mirroring getValueAsMap (:52-60).
+      entirely (ExtendedHoistField.java:80-97). A non-null value that is not
+      a JSON object raises on both JSON paths (drop_field.not_json_object),
+      mirroring getValueAsMap (:52-60); SQL NULL passes through (D1).
   H3  schema'd split: computed once at plan time (the reference's LRU(16)
       schema cache, :46/:67/:101/:124, is unnecessary — a DataFrame's schema
       is static; SURVEY.md §4).
@@ -31,11 +32,17 @@ keep_in_root path (Arrow-batched pandas UDF slow path). No shuffle anywhere.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import MapType, StringType, StructField, StructType
+
+from kafka_custom_transforms_spark.operators.drop_field import (
+    json_object_or_raise,
+    require_json_object,
+)
 
 
 def _hoisted_type(schema: StructType, field: str, keep: list[str]) -> StructType:
@@ -117,8 +124,6 @@ def hoist_field(
                 # must not break the literal); the payload itself must already
                 # be JSON text per the representation contract (SURVEY.md
                 # §1.4) — pass string_is_json=False for bare strings.
-                import json
-
                 new_col = F.concat(
                     F.lit("{" + json.dumps(field) + ":"),
                     F.coalesce(col, F.lit("null")),
@@ -134,13 +139,10 @@ def hoist_field(
                 hoisted = _struct_hoist(parsed, sch, field, keep)
                 # H2 omission for free: when every movable field is null the
                 # inner struct is null and to_json drops the key entirely.
-                new_col = (
-                    col if hoisted is None else
-                    F.when(col.isNotNull(), F.to_json(hoisted)).otherwise(F.lit(None))
+                new_col = json_object_or_raise(
+                    col, col if hoisted is None else F.to_json(hoisted), "hoist_field"
                 )
             else:
-                import json
-
                 keepset = set(keep)
 
                 @F.pandas_udf("string")
@@ -152,12 +154,8 @@ def hoist_field(
                             # 52-60); we propagate null, consistent with the
                             # engine-wide null-passthrough convention (D1).
                             return None
-                        obj = json.loads(x)
-                        if not isinstance(obj, dict):
-                            # getValueAsMap parity (ExtendedHoistField.java:52-60)
-                            raise ValueError(
-                                "Bad record type. Should be a Map instance."
-                            )
+                        # getValueAsMap parity (ExtendedHoistField.java:52-60)
+                        obj = require_json_object(x, "hoist_field")
                         root = {k: v for k, v in obj.items() if k in keepset}
                         inner = {k: v for k, v in obj.items() if k not in keepset}
                         if inner:  # H2: omit the field when nothing moved

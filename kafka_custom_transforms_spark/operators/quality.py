@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from kafka_custom_transforms_spark.plans.stats import plan_bytes
+
 
 @dataclass(frozen=True)
 class Rule:
@@ -96,12 +98,10 @@ def _fits_broadcast(ref: DataFrame) -> bool:
         threshold = int(num) * units.get(raw[len(num):], 1)
         if threshold <= 0:
             return False
-        size = (
-            ref._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        return int(size.toString()) <= threshold
     except Exception:
         return False
+    size = plan_bytes(ref)
+    return size is not None and size <= threshold
 
 
 def _violation_cond(r: Rule):

@@ -13,27 +13,43 @@ Plans for nearest-neighbor top-k:
     above it (:func:`_ivf_wins`) — brute force is O(n*q) compute, a
     scale-killer once the query set grows with the corpus.
   - :func:`hyperplane_buckets` / :func:`lsh_topk_neighbors` — random
-    hyperplane (SRP) LSH: sign-pattern signatures put similar vectors in the
-    same bucket; the join is an equi-join on (table, bucket) instead of a
-    cross join. Hyperplane weights are derived from the md5-prefix hash, so
-    signatures are deterministic across runs and engines. The 100 TB path:
-    bucket cardinality ~2^bits_per_table * tables, each bucket joined
-    independently — shuffle keys uniform, no broadcast of the base side.
+    hyperplane (SRP) LSH: sign-pattern signatures (one Arrow-batched numpy
+    pass) put similar vectors in the same bucket; the join is an equi-join
+    on (table, bucket) instead of a cross join. Hyperplane weights are
+    derived from the md5-prefix hash, so signatures are deterministic
+    across runs and engines. The 100 TB path: bucket cardinality
+    ~2^bits_per_table * tables, each bucket joined independently — shuffle
+    keys uniform, no broadcast of the base side.
+  - :func:`ivf_topk_neighbors` / :func:`ivf_upsert_topk_neighbors` — IVF
+    cells: each vector is assigned to its max-cosine centroid (flat, or
+    two-level above :data:`TWO_LEVEL_MIN_CENTROIDS`) and each query scores
+    only its ``n_probe`` nearest cells. A quantizer of up to
+    :data:`MAX_LOCAL_CENTROIDS` rows is pulled local and assignment is an
+    Arrow map; above that bound every step falls back to one JVM form,
+    broadcast join + ``max_by`` (:func:`_argmax_join`).
 
 Top-k determinism: ranking orders by (cosine DESC, neighbor id ASC) so exact
-score ties break reproducibly; cosine itself is a sequential fold
-(functions/vector.py) and bit-identical to the DuckDB oracle's.
+score ties break reproducibly. Every cosine, SRP projection and norm is a
+sequential per-dimension fold — the ``F.aggregate``/unrolled expression or
+the numpy kernels ``fold_dot_rows``/``fold_dot_matrix`` in
+functions/vector.py — and bit-identical to the DuckDB oracle's.
 """
 
 from __future__ import annotations
 
-import functools
 import warnings
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from kafka_custom_transforms_spark.functions.skew import PYTHON_FANOUT_CAP
-from kafka_custom_transforms_spark.functions.vector import as_double, cosine, cosine_arrow
+from kafka_custom_transforms_spark.functions.skew import PYTHON_FANOUT_CAP, ensure_min_partitions
+from kafka_custom_transforms_spark.functions.vector import (
+    as_double,
+    cosine,
+    cosine_arrow,
+    fold_dot_matrix,
+    fold_dot_rows,
+)
+from kafka_custom_transforms_spark.plans.stats import plan_bytes
 
 
 def _pair_cosine(qv: Column, bv: Column, cos_dim: int | None) -> Column:
@@ -50,6 +66,19 @@ def _pair_cosine(qv: Column, bv: Column, cos_dim: int | None) -> Column:
     if cos_dim is None:
         return cosine_arrow(qv, bv)
     return cosine(qv, bv, cos_dim)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank) from (query_id, neighbor_id, cos)
+    pairs: undefined scores (null/NaN, see :func:`_pair_cosine`) dropped,
+    then rank 1..k per query by (cos DESC, neighbor_id ASC)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
+    return (
+        scored.filter(F.col("cos").isNotNull() & ~F.isnan("cos"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank")
+    )
 
 
 def topk_neighbors(
@@ -122,15 +151,11 @@ def topk_neighbors(
             method = "ivf"
     if method == "ivf":
         n = n_rows if n_rows is not None else _estimate_vec_rows(base, dim)
-        n_centroids = n_probe = None
-        if n is not None:
-            n_centroids, n_probe = ivf_params(n)
+        # unsized: ivf_topk_neighbors counts and sizes with its default n_probe
+        n_centroids, n_probe = ivf_params(n) if n is not None else (None, 8)
         return ivf_topk_neighbors(
             base, queries, k=k, id_col=id_col, vec_col=vec_col,
-            n_centroids=n_centroids,
-            **({"n_probe": n_probe} if n_probe is not None else {}),
-            dim=dim,
-            n_rows=n,
+            n_centroids=n_centroids, n_probe=n_probe, dim=dim, n_rows=n,
         )
     cos_dim = _auto_cos_dim(base, dim, n_rows)
     b = base.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("bv"))
@@ -148,22 +173,17 @@ def topk_neighbors(
     # (sf0.1 idle 7-sample sweep: 0.92 s at 8 parts, 0.78 at 16, 0.84 at
     # 24, 0.94 at 32). No-op at cluster scale (the guard only ADDS
     # partitions, never removes them).
-    from kafka_custom_transforms_spark.functions.skew import ensure_min_partitions
-
     spark_ctx = base.sparkSession.sparkContext
     b = ensure_min_partitions(
         b, min(PYTHON_FANOUT_CAP, spark_ctx.defaultParallelism)
     )
     q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
     scored = b.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id") if not include_self else F.lit(True))
-    scored = scored.select(
-        "query_id", "neighbor_id", _pair_cosine(F.col("qv"), F.col("bv"), cos_dim).alias("cos")
-    ).filter(F.col("cos").isNotNull() & ~F.isnan("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
+    return _top_k(
+        scored.select(
+            "query_id", "neighbor_id", _pair_cosine(F.col("qv"), F.col("bv"), cos_dim).alias("cos")
+        ),
+        k,
     )
 
 
@@ -182,43 +202,22 @@ def _auto_cos_dim(
     choice is purely a compile-vs-throughput trade and a scan-sized
     heuristic cannot affect results. The old form ran ``base.count()``
     on every top-k call — a wasted full scan per query at 100 TB."""
-    if dim is None:
-        return None
     if n_rows is None:
-        try:
-            size = int(
-                base._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes().toString()
-            )
-            # Catalyst reports UNKNOWN stats as defaultSizeInBytes
-            # (Long.MaxValue) — e.g. mapInPandas/RDD-backed plans. That is
-            # a sentinel, not a size: treat it as unknown and take the
-            # cheap fold branch rather than paying the codegen compile
-            # for what may be a tiny corpus.
-            if size >= 1 << 62:
-                return None
-            n_rows = size // max(8 * dim, 1)
-        except Exception:  # stats unavailable: take the cheap branch
-            return None
+        # Unknown statistics (mapInPandas/RDD-backed plans): take the cheap
+        # fold branch rather than paying the codegen compile for what may
+        # be a tiny corpus.
+        n_rows = _estimate_vec_rows(base, dim)
+    if dim is None or n_rows is None:
+        return None
     return dim if n_rows >= UNROLL_MIN_ROWS else None
 
 
 def _estimate_vec_rows(df: DataFrame, dim: int | None) -> int | None:
-    """Row-count estimate for a vector frame from Catalyst's
-    optimizedPlan sizeInBytes (no Spark job — same pattern as
-    ``_auto_cos_dim`` / ``dedup._estimate_rows``), assuming ~8 bytes per
-    vector element. None when ``dim`` is unknown or statistics are the
-    UNKNOWN sentinel (Long.MaxValue, e.g. mapInPandas-backed plans)."""
-    if dim is None:
-        return None
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        size = raw if isinstance(raw, int) else int(raw.toString())
-    except Exception:
-        return None
-    if size >= 1 << 62:
-        return None
-    return size // max(8 * dim, 1)
+    """Row-count estimate for a vector frame from plan statistics
+    (:func:`plan_bytes`, no Spark job), assuming ~8 bytes per vector
+    element. None when ``dim`` is unknown or the statistics are."""
+    size = None if dim is None else plan_bytes(df)
+    return None if size is None else size // max(8 * dim, 1)
 
 
 # Measured per-pair cost of the IVF path relative to the brute broadcast
@@ -278,24 +277,6 @@ def _hyperplane_weight(plane: int, dim: int) -> float:
     return (h % 2_000_000 - 1_000_000) / 1_000_000.0
 
 
-def hyperplane_signature(vec: Column, dim: int, bits: int = 16) -> Column:
-    """SRP signature: bit j = sign(<vec, w_j>). Returns a non-negative int."""
-    sig = F.lit(0).cast("long")
-    for j in range(bits):
-        terms = [
-            F.element_at(vec, i + 1) * F.lit(_hyperplane_weight(j, i))
-            for i in range(dim)
-        ]
-        d = functools.reduce(lambda x, y: x + y, terms)
-        sig = sig.bitwiseOR(
-            # shiftleft, not a 2**j literal: j=63 overflows a long literal
-            F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sig
-
-
 def hyperplane_buckets(
     df: DataFrame,
     dim: int,
@@ -303,7 +284,6 @@ def hyperplane_buckets(
     vec_col: str = "embedding",
     tables: int = 4,
     bits_per_table: int = 8,
-    method: str = "numpy",
     fan_out: bool = True,
 ) -> DataFrame:
     """(id, table, bucket) assignments: ``tables`` independent SRP tables of
@@ -317,40 +297,16 @@ def hyperplane_buckets(
     Pass False for frames that are about to be broadcast anyway (the
     LSH query side) — the extra exchange would only add latency there.
 
-    ``method="numpy"`` (default): Arrow-batched sign(V @ W^T) — the
-    (bits x dim) projection as one matmul per batch. The expression variant
-    (``method="expr"``, pure JVM) builds a bits*dim-term projection that is
-    correct but costs tens of seconds of analysis+interpretation per query
-    at 48x64; use it only where Python workers are unavailable."""
-    bits = tables * bits_per_table
-    if method == "expr":
-        v = as_double(F.col(vec_col))
-        # Materialize the signature as a named column before slicing:
-        # inlining the expression once per table would multiply the plan
-        # tree by `tables` and blow up analysis.
-        sig_df = df.select(
-            F.col(id_col).alias("id"),
-            hyperplane_signature(v, dim, bits).alias("hsig"),
-        )
-        mask = (1 << bits_per_table) - 1
-        assignments = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("table"),
-                    F.shiftright(F.col("hsig"), t * bits_per_table)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bucket"),
-                )
-                for t in range(tables)
-            ]
-        )
-        return sig_df.select("id", F.explode(assignments).alias("tb")).select(
-            "id", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket")
-        )
-
+    Signatures are one Arrow-batched pass per partition: the (bits x dim)
+    projection ``V·Wᵀ`` via :func:`fold_dot_matrix`, NOT a BLAS matmul — a
+    matmul sums in blocked/SIMD order, but the DuckDB oracle recomputes
+    these dots as a sequential ``list_reduce``; the shared left fold makes
+    every dot bit-identical across engines, so sign decisions at the
+    bucket boundary can never diverge."""
     import numpy as np
     import pandas as pd
 
+    bits = tables * bits_per_table
     W = np.array(
         [[_hyperplane_weight(j, i) for i in range(dim)] for j in range(bits)]
     )
@@ -364,18 +320,8 @@ def hyperplane_buckets(
             # dedup path supports them and auto-dispatches here at scale);
             # a forced int64 cast would crash or silently truncate floats
             ids = pdf["id"].to_numpy()
-            a = np.stack(pdf["v"].to_numpy())
-            # Sequential per-dimension fold, NOT a @ W.T: BLAS matmul sums
-            # in blocked/SIMD order, but the DuckDB oracle recomputes these
-            # dots as a sequential list_reduce — the explicit left fold
-            # (((0 + x1) + x2) + ...; 0 + x1 == x1 exactly in IEEE) makes
-            # every dot bit-identical across engines, so sign decisions at
-            # the bucket boundary can never diverge. Still vectorized: one
-            # outer-product accumulation per dimension.
-            dots = np.zeros((len(ids), bits))
-            for i in range(dim):
-                dots += a[:, i : i + 1] * W.T[i : i + 1, :]
-            sig_bits = dots > 0  # n x bits
+            a = np.stack(pdf["v"].to_numpy())[:, :dim]
+            sig_bits = fold_dot_matrix(a, W) > 0  # n x bits
             frames = []
             for t in range(tables):
                 chunk = sig_bits[:, t * bits_per_table : (t + 1) * bits_per_table]
@@ -387,8 +333,6 @@ def hyperplane_buckets(
 
     vecs = df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
     if fan_out:
-        from kafka_custom_transforms_spark.functions.skew import ensure_min_partitions
-
         # Capped at the same measured Python-dispatch knee as the exact
         # scorer (r16: the r15 "capping loses 1.80x" claim for this path
         # was taken in a steal era and did not reproduce — two idle-ish
@@ -497,14 +441,8 @@ def lsh_topk_neighbors(
         cand.join(bvec, "neighbor_id")
         .join(F.broadcast(qvec), "query_id")
         .select("query_id", "neighbor_id", _pair_cosine(F.col("qv"), F.col("bv"), cos_dim).alias("cos"))
-        .filter(F.col("cos").isNotNull() & ~F.isnan("cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def _seed_centroids(vecs: DataFrame, n_centroids: int) -> DataFrame:
@@ -529,54 +467,43 @@ def _seed_centroids(vecs: DataFrame, n_centroids: int) -> DataFrame:
 MAX_LOCAL_CENTROIDS = 65536
 
 
-def _local_centroid_matrix(centroids: DataFrame, id_field: str, vec_field: str):
-    """(ids, C, cnorm) with ids ASCENDING (so np.argmax's first-max rule
-    reproduces max_by's min-id tie-break; degenerate cosines — zero-norm
-    NULLs vs genuine NaNs — are ordered by :func:`_rank_cosines` to match
-    the join form exactly). ``None`` when the
-    quantizer exceeds :data:`MAX_LOCAL_CENTROIDS` (bounded limit+collect,
-    never an unbounded pull). ``cnorm`` is the same sequential per-dimension
-    fold the JVM/DuckDB norm computes — bit-identical inputs to the cosine."""
+def _local_matrices(
+    df: DataFrame, id_field: str, vec_field: str, group_field: str | None = None
+):
+    """{group: (ids, C, cnorm)} of a centroid-sized frame pulled local, or
+    ``None`` when it exceeds :data:`MAX_LOCAL_CENTROIDS` rows (bounded
+    limit+collect, never an unbounded pull) or is empty. Without
+    ``group_field`` the whole frame is the single group ``None`` (the flat
+    quantizer); with it, one matrix per group (the two-level registrations,
+    keyed by coarse cell). Within a group ids are ASCENDING, so np.argmax's
+    first-max rule reproduces max_by's min-id tie-break (degenerate cosines
+    — zero-norm NULLs vs genuine NaNs — are ordered by :func:`_rank_cosines`
+    to match the join form exactly). ``cnorm`` is the same sequential fold
+    the JVM/DuckDB norm computes — bit-identical inputs to the cosine."""
     import numpy as np
 
-    rows = (
-        centroids.select(id_field, vec_field)
-        .limit(MAX_LOCAL_CENTROIDS + 1)
-        .collect()
-    )
+    cols = ([group_field] if group_field else []) + [id_field, vec_field]
+    rows = df.select(*cols).limit(MAX_LOCAL_CENTROIDS + 1).collect()
     if len(rows) > MAX_LOCAL_CENTROIDS or not rows:
         return None
-    rows.sort(key=lambda r: r[0])
-    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    C = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    cn = np.zeros(len(rows))
-    for i in range(C.shape[1]):
-        cn += C[:, i] * C[:, i]
-    return ids, C, np.sqrt(cn)
-
-
-def _fold_cosines(A, C, cnorm):
-    """(n x m) cosine matrix, every value bit-identical to the JVM/DuckDB
-    sequential left-fold: accumulation runs dimension-by-dimension from a
-    0.0 start (0 + x1 == x1 exactly in IEEE), and the denominator
-    multiplies norm(a) * norm(c) before dividing — the exact operation
-    order of functions.vector.cosine. Vectorized ACROSS rows/centroids,
-    sequential WITHIN each dot, like the dedup map-form signatures."""
-    import numpy as np
-
-    n, dim = A.shape
-    dots = np.zeros((n, C.shape[0]))
-    na = np.zeros(n)
-    for i in range(dim):
-        a_i = A[:, i]
-        dots += a_i[:, None] * C[None, :, i]
-        na += a_i * a_i
-    return dots / (np.sqrt(na)[:, None] * cnorm[None, :])
+    groups: dict = {}
+    for r in rows:
+        groups.setdefault(r[0] if group_field else None, []).append((r[-2], r[-1]))
+    out = {}
+    for g, pairs in groups.items():
+        pairs.sort(key=lambda p: p[0])
+        ids = np.asarray([p[0] for p in pairs], dtype=np.int64)
+        C = np.stack([np.asarray(p[1], dtype=np.float64) for p in pairs])
+        out[g] = (ids, C, np.sqrt(fold_dot_rows(C, C)))
+    return out
 
 
 def _rank_cosines(A, C, cnorm):
-    """Ranking-key matrix for centroid choice, replicating the join/window
-    form's ordering of DEGENERATE cosines exactly (measured, r10):
+    """Ranking-key matrix for centroid choice: the (n x m) cosines of
+    :func:`fold_dot_matrix` over ``norm(a) * norm(c)`` — the exact operation
+    order of functions.vector.cosine, so non-degenerate cells are
+    bit-identical to the JVM/DuckDB fold — with the join/window form's
+    ordering of DEGENERATE cosines replicated exactly (measured, r10):
 
     - ``try_divide`` yields NULL when the norm product is exactly 0 (a
       zero-norm vector or centroid), and NULL loses to every value in
@@ -591,20 +518,12 @@ def _rank_cosines(A, C, cnorm):
     break on min cid via argmax-first / stable argsort, matching the
     (-cid) tiebreak / ``cid ASC`` secondary ordering: a zero-norm vector
     is still assigned (to the lowest cid), not dropped, exactly like the
-    join form. Values on non-degenerate cells are bit-identical to
-    :func:`_fold_cosines` (same sequential fold, same norm product)."""
+    join form."""
     import numpy as np
 
-    n, dim = A.shape
-    dots = np.zeros((n, C.shape[0]))
-    na = np.zeros(n)
-    for i in range(dim):
-        a_i = A[:, i]
-        dots += a_i[:, None] * C[None, :, i]
-        na += a_i * a_i
-    denom = np.sqrt(na)[:, None] * cnorm[None, :]
+    denom = np.sqrt(fold_dot_rows(A, A))[:, None] * cnorm[None, :]
     with np.errstate(divide="ignore", invalid="ignore"):
-        cos = dots / denom
+        cos = fold_dot_matrix(A, C) / denom
     # Fast path: a NaN can only arise from a 0/0 (zero-norm row/centroid —
     # an exactly-zero denom forces exactly-zero dots) or NaN operands, so
     # a NaN-free matrix needs no degenerate remapping; skip the two
@@ -615,80 +534,98 @@ def _rank_cosines(A, C, cnorm):
     return np.where(denom == 0.0, -np.inf, np.where(np.isnan(cos), np.inf, cos))
 
 
-def _assign_cells_arrow(vecs: DataFrame, local, cid_type: str) -> DataFrame:
+def _assign_cells_arrow(
+    vecs: DataFrame, local: dict, cid_type: str, group_col: str | None = None
+) -> DataFrame:
     """(id, v, cid) via one Arrow-batched numpy pass per partition: the
-    n x n_centroids scored PAIR ROWS of the join form never materialize —
-    each batch of vectors meets the local centroid matrix in numpy and only
-    the argmax row survives. No join, no aggregation, no shuffle; the r8
-    MinHash/SimHash map-form treatment applied to IVF assignment."""
+    scored PAIR ROWS of the join form never materialize — each batch of
+    vectors meets the local centroid matrices of :func:`_local_matrices` in
+    numpy and only the argmax row survives. No join, no aggregation, no
+    shuffle; the r8 MinHash/SimHash map-form treatment applied to IVF
+    assignment. Without ``group_col`` every row scores against the single
+    flat quantizer ``local[None]``; with it (the two-level FINE step, keyed
+    by the row's single-probe coarse cell) each row scores only its cell's
+    registered fine centroids — replacing the gid equi-join + per-id
+    max_by. Rows with a null vector or null cell are dropped: the join form
+    gave them a null cid, which no downstream equi-join on cid matches —
+    output-equivalent, and np.stack cannot hold a None."""
     import numpy as np
-    import pandas as pd
 
-    cids, C, cnorm = local
     # Bound the (rows x centroids) cosine intermediate to ~32 MB: at the
     # sqrt(n) quantizer sizing of a 1e9-vector corpus (m ~ 32k) a full
     # 10k-row Arrow batch would otherwise materialize a ~2.5 GB matrix
     # per batch. Rows are independent, so chunking is bit-neutral.
-    row_chunk = max(1, (4 << 20) // max(len(cids), 1))
+    row_chunk = max(1, (4 << 20) // max(len(m[0]) for m in local.values()))
 
     def _assign(batches):
         for pdf in batches:
-            # drop null-vector rows: the join form carried them with a
-            # null cid, which no downstream equi-join on cid matches —
-            # output-equivalent, and np.stack cannot hold a None
-            pdf = pdf[pdf["v"].notna().to_numpy()]
+            keep = pdf["v"].notna()
+            if group_col:
+                keep &= pdf[group_col].notna()
+            pdf = pdf[keep.to_numpy()]
             if not len(pdf):
                 continue
-            best = np.empty(len(pdf), dtype=np.int64)
-            for lo in range(0, len(pdf), row_chunk):
-                chunk = pdf["v"].iloc[lo : lo + row_chunk].to_numpy()
-                A = np.stack(chunk).astype(np.float64, copy=False)
-                best[lo : lo + len(A)] = np.argmax(
-                    _rank_cosines(A, C, cnorm), axis=1
-                )
+            groups = (
+                pdf.groupby(group_col, sort=False).indices.items()
+                if group_col
+                else [(None, np.arange(len(pdf)))]
+            )
+            cid_out = np.empty(len(pdf), dtype=np.int64)
+            for g, idx in groups:
+                cids, C, cnorm = local[g]
+                for lo in range(0, len(idx), row_chunk):
+                    part = idx[lo : lo + row_chunk]
+                    A = np.stack(pdf["v"].iloc[part].to_numpy()).astype(np.float64, copy=False)
+                    cid_out[part] = cids[np.argmax(_rank_cosines(A, C, cnorm), axis=1)]
             out = pdf[["id", "v"]].copy()
-            out["cid"] = cids[best]
+            out["cid"] = cid_out
             yield out
 
     id_t = dict(vecs.dtypes)["id"]
     return vecs.mapInPandas(_assign, schema=f"id {id_t}, v array<double>, cid {cid_type}")
 
 
-def _assign_cells(
-    vecs: DataFrame,
-    centroids: DataFrame,
-    dim: int | None,
-    method: str = "arrow",
-) -> DataFrame:
+def _assign_cells(vecs: DataFrame, centroids: DataFrame, dim: int | None) -> DataFrame:
     """(id, v, cid): each vector assigned to its max-cosine centroid
-    (ties break on cid asc).
-
-    ``method="arrow"`` (default): the quantizer (bounded — sqrt(n) by
+    (ties break on cid asc). The quantizer (bounded — sqrt(n) by
     construction) is pulled local and each vector batch scores against it
     in one numpy pass (:func:`_assign_cells_arrow`) — the r8-proven map
-    form; bit-identical to the join form (pinned in tests). Falls back to
-    the join form when the quantizer exceeds MAX_LOCAL_CENTROIDS.
+    form; bit-identical to the join form (pinned in tests). Above
+    :data:`MAX_LOCAL_CENTROIDS` the assignment is the JVM join form,
+    :func:`_argmax_join`."""
+    local = _local_matrices(centroids, "cid", "cv")
+    if local is not None:
+        return _assign_cells_arrow(vecs, local, dict(centroids.dtypes)["cid"])
+    return _argmax_join(vecs, centroids, "cid", "cv", dim)
 
-    ``method="expr"`` join form: broadcast cross join + max_by with a
-    (ccos, -cid) ordering struct instead of a window rank — the
-    n x n_centroids scored rows collapse map-side (partial aggregation
-    keeps one buffer per id per partition), so the shuffle carries one row
-    per vector. Correct at any quantizer size, but materializes every
-    scored pair as a row through codegen."""
-    if method == "arrow":
-        local = _local_centroid_matrix(centroids, "cid", "cv")
-        if local is not None:
-            return _assign_cells_arrow(vecs, local, dict(centroids.dtypes)["cid"])
+
+def _argmax_join(
+    vecs: DataFrame,
+    cands: DataFrame,
+    cid: str,
+    cv: str,
+    dim: int | None,
+    on: str | None = None,
+) -> DataFrame:
+    """(id, v, <cid>): each (id, v) row's max-cosine candidate from the
+    broadcast ``cands`` frame — a cross join, or an equi-join on ``on``
+    (the two-level fine step, keyed by coarse cell) — via max_by with a
+    (cosine, -cid) ordering struct instead of a window rank: the scored
+    rows collapse map-side (partial aggregation keeps one buffer per id per
+    partition), so the shuffle carries one row per vector; ties break on
+    min cid. Correct at any candidate-table size, so it is the path above
+    :data:`MAX_LOCAL_CENTROIDS`, but it materializes every scored pair as a
+    row through codegen."""
     best = F.max_by(
-        F.struct(F.col("v"), F.col("cid")),
-        F.struct(F.col("ccos"), (-F.col("cid")).alias("nc")),
+        F.struct(F.col("v"), F.col(cid)),
+        F.struct(F.col("_cos"), (-F.col(cid)).alias("_ncid")),
     ).alias("m")
     return (
-        vecs.join(F.broadcast(centroids), how="cross")
-        .select("id", "v", "cid", cosine(F.col("v"), F.col("cv"), dim).alias("ccos"))
+        vecs.join(F.broadcast(cands), on, "inner" if on else "cross")
+        .select("id", "v", cid, cosine(F.col("v"), F.col(cv), dim).alias("_cos"))
         .groupBy("id")
         .agg(best)
-        .select("id", F.col("m.v").alias("v"), F.col("m.cid").alias("cid"))
+        .select("id", F.col("m.v").alias("v"), F.col(f"m.{cid}").alias(cid))
     )
 
 
@@ -764,23 +701,13 @@ def _two_level_frames(
         .select("gid", "cid", "cv")
     )
     active = coarse.join(reg.select("gid").distinct(), "gid")
-    local = _local_centroid_matrix(active, "gid", "gv")
+    local = _local_matrices(active, "gid", "gv")
     if local is not None:
         vec_coarse = _assign_cells_arrow(
             vecs, local, dict(active.dtypes)["gid"]
         ).withColumnRenamed("cid", "gid")
     else:
-        best_g = F.max_by(
-            F.struct(F.col("v"), F.col("gid")),
-            F.struct(F.col("gcos"), (-F.col("gid")).alias("ng")),
-        ).alias("mg")
-        vec_coarse = (
-            vecs.join(F.broadcast(active), how="cross")
-            .select("id", "v", "gid", cosine(F.col("v"), F.col("gv"), dim).alias("gcos"))
-            .groupBy("id")
-            .agg(best_g)
-            .select("id", F.col("mg.v").alias("v"), F.col("mg.gid").alias("gid"))
-        )
+        vec_coarse = _argmax_join(vecs, active, "gid", "gv", dim)
     return coarse, reg, vec_coarse
 
 
@@ -803,78 +730,10 @@ def _assign_cells_two_level(
     if n_coarse <= 1:
         return _assign_cells(vecs, centroids, dim)
     _, reg, vec_coarse = _two_level_frames(vecs, centroids, n_centroids, dim)
-    reg_local = _collect_registrations(reg)
+    reg_local = _local_matrices(reg, "cid", "cv", group_field="gid")
     if reg_local is not None:
-        return _assign_fine_arrow(
-            vec_coarse, reg_local, dict(reg.dtypes)["cid"]
-        )
-    best_f = F.max_by(
-        F.struct(F.col("v"), F.col("cid")),
-        F.struct(F.col("fcos"), (-F.col("cid")).alias("nc")),
-    ).alias("m")
-    return (
-        vec_coarse.join(F.broadcast(reg), "gid")
-        .select("id", "v", "cid", cosine(F.col("v"), F.col("cv"), dim).alias("fcos"))
-        .groupBy("id")
-        .agg(best_f)
-        .select("id", F.col("m.v").alias("v"), F.col("m.cid").alias("cid"))
-    )
-
-
-def _collect_registrations(reg: DataFrame):
-    """{gid: (cids, C, cnorm)} for the fine assignment step, or None when
-    the registration table (n_centroids x fine_replicas rows, replicas
-    capped at 16) exceeds the local cap. Per-cell matrices are sorted by
-    cid ascending for the argmax tie-break, same rule as the flat path."""
-    import numpy as np
-
-    rows = reg.select("gid", "cid", "cv").limit(MAX_LOCAL_CENTROIDS + 1).collect()
-    if len(rows) > MAX_LOCAL_CENTROIDS or not rows:
-        return None
-    by_gid: dict = {}
-    for r in rows:
-        by_gid.setdefault(r[0], []).append((r[1], r[2]))
-    out = {}
-    for gid, pairs in by_gid.items():
-        pairs.sort(key=lambda p: p[0])
-        cids = np.asarray([p[0] for p in pairs], dtype=np.int64)
-        C = np.stack([np.asarray(p[1], dtype=np.float64) for p in pairs])
-        cn = np.zeros(len(pairs))
-        for i in range(C.shape[1]):
-            cn += C[:, i] * C[:, i]
-        out[gid] = (cids, C, np.sqrt(cn))
-    return out
-
-
-def _assign_fine_arrow(vec_coarse: DataFrame, reg_local: dict, cid_type: str) -> DataFrame:
-    """(id, v, cid): the two-level FINE step as an Arrow map — each batch
-    groups by its (single-probe) coarse cell and scores only that cell's
-    registered fine centroids in numpy. Replaces the gid equi-join +
-    per-id max_by: no join fan-out rows, no aggregation shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    def _assign(batches):
-        for pdf in batches:
-            # rows with a null vector or null coarse cell cannot be
-            # assigned (the join form dropped them via the gid equi-join)
-            pdf = pdf[(pdf["v"].notna() & pdf["gid"].notna()).to_numpy()]
-            if not len(pdf):
-                continue
-            cid_out = np.empty(len(pdf), dtype=np.int64)
-            for gid, idx in pdf.groupby("gid", sort=False).indices.items():
-                cids, C, cnorm = reg_local[gid]
-                A = np.stack(pdf["v"].iloc[idx].to_numpy()).astype(np.float64, copy=False)
-                best = np.argmax(_rank_cosines(A, C, cnorm), axis=1)
-                cid_out[idx] = cids[best]
-            out = pdf[["id", "v"]].copy()
-            out["cid"] = cid_out
-            yield out
-
-    id_t = dict(vec_coarse.dtypes)["id"]
-    return vec_coarse.mapInPandas(
-        _assign, schema=f"id {id_t}, v array<double>, cid {cid_type}"
-    )
+        return _assign_cells_arrow(vec_coarse, reg_local, dict(reg.dtypes)["cid"], "gid")
+    return _argmax_join(vec_coarse, reg, "cid", "cv", dim, on="gid")
 
 
 def ivf_params(n: int, n_probe: int = 8) -> tuple[int, int]:
@@ -906,7 +765,7 @@ def _ivf_candidates(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    n_centroids: int | None,
+    n_centroids: int,
     n_probe: int,
     dim: int | None,
     lloyd_iters: int,
@@ -928,10 +787,6 @@ def _ivf_candidates(
     if lloyd_iters and dim is None:
         raise ValueError("ivf_topk_neighbors: lloyd_iters > 0 requires dim")
     vecs = base.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-    if n_centroids is None:
-        n = vecs.count()
-        n_centroids, n_probe = ivf_params(n, n_probe)
-        cos_dim = dim if n >= UNROLL_MIN_ROWS else None
     train = vecs if train_on is None else train_on.select(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
     )
@@ -953,7 +808,7 @@ def _ivf_candidates(
         centroids = step.localCheckpoint(eager=True)
     qvecs = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
     n_coarse, _ = two_level_params(n_centroids)
-    local = _local_centroid_matrix(centroids, "cid", "cv")
+    local = _local_matrices(centroids, "cid", "cv")
     if local is not None:
         # ONE bounded centroid pull feeds both sides: base vectors assign
         # in an Arrow map (flat below the two-level threshold), queries
@@ -966,7 +821,7 @@ def _ivf_candidates(
             assigned = _assign_cells_arrow(vecs, local, cid_t)
         else:
             assigned = _assign_cells_two_level(vecs, centroids, n_centroids, cos_dim)
-        probes = _probe_cells_arrow(qvecs, local, n_probe, cid_t)
+        probes = _probe_cells_arrow(qvecs, local[None], n_probe, cid_t)
     else:
         assigned = _assign_cells_two_level(vecs, centroids, n_centroids, cos_dim)
         probe_w = Window.partitionBy("query_id").orderBy(F.col("ccos").desc(), F.col("cid").asc())
@@ -1064,29 +919,22 @@ def ivf_topk_neighbors(
     test_ivf_scored_fraction.
     """
     if n_centroids is None:
-        n = base.count()
-        n_centroids, n_probe = ivf_params(n, n_probe)
-        cos_dim = dim if n >= UNROLL_MIN_ROWS else None
-    else:
-        # Explicit n_centroids must not silently force the unrolled cosine
-        # (the r16 ivf_upsert finding: the 64-wide codegen costs ~1.8 s of
-        # compile the corpus does not amortize below UNROLL_MIN_ROWS —
-        # same values either way, the branches are bit-equal). Callers
-        # that know the corpus size pass n_rows; otherwise the
-        # plan-statistics estimate decides, exactly like topk_neighbors.
-        cos_dim = _auto_cos_dim(base, dim, n_rows)
+        n_rows = base.count()
+        n_centroids, n_probe = ivf_params(n_rows, n_probe)
+    # Explicit n_centroids must not silently force the unrolled cosine (the
+    # r16 ivf_upsert finding: the 64-wide codegen costs ~1.8 s of compile
+    # the corpus does not amortize below UNROLL_MIN_ROWS — same values
+    # either way, the branches are bit-equal). Callers that know the corpus
+    # size pass n_rows; otherwise the plan-statistics estimate decides,
+    # exactly like topk_neighbors.
+    cos_dim = _auto_cos_dim(base, dim, n_rows)
     scored = _ivf_candidates(
         base, queries, id_col, vec_col, n_centroids, n_probe, dim, lloyd_iters,
         train_fraction, cos_dim, train_on,
     ).select(
         "query_id", F.col("id").alias("neighbor_id"), _pair_cosine(F.col("qv"), F.col("v"), cos_dim).alias("cos")
-    ).filter(F.col("cos").isNotNull() & ~F.isnan("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
     )
+    return _top_k(scored, k)
 
 
 def ivf_upsert_topk_neighbors(

@@ -106,13 +106,12 @@ def test_simhash_banding_is_exhaustive(docs):
 
 
 def test_embedding_methods_agree(emb):
-    """All exact embedding-dedup paths must produce the identical pair set:
-    the distributed block self-join (default), the guarded closure-broadcast
-    numpy scorer, and the pure-JVM join."""
+    """Both exact embedding-dedup paths must produce the identical pair set:
+    the distributed block self-join (default) and the pure-JVM join, the
+    sequential-fold reference."""
     blk = _pairs(dedup.embedding_dup_pairs(emb, threshold=0.4, dim=64, method="block"))
-    bc = _pairs(dedup.embedding_dup_pairs(emb, threshold=0.4, dim=64, method="broadcast"))
     jn = _pairs(dedup.embedding_dup_pairs(emb, threshold=0.4, dim=64, method="join"))
-    assert blk == bc == jn
+    assert blk == jn
     assert len(blk) > 0
 
 
@@ -122,15 +121,6 @@ def test_embedding_block_odd_blocks(emb):
     a = _pairs(dedup.embedding_dup_pairs(emb, threshold=0.4, dim=64, method="block", n_blocks=7))
     b = _pairs(dedup.embedding_dup_pairs(emb, threshold=0.4, dim=64, method="join"))
     assert a == b
-
-
-def test_embedding_broadcast_guard(emb):
-    """method='broadcast' collects to the driver and must refuse tables
-    larger than its size guard."""
-    with pytest.raises(ValueError, match="max_broadcast_rows"):
-        dedup.embedding_dup_pairs(
-            emb, threshold=0.4, dim=64, method="broadcast", max_broadcast_rows=10
-        ).collect()
 
 
 def test_embedding_auto_dispatch(emb):

@@ -5,10 +5,13 @@ mirroring the reference's DropFieldTest.java fixtures
 from __future__ import annotations
 
 import json
+import re
 
+import pytest
 from pyspark.sql import Row, functions as F
 
-from kafka_custom_transforms_spark import drop_fields
+from kafka_custom_transforms_spark import drop_fields, hoist_field
+from kafka_custom_transforms_spark.operators.drop_field import not_json_object
 
 
 def _nested_df(spark):
@@ -49,6 +52,36 @@ def test_null_value_passthrough(spark):
     )
     out = drop_fields(["parent.child.k2"])(nulls)
     assert out.collect()[0].value is None
+
+
+_JSON_PATHS = {
+    "drop_fields/json_schema": ("drop_fields", lambda: drop_fields(["a"], json_schema="a int, b int")),
+    "drop_fields/udf": ("drop_fields", lambda: drop_fields(["a"])),
+    "hoist_field/json_schema": (
+        "hoist_field", lambda: hoist_field("f", ["a"], json_schema="a int, b int")
+    ),
+    "hoist_field/udf": ("hoist_field", lambda: hoist_field("f", ["a"])),
+}
+
+
+@pytest.mark.parametrize("value", ["[1]", '"x"', "7", "null"])
+@pytest.mark.parametrize("path", sorted(_JSON_PATHS))
+def test_non_object_json_raises_on_every_json_path(spark, path, value):
+    """The reference requires a Map for a schemaless value (DropField.java:56
+    requireMap, ExtendedHoistField.java:52-60 getValueAsMap): every JSON
+    path of both SMTs raises the same error naming the transform for a
+    non-null value that is not a JSON object, where the json_schema paths
+    used to return ``{}`` and the drop UDF passed the value through. SQL
+    NULL still passes through (D1), and an object with leading whitespace
+    is still an object."""
+    name, make = _JSON_PATHS[path]
+    transform = make()
+    with pytest.raises(Exception, match=re.escape(not_json_object(name))):
+        transform(spark.createDataFrame([(value,)], "value string")).collect()
+    ok = spark.createDataFrame([(None,), (' \n{"a":1,"b":2}',)], "value string")
+    got = [r.value for r in transform(ok).collect()]
+    assert got[0] is None
+    assert json.loads(got[1]) in ({"b": 2}, {"a": 1, "f": {"b": 2}})
 
 
 def test_unmatched_paths_silently_ignored(spark):
@@ -160,7 +193,7 @@ def test_json_udf_path_matches_schema_path_property(spark):
     omits null fields while the UDF copies them losslessly — so outputs
     are compared as parsed objects after recursively removing null-valued
     entries. Each example evaluates one small DataFrame through BOTH
-    transforms in a single session (the r9 _fold_cosines sweep is the
+    transforms in a single session (the r9 cosine-fold sweep is the
     template, adapted to Spark-in-the-loop with a bounded example
     count)."""
     from hypothesis import HealthCheck, given, settings, strategies as st

@@ -109,9 +109,11 @@ def test_ivf_scored_fraction(emb, queries_df):
     8 probes = 50% scored; the derived quantizer stays well under."""
     n = emb.count()
     nq = queries_df.count()
+    n_centroids, n_probe = similarity.ivf_params(n)
     cand = similarity._ivf_candidates(
         emb, queries_df, "vec_id", "embedding",
-        n_centroids=None, n_probe=8, dim=64, lloyd_iters=0, train_fraction=0.1,
+        n_centroids=n_centroids, n_probe=n_probe, dim=64, lloyd_iters=0,
+        train_fraction=0.1,
     )
     frac = cand.count() / (nq * (n - 1))
     assert frac < 0.45, f"scored fraction {frac:.2f} — IVF is not pruning"
@@ -214,20 +216,22 @@ def test_auto_cos_dim_hint_and_estimate(emb):
     assert similarity._auto_cos_dim(emb, 64) is None
 
 
-def test_assign_cells_arrow_matches_expr(emb):
+def test_assign_cells_arrow_matches_expr(emb, monkeypatch):
     """The Arrow map-form flat assignment must be BIT-identical to the
-    broadcast-join + max_by expression form: same cells, same min-cid
-    tie-breaks (r9 — the r8 MinHash map-form treatment applied to IVF)."""
+    broadcast-join + max_by expression form (forced by
+    MAX_LOCAL_CENTROIDS=0): same cells, same min-cid tie-breaks (r9 — the
+    r8 MinHash map-form treatment applied to IVF)."""
     vecs = emb.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").cast("array<double>").alias("v"),
     )
     centroids = similarity._seed_centroids(vecs, 32)
-    expr = sorted(
-        (r.id, r.cid)
-        for r in similarity._assign_cells(vecs, centroids, None, method="expr").collect()
-    )
     arrow = sorted(
+        (r.id, r.cid)
+        for r in similarity._assign_cells(vecs, centroids, None).collect()
+    )
+    monkeypatch.setattr(similarity, "MAX_LOCAL_CENTROIDS", 0)
+    expr = sorted(
         (r.id, r.cid)
         for r in similarity._assign_cells(vecs, centroids, None).collect()
     )
@@ -334,7 +338,7 @@ def test_assign_cells_arrow_drops_null_vectors(spark):
     assert got == [(1, 10), (2, 20)]
 
 
-def test_zero_norm_parity_between_arrow_and_join_forms(spark):
+def test_zero_norm_parity_between_arrow_and_join_forms(spark, monkeypatch):
     """r10 (advice item): the Arrow assignment/probe kernels and the
     expr/window fallbacks must agree on DEGENERATE inputs — a zero-norm
     centroid must never capture a normal vector (try_divide's NULL loses
@@ -353,18 +357,20 @@ def test_zero_norm_parity_between_arrow_and_join_forms(spark):
     cents = spark.createDataFrame(
         [(10, [1.0, 1.0]), (11, [0.0, 0.0])], "cid long, cv array<double>"
     )
-    expr_assign = sorted(
-        (r.id, r.cid)
-        for r in similarity._assign_cells(vecs, cents, None, method="expr").collect()
-    )
     arrow_assign = sorted(
         (r.id, r.cid)
-        for r in similarity._assign_cells(vecs, cents, None, method="arrow").collect()
+        for r in similarity._assign_cells(vecs, cents, None).collect()
     )
+    qvecs = vecs.select(F.col("id").alias("query_id"), F.col("v").alias("qv"))
+    local = similarity._local_matrices(cents, "cid", "cv")[None]
+    monkeypatch.setattr(similarity, "MAX_LOCAL_CENTROIDS", 0)
+    expr_assign = sorted(
+        (r.id, r.cid)
+        for r in similarity._assign_cells(vecs, cents, None).collect()
+    )
+    monkeypatch.undo()
     assert arrow_assign == expr_assign == [(1, 10), (2, 10), (3, 10)]
 
-    qvecs = vecs.select(F.col("id").alias("query_id"), F.col("v").alias("qv"))
-    local = similarity._local_centroid_matrix(cents, "cid", "cv")
     arrow_probes = sorted(
         (r.query_id, r.cid)
         for r in similarity._probe_cells_arrow(qvecs, local, 1, "bigint").collect()
@@ -394,42 +400,58 @@ def test_rank_cosines_orders_nan_elements_above_and_nulls_below():
     genuine NaN element (denominator non-zero) maps to +inf (Spark sorts
     NaN above every double); an exactly-zero denominator maps to -inf
     (try_divide yields NULL, which loses). Non-degenerate cells stay
-    bit-equal to _fold_cosines."""
+    bit-equal to the sequential-fold cosine."""
+    import math
+
     import numpy as np
 
     A = np.array([[1.0, 0.0], [np.nan, 1.0], [0.0, 0.0]])
     C = np.array([[1.0, 1.0], [0.0, 0.0]])
-    cn = np.zeros(2)
-    for i in range(2):
-        cn += C[:, i] * C[:, i]
-    cnorm = np.sqrt(cn)
+    cnorm = np.array([math.sqrt(2.0), 0.0])
     key = similarity._rank_cosines(A, C, cnorm)
-    fold = similarity._fold_cosines(A[:1], C[:1], cnorm[:1])
-    assert key[0, 0] == fold[0, 0]          # normal cell: bit-equal
+    assert key[0, 0] == 1.0 / (1.0 * math.sqrt(2.0))  # normal cell: bit-equal
     assert key[0, 1] == -np.inf             # zero-norm centroid: loses
     assert key[1, 0] == np.inf              # NaN element: wins (Spark NaN order)
     assert key[1, 1] == np.inf              # NaN elements: denom NaN -> NaN result
     assert (key[2] == -np.inf).all()        # zero-norm vector: all lose, tie on cid
 
 
-def test_fold_cosines_property_bit_equal_to_scalar_fold():
-    """Property test: _fold_cosines (the vectorized kernel under every
-    Arrow assignment/probe map) must be BIT-identical to a scalar
-    sequential left-fold for arbitrary float inputs — including
-    magnitudes near the double extremes, where a blocked/SIMD summation
-    order would diverge."""
+def test_vector_fold_property_bit_equal_to_scalar_fold():
+    """Property test: the shared fold kernel under every Arrow vector map
+    (functions.vector: the n x m ``fold_dot_matrix`` and the row-wise
+    ``fold_dot_rows``) must be BIT-identical to a scalar sequential
+    left-fold for arbitrary float inputs — including magnitudes near the
+    double extremes and dims past numpy's 8-way unrolled pairwise sum,
+    where a blocked/SIMD/FMA summation order would diverge — and the
+    production cosine (:func:`similarity._rank_cosines` over
+    :func:`similarity._local_matrices`-style norms) must equal the scalar
+    cosine on every finite cell."""
     import math
 
     import numpy as np
     from hypothesis import given, settings, strategies as st
 
+    from kafka_custom_transforms_spark.functions.vector import (
+        fold_dot_matrix,
+        fold_dot_rows,
+    )
+
     finite = st.floats(
         min_value=-1e150, max_value=1e150, allow_nan=False, allow_infinity=False
     )
 
+    def scalar_dot(x, y):
+        acc = 0.0
+        for i in range(len(x)):
+            acc += x[i] * y[i]
+        return acc
+
+    def same(g, want):
+        return (g == want) or (math.isnan(g) and math.isnan(want))
+
     @settings(max_examples=200, deadline=None)
     @given(
-        st.integers(min_value=1, max_value=6),   # dim
+        st.integers(min_value=1, max_value=24),  # dim
         st.integers(min_value=1, max_value=4),   # n vectors
         st.integers(min_value=1, max_value=4),   # m centroids
         st.data(),
@@ -441,25 +463,22 @@ def test_fold_cosines_property_bit_equal_to_scalar_fold():
         C = np.array(
             [[data.draw(finite) for _ in range(dim)] for _ in range(m)]
         )
-        cn = np.zeros(m)
-        for i in range(dim):
-            cn += C[:, i] * C[:, i]
-        got = similarity._fold_cosines(A, C, np.sqrt(cn))
+        B = np.array(
+            [[data.draw(finite) for _ in range(dim)] for _ in range(n)]
+        )
+        dots = fold_dot_matrix(A, C)
+        rows = fold_dot_rows(A, B)
+        cnorm = np.sqrt(fold_dot_rows(C, C))
+        key = similarity._rank_cosines(A, C, cnorm)
         for r in range(n):
-            na = 0.0
-            for i in range(dim):
-                na += A[r, i] * A[r, i]
+            assert same(rows[r], scalar_dot(A[r], B[r])), (r, rows[r])
+            na = scalar_dot(A[r], A[r])
             for c in range(m):
-                dot = 0.0
-                nb = 0.0
-                for i in range(dim):
-                    dot += A[r, i] * C[c, i]
-                    nb += C[c, i] * C[c, i]
-                want = dot / (math.sqrt(na) * math.sqrt(nb))
-                g = got[r, c]
-                assert (g == want) or (math.isnan(g) and math.isnan(want)), (
-                    r, c, g, want
-                )
+                dot = scalar_dot(A[r], C[c])
+                assert same(dots[r, c], dot), (r, c, dots[r, c], dot)
+                den = math.sqrt(na) * math.sqrt(scalar_dot(C[c], C[c]))
+                if den != 0.0 and math.isfinite(dot / den):
+                    assert key[r, c] == dot / den, (r, c, key[r, c], dot / den)
 
     check()
 
@@ -480,7 +499,7 @@ def test_probe_cells_arrow_matches_window_form(emb):
         F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv")
     )
     n_probe = 7
-    local = similarity._local_centroid_matrix(centroids, "cid", "cv")
+    local = similarity._local_matrices(centroids, "cid", "cv")[None]
     arrow = sorted(
         (r.query_id, r.cid)
         for r in similarity._probe_cells_arrow(qvecs, local, n_probe, "bigint").collect()
