@@ -23,6 +23,8 @@ Design notes:
     Python touches rows only in clearly-marked slow paths.
 """
 
+import inspect
+
 from kafka_custom_transforms_spark.operators.chain import transform_chain
 from kafka_custom_transforms_spark.operators.drop_field import drop_fields
 from kafka_custom_transforms_spark.operators.hoist_field import hoist_field
@@ -46,37 +48,13 @@ def version() -> str:
     return __version__
 
 
-# ConfigDef-style introspection (reference: SimpleConfig/ConfigDef per
-# transform, DropField.java:23-28, ExtendedHoistField.java:42-45,
-# StructuredSchemalessToJsonString.java:35). The same keys are enforced at
-# factory-call time by each operator's kwarg validation; this table is the
-# machine-readable mirror for tooling.
+# ConfigDef-style introspection (DropField.java:23-28,
+# ExtendedHoistField.java:42-45), read off each factory's signature.
+_EMPTY = inspect.Parameter.empty
 CONFIG_DEFS = {
-    "drop_fields": {
-        "paths": {"type": "list[str]", "default": [], "required": False,
-                  "doc": "dot-separated field paths to drop (KIP-821 notation)"},
-        "target": {"type": "str", "default": "value", "required": False,
-                   "doc": "envelope column to operate on (Key/Value variants)"},
-        "json_schema": {"type": "DDL str | StructType | None", "default": None,
-                        "required": False,
-                        "doc": "schema of JSON-string targets for the JVM fast path"},
-    },
-    "hoist_field": {
-        "field": {"type": "str", "default": None, "required": True,
-                  "doc": "wrapping field name (reference NO_DEFAULT_VALUE)"},
-        "keep_in_root": {"type": "list[str]", "default": [], "required": False,
-                         "doc": "top-level fields left at the root"},
-        "target": {"type": "str", "default": "value", "required": False,
-                   "doc": "envelope column to operate on"},
-        "json_schema": {"type": "DDL str | StructType | None", "default": None,
-                        "required": False, "doc": "JVM fast path for JSON targets"},
-        "string_is_json": {"type": "bool", "default": True, "required": False,
-                           "doc": "treat StringType targets as JSON text"},
-    },
-    "to_json_string": {
-        "target": {"type": "str", "default": "value", "required": False,
-                   "doc": "envelope column to operate on"},
-        "force_structs": {"type": "bool", "default": False, "required": False,
-                          "doc": "serialize struct (schema'd) targets too"},
-    },
+    f.__name__: {
+        k: {"default": None if p.default is _EMPTY else p.default, "required": p.default is _EMPTY}
+        for k, p in inspect.signature(f).parameters.items()
+    }
+    for f in (drop_fields, hoist_field, to_json_string)
 }

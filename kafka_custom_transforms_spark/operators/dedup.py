@@ -1205,8 +1205,10 @@ def semantic_dup_pairs(
         _assign_cells,
         _seed_centroids,
         ivf_params,
+        require_integral_ids,
     )
 
+    require_integral_ids(emb, id_col, "semantic_dup_pairs")
     vecs = emb.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
     if n_clusters is None:
         n_clusters, _ = ivf_params(vecs.count())

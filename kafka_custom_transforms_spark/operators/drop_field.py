@@ -7,15 +7,13 @@ matching the reference default.
 
 Semantics replicated exactly:
   D1  null-value passthrough (DropField.java:45-46) — a null target column
-      stays null (plan-time: the rebuild is wrapped in null-preserving casts).
+      stays null (each struct rebuild sits under ``F.when(col.isNotNull(), ...)``).
   D2  path predicate: keep a field iff its full dotted path is not in
       ``paths``; exact string match, no escaping (DropField.java:63-65).
       Paths that match nothing are silently ignored, as in the reference.
   D3  schemaless deep drop: descends only into nested *maps* / JSON objects;
-      arrays are copied opaquely (DropField.java:74-76). A non-null JSON
-      value that is not an object raises on both JSON paths
-      (:func:`json_object_or_raise` / :func:`require_json_object`), as the
-      reference's requireMap does (DropField.java:56).
+      arrays are copied opaquely (DropField.java:74-76); a non-object raises
+      as requireMap does (:56) — the errors of ``schemaless``.
   D4/D5 schema'd deep drop: descends only into STRUCT fields
       (DropField.java:111-113); dropping every field of a struct yields a
       legal empty struct (DropFieldTest.java:62-63) — we rebuild structs
@@ -28,44 +26,25 @@ plays the role of the reference's per-record ``schema == null`` check —
 StructType = schema'd, MapType / JSON StringType = schemaless.
 
 Scale: the struct and map paths are pure Catalyst expressions (no shuffle, no
-Python, whole-stage-codegen capable). The JSON path with ``json_schema`` is
-likewise JVM-only via from_json/to_json. The schema-free JSON path is an
-Arrow-batched pandas UDF — the documented slow path for truly dynamic shapes.
+Python, whole-stage-codegen capable); the JSON paths are ``schemaless`` steps.
 """
 
 from __future__ import annotations
 
-import json
+import functools
 from collections.abc import Callable, Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import DataType, MapType, StringType, StructType
 
-
-def _pruned_struct_type(schema: StructType, prefix: str, dropset: set[str]) -> StructType:
-    """Result schema after dropping ``dropset`` paths (descends STRUCT only)."""
-    out = StructType()
-    for f in schema.fields:
-        p = prefix + f.name
-        if p in dropset:
-            continue
-        if isinstance(f.dataType, StructType) and any(d.startswith(p + ".") for d in dropset):
-            out.add(f.name, _pruned_struct_type(f.dataType, p + ".", dropset), f.nullable, f.metadata)
-        else:
-            out.add(f.name, f.dataType, f.nullable, f.metadata)
-    return out
+from kafka_custom_transforms_spark.operators import schemaless
 
 
 def _rebuild_struct(col: Column, schema: StructType, prefix: str, dropset: set[str]) -> Column:
-    """Struct rebuild expression omitting dropped paths.
-
-    Rebuilding (rather than ``dropFields``) keeps field order, supports empty
-    structs, and preserves nulls at every nesting level. Kept fields carry
-    their ``StructField.metadata`` through the rebuild — the Spark home for
-    the reference's schema basics (name/version/doc/params;
-    SchemaUtil.copySchemaBasics via DropField.java:107).
-    """
+    """Struct rebuild omitting dropped paths. Unlike ``dropFields`` it keeps
+    field order, allows empty structs and keeps nulls at every level; kept
+    fields carry their ``StructField.metadata`` (the reference's schema
+    basics, SchemaUtil.copySchemaBasics via DropField.java:107)."""
     kept: list[Column] = []
     for f in schema.fields:
         p = prefix + f.name
@@ -73,13 +52,8 @@ def _rebuild_struct(col: Column, schema: StructType, prefix: str, dropset: set[s
             continue
         child = col.getField(f.name)
         if isinstance(f.dataType, StructType) and any(d.startswith(p + ".") for d in dropset):
-            new_type = _pruned_struct_type(f.dataType, p + ".", dropset)
             rebuilt = _rebuild_struct(child, f.dataType, p + ".", dropset)
-            kept.append(
-                F.when(child.isNotNull(), rebuilt)
-                .otherwise(F.lit(None).cast(new_type))
-                .alias(f.name, metadata=f.metadata)
-            )
+            kept.append(F.when(child.isNotNull(), rebuilt).alias(f.name, metadata=f.metadata))
         else:
             kept.append(child.alias(f.name, metadata=f.metadata))
     if not kept:
@@ -104,38 +78,6 @@ def _drop_from_map(col: Column, dtype: MapType, prefix: Column, paths_lit: Colum
 
         out = F.transform_values(out, _desc)
     return out
-
-
-def not_json_object(transform: str) -> str:
-    """The one error every schemaless JSON SMT path raises for a non-null
-    value that is not a JSON object (``[1]``, ``"x"``, ``7``, ``null``) —
-    the reference requires a Map there (DropField.java:56 requireMap,
-    ExtendedHoistField.java:52-60 getValueAsMap)."""
-    return f"{transform}: Bad record type. Should be a Map instance, got a JSON value that is not an object"
-
-
-def json_object_or_raise(col: Column, out: Column, transform: str) -> Column:
-    """``out`` where the JSON text ``col`` is an object, NULL where ``col``
-    is NULL (D1), and a raised :func:`not_json_object` error otherwise. The
-    guard is one string predicate ahead of the parse: JSON text is an
-    object iff its first non-whitespace character is ``{``. The byte-prefix
-    test decides almost every record; the regex, which copies the string,
-    runs only for leading whitespace or a non-object (1M-record noop-sink
-    micro-benchmark, 4 vCPUs: regex alone cost ~4% of the drop's wall
-    time, prefix-first none measurable)."""
-    is_object = col.startswith("{") | col.rlike(r"^\s*\{")
-    return F.when(is_object, out).when(
-        col.isNotNull(), F.raise_error(F.lit(not_json_object(transform)))
-    )
-
-
-def require_json_object(text: str, transform: str) -> dict:
-    """Python-side twin of :func:`json_object_or_raise` for the Arrow-UDF
-    paths: the parsed object, or ValueError(:func:`not_json_object`)."""
-    obj = json.loads(text)
-    if not isinstance(obj, dict):
-        raise ValueError(not_json_object(transform))
-    return obj
 
 
 def _prune_json_obj(obj: object, prefix: str, dropset: set[str]) -> object:
@@ -164,11 +106,10 @@ def drop_fields(
     ``target`` selects the column to operate on (the Key/Value subclass pair
     of the reference, DropField.java:137-173, generalized to any column).
 
-    ``json_schema``: optional schema of the JSON held in a StringType target.
-    When given, the JSON path runs fully JVM-side (from_json -> rebuild ->
-    to_json); note to_json omits null fields. Without it, an Arrow-batched
-    pandas UDF prunes losslessly (exact reference parity incl. null entries
-    and ``{}`` empty objects).
+    ``json_schema`` (DDL or StructType) of the JSON in a StringType target
+    selects the JVM path: ``to_json`` omits null fields, and a value that
+    does not fit the schema raises ``schemaless.malformed_json``. Without
+    it, an Arrow-batched UDF prunes losslessly.
     """
     for p in paths:
         if not isinstance(p, str) or not p:
@@ -181,48 +122,22 @@ def drop_fields(
         dtype = df.schema[target].dataType
         col = F.col(target)
         if isinstance(dtype, StructType):
-            new_type = _pruned_struct_type(dtype, "", dropset)
-            rebuilt = _rebuild_struct(col, dtype, "", dropset)
-            new_col = F.when(col.isNotNull(), rebuilt).otherwise(F.lit(None).cast(new_type))
+            new_col = F.when(col.isNotNull(), _rebuild_struct(col, dtype, "", dropset))
         elif isinstance(dtype, MapType):
             paths_lit = F.array(*[F.lit(p) for p in sorted(dropset)])
             new_col = _drop_from_map(col, dtype, F.lit(""), paths_lit)
+        elif isinstance(dtype, StringType) and json_schema is not None:
+            rebuild = functools.partial(_rebuild_struct, prefix="", dropset=dropset)
+            return schemaless.jvm_step(df, target, json_schema, rebuild, "drop_fields")
         elif isinstance(dtype, StringType):
-            if json_schema is not None:
-                sch = (
-                    json_schema
-                    if isinstance(json_schema, StructType)
-                    else StructType.fromDDL(json_schema)
-                )
-                parsed = F.from_json(col, sch)
-                new_col = json_object_or_raise(
-                    col, F.to_json(_rebuild_struct(parsed, sch, "", dropset)), "drop_fields"
-                )
-            else:
-                @F.pandas_udf("string")
-                def _prune(s: pd.Series) -> pd.Series:
-                    def one(x):
-                        if x is None:
-                            return None
-                        return json.dumps(
-                            _prune_json_obj(require_json_object(x, "drop_fields"), "", dropset),
-                            separators=(",", ":"),
-                        )
-
-                    return s.map(one)
-
-                new_col = _prune(col)
+            return schemaless.arrow_step(
+                df, target, lambda obj: _prune_json_obj(obj, "", dropset), "drop_fields"
+            )
         else:
             raise TypeError(
-                f"drop_fields: target column {target!r} has unsupported type {dtype}; "
-                "expected struct (schema'd), map or JSON string (schemaless). "
-                "The reference requires a Map for schemaless input (DropField.java:56)."
+                f"drop_fields: target column {target!r} has unsupported type {dtype}; expected "
+                "struct (schema'd), map or JSON string (schemaless; DropField.java:56)."
             )
-        out = df.withColumn(target, new_col)
-        # The target column's own metadata is the envelope-level schema
-        # basics slot (Connect schema name/version/doc); withColumn drops
-        # it, so restore (DropField.java:107 copySchemaBasics parity).
-        md = df.schema[target].metadata
-        return out.withMetadata(target, md) if md else out
+        return schemaless.with_target(df, target, new_col)
 
     return _transform

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructType
 
 from kafka_custom_transforms_spark.operators.chain import Transform, transform_chain
+from kafka_custom_transforms_spark.operators.schemaless import as_struct_type
 
 
 def split_mixed(
@@ -46,7 +47,7 @@ def split_mixed(
         raise ValueError("split_mixed: is_structured predicate is required")
     if schema is None:
         raise ValueError("split_mixed: schema for the structured branch is required")
-    sch = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    sch = as_struct_type(schema)
 
     def _transform(df: DataFrame) -> DataFrame:
         col = F.col(target)
@@ -64,19 +65,17 @@ def mixed_smt(
     factory: Callable[..., Transform],
     *args: object,
     target: str = "value",
-    struct_kwargs: dict | None = None,
     json_kwargs: dict | None = None,
     **common: object,
 ) -> Transform:
     """Instantiate one SMT factory for BOTH representation columns.
 
-    ``factory(*args, target=f"{target}_struct", **common, **struct_kwargs)``
-    chained with the ``_json`` twin: per record exactly one instance does
-    work (the other sees null and passes it through, D1). Branch-specific
-    config (``json_schema``, ``string_is_json``) goes in the per-branch
-    kwargs.
+    ``factory(*args, target=f"{target}_struct", **common)`` chained with
+    the ``_json`` twin: per record exactly one instance does work (the
+    other sees null and passes it through, D1). JSON-only config
+    (``json_schema``) goes in ``json_kwargs``.
     """
-    t_struct = factory(*args, target=f"{target}_struct", **{**common, **(struct_kwargs or {})})
+    t_struct = factory(*args, target=f"{target}_struct", **common)
     t_json = factory(*args, target=f"{target}_json", **{**common, **(json_kwargs or {})})
     return transform_chain(t_struct, t_json)
 

@@ -40,6 +40,7 @@ from __future__ import annotations
 import warnings
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import IntegralType
 
 from kafka_custom_transforms_spark.functions.skew import PYTHON_FANOUT_CAP, ensure_min_partitions
 from kafka_custom_transforms_spark.functions.vector import (
@@ -465,6 +466,15 @@ def _seed_centroids(vecs: DataFrame, n_centroids: int) -> DataFrame:
 # the JVM path already ships as a broadcast join side. Above the cap the
 # assignment falls back to the broadcast-join expression form.
 MAX_LOCAL_CENTROIDS = 65536
+
+
+def require_integral_ids(df: DataFrame, id_col: str, fn: str) -> None:
+    """IVF names cells by vector id and breaks ties on it (``np.int64`` in
+    :func:`_local_matrices`, ``-id`` in :func:`_argmax_join`): checked from
+    the schema at build time, with no job."""
+    dtype = df.schema[id_col].dataType
+    if not isinstance(dtype, IntegralType):
+        raise TypeError(f"{fn}: id column {id_col!r} must be an integral type, got {dtype.simpleString()}")
 
 
 def _local_matrices(
@@ -918,6 +928,7 @@ def ivf_topk_neighbors(
     brute-force baseline; the scored fraction is pinned by
     test_ivf_scored_fraction.
     """
+    require_integral_ids(base, id_col, "ivf_topk_neighbors")
     if n_centroids is None:
         n_rows = base.count()
         n_centroids, n_probe = ivf_params(n_rows, n_probe)
@@ -970,6 +981,7 @@ def ivf_upsert_topk_neighbors(
     signal, pinned in tests.
 
     ``n_indexed`` skips the sizing count when the caller knows it."""
+    require_integral_ids(indexed, id_col, "ivf_upsert_topk_neighbors")
     n = n_indexed if n_indexed is not None else indexed.count()
     n_centroids, n_probe = ivf_params(n, n_probe)
     base = indexed.select(id_col, vec_col).unionByName(

@@ -2,9 +2,10 @@
 
 Parity target: reference ``StructuredSchemalessToJsonString``
 (StructuredSchemalessToJsonString.java:45-62; SURVEY.md §2.3). The reference
-has no config; this factory's parameters only choose how the reference's
-runtime ``schema == null && value instanceof Map`` dispatch maps onto static
-column types.
+has no config beyond its Key/Value variants (``target`` here); its runtime
+``schema == null && value instanceof Map`` dispatch maps onto static column
+types (SURVEY.md §1.4): a MapType column is a schemaless Map; a JSON string
+column is already serialized.
 
 Branches:
   J1  schemaless Map -> JSON string (Jackson writeValueAsString, :49-54).
@@ -14,9 +15,9 @@ Branches:
   J2  JsonProcessingException wrap — ``to_json`` cannot fail on supported
       types; non-issue.
   J3  passthrough: schema'd values and schemaless non-Map primitives are
-      returned untouched (:61). Here: StructType (schema'd) and all other
-      dtypes pass through. ``force_structs=True`` opts structs in for users
-      who want the serialization anyway.
+      returned untouched (:61). Here: StructType (schema'd), JSON text and
+      all other dtypes pass through as the same DataFrame; a caller who
+      wants a struct rendered applies ``F.to_json`` itself.
   J4  Key/Value variants — the ``target`` parameter.
 
 Scale: a single codegen-capable JVM expression; no shuffle, no Python.
@@ -27,19 +28,15 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import MapType, StructType
+from pyspark.sql.types import MapType
 
 
-def to_json_string(
-    target: str = "value",
-    force_structs: bool = False,
-) -> Callable[[DataFrame], DataFrame]:
+def to_json_string(target: str = "value") -> Callable[[DataFrame], DataFrame]:
     """Build a transform serializing a MapType ``target`` column to JSON text;
-    everything else passes through (J3), unless ``force_structs``."""
+    everything else passes through (J3)."""
 
     def _transform(df: DataFrame) -> DataFrame:
-        dtype = df.schema[target].dataType
-        if isinstance(dtype, MapType) or (force_structs and isinstance(dtype, StructType)):
+        if isinstance(df.schema[target].dataType, MapType):
             return df.withColumn(target, F.to_json(F.col(target)))
         return df  # J3 — same DataFrame object, the reference's same-record passthrough
 

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from kafka_custom_transforms_spark import drop_fields, hoist_field
-from kafka_custom_transforms_spark.operators.drop_field import not_json_object
+from kafka_custom_transforms_spark.operators.schemaless import malformed_json, not_json_object
 
 
 def _nested_df(spark):
@@ -64,20 +64,40 @@ _JSON_PATHS = {
 }
 
 
-@pytest.mark.parametrize("value", ["[1]", '"x"', "7", "null"])
+# Value -> the error it raises. The last one parses but does not fit the
+# json_schema "a int, b int"; the UDF paths have no schema for it to misfit.
+_MISFIT = '{"a":"x","b":2}'
+_BAD_JSON = {
+    "[1]": not_json_object,
+    '"x"': not_json_object,
+    "7": not_json_object,
+    "null": not_json_object,
+    '{"a":1,': malformed_json,
+    _MISFIT: malformed_json,
+}
+
+
+@pytest.mark.parametrize("value", list(_BAD_JSON))
 @pytest.mark.parametrize("path", sorted(_JSON_PATHS))
 def test_non_object_json_raises_on_every_json_path(spark, path, value):
     """The reference requires a Map for a schemaless value (DropField.java:56
     requireMap, ExtendedHoistField.java:52-60 getValueAsMap): every JSON
     path of both SMTs raises the same error naming the transform for a
-    non-null value that is not a JSON object, where the json_schema paths
-    used to return ``{}`` and the drop UDF passed the value through. SQL
+    non-null value that is not a JSON object, and another named error for
+    text that does not parse or, on the json_schema paths, does not fit the
+    schema (a misfit field used to read null and vanish; malformed text
+    gave ``{}`` there and a bare JSONDecodeError in the UDF worker). SQL
     NULL still passes through (D1), and an object with leading whitespace
     is still an object."""
     name, make = _JSON_PATHS[path]
     transform = make()
-    with pytest.raises(Exception, match=re.escape(not_json_object(name))):
-        transform(spark.createDataFrame([(value,)], "value string")).collect()
+    bad = spark.createDataFrame([(value,)], "value string")
+    if value == _MISFIT and path.endswith("/udf"):
+        got = json.loads(transform(bad).collect()[0].value)
+        assert got in ({"b": 2}, {"a": "x", "f": {"b": 2}})
+    else:
+        with pytest.raises(Exception, match=re.escape(_BAD_JSON[value](name))):
+            transform(bad).collect()
     ok = spark.createDataFrame([(None,), (' \n{"a":1,"b":2}',)], "value string")
     got = [r.value for r in transform(ok).collect()]
     assert got[0] is None
@@ -186,8 +206,9 @@ def test_schema_basics_metadata_survive_rebuild(spark):
 
 
 def test_json_udf_path_matches_schema_path_property(spark):
-    """Hypothesis sweep (r10, verdict item 7): the Arrow pandas-UDF prune
-    (_prune_json_obj) and the from_json fast path must agree on every
+    """Hypothesis sweep (r10, verdict item 7): the Arrow step
+    (schemaless.arrow_step running _prune_json_obj) and the JVM step
+    (schemaless.jvm_step running _rebuild_struct) must agree on every
     schema-conforming nested JSON shape and every dropset over the path
     universe. The one DOCUMENTED difference is null handling — to_json
     omits null fields while the UDF copies them losslessly — so outputs

@@ -59,6 +59,50 @@ def test_smt_chain_adds_no_shuffle(spark, sf_dir):
     assert shuffle_count(out) == 0
 
 
+def _expr_count(plan, cls: str) -> int:
+    """Expressions of class ``cls`` over every node of a physical plan,
+    through adaptive plans and their query stages."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(e) -> int:
+        return (e.getClass().getSimpleName() == cls) + sum(walk(c) for c in seq(e.children()))
+
+    nodes = seq(plan.children())
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        nodes.append(plan.executedPlan())
+    elif name.endswith("QueryStageExec"):
+        nodes.append(plan.plan())
+    return sum(walk(e) for e in seq(plan.expressions())) + sum(_expr_count(n, cls) for n in nodes)
+
+
+def test_smt_json_schema_step_parses_once(spark):
+    """One JSON parse per json_schema step: the parse sits in its own
+    projection, so the fields the rebuild reads do not each get a pruned
+    from_json of their own (6 for this drop and 4 for this hoist when the
+    parse was inline, 10 for the chain). Shape of the smt_drain value."""
+    value = (
+        "hdr struct<id:bigint,ts:bigint>, meta struct<trace:string,src:string>, "
+        "body struct<user:bigint,amount:double,debug:string>"
+    )
+    dropped = "hdr struct<id:bigint,ts:bigint>, meta struct<src:string>, body struct<user:bigint,amount:double>"
+    drop = drop_fields(["meta.trace", "body.debug"], json_schema=value)
+    hoist = hoist_field("payload", keep_in_root=["hdr"], json_schema=dropped)
+    df = spark.createDataFrame(
+        [('{"hdr":{"id":1,"ts":2},"meta":{"trace":"t","src":"s"},'
+          '"body":{"user":3,"amount":1.5,"debug":"d"}}',)],
+        "value string",
+    )
+    for out, parses in ((drop(df), 1), (hoist(df), 1), (hoist(drop(df)), 2)):
+        out.collect()
+        assert _expr_count(out._jdf.queryExecution().executedPlan(), "JsonToStructs") == parses
+    assert out.collect()[0].value == (
+        '{"hdr":{"id":1,"ts":2},"payload":{"meta":{"src":"s"},"body":{"user":3,"amount":1.5}}}'
+    )
+
+
 def test_smt_struct_ops_stay_in_codegen(spark, sf_dir):
     """The drop/hoist struct expressions must appear inside a
     WholeStageCodegen span (no interpreted projection in the hot path)."""

