@@ -19,6 +19,10 @@ and order-insensitive value hashes):
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+import time
 from collections.abc import Callable
 
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under future-annotations
@@ -251,6 +255,58 @@ def _smt_mixed_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chain(df).select("event_id", "repr_branch", "value")
 
 
+# ---------------------------------------------------------------- streaming
+# Every stream row stages its input with _staged_stream and, unless it says
+# at the call why it keeps its own writer, runs its query with _drain.
+
+
+def _staged_stream(*frames: DataFrame, max_files_per_trigger: int | None = None) -> DataFrame:
+    """Stage ``frames`` as ordered file batches under one temp dir and return
+    a file-stream reader over them (a Kafka topic stand-in): frame i's files
+    come after frame i-1's. FileStreamSource orders files by modification
+    time, so each frame's files get an explicit, strictly increasing mtime —
+    filesystem timestamp granularity must not reorder batches (a sentinel
+    read first would start the watermark past every event and drop them all
+    as late). The temp dir is left in place: the reader reads it lazily."""
+    d = tempfile.mkdtemp(prefix="kcts-staged-")
+    t0 = time.time()
+    for i, frame in enumerate(frames):
+        frame.write.parquet(f"{d}/{i:04d}")
+        mtime = t0 + 60 * (i + 1)
+        for f in glob.glob(f"{d}/{i:04d}/*.parquet"):
+            os.utime(f, (mtime, mtime))
+    reader = frames[0].sparkSession.readStream.schema(frames[0].schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(d + "/*")
+
+
+def _drain(
+    stream: DataFrame, per_batch: Callable[[DataFrame], DataFrame] | None = None
+) -> DataFrame:
+    """Run ``stream`` to completion (availableNow) into a checkpointed
+    parquet sink and return the sink read back — the one place a stream row
+    waits on its query. With ``per_batch`` (a batch-only operator) the
+    stream runs through foreachBatch and each micro-batch's ``per_batch``
+    result is appended to the sink."""
+    from kafka_custom_transforms_spark.streaming.sinks import (
+        write_foreach_batch,
+        write_parquet_stream,
+    )
+
+    d = tempfile.mkdtemp(prefix="kcts-sink-")
+    sink, ckpt = d + "/sink", d + "/ckpt"
+    if per_batch is None:
+        q = write_parquet_stream(stream, sink, ckpt)
+    else:
+        def _append(bdf: DataFrame, _batch_id: int) -> None:
+            per_batch(bdf).write.mode("append").parquet(sink)
+
+        q = write_foreach_batch(stream, _append, ckpt)
+    q.awaitTermination()
+    return stream.sparkSession.read.parquet(sink)
+
+
 def _stream_chain_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SMT chain executed as a REAL Structured Streaming job: file-backed
     envelope stream -> drop/hoist chain -> checkpointed parquet sink
@@ -258,24 +314,12 @@ def _stream_chain_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch chain — stream/batch parity is the Structured Streaming contract
     the whole SMT layer is built on (every operator is a stateless column
     transform, legal in append-mode streams)."""
-    import tempfile
-
-    from kafka_custom_transforms_spark.streaming.envelope import stream_events_envelope
-    from kafka_custom_transforms_spark.streaming.sinks import write_parquet_stream
-
-    d = tempfile.mkdtemp(prefix="kcts-stream-")
-    # FileStreamSource wants a directory of files (a Kafka topic stand-in);
-    # the driver testdata is one parquet file — stage it.
-    load_table(spark, sf_dir, "events").write.parquet(d + "/staged")
-    env = stream_events_envelope(spark, d + "/staged")
+    env = events_envelope(_staged_stream(load_table(spark, sf_dir, "events")))
     chain = transform_chain(
         drop_fields(["k"], json_schema="k int"),
         hoist_field("payload"),
     )
-    out = chain(env).select("offset", "key", "value")
-    q = write_parquet_stream(out, d + "/sink", d + "/ckpt")
-    q.awaitTermination()
-    return spark.read.parquet(d + "/sink")
+    return _drain(chain(env).select("offset", "key", "value"))
 
 
 def _stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -286,31 +330,15 @@ def _stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch boundaries cannot change the result — the standard
     deployment shape for batch-only operators inside a stream
     (filter-on-ingest). Same oracle as the batch row."""
-    import tempfile
-
     from kafka_custom_transforms_spark.operators.decontaminate import (
         contamination_flags,
     )
 
-    d = tempfile.mkdtemp(prefix="kcts-decon-")
     docs = load_table(spark, sf_dir, "documents")
-    docs.write.parquet(d + "/staged")
-    stream_docs = spark.readStream.schema(docs.schema).parquet(d + "/staged")
     bench = docs.filter(F.col("doc_id") % 31 == 0)
-
-    def _apply(bdf: DataFrame, _batch_id: int) -> None:
-        contamination_flags(bdf, bench, ngram=8).write.mode("append").parquet(
-            d + "/sink"
-        )
-
-    q = (
-        stream_docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", d + "/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        _staged_stream(docs), lambda bdf: contamination_flags(bdf, bench, ngram=8)
     )
-    q.awaitTermination()
-    return spark.read.parquet(d + "/sink")
 
 
 def _dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,19 +479,23 @@ def _similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
 
 
+def _session_epochs(sessions: DataFrame) -> DataFrame:
+    """Read-back projection shared by the three sessionize rows."""
+    return sessions.select(
+        "user_id",
+        "n_events",
+        F.unix_micros(F.col("first_ts")).alias("first_epoch_us"),
+        F.unix_micros(F.col("last_ts")).alias("last_epoch_us"),
+    )
+
+
 def _events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity); batch path of the
     stateful streaming sessionizer. Timestamps exported as epoch seconds."""
     from kafka_custom_transforms_spark.streaming.dedup import sessionize
 
     ev = load_table(spark, sf_dir, "events")
-    out = sessionize(ev, key_col="user_id", ts_col="ts", gap="30 minutes")
-    return out.select(
-        "user_id",
-        "n_events",
-        F.unix_micros(F.col("first_ts")).alias("first_epoch_us"),
-        F.unix_micros(F.col("last_ts")).alias("last_epoch_us"),
-    )
+    return _session_epochs(sessionize(ev, key_col="user_id", ts_col="ts", gap="30 minutes"))
 
 
 def _events_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,51 +503,20 @@ def _events_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeout) run as a real Structured Streaming job and compared to the same
     oracle as the batch path. Events are staged as file batch 1; a sentinel
     row far past every session end is file batch 2 (maxFilesPerTrigger=1),
-    so the watermark advances past last_ts + gap and every open session
+    so the watermark advances past last_ts + gap and every held session
     closes via its event-time timeout before the stream drains. The sentinel
     key is filtered from the result; the surviving rows must equal the batch
     gap-split row-for-row."""
-    import tempfile
-
     from kafka_custom_transforms_spark.streaming.dedup import sessionize
-    from kafka_custom_transforms_spark.streaming.sinks import write_parquet_stream
 
-    d = tempfile.mkdtemp(prefix="kcts-sess-stream-")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    ev.coalesce(1).write.parquet(d + "/staged")
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
     sentinel = spark.createDataFrame(
         [(-1, max_ts, -1)], "event_id long, ts timestamp, user_id long"
     ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 2 HOURS"))
-    import glob as _glob
-    import os as _os
-    import time as _time
-
-    before = set(_glob.glob(d + "/staged/*.parquet"))
-    sentinel.coalesce(1).write.mode("append").parquet(d + "/staged")
-    # FileStreamSource orders files by modification time; the sentinel MUST
-    # be batch 2 (a sentinel-first order would start the watermark past every
-    # event and drop them all as late) — force its mtime after the staged
-    # events regardless of filesystem timestamp granularity.
-    bump = _time.time() + 60
-    for f in set(_glob.glob(d + "/staged/*.parquet")) - before:
-        _os.utime(f, (bump, bump))
-
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d + "/staged")
-    )
+    stream = _staged_stream(ev.coalesce(1), sentinel.coalesce(1), max_files_per_trigger=1)
     sessions = sessionize(stream, key_col="user_id", ts_col="ts", gap="30 minutes")
-    q = write_parquet_stream(sessions, d + "/sink", d + "/ckpt")
-    q.awaitTermination()
-    out = spark.read.parquet(d + "/sink").filter(F.col("user_id") >= 0)
-    return out.select(
-        "user_id",
-        "n_events",
-        F.unix_micros(F.col("first_ts")).alias("first_epoch_us"),
-        F.unix_micros(F.col("last_ts")).alias("last_epoch_us"),
-    )
+    return _session_epochs(_drain(sessions).filter(F.col("user_id") >= 0))
 
 
 def _stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,120 +525,50 @@ def _stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged DOUBLED (every row exactly twice), streamed with a watermark, and
     deduplicated on event_id — the sink must contain each event exactly
     once, equal to the plain events table."""
-    import tempfile
-
     from kafka_custom_transforms_spark.streaming.dedup import streaming_dedup
-    from kafka_custom_transforms_spark.streaming.sinks import write_parquet_stream
 
-    d = tempfile.mkdtemp(prefix="kcts-dedup-stream-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    ev.unionAll(ev).coalesce(2).write.parquet(d + "/staged")
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string"
-    ).parquet(d + "/staged")
+    stream = _staged_stream(ev.unionAll(ev).coalesce(2))
     out = streaming_dedup(stream, keys=["event_id"], ts_col="ts", watermark_delay="1 minute")
-    q = write_parquet_stream(out, d + "/sink", d + "/ckpt")
-    q.awaitTermination()
-    return (
-        spark.read.parquet(d + "/sink")
-        .select("event_id", F.unix_micros(F.col("ts")).alias("ts_us"), "user_id", "event_type")
+    return _drain(out).select(
+        "event_id", F.unix_micros(F.col("ts")).alias("ts_us"), "user_id", "event_type"
     )
 
 
-def _stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with watermarks on both sides — Spark's
-    native streaming join surface (state bounded by watermark + range).
+def _interval_join_stream(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Stream-stream interval join of purchases to the clicks at most 60 s
+    before them, with watermarks on both sides (state bounded by watermark
+    + range), drained and read back as (p_id, c_id, p_ts_us, c_ts_us).
     Stream-stream joins REQUIRE an equality predicate, so this runs the
-    interval_join time-bucketization on streams: clicks key into their 60 s
-    bucket, purchases explode to the <=2 buckets their window covers, the
-    join is bucket-equality + exact range — each click lives in exactly one
-    bucket, so no pair duplicates. Same oracle as events_interval_pairs."""
-    import tempfile
-
-    from kafka_custom_transforms_spark.streaming.sinks import write_parquet_stream
-
-    d = tempfile.mkdtemp(prefix="kcts-ssjoin-")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    ev.coalesce(1).write.parquet(d + "/staged")
-    schema = "event_id long, ts timestamp, event_type string"
-    grain = 60_000_000  # us; == window width, so a window spans <= 2 buckets
-    p_us = F.unix_micros(F.col("p_ts"))
-    p = (
-        spark.readStream.schema(schema).parquet(d + "/staged")
-        .filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-        .withColumn(
-            "bucket",
-            F.explode(
-                F.sequence(
-                    F.floor((p_us - F.lit(grain)) / F.lit(grain)),
-                    F.floor(p_us / F.lit(grain)),
-                )
-            ),
-        )
-    )
-    c = (
-        spark.readStream.schema(schema).parquet(d + "/staged")
-        .filter(F.col("event_type") == "click")
-        .select(F.col("event_id").alias("c_id"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-        .withColumn("bucket", F.floor(F.unix_micros(F.col("c_ts")) / F.lit(grain)))
-    )
-    j = p.join(
-        c,
-        (p["bucket"] == c["bucket"])
-        & F.expr("c_ts between p_ts - interval 60 seconds and p_ts"),
-        "inner",
-    )
-    q = write_parquet_stream(j.drop("bucket"), d + "/sink", d + "/ckpt")
-    q.awaitTermination()
-    return spark.read.parquet(d + "/sink").select(
-        "p_id",
-        "c_id",
-        F.unix_micros(F.col("p_ts")).alias("p_ts_us"),
-        F.unix_micros(F.col("c_ts")).alias("c_ts_us"),
-    )
-
-
-def _stream_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every purchase emits — with
-    its in-window clicks, or once with NULLs when no click precedes it
-    within 60 s. Outer rows can only be emitted after the watermark proves
-    no matching click can still arrive, so the staged data carries one
-    far-future sentinel per side (filtered from the output) to push the
-    final watermark past all real rows. Bucketization keeps the left side
-    single-bucket (clicks explode to their <=2 covering buckets instead),
-    so an unmatched purchase emits exactly ONE null row — exploding the
-    left side would fabricate a spurious null row per extra bucket copy.
-    State is bounded by watermark + range on both sides."""
-    import tempfile
-
-    from kafka_custom_transforms_spark.streaming.sinks import write_parquet_stream
-
-    d = tempfile.mkdtemp(prefix="kcts-ssouter-")
+    interval_join time-bucketization on streams: each purchase keys into
+    its one 60 s bucket and each click explodes to the <=2 consecutive
+    buckets its window covers, the join is bucket-equality + exact range.
+    A click's two copies hold different buckets and a purchase sits in
+    exactly one of them, so no pair repeats, and an unmatched purchase
+    emits exactly ONE null row (exploding the purchase side instead would
+    fabricate a null row per extra bucket copy). Outer rows can only be
+    emitted after the watermark proves no match can still arrive, so the
+    staged data carries one far-future sentinel per side (filtered from
+    the read-back) to push the final watermark past all real rows."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     sentinel = ev.agg(F.max("ts").alias("m")).select(
         F.lit(-1).cast("long").alias("event_id"),
         (F.col("m") + F.expr("INTERVAL 6 HOURS")).alias("ts"),
         F.explode(F.array(F.lit("click"), F.lit("purchase"))).alias("event_type"),
     )
-    ev.unionByName(sentinel).coalesce(1).write.parquet(d + "/staged")
-    schema = "event_id long, ts timestamp, event_type string"
+    stream = _staged_stream(ev.unionByName(sentinel).coalesce(1))
     grain = 60_000_000  # us; == window width, so a click covers <= 2 buckets
     p = (
-        spark.readStream.schema(schema).parquet(d + "/staged")
-        .filter(F.col("event_type") == "purchase")
+        stream.filter(F.col("event_type") == "purchase")
         .select(F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts"))
         .withWatermark("p_ts", "1 hour")
         .withColumn("bucket", F.floor(F.unix_micros(F.col("p_ts")) / F.lit(grain)))
     )
     c_us = F.unix_micros(F.col("c_ts"))
     c = (
-        spark.readStream.schema(schema).parquet(d + "/staged")
-        .filter(F.col("event_type") == "click")
+        stream.filter(F.col("event_type") == "click")
         .select(F.col("event_id").alias("c_id"), F.col("ts").alias("c_ts"))
         .withWatermark("c_ts", "1 hour")
         .withColumn(
@@ -651,21 +582,21 @@ def _stream_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # NOTE: no sentinel-exclusion predicate in the join condition — a
-    # right-side filter in a leftOuter condition is legally pushed BELOW the
-    # click-side EventTimeWatermark node (unmatched right rows drop anyway),
+    # side filter in an outer join's condition is legally pushed BELOW
+    # that side's EventTimeWatermark node (unmatched rows drop anyway),
     # which would hide the sentinel from the watermark and stall outer
-    # emission for the newest purchases (observed: exactly that). The
-    # sentinel click can only ever match the sentinel purchase (6 h gap vs
-    # the 60 s window), and that pair is removed by the p_id filter below.
+    # emission for the newest rows (observed: exactly that). A sentinel
+    # can only ever match the other sentinel (6 h gap vs the 60 s
+    # window), and every sentinel row is removed in the read-back.
     j = p.join(
         c,
         (p["bucket"] == c["bucket"])
         & F.expr("c_ts between p_ts - interval 60 seconds and p_ts"),
-        "leftOuter",
+        how,
     )
-    q = write_parquet_stream(j.drop("bucket"), d + "/sink", d + "/ckpt")
-    q.awaitTermination()
-    return spark.read.parquet(d + "/sink").filter(F.col("p_id") >= 0).select(
+    return _drain(j.drop("bucket")).filter(
+        (F.coalesce("p_id", F.lit(0)) >= 0) & (F.coalesce("c_id", F.lit(0)) >= 0)
+    ).select(
         "p_id",
         "c_id",
         F.unix_micros(F.col("p_ts")).alias("p_ts_us"),
@@ -673,19 +604,33 @@ def _stream_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream INNER interval join: each purchase paired with every
+    click at most 60 s before it, watermarks on both sides (see
+    _interval_join_stream). Same oracle as events_interval_pairs."""
+    return _interval_join_stream(spark, sf_dir, "inner")
+
+
+def _stream_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream LEFT OUTER interval join: every purchase emits — with
+    its in-window clicks, or once with NULLs when no click precedes it
+    within 60 s (see _interval_join_stream)."""
+    return _interval_join_stream(spark, sf_dir, "leftOuter")
+
+
 def _stream_full_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream FULL OUTER interval join (r10) — the one outer mode
     the streaming rows didn't cover: every purchase emits with its
     in-window clicks or once with NULLs, AND every click that attributes
     to no purchase emits once with NULLs. Same watermark/sentinel/bucket
-    machinery as _stream_outer_interval, with the full-outer twist: the
-    click side is exploded to its <=2 covering buckets, so an unmatched
-    click leaves one null row PER COPY, and a click whose only match sits
-    in its other bucket copy leaves a spurious null row — artifacts of
-    the bucketization, not of the join. They are reconciled in the batch
-    read-back of the sink (this row already reads the sink back): null
-    click rows collapse via distinct and drop via an anti-join against
-    the matched click ids. PRECONDITION: the distinct collapse is only
+    machinery as the other two (_interval_join_stream), with the
+    full-outer twist: the click side is exploded to its <=2 covering
+    buckets, so an unmatched click leaves one null row PER COPY, and a
+    click whose only match sits in its other bucket copy leaves a
+    spurious null row — artifacts of the bucketization, not of the join.
+    They are reconciled in the batch read-back of the sink: null click
+    rows collapse via distinct and drop via an anti-join against the
+    matched click ids. PRECONDITION: the distinct collapse is only
     correct because c_id is UNIQUE per click (event_id) — two bucket
     copies of one click are bit-identical rows. Do not copy this
     reconciliation onto a non-unique key: distinct would then merge
@@ -694,79 +639,16 @@ def _stream_full_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     State on both sides stays bounded by watermark + range at any scale;
     the reconciliation inputs are the join's own outputs (never the raw
     streams)."""
-    import tempfile
-
-    from kafka_custom_transforms_spark.streaming.sinks import write_parquet_stream
-
-    d = tempfile.mkdtemp(prefix="kcts-ssfull-")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    sentinel = ev.agg(F.max("ts").alias("m")).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.col("m") + F.expr("INTERVAL 6 HOURS")).alias("ts"),
-        F.explode(F.array(F.lit("click"), F.lit("purchase"))).alias("event_type"),
-    )
-    ev.unionByName(sentinel).coalesce(1).write.parquet(d + "/staged")
-    schema = "event_id long, ts timestamp, event_type string"
-    grain = 60_000_000  # us; == window width, so a click covers <= 2 buckets
-    p = (
-        spark.readStream.schema(schema).parquet(d + "/staged")
-        .filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-        .withColumn("bucket", F.floor(F.unix_micros(F.col("p_ts")) / F.lit(grain)))
-    )
-    c_us = F.unix_micros(F.col("c_ts"))
-    c = (
-        spark.readStream.schema(schema).parquet(d + "/staged")
-        .filter(F.col("event_type") == "click")
-        .select(F.col("event_id").alias("c_id"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-        .withColumn(
-            "bucket",
-            F.explode(
-                F.sequence(
-                    F.floor(c_us / F.lit(grain)),
-                    F.floor((c_us + F.lit(grain)) / F.lit(grain)),
-                )
-            ),
-        )
-    )
-    # Same pushdown trap as the leftOuter row: NO side filters in the
-    # join condition, or they sink below an EventTimeWatermark node and
-    # stall outer emission. Sentinels are removed in the read-back.
-    j = p.join(
-        c,
-        (p["bucket"] == c["bucket"])
-        & F.expr("c_ts between p_ts - interval 60 seconds and p_ts"),
-        "fullOuter",
-    )
-    q = write_parquet_stream(j.drop("bucket"), d + "/sink", d + "/ckpt")
-    q.awaitTermination()
-    raw = spark.read.parquet(d + "/sink").filter(
-        ((F.col("p_id").isNull()) | (F.col("p_id") >= 0))
-        & ((F.col("c_id").isNull()) | (F.col("c_id") >= 0))
-    )
-    cols = ["p_id", "p_ts", "c_id", "c_ts"]
+    raw = _interval_join_stream(spark, sf_dir, "fullOuter")
     matched = raw.filter(F.col("p_id").isNotNull() & F.col("c_id").isNotNull())
-    unmatched_p = raw.filter(F.col("c_id").isNull()).select(*cols)
+    unmatched_p = raw.filter(F.col("c_id").isNull())
     unmatched_c = (
         raw.filter(F.col("p_id").isNull())
-        .select(*cols)
         .distinct()
         .join(matched.select("c_id").distinct(), "c_id", "left_anti")
-        .select(*cols)
+        .select(*raw.columns)
     )
-    return (
-        matched.select(*cols)
-        .unionByName(unmatched_p)
-        .unionByName(unmatched_c)
-        .select(
-            "p_id",
-            "c_id",
-            F.unix_micros(F.col("p_ts")).alias("p_ts_us"),
-            F.unix_micros(F.col("c_ts")).alias("c_ts_us"),
-        )
-    )
+    return matched.unionByName(unmatched_p).unionByName(unmatched_c)
 
 
 def _events_asof_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1573,8 +1455,6 @@ def _schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     of historical data). At 100 TB this is THE way schemas grow: parquet
     footer merge at planning, never a backfill. Aggregates per source so
     the oracle pins exactly which rows carry the new column."""
-    import tempfile
-
     d = tempfile.mkdtemp(prefix="kcts-evolve-")
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "source")
@@ -1691,8 +1571,6 @@ def _stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     each run resumes from the committed offset (the Kafka-consumer recovery
     contract: no duplicates, no loss, pinned by the exact-offsets oracle).
     The SMT chain rides inside the stream, as in stream_chain_envelope."""
-    import tempfile
-
     from kafka_custom_transforms_spark.sources.python_source import (
         register_envelope_source,
     )
@@ -1711,6 +1589,8 @@ def _stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = chain(env).select("offset", "key", "value")
     prev = -1
+    # Own writer, not _drain: the restarts must share one sink and one
+    # checkpoint (the source does not support availableNow natively).
     for _ in range(10):
         q = (
             out.writeStream.format("parquet")
@@ -1804,28 +1684,10 @@ def _stream_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     version; the newest version (the live leaderboard) must equal the
     batch groupBy().count() top-k exactly. Second applyInPandasWithState
     shape — running aggregates, no timeouts."""
-    import tempfile
-
     from kafka_custom_transforms_spark.streaming.leaderboard import running_topk
 
-    d = tempfile.mkdtemp(prefix="kcts-lb-")
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    ev.repartition(4).write.parquet(d + "/staged")
-    stream = (
-        spark.readStream.schema("event_type string, user_id long")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(d + "/staged")
-    )
-    q = (
-        running_topk(stream)
-        .writeStream.format("parquet")
-        .option("path", d + "/sink")
-        .option("checkpointLocation", d + "/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = spark.read.parquet(d + "/sink")
+    sink = _drain(running_topk(_staged_stream(ev.repartition(4), max_files_per_trigger=2)))
     mv = Window.partitionBy("event_type")
     return (
         sink.withColumn("_mv", F.max("version").over(mv))
@@ -1860,11 +1722,7 @@ def _stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id) — the broadcast lookup every ingest pipeline does. The static
     side needs no watermark; the join is stateless, so the whole pipeline
     stays append-legal."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="kcts-enrich-")
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    ev.write.parquet(d + "/staged")
     dim = (
         ev.select("user_id")
         .distinct()
@@ -1876,21 +1734,8 @@ def _stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tier"),
         )
     )
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, value double")
-        .parquet(d + "/staged")
-    )
-    enriched = stream.join(F.broadcast(dim), "user_id")
-    q = (
-        enriched.select("event_id", "user_id", "tier")
-        .writeStream.format("parquet")
-        .option("path", d + "/sink")
-        .option("checkpointLocation", d + "/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = spark.read.parquet(d + "/sink")
+    enriched = _staged_stream(ev).join(F.broadcast(dim), "user_id")
+    sink = _drain(enriched.select("event_id", "user_id", "tier"))
     return sink.groupBy("tier").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
@@ -1951,8 +1796,6 @@ def _stream_upsert_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (latest event per user, atomic pointer flip). The read-back
     table must equal the batch latest-per-key reduction — the CDC
     materialization contract."""
-    import tempfile
-
     from kafka_custom_transforms_spark.streaming.sinks import (
         read_upsert_table,
         upsert_parquet_sink,
@@ -1962,12 +1805,9 @@ def _stream_upsert_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    ev.repartition(4).write.parquet(d + "/staged")
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, event_type string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(d + "/staged")
-    )
+    stream = _staged_stream(ev.repartition(4), max_files_per_trigger=2)
+    # Own writer, not _drain: the upsert sink is this row's subject; it
+    # starts its own query and is read back through its pointer file.
     q = upsert_parquet_sink(
         stream, d + "/table", d + "/ckpt", keys=["user_id"], order_col="event_id"
     )
@@ -2364,8 +2204,6 @@ def _json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source: events exported to JSON and read back with an
     explicit schema must reproduce the table exactly (timestamps ride as
     epoch micros — JSON has no timestamp type)."""
-    import tempfile
-
     d = tempfile.mkdtemp(prefix="kcts-json-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
@@ -2379,8 +2217,6 @@ def _json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source (the other columnar format Spark ships natively): same
     roundtrip contract as JSON."""
-    import tempfile
-
     d = tempfile.mkdtemp(prefix="kcts-orc-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
@@ -2392,8 +2228,6 @@ def _orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source: same roundtrip contract as JSON (header on, explicit
     read schema — CSV is untyped text on disk)."""
-    import tempfile
-
     d = tempfile.mkdtemp(prefix="kcts-csv-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
@@ -2413,8 +2247,6 @@ def _xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the interchange format the Connect ecosystem still meets in
     legacy enterprise feeds; keep columns integral/string — XML is
     untyped text on disk, exactly like CSV."""
-    import tempfile
-
     d = tempfile.mkdtemp(prefix="kcts-xml-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
@@ -2574,29 +2406,6 @@ def _multimodal_jpeg_420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_jpeg_420(synth_jpeg_420(docs))
 
 
-def _run_available_now(spark, staged_df, transform, prefix):
-    """Stage a bounded input to parquet, stream it back with an
-    availableNow trigger, apply ``transform`` to the streaming frame, and
-    return the materialized checkpointed sink. Shared scaffolding for
-    every stream/batch-parity row (decode, tokenize). The temp dirs live
-    until process exit: the returned DataFrame reads the sink lazily."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    staged_df.write.parquet(d + "/staged")
-    stream = spark.readStream.schema(staged_df.schema).parquet(d + "/staged")
-    q = (
-        transform(stream)
-        .writeStream.format("parquet")
-        .option("path", d + "/sink")
-        .option("checkpointLocation", d + "/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(d + "/sink")
-
-
 def _bpe_doc_stats(
     df: DataFrame,
     merges: tuple | None = None,
@@ -2640,9 +2449,7 @@ def _stream_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _run_available_now(
-        spark, docs, lambda st: decode_png(synth_png(st)), "kcts-mm-stream-"
-    )
+    return _drain(decode_png(synth_png(_staged_stream(docs))))
 
 
 def _multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3974,17 +3781,13 @@ def _statestore_read_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch SQL — state content IS the aggregate, which is the invariant
     this query pins. The foreachBatch sink is a named function: a lambda
     would fail closure pickling."""
-    import tempfile
-
     d = tempfile.mkdtemp(prefix="kcts-ssread-")
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    ev.coalesce(1).write.parquet(d + "/staged")
-    src = spark.readStream.schema("event_id long, event_type string").parquet(
-        d + "/staged"
-    )
-    agg = src.groupBy("event_type").agg(
+    agg = _staged_stream(ev.coalesce(1)).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("event_id").alias("sum_ids")
     )
+    # Own writer, not _drain: an update-mode aggregate (the parquet sink is
+    # append-only), read back from the checkpoint's state, not a sink.
     q = (
         agg.writeStream.outputMode("update")
         .foreachBatch(_consume_batch)
@@ -4151,8 +3954,6 @@ def _partitioned_source_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     a plan test), so the other partitions' files are never opened: the
     disk-layout pattern that makes selective scans cheap on 100 TB
     tables."""
-    import tempfile
-
     d = tempfile.mkdtemp(prefix="kcts-part-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
@@ -4447,8 +4248,6 @@ def _bucketed_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the join (the write paid the shuffle once — the 100 TB pattern for
     every repeated fact-table join key). Plan shape pinned in
     tests/test_plans.py; oracle is the plain join."""
-    import tempfile
-
     from kafka_custom_transforms_spark.sources.bucketing import bucketed_equijoin
 
     d = tempfile.mkdtemp(prefix="kcts-bucketed-")
@@ -4869,7 +4668,7 @@ def _stream_tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     row's recursive-CTE oracle — stream/batch parity for the tokenizer,
     i.e. the INGEST shape of a training-data pipeline."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _run_available_now(spark, docs, _bpe_doc_stats, "kcts-bpe-stream-")
+    return _drain(_bpe_doc_stats(_staged_stream(docs)))
 
 
 def _variant_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5222,61 +5021,32 @@ def _event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sessionize_late_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """streaming.dedup.sessionize_late under LATE data: batch 1 carries
+    """streaming.dedup.sessionize under LATE data: batch 1 carries
     event_id % 5 != 0, batch 2 the % 5 == 0 remainder (late — older than
     batch 1's max ts), batch 3 the far-future sentinel whose watermark
     advance fires every event-time timeout. The watermark delay exceeds
     the corpus span, so every late row is admitted and merges into HELD
     session state (bridging splits, extending bounds); the emitted
     sessions equal the batch gap-split over ALL events."""
-    import glob as _glob
-    import os as _os
-    import tempfile
-    import time as _time
+    from kafka_custom_transforms_spark.streaming.dedup import sessionize
 
-    from kafka_custom_transforms_spark.streaming.dedup import sessionize_late
-    from kafka_custom_transforms_spark.streaming.sinks import write_parquet_stream
-
-    d = tempfile.mkdtemp(prefix="kcts-sess-late-")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
     span_s = int((hi - lo).total_seconds()) + 3600
-    schema = "event_id long, ts timestamp, user_id long"
-
-    def _stage(df, mtime):
-        before = set(_glob.glob(d + "/staged/*.parquet"))
-        df.coalesce(1).write.mode("append").parquet(d + "/staged")
-        # FileStreamSource orders files by modification time — force the
-        # intended batch order regardless of fs timestamp granularity.
-        for f in set(_glob.glob(d + "/staged/*.parquet")) - before:
-            _os.utime(f, (mtime, mtime))
-
-    now = _time.time()
-    _stage(ev.filter(F.col("event_id") % 5 != 0), now + 60)
-    _stage(ev.filter(F.col("event_id") % 5 == 0), now + 120)  # the LATE batch
-    sentinel = spark.createDataFrame([(-1, hi, -1)], schema).withColumn(
-        "ts", F.col("ts") + F.expr(f"INTERVAL {2 * span_s} SECONDS")
+    sentinel = spark.createDataFrame(
+        [(-1, hi, -1)], "event_id long, ts timestamp, user_id long"
+    ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {2 * span_s} SECONDS"))
+    stream = _staged_stream(
+        ev.filter(F.col("event_id") % 5 != 0).coalesce(1),
+        ev.filter(F.col("event_id") % 5 == 0).coalesce(1),  # the LATE batch
+        sentinel.coalesce(1),
+        max_files_per_trigger=1,
     )
-    _stage(sentinel, now + 180)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d + "/staged")
-    )
-    sessions = sessionize_late(
+    sessions = sessionize(
         stream, key_col="user_id", ts_col="ts", gap="30 minutes",
         watermark_delay=f"{span_s} seconds",
     )
-    q = write_parquet_stream(sessions, d + "/sink", d + "/ckpt")
-    q.awaitTermination()
-    out = spark.read.parquet(d + "/sink").filter(F.col("user_id") >= 0)
-    return out.select(
-        "user_id",
-        "n_events",
-        F.unix_micros(F.col("first_ts")).alias("first_epoch_us"),
-        F.unix_micros(F.col("last_ts")).alias("last_epoch_us"),
-    )
+    return _session_epochs(_drain(sessions).filter(F.col("user_id") >= 0))
 
 
 def _similarity_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9235,29 +9005,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY from_type, to_type
         """,
         # The stream's late batch must merge, so the final state equals the
-        # batch gap-split over ALL events — the same oracle as
-        # events_sessionize.
-        "sessionize_late_merge": """
-            with g as (
-              select user_id, ts,
-                     case when epoch_us(ts) - coalesce(
-                           lag(epoch_us(ts)) over (partition by user_id order by ts), 0)
-                           > 1800000000
-                          then 1 else 0 end as new_session
-              from events
-            ),
-            s as (
-              select user_id, ts,
-                     sum(new_session) over (partition by user_id order by ts
-                                            rows between unbounded preceding and current row) as sid
-              from g
-            )
-            select user_id,
-                   cast(count(*) as bigint) as n_events,
-                   cast(epoch_us(min(ts)) as bigint) as first_epoch_us,
-                   cast(epoch_us(max(ts)) as bigint) as last_epoch_us
-            from s
-            group by user_id, sid
-        """,
+        # batch gap-split over ALL events.
+        "sessionize_late_merge": _SESSIONIZE_SQL,
         "similarity_ivf_upsert": _ivf_upsert_oracle_sql(),
     }

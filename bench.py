@@ -540,6 +540,7 @@ def main() -> None:
         "loadavg_start": loadavg_start,
         "foreign_busy_cores": foreign_cores,
         "steal_cores": steal_cores,
+        "cpus": spark.sparkContext.defaultParallelism,
         "host_speed": host_speed,
     }
     # Full named-dict record (the pre-r15 stdout format) -> sidecar. This

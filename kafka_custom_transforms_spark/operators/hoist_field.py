@@ -6,7 +6,8 @@ ExtendedHoistField.java:42-43); ``keep_in_root`` defaults empty (:44-45).
 
 Behavior branches replicated:
   H1  schemaless wrap-all: anything (null and primitives included) becomes
-      ``{field: original}`` (ExtendedHoistField.java:75-79).
+      ``{field: original}`` (ExtendedHoistField.java:75-79); JSON text that
+      does not parse raises ``schemaless.malformed_json``.
   H2  schemaless with keep_in_root: names in the keep list stay at root, the
       rest move under ``field``; when nothing moves, ``field`` is omitted
       entirely (ExtendedHoistField.java:80-97). A non-object raises as
@@ -109,11 +110,14 @@ def hoist_field(
             new_col = F.create_map(F.lit(field), col)  # H1 — wraps nulls too
         elif isinstance(dtype, StringType) and not keep:
             # H1 for JSON text: splice the document (or JSON null) under the
-            # JSON-escaped field name — a string concat, no parse.
-            new_col = F.concat(
-                F.lit("{" + json.dumps(field) + ":"),
-                F.coalesce(col, F.lit("null")),
-                F.lit("}"),
+            # JSON-escaped field name, and check that the result parses.
+            new_col = schemaless.parsed_or_raise(
+                F.concat(
+                    F.lit("{" + json.dumps(field) + ":"),
+                    F.coalesce(col, F.lit("null")),
+                    F.lit("}"),
+                ),
+                "hoist_field",
             )
         elif isinstance(dtype, StringType) and json_schema is not None:
             # H2 omission for free: when every movable field is null the

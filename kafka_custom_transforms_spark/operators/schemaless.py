@@ -7,11 +7,14 @@ back, once per step; an SMT supplies a struct -> struct rebuild
 (:func:`arrow_step`). SQL NULL passes through (D1); a non-object raises
 :func:`not_json_object` (requireMap / getValueAsMap); text that does not
 parse, or on the JVM path does not fit the schema, :func:`malformed_json`.
+A step that splices the text without parsing it (hoist_field's wrap-all)
+checks its output with :func:`parsed_or_raise`.
 """
 
 from __future__ import annotations
 
 import json
+import re
 from collections.abc import Callable
 
 import pandas as pd
@@ -22,6 +25,9 @@ from pyspark.sql.types import DataType, StringType, StructField, StructType
 # fills with the raw text of a record it cannot parse into the schema.
 PARSED = "__smt_parsed"
 CORRUPT = "__smt_corrupt"
+
+# jvm_step's object test in Python: Java regex whitespace (\s), then "{".
+_OBJECT_PREFIX = re.compile(r"[ \t\n\x0b\f\r]*\{")
 
 
 def not_json_object(transform: str) -> str:
@@ -69,6 +75,17 @@ def jvm_step(df: DataFrame, target: str, schema: DataType | str, rebuild: Rebuil
     return with_target(df.withColumn(PARSED, parse), target, checked).drop(PARSED)
 
 
+def parsed_or_raise(doc: Column, transform: str) -> Column:
+    """``doc`` (JSON text) when Spark's JSON reader parses it, else
+    :func:`malformed_json` — one tokenizing pass, no Python. Duplicate keys
+    and NaN/Infinity pass, as they do for ``json.loads``; like every Spark
+    JSON read, text after a complete document is not checked."""
+    only_corrupt = StructType([StructField(CORRUPT, StringType())])
+    options = {"columnNameOfCorruptRecord": CORRUPT, "allowSingleQuotes": "false"}
+    corrupt = F.from_json(doc, only_corrupt, options)[CORRUPT]
+    return F.when(corrupt.isNull(), doc).otherwise(F.raise_error(F.lit(malformed_json(transform))))
+
+
 def arrow_step(df: DataFrame, target: str, fn: Callable[[dict], dict], transform: str) -> DataFrame:
     """``fn`` over each JSON object in ``target`` in an Arrow-batched UDF;
     lossless (null entries and ``{}`` survive), the slow path."""
@@ -78,12 +95,12 @@ def arrow_step(df: DataFrame, target: str, fn: Callable[[dict], dict], transform
         def one(x):
             if x is None:
                 return None
+            if not _OBJECT_PREFIX.match(x):
+                raise ValueError(not_json_object(transform))
             try:
                 obj = json.loads(x)
             except json.JSONDecodeError:
                 raise ValueError(malformed_json(transform)) from None
-            if not isinstance(obj, dict):
-                raise ValueError(not_json_object(transform))
             return json.dumps(fn(obj), separators=(",", ":"))
 
         return s.map(one)

@@ -7,9 +7,11 @@ dedup is a driver-mandated extension. Two tools:
     on key columns with state bounded by the watermark delay. This is the
     100 TB-safe default: state size ~ unique keys per watermark window, and
     late rows beyond the delay are dropped by the watermark, not the store.
-  - :func:`sessionize` — ``applyInPandasWithState`` example of a custom
-    stateful operator (per-user session aggregation with timeout), showing
-    the escape hatch when built-in stateful ops can't express the semantics.
+  - :func:`sessionize` — the one sessionizer: a gap-split over window
+    functions on a batch DataFrame; on a stream, an
+    ``applyInPandasWithState`` operator that holds each session until the
+    watermark passes it, so late events merge instead of fragmenting — the
+    escape hatch when built-in stateful ops can't express the semantics.
 """
 
 from __future__ import annotations
@@ -40,10 +42,6 @@ def session_schema(df: DataFrame, key_col: str) -> str:
     return f"{key_col} {key_type}, n_events bigint, first_ts timestamp, last_ts timestamp"
 
 
-# Backward-compatible alias for the default (user_id bigint) shape.
-SESSION_SCHEMA = "user_id bigint, n_events bigint, first_ts timestamp, last_ts timestamp"
-
-
 def sessionize(
     df: DataFrame,
     key_col: str = "user_id",
@@ -51,19 +49,43 @@ def sessionize(
     gap: str = "30 minutes",
     watermark_delay: str = "10 minutes",
 ) -> DataFrame:
-    """Per-key session aggregation with inactivity timeout — the custom
-    stateful operator escape hatch (``applyInPandasWithState``) for semantics
-    the built-in windowed aggregations can't express.
+    """Per-key gap-based session aggregation: one row per session
+    (key, n_events, first_ts, last_ts); the key column keeps its input
+    name and type (see :func:`session_schema`).
 
-    Emits one row per closed session: (key, n_events, first_ts, last_ts);
-    the key column keeps its input name and type (see :func:`session_schema`).
-    State per key is a single open session (bounded); batch-internal gap
-    splits emit immediately and the trailing open session closes via an
-    EVENT-TIME timeout when the watermark passes last_ts + gap — so the
-    stream's total output equals the batch gap-split exactly (oracle-checked
-    by the events_sessionize_stream query). On a batch DataFrame, falls back
-    to an equivalent gap-based sessionization via window functions (lag +
-    running session ids) — same output, no state store.
+    On a batch DataFrame: a gap-split via window functions (lag + running
+    session ids) — no state store.
+
+    On a streaming DataFrame: a custom stateful operator
+    (``applyInPandasWithState``) that holds EVERY session in state until
+    the watermark proves no in-gap event can still arrive, so in-watermark
+    late events merge into held sessions instead of fragmenting them
+    (append mode cannot retract: emitting gap splits as soon as a batch
+    closes them left 774 stream sessions against 946 batch ones on the
+    sessionize_late_merge row's late data):
+
+    - State per key = the DISJOINT session intervals still inside the
+      watermark horizon, as parallel arrays (n, first_us, last_us).
+    - Each event connects to a session iff first-gap <= t <= last+gap
+      (exact: inside the span, consecutive points are <= gap apart, so t
+      is within gap of a member; outside, the boundary IS the nearest
+      member). An event bridging several sessions merges them — counts
+      are additive, bounds are min/max, so the interval algebra
+      reproduces the batch gap-split over the final event set exactly.
+    - One event-time timeout per key at min(last)+gap: when it fires,
+      sessions with last+gap STRICTLY behind the watermark emit (every
+      mergeable event t <= last+gap < wm is already watermark-dropped —
+      they are final); the rest, including a session whose inclusive
+      merge boundary t == last+gap == wm could still admit an event,
+      re-arm the timeout.
+
+    The stream's output equals the batch gap-split over the admitted
+    events once the watermark passes every session end (oracle-checked by
+    the events_sessionize_stream and sessionize_late_merge queries). State
+    is bounded by watermark_delay + gap per key (a session older than that
+    must have emitted), which is the price of late tolerance — choose the
+    delay as the max admissible lateness, exactly as for any watermarked
+    aggregation.
     """
     import pandas as pd  # noqa: F401  (worker-side)
 
@@ -101,172 +123,6 @@ def sessionize(
     gap_us = gap_ms * 1000
     out_schema = session_schema(df, key_col)
 
-    def _update(key, pdfs, state: GroupState):
-        """Event-time sessionization: rows for the key are sorted by event
-        time and gap-split; every sub-session closed WITHIN the batch is
-        emitted immediately, the trailing open session is kept in state with
-        an event-time timeout at last_ts + gap — when the watermark passes
-        it, the session closes and emits. This makes the stateful operator's
-        total output equal the batch gap-split exactly once the watermark
-        passes every session end (the correctness harness advances it with a
-        sentinel event), so stream/batch parity is checkable row-for-row."""
-        import pandas as pd
-
-        def _emit(sessions):
-            return pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(sessions),
-                    "n_events": [s[0] for s in sessions],
-                    "first_ts": [pd.Timestamp(s[1], unit="us") for s in sessions],
-                    "last_ts": [pd.Timestamp(s[2], unit="us") for s in sessions],
-                }
-            )
-
-        if state.hasTimedOut:
-            closed = state.get
-            state.remove()
-            yield _emit([closed])
-            return
-
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        rows = pd.concat(frames) if len(frames) > 1 else frames[0]
-        ts = rows[ts_col].astype("datetime64[us]").astype("int64").sort_values().to_numpy()
-        n, first_us, last_us = state.get if state.exists else (0, None, None)
-        sessions = []
-        for t in ts:
-            t = int(t)
-            if last_us is not None and t - last_us > gap_us:
-                sessions.append((n, first_us, last_us))
-                n, first_us, last_us = 0, None, None
-            n += 1
-            # min/max (not overwrite): a LATE in-watermark event from a
-            # later batch may precede the open session's bounds; taking
-            # last_us = t would regress the session end and corrupt the
-            # next gap decision (split on a distance measured from the
-            # late event instead of the true latest). Within a batch ts
-            # is sorted, so min/max degenerate to the plain assignment.
-            first_us = t if first_us is None else min(first_us, t)
-            last_us = t if last_us is None else max(last_us, t)
-        state.update((n, first_us, last_us))
-        # Event-time timeout at session end + gap; must stay ahead of the
-        # current watermark (Spark rejects timeouts at/behind it).
-        state.setTimeoutTimestamp(
-            max(last_us // 1000 + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        if sessions:
-            yield _emit(sessions)
-
-    return (
-        df.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType="n bigint, first_ts bigint, last_ts bigint",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def _merge_session_event(
-    sessions: list[list[int]], t: int, gap_us: int
-) -> list[list[int]]:
-    """Fold one event (microsecond ts) into a disjoint session-interval
-    set — the algebra under :func:`sessionize_late`'s state. An event
-    connects to a session iff first-gap <= t <= last+gap (inside the
-    span, consecutive members are <= gap apart, so t is within gap of a
-    member; outside, the boundary IS the nearest member); a bridging
-    event merges every connected session (counts additive, bounds
-    min/max). Processing ANY permutation of an event set through this
-    fold yields exactly the batch gap-split partition of the final set —
-    the order-independence property tests/test_streaming.py pins with
-    Hypothesis."""
-    hits = [
-        i for i, s in enumerate(sessions)
-        if s[1] - gap_us <= t <= s[2] + gap_us
-    ]
-    if not hits:
-        return sessions + [[1, t, t]]
-    merged = [
-        sum(sessions[i][0] for i in hits) + 1,
-        min(min(sessions[i][1] for i in hits), t),
-        max(max(sessions[i][2] for i in hits), t),
-    ]
-    return [s for i, s in enumerate(sessions) if i not in set(hits)] + [merged]
-
-
-def _partition_finalizable(
-    sessions: list, wm_us: int, gap_us: int
-) -> tuple[list, list]:
-    """(due, held) split of a session set against the watermark — the
-    emission half of :func:`sessionize_late`'s algebra. STRICT
-    inequality: a session finalizes only when its inclusive merge
-    horizon (last+gap, see :func:`_merge_session_event`) is strictly
-    behind the watermark, so the emission horizon and the merge window
-    are mutually exclusive BY CONSTRUCTION (r14 advice): an event that
-    could still merge (t <= last+gap) into a due session would satisfy
-    t < wm — already watermark-dropped. Module-level so the invariant is
-    unit-testable without a streaming harness."""
-    due = [s for s in sessions if s[2] + gap_us < wm_us]
-    held = [s for s in sessions if s[2] + gap_us >= wm_us]
-    return due, held
-
-
-def sessionize_late(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """LATE-tolerant sessionization: :func:`sessionize` with deferred
-    emission, so in-watermark late events MERGE into held sessions
-    instead of fragmenting them.
-
-    :func:`sessionize` emits batch-internal gap splits immediately —
-    correct for in-order arrival, but append-mode streams cannot retract:
-    a late event that BRIDGES two already-emitted sessions (or extends
-    one) leaves the output fragmented relative to the batch gap-split
-    (observed exactly that when staging the late-merge correctness row:
-    774 stream sessions vs 946 batch). The only append-mode-correct
-    late-data semantics is to hold EVERY session in state until the
-    watermark proves no in-gap event can still arrive:
-
-    - State per key = the DISJOINT session intervals still inside the
-      watermark horizon, as parallel arrays (n, first_us, last_us).
-    - Each event connects to a session iff first-gap <= t <= last+gap
-      (exact: inside the span, consecutive points are <= gap apart, so t
-      is within gap of a member; outside, the boundary IS the nearest
-      member). An event bridging several sessions merges them — counts
-      are additive, bounds are min/max, so the interval algebra
-      reproduces the batch gap-split over the final event set exactly.
-    - One event-time timeout per key at min(last)+gap: when it fires,
-      sessions with last+gap STRICTLY behind the watermark emit (every
-      mergeable event t <= last+gap < wm is already watermark-dropped —
-      they are final); the rest, including a session whose inclusive
-      merge boundary t == last+gap == wm could still admit an event,
-      re-arm the timeout.
-
-    State is bounded by watermark_delay + gap per key (a session older
-    than that must have emitted), which is the price of late tolerance —
-    choose the delay as the max admissible lateness, exactly as for any
-    watermarked aggregation. On a batch DataFrame this falls back to the
-    same gap-split as :func:`sessionize` (the window sort already
-    handles arrival order)."""
-    import pandas as pd  # noqa: F401  (worker-side)
-
-    if not df.isStreaming:
-        return sessionize(df, key_col, ts_col, gap, watermark_delay)
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_ms = _duration_to_ms(gap)
-    gap_us = gap_ms * 1000
-    out_schema = session_schema(df, key_col)
-
     def _emit(key, sessions):
         import pandas as pd
 
@@ -287,6 +143,7 @@ def sessionize_late(
                 [s[2] for s in sessions],
             )
         )
+        # Spark rejects a timeout at/behind the current watermark.
         state.setTimeoutTimestamp(
             max(
                 min(s[2] for s in sessions) // 1000 + gap_ms,
@@ -338,6 +195,50 @@ def sessionize_late(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
+
+
+def _merge_session_event(
+    sessions: list[list[int]], t: int, gap_us: int
+) -> list[list[int]]:
+    """Fold one event (microsecond ts) into a disjoint session-interval
+    set — the algebra under :func:`sessionize`'s streaming state. An event
+    connects to a session iff first-gap <= t <= last+gap (inside the
+    span, consecutive members are <= gap apart, so t is within gap of a
+    member; outside, the boundary IS the nearest member); a bridging
+    event merges every connected session (counts additive, bounds
+    min/max). Processing ANY permutation of an event set through this
+    fold yields exactly the batch gap-split partition of the final set —
+    the order-independence property tests/test_streaming.py pins with
+    Hypothesis."""
+    hits = [
+        i for i, s in enumerate(sessions)
+        if s[1] - gap_us <= t <= s[2] + gap_us
+    ]
+    if not hits:
+        return sessions + [[1, t, t]]
+    merged = [
+        sum(sessions[i][0] for i in hits) + 1,
+        min(min(sessions[i][1] for i in hits), t),
+        max(max(sessions[i][2] for i in hits), t),
+    ]
+    return [s for i, s in enumerate(sessions) if i not in set(hits)] + [merged]
+
+
+def _partition_finalizable(
+    sessions: list, wm_us: int, gap_us: int
+) -> tuple[list, list]:
+    """(due, held) split of a session set against the watermark — the
+    emission half of :func:`sessionize`'s streaming algebra. STRICT
+    inequality: a session finalizes only when its inclusive merge
+    horizon (last+gap, see :func:`_merge_session_event`) is strictly
+    behind the watermark, so the emission horizon and the merge window
+    are mutually exclusive BY CONSTRUCTION (r14 advice): an event that
+    could still merge (t <= last+gap) into a due session would satisfy
+    t < wm — already watermark-dropped. Module-level so the invariant is
+    unit-testable without a streaming harness."""
+    due = [s for s in sessions if s[2] + gap_us < wm_us]
+    held = [s for s in sessions if s[2] + gap_us >= wm_us]
+    return due, held
 
 
 _DURATION_MS = {

@@ -393,7 +393,7 @@ def test_current_stdout_line_fits_budget():
         "metric": "engine_queries_wall_total", "value": 999.99,
         "unit": "sec", "decode_value": 999.99,
         "sf": 0.1, "loadavg_start": [32.11, 32.11, 32.11],
-        "steal_cores": 32.999,
+        "steal_cores": 32.999, "cpus": 128,
         "queries": {n: 9.99 for n in bench.BENCH_QUERIES},
     }
     line = json.dumps(slim, separators=(",", ":"))
@@ -524,3 +524,31 @@ def test_stdout_line_survives_driver_tail_capture():
     cl = json.dumps(compact, separators=(",", ":"))
     parsed2 = bench_guard._bench_line("z" * 3000 + "\n" + cl + "\n")
     assert parsed2 is not None and len(parsed2["queries"]) == len(bench.BENCH_QUERIES)
+
+
+def test_guard_refuses_verdict_across_core_counts(tmp_path, monkeypatch, capsys):
+    """A repro record without its own core count takes its round's official
+    record's; a current record at another core count gets no verdict
+    (exit 2), one at the same count is compared as before."""
+    import json
+
+    import pytest
+
+    line = json.dumps({"metric": "m", "value": 1.0, "queries": {"q": 1.0}})
+    (tmp_path / "BENCH_r08.json").write_text(json.dumps({"cpus": 32, "tail": line}))
+    (tmp_path / "BENCH_r08_repro.json").write_text(line)
+    monkeypatch.setattr(bench_guard, "REPO", str(tmp_path))
+    name, base = bench_guard.load_baseline()
+    assert name == "BENCH_r08_repro.json" and base["cpus"] == 32
+
+    for cpus, code, said in ((4, 2, "NO VERDICT"), (32, None, "bench_guard: OK")):
+        cur = tmp_path / f"now{cpus}.json"
+        cur.write_text(json.dumps({"metric": "m", "cpus": cpus, "queries": {"q": 1.1}}))
+        monkeypatch.setattr(bench_guard.sys, "argv", ["bench_guard.py", str(cur)])
+        if code is None:
+            bench_guard.main()
+        else:
+            with pytest.raises(SystemExit) as exc:
+                bench_guard.main()
+            assert exc.value.code == code
+        assert said in capsys.readouterr().out

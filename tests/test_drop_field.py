@@ -61,6 +61,8 @@ _JSON_PATHS = {
         "hoist_field", lambda: hoist_field("f", ["a"], json_schema="a int, b int")
     ),
     "hoist_field/udf": ("hoist_field", lambda: hoist_field("f", ["a"])),
+    # H1: wraps any JSON value, so only text that does not parse raises.
+    "hoist_field/wrap": ("hoist_field", lambda: hoist_field("f")),
 }
 
 
@@ -72,6 +74,7 @@ _BAD_JSON = {
     '"x"': not_json_object,
     "7": not_json_object,
     "null": not_json_object,
+    "[1,": not_json_object,
     '{"a":1,': malformed_json,
     _MISFIT: malformed_json,
 }
@@ -88,20 +91,29 @@ def test_non_object_json_raises_on_every_json_path(spark, path, value):
     schema (a misfit field used to read null and vanish; malformed text
     gave ``{}`` there and a bare JSONDecodeError in the UDF worker). SQL
     NULL still passes through (D1), and an object with leading whitespace
-    is still an object."""
+    is still an object. The wrap-all hoist (H1) takes any JSON value, so it
+    raises only for text that does not parse and wraps SQL NULL."""
     name, make = _JSON_PATHS[path]
     transform = make()
     bad = spark.createDataFrame([(value,)], "value string")
-    if value == _MISFIT and path.endswith("/udf"):
+    wrap = path == "hoist_field/wrap"
+    try:
+        parsed = json.loads(value)
+    except json.JSONDecodeError:
+        parsed = malformed_json
+    if wrap and parsed is not malformed_json:
+        assert json.loads(transform(bad).collect()[0].value) == {"f": parsed}
+    elif value == _MISFIT and path.endswith("/udf"):
         got = json.loads(transform(bad).collect()[0].value)
         assert got in ({"b": 2}, {"a": "x", "f": {"b": 2}})
     else:
-        with pytest.raises(Exception, match=re.escape(_BAD_JSON[value](name))):
+        error = malformed_json if wrap else _BAD_JSON[value]
+        with pytest.raises(Exception, match=re.escape(error(name))):
             transform(bad).collect()
     ok = spark.createDataFrame([(None,), (' \n{"a":1,"b":2}',)], "value string")
     got = [r.value for r in transform(ok).collect()]
-    assert got[0] is None
-    assert json.loads(got[1]) in ({"b": 2}, {"a": 1, "f": {"b": 2}})
+    assert got[0] == ('{"f":null}' if wrap else None)
+    assert json.loads(got[1]) in ({"b": 2}, {"a": 1, "f": {"b": 2}}, {"f": {"a": 1, "b": 2}})
 
 
 def test_unmatched_paths_silently_ignored(spark):

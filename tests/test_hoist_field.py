@@ -76,11 +76,14 @@ def test_schemaless_map_keep_in_root_rejected(spark):
 
 
 def test_json_wrap_all_including_null_and_primitive(spark):
-    """H1 over JSON text (ExtendedHoistFieldTest.java:42-50 wraps 42)."""
-    df = spark.createDataFrame([("42",), ('{"a":1}',), (None,)], "value string")
+    """H1 over JSON text (ExtendedHoistFieldTest.java:42-50 wraps 42): any
+    text ``json.loads`` accepts is spliced as is — arrays, strings, JSON
+    null, duplicate keys (which Spark's variant parser would reject), NaN."""
+    texts = ["42", '{"a":1}', "[1,[2]]", '"x"', "null", '{"a":1,"a":2}', "NaN", " true "]
+    df = spark.createDataFrame([(t,) for t in texts] + [(None,)], "value string")
     out = hoist_field("magic")(df)
     vals = [r.value for r in out.collect()]
-    assert vals == ['{"magic":42}', '{"magic":{"a":1}}', '{"magic":null}']
+    assert vals == ['{"magic":' + t + "}" for t in texts] + ['{"magic":null}']
 
 
 def test_json_wrap_escapes_field_name(spark):

@@ -337,28 +337,17 @@ def test_sessionize_streaming_late_event_does_not_regress_session_end(spark):
     session's bounds (min/max), not overwrite last_ts — overwriting made
     the next gap decision measure from the late event and emitted
     sessions with last_ts < first_ts (regression test)."""
-    import time
-
     from kafka_custom_transforms_spark.streaming.dedup import sessionize
 
-    d = tempfile.mkdtemp(prefix="kcts-late-")
-
-    def _write(sub, rows):
-        spark.createDataFrame(rows, "user_id long, ts string").selectExpr(
-            "user_id", "cast(ts as timestamp) as ts"
-        ).coalesce(1).write.parquet(f"{d}/in/{sub}")
-        time.sleep(1.1)  # distinct mtimes -> deterministic file order
-
-    _write("f0", [(7, "2024-01-01 12:00:00")])
-    # late (11:55 > watermark 11:50) + on-time continuation in one batch
-    _write("f1", [(7, "2024-01-01 11:55:00"), (7, "2024-01-01 12:26:00")])
-    # sentinel advances the watermark far past 12:26 + gap -> timeout fires
-    _write("f2", [(99, "2024-01-01 20:00:00")])
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d + "/in/*")
+    stream = _staged_session_stream(
+        spark,
+        [
+            [(7, "2024-01-01 12:00:00")],
+            # late (11:55 > watermark 11:50) + on-time continuation in one batch
+            [(7, "2024-01-01 11:55:00"), (7, "2024-01-01 12:26:00")],
+            # sentinel advances the watermark far past 12:26 + gap -> timeout fires
+            [(99, "2024-01-01 20:00:00")],
+        ],
     )
     out = sessionize(stream, gap="30 minutes", watermark_delay="10 minutes")
     name = "s" + uuid.uuid4().hex[:8]
@@ -373,7 +362,6 @@ def test_sessionize_streaming_late_event_does_not_regress_session_end(spark):
     assert r["n_events"] == 3
     assert str(r["first_ts"]) == "2024-01-01 11:55:00"
     assert str(r["last_ts"]) == "2024-01-01 12:26:00"
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_upsert_sink_survives_pointer_dir_collision(spark):
@@ -430,41 +418,38 @@ def test_stream_full_outer_interval_matches_batch_full_join(spark, sf_dir):
     assert any(b is None for _, b in got_rows)  # unmatched purchases present
 
 
-def _staged_session_stream(spark, d, batches):
-    import time
+def _staged_session_stream(spark, batches):
+    """One micro-batch per entry of ``batches``, in order."""
+    import __spark_entry__ as entry_mod
 
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, "user_id long, ts string").selectExpr(
-            "user_id", "cast(ts as timestamp) as ts"
-        ).coalesce(1).write.parquet(f"{d}/in/f{i}")
-        time.sleep(1.1)  # distinct mtimes -> deterministic file order
-    return (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d + "/in/*")
-    )
+    frames = [
+        spark.createDataFrame(rows, "user_id long, ts string")
+        .selectExpr("user_id", "cast(ts as timestamp) as ts")
+        .coalesce(1)
+        for rows in batches
+    ]
+    return entry_mod._staged_stream(*frames, max_files_per_trigger=1)
 
 
 def test_sessionize_late_bridge_event_merges_formed_sessions(spark):
-    """The defining sessionize_late scenario, minimal: batch 1 forms two
+    """The defining late-data scenario, minimal: batch 1 forms two
     gap-split sessions (00:00 and 00:50, gap 30m); batch 2 delivers a
-    LATE bridge event at 00:25 — within gap of BOTH. The late-tolerant
-    operator must collapse them into ONE 3-event session; the
-    immediate-emission sessionize would already have emitted the first
-    session and fragment (the append-mode-retraction impossibility this
-    operator exists for)."""
-    from kafka_custom_transforms_spark.streaming.dedup import sessionize_late
+    LATE bridge event at 00:25 — within gap of BOTH. The streaming
+    sessionizer must collapse them into ONE 3-event session; emitting
+    batch-internal gap splits immediately would already have emitted the
+    first session and fragment (append mode cannot retract, which is why
+    the sessionizer holds every session until the watermark passes it)."""
+    from kafka_custom_transforms_spark.streaming.dedup import sessionize
 
-    d = tempfile.mkdtemp(prefix="kcts-latebridge-")
     stream = _staged_session_stream(
-        spark, d,
+        spark,
         [
             [(7, "2024-01-01 00:00:00"), (7, "2024-01-01 00:50:00")],
             [(7, "2024-01-01 00:25:00")],  # late bridge
             [(99, "2024-01-01 09:00:00")],  # sentinel: watermark past all
         ],
     )
-    out = sessionize_late(stream, gap="30 minutes", watermark_delay="3 hours")
+    out = sessionize(stream, gap="30 minutes", watermark_delay="3 hours")
     name = "s" + uuid.uuid4().hex[:8]
     _run_stream(out, name)
     rows = [r for r in spark.sql(f"select * from {name}").collect() if r["user_id"] == 7]
@@ -472,7 +457,6 @@ def test_sessionize_late_bridge_event_merges_formed_sessions(spark):
     assert rows[0]["n_events"] == 3
     assert str(rows[0]["first_ts"]) == "2024-01-01 00:00:00"
     assert str(rows[0]["last_ts"]) == "2024-01-01 00:50:00"
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_sessionize_late_partial_emission_rearms_timeout(spark):
@@ -481,9 +465,8 @@ def test_sessionize_late_partial_emission_rearms_timeout(spark):
     re-armed timeout must emit the younger one when the watermark finally
     passes it. Exercises the _rearm path the all-at-once sentinel
     scenarios never hit."""
-    from kafka_custom_transforms_spark.streaming.dedup import sessionize_late
+    from kafka_custom_transforms_spark.streaming.dedup import sessionize
 
-    d = tempfile.mkdtemp(prefix="kcts-latepartial-")
     # gap 30m, delay 10m. Watermark during batch N = (max ts through
     # batch N-1) - delay; a timeout fires when that watermark passes its
     # armed timestamp. Timeline:
@@ -498,7 +481,7 @@ def test_sessionize_late_partial_emission_rearms_timeout(spark):
     #       wm after B3 = 03:35.
     #   B4 (sentinel): wm 03:35 > 03:30 -> S2 emits.
     stream = _staged_session_stream(
-        spark, d,
+        spark,
         [
             [(7, "2024-01-01 00:00:00"), (7, "2024-01-01 03:00:00")],
             [(8, "2024-01-01 03:20:00")],
@@ -506,7 +489,7 @@ def test_sessionize_late_partial_emission_rearms_timeout(spark):
             [(99, "2024-01-01 12:00:00")],
         ],
     )
-    out = sessionize_late(stream, gap="30 minutes", watermark_delay="10 minutes")
+    out = sessionize(stream, gap="30 minutes", watermark_delay="10 minutes")
     name = "s" + uuid.uuid4().hex[:8]
     _run_stream(out, name)
     rows = sorted(
@@ -516,21 +499,10 @@ def test_sessionize_late_partial_emission_rearms_timeout(spark):
     assert [r["n_events"] for r in rows] == [1, 1]
     assert str(rows[0]["first_ts"]) == "2024-01-01 00:00:00"
     assert str(rows[1]["first_ts"]) == "2024-01-01 03:00:00"
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_sessionize_late_batch_fallback_matches_sessionize(spark, sf_dir):
-    """On a batch frame sessionize_late must equal sessionize exactly."""
-    from kafka_custom_transforms_spark.streaming.dedup import sessionize, sessionize_late
-
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    a = {tuple(r) for r in sessionize(ev).collect()}
-    b = {tuple(r) for r in sessionize_late(ev).collect()}
-    assert a == b and len(a) > 0
 
 
 def test_merge_session_event_is_order_independent_and_matches_gap_split():
-    """Hypothesis pin of sessionize_late's state algebra: folding ANY
+    """Hypothesis pin of the streaming sessionize state algebra: folding ANY
     permutation of an event set through _merge_session_event yields
     exactly the batch gap-split partition (counts, bounds) — the
     invariant that makes late/out-of-order arrival safe. Pure Python, so
@@ -588,7 +560,7 @@ def test_sessionize_late_boundary_event_semantics_are_drop_not_fragment(spark):
     event set; what the strict `last+gap < wm` finalization
     (_partition_finalizable) guarantees is that no admitted event can
     ever find its session already emitted."""
-    from kafka_custom_transforms_spark.streaming.dedup import sessionize_late
+    from kafka_custom_transforms_spark.streaming.dedup import sessionize
 
     for batches, want in [
         (
@@ -611,9 +583,8 @@ def test_sessionize_late_boundary_event_semantics_are_drop_not_fragment(spark):
             [(2, "2024-01-01 00:00:00", "2024-01-01 00:30:00")],
         ),
     ]:
-        d = tempfile.mkdtemp(prefix="kcts-lateboundary-")
-        stream = _staged_session_stream(spark, d, batches)
-        out = sessionize_late(stream, gap="30 minutes", watermark_delay="10 minutes")
+        stream = _staged_session_stream(spark, batches)
+        out = sessionize(stream, gap="30 minutes", watermark_delay="10 minutes")
         name = "s" + uuid.uuid4().hex[:8]
         _run_stream(out, name)
         rows = sorted(
@@ -623,7 +594,6 @@ def test_sessionize_late_boundary_event_semantics_are_drop_not_fragment(spark):
         )
         got = [(r["n_events"], str(r["first_ts"]), str(r["last_ts"])) for r in rows]
         assert got == want, (got, want)
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_finalization_horizon_excludes_merge_window():

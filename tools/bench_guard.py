@@ -108,9 +108,13 @@ def _load_records() -> list[tuple[str, dict]]:
     driver-machine load), in ascending round order. Malformed files
     (truncated write → invalid JSON, non-dict top level, no bench line —
     BENCH_r03.json's tail capture truncated the line's head) are skipped
-    with a note; they must not abort the guard."""
+    with a note; they must not abort the guard. Each record's ``cpus`` is
+    its own field, else its round's official record's (an official record
+    wraps the bench line with the core count it ran on; older repro files
+    carry none)."""
     paths = sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json")), key=_baseline_key)
     per_round: dict[int, tuple[tuple[int, int], str, dict]] = {}
+    official_cpus: dict[int, int] = {}
     for path in paths:
         try:
             with open(path) as f:
@@ -125,6 +129,8 @@ def _load_records() -> list[tuple[str, dict]]:
                 bench = _expand_compact(raw)
             else:
                 bench = _bench_line(raw.get("tail", ""))
+                if raw.get("cpus"):
+                    official_cpus[_baseline_key(path)[0]] = raw["cpus"]
         if not bench:
             print(f"bench_guard: {os.path.basename(path)} has no parseable "
                   "bench line, skipping")
@@ -132,8 +138,13 @@ def _load_records() -> list[tuple[str, dict]]:
         key = _baseline_key(path)
         if key[0] not in per_round or key > per_round[key[0]][0]:
             per_round[key[0]] = (key, os.path.basename(path), bench)
-    return [(name, bench) for _, name, bench in
-            (per_round[r] for r in sorted(per_round))]
+    records = []
+    for r in sorted(per_round):
+        _, name, bench = per_round[r]
+        if "cpus" not in bench and r in official_cpus:
+            bench = {**bench, "cpus": official_cpus[r]}
+        records.append((name, bench))
+    return records
 
 
 def _median(xs: list[float]) -> float:
@@ -263,9 +274,24 @@ def compare(base: dict, cur: dict) -> tuple[list[str], list[str], list[str], flo
     return lines, failures, suspects, drift
 
 
+def cpu_mismatch(base: dict, cur: dict) -> str | None:
+    """Why no verdict can be given, or None: two records taken at different
+    core counts measure the hosts, not the code (the 32- and 8-vCPU r16
+    records differ by more than any threshold here on unchanged rows)."""
+    b, c = base.get("cpus"), cur.get("cpus")
+    if b and c and b != c:
+        return f"current record ran on {c} cores, the baseline on {b}"
+    return None
+
+
 def main() -> None:
     base_name, base = load_baseline()
     cur = load_current(sys.argv[1:])
+    mismatch = cpu_mismatch(base, cur)
+    if mismatch:
+        print(f"bench_guard: NO VERDICT vs {base_name} — {mismatch}; bless a "
+              "baseline at this core count first")
+        sys.exit(2)
     lines, failures, suspects, drift = compare(base, cur)
     print(f"bench_guard: current vs {base_name} (fail ratio > {THRESHOLD}x, "
           f"floor {ABS_FLOOR_SEC}s)")
