@@ -19,8 +19,10 @@ and order-insensitive value hashes):
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
+import shutil
 import tempfile
 import time
 from collections.abc import Callable
@@ -255,6 +257,14 @@ def _smt_mixed_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chain(df).select("event_id", "repr_branch", "value")
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A new temp dir for a row's staged files, removed when the process
+    exits (a row's DataFrame reads it lazily until then)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 # ---------------------------------------------------------------- streaming
 # Every stream row stages its input with _staged_stream and, unless it says
 # at the call why it keeps its own writer, runs its query with _drain.
@@ -267,8 +277,8 @@ def _staged_stream(*frames: DataFrame, max_files_per_trigger: int | None = None)
     time, so each frame's files get an explicit, strictly increasing mtime —
     filesystem timestamp granularity must not reorder batches (a sentinel
     read first would start the watermark past every event and drop them all
-    as late). The temp dir is left in place: the reader reads it lazily."""
-    d = tempfile.mkdtemp(prefix="kcts-staged-")
+    as late)."""
+    d = _scratch_dir("kcts-staged-")
     t0 = time.time()
     for i, frame in enumerate(frames):
         frame.write.parquet(f"{d}/{i:04d}")
@@ -294,7 +304,7 @@ def _drain(
         write_parquet_stream,
     )
 
-    d = tempfile.mkdtemp(prefix="kcts-sink-")
+    d = _scratch_dir("kcts-sink-")
     sink, ckpt = d + "/sink", d + "/ckpt"
     if per_batch is None:
         q = write_parquet_stream(stream, sink, ckpt)
@@ -1455,7 +1465,7 @@ def _schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     of historical data). At 100 TB this is THE way schemas grow: parquet
     footer merge at planning, never a backfill. Aggregates per source so
     the oracle pins exactly which rows carry the new column."""
-    d = tempfile.mkdtemp(prefix="kcts-evolve-")
+    d = _scratch_dir("kcts-evolve-")
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "source")
     new = docs.filter(F.col("doc_id") % 2 == 1).select(
@@ -1576,7 +1586,7 @@ def _stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_envelope_source(spark)
-    d = tempfile.mkdtemp(prefix="kcts-pystream-")
+    d = _scratch_dir("kcts-pystream-")
     env = (
         spark.readStream.format("kcts_envelope")
         .option("rows_per_batch", 400)
@@ -1801,7 +1811,7 @@ def _stream_upsert_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_parquet_sink,
     )
 
-    d = tempfile.mkdtemp(prefix="kcts-upsertq-")
+    d = _scratch_dir("kcts-upsertq-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
@@ -2204,7 +2214,7 @@ def _json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source: events exported to JSON and read back with an
     explicit schema must reproduce the table exactly (timestamps ride as
     epoch micros — JSON has no timestamp type)."""
-    d = tempfile.mkdtemp(prefix="kcts-json-")
+    d = _scratch_dir("kcts-json-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
     )
@@ -2217,7 +2227,7 @@ def _json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source (the other columnar format Spark ships natively): same
     roundtrip contract as JSON."""
-    d = tempfile.mkdtemp(prefix="kcts-orc-")
+    d = _scratch_dir("kcts-orc-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
     )
@@ -2228,7 +2238,7 @@ def _orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source: same roundtrip contract as JSON (header on, explicit
     read schema — CSV is untyped text on disk)."""
-    d = tempfile.mkdtemp(prefix="kcts-csv-")
+    d = _scratch_dir("kcts-csv-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
     )
@@ -2247,7 +2257,7 @@ def _xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the interchange format the Connect ecosystem still meets in
     legacy enterprise feeds; keep columns integral/string — XML is
     untyped text on disk, exactly like CSV."""
-    d = tempfile.mkdtemp(prefix="kcts-xml-")
+    d = _scratch_dir("kcts-xml-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
     )
@@ -3781,7 +3791,7 @@ def _statestore_read_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch SQL — state content IS the aggregate, which is the invariant
     this query pins. The foreachBatch sink is a named function: a lambda
     would fail closure pickling."""
-    d = tempfile.mkdtemp(prefix="kcts-ssread-")
+    d = _scratch_dir("kcts-ssread-")
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     agg = _staged_stream(ev.coalesce(1)).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("event_id").alias("sum_ids")
@@ -3954,7 +3964,7 @@ def _partitioned_source_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     a plan test), so the other partitions' files are never opened: the
     disk-layout pattern that makes selective scans cheap on 100 TB
     tables."""
-    d = tempfile.mkdtemp(prefix="kcts-part-")
+    d = _scratch_dir("kcts-part-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
     )
@@ -4250,7 +4260,7 @@ def _bucketed_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py; oracle is the plain join."""
     from kafka_custom_transforms_spark.sources.bucketing import bucketed_equijoin
 
-    d = tempfile.mkdtemp(prefix="kcts-bucketed-")
+    d = _scratch_dir("kcts-bucketed-")
     orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     j = bucketed_equijoin(

@@ -16,7 +16,8 @@ Design notes:
   - Every operator is a factory returning a ``DataFrame -> DataFrame`` callable
     (configure-once / apply-many, mirroring the Connect transform lifecycle,
     SURVEY.md §3). Chains compose with ``df.transform(t1).transform(t2)`` or
-    :func:`transform_chain`.
+    :func:`transform_chain`, which also parses and writes a JSON column once
+    for consecutive schemaless steps on it.
   - Schema'd data = struct columns; schemaless data = JSON string columns
     (or MapType for flat homogeneous maps). See SURVEY.md §1.4.
   - Everything is built-in Catalyst expressions unless genuinely impossible;

@@ -32,12 +32,13 @@ Python, whole-stage-codegen capable); the JSON paths are ``schemaless`` steps.
 from __future__ import annotations
 
 import functools
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import DataType, MapType, StringType, StructType
+from pyspark.sql.types import DataType, MapType, StringType, StructField, StructType
 
 from kafka_custom_transforms_spark.operators import schemaless
+from kafka_custom_transforms_spark.operators.chain import Smt
 
 
 def _rebuild_struct(col: Column, schema: StructType, prefix: str, dropset: set[str]) -> Column:
@@ -95,11 +96,27 @@ def _prune_json_obj(obj: object, prefix: str, dropset: set[str]) -> object:
     return out
 
 
+def _dropped_type(schema: StructType, prefix: str, dropset: set[str]) -> StructType:
+    """The type :func:`_rebuild_struct` builds from ``schema``, which a chain
+    compares with the next step's declared schema without a Spark analysis
+    (one per step would sit in every stream start)."""
+    fields = []
+    for f in schema.fields:
+        p = prefix + f.name
+        if p in dropset:
+            continue
+        t = f.dataType
+        if isinstance(t, StructType) and any(d.startswith(p + ".") for d in dropset):
+            t = _dropped_type(t, p + ".", dropset)
+        fields.append(StructField(f.name, t))
+    return StructType(fields)
+
+
 def drop_fields(
     paths: Sequence[str] = (),
     target: str = "value",
     json_schema: DataType | str | None = None,
-) -> Callable[[DataFrame], DataFrame]:
+) -> Smt:
     """Build a ``DataFrame -> DataFrame`` transform dropping ``paths`` from
     the ``target`` column.
 
@@ -107,7 +124,7 @@ def drop_fields(
     of the reference, DropField.java:137-173, generalized to any column).
 
     ``json_schema`` (DDL or StructType) of the JSON in a StringType target
-    selects the JVM path: ``to_json`` omits null fields, and a value that
+    selects the JVM route: ``to_json`` omits null fields, and a value that
     does not fit the schema raises ``schemaless.malformed_json``. Without
     it, an Arrow-batched UDF prunes losslessly.
     """
@@ -115,6 +132,15 @@ def drop_fields(
         if not isinstance(p, str) or not p:
             raise ValueError(f"drop_fields: every path must be a non-empty string, got {p!r}")
     dropset = set(paths)
+
+    def _plan(dtype: DataType) -> schemaless.Plan | None:
+        if not dropset or not isinstance(dtype, StringType):
+            return None
+        if json_schema is None:
+            return schemaless.ArrowPlan("drop_fields", lambda obj: _prune_json_obj(obj, "", dropset))
+        schema = schemaless.as_struct_type(json_schema)
+        rebuild = functools.partial(_rebuild_struct, prefix="", dropset=dropset)
+        return schemaless.JvmPlan("drop_fields", schema, _dropped_type(schema, "", dropset), rebuild)
 
     def _transform(df: DataFrame) -> DataFrame:
         if not dropset:
@@ -126,13 +152,6 @@ def drop_fields(
         elif isinstance(dtype, MapType):
             paths_lit = F.array(*[F.lit(p) for p in sorted(dropset)])
             new_col = _drop_from_map(col, dtype, F.lit(""), paths_lit)
-        elif isinstance(dtype, StringType) and json_schema is not None:
-            rebuild = functools.partial(_rebuild_struct, prefix="", dropset=dropset)
-            return schemaless.jvm_step(df, target, json_schema, rebuild, "drop_fields")
-        elif isinstance(dtype, StringType):
-            return schemaless.arrow_step(
-                df, target, lambda obj: _prune_json_obj(obj, "", dropset), "drop_fields"
-            )
         else:
             raise TypeError(
                 f"drop_fields: target column {target!r} has unsupported type {dtype}; expected "
@@ -140,4 +159,4 @@ def drop_fields(
             )
         return schemaless.with_target(df, target, new_col)
 
-    return _transform
+    return Smt(target, _transform, _plan)

@@ -33,14 +33,14 @@ keep_in_root path (``schemaless.arrow_step``). No shuffle anywhere.
 from __future__ import annotations
 
 import functools
-import json
 import operator
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import MapType, StringType, StructType
+from pyspark.sql.types import DataType, MapType, StringType, StructField, StructType
 
 from kafka_custom_transforms_spark.operators import schemaless
+from kafka_custom_transforms_spark.operators.chain import Smt
 
 
 def _struct_hoist(col: Column, schema: StructType, field: str, keep: list[str]) -> Column | None:
@@ -60,12 +60,21 @@ def _struct_hoist(col: Column, schema: StructType, field: str, keep: list[str]) 
     return F.struct(*members)
 
 
+def _hoisted_type(schema: StructType, field: str, keep: list[str]) -> StructType | None:
+    """The type :func:`_struct_hoist` builds from ``schema``, or None for
+    the identity case (see ``drop_field._dropped_type``)."""
+    movable = [f for f in schema.fields if f.name not in keep]
+    if not movable:
+        return None
+    return StructType([f for f in schema.fields if f.name in keep] + [StructField(field, StructType(movable))])
+
+
 def hoist_field(
     field: str,
     keep_in_root: Sequence[str] = (),
     target: str = "value",
     json_schema: object | None = None,
-) -> Callable[[DataFrame], DataFrame]:
+) -> Smt:
     """Build a transform wrapping the ``target`` column under ``field``.
 
     Representation dispatch on the target's static dtype (SURVEY.md §1.4):
@@ -76,9 +85,9 @@ def hoist_field(
       - StringType  -> JSON schemaless path (H1/H2)
       - any other   -> primitive wrap (H6)
 
-    ``json_schema`` (DDL or StructType) selects the JVM path for the JSON
+    ``json_schema`` (DDL or StructType) selects the JVM route for the JSON
     keep_in_root split, where a value that does not fit it raises
-    ``schemaless.malformed_json``; without it, the exact Arrow-UDF path.
+    ``schemaless.malformed_json``; without it, the exact Arrow-UDF route.
     """
     if not isinstance(field, str) or not field:
         raise ValueError("hoist_field: 'field' is required (reference NO_DEFAULT_VALUE)")
@@ -91,6 +100,22 @@ def hoist_field(
         if inner:  # H2: omit the field when nothing moved
             root[field] = inner
         return root
+
+    def _plan(dtype: DataType) -> schemaless.Plan | None:
+        if not isinstance(dtype, StringType):
+            return None
+        if not keep:
+            return schemaless.Wrap("hoist_field", field)  # H1
+        if json_schema is None:
+            # Divergence: getValueAsMap throws on null (:52-60); null
+            # passes through here, the engine-wide convention (D1).
+            return schemaless.ArrowPlan("hoist_field", _split)
+        # H2 omission for free: when every movable field is null the
+        # inner struct is null and to_json drops the key entirely.
+        schema = schemaless.as_struct_type(json_schema)
+        hoisted = _hoisted_type(schema, field, keep)
+        rebuild = functools.partial(_struct_hoist, field=field, keep=keep) if hoisted else None
+        return schemaless.JvmPlan("hoist_field", schema, hoisted or schema, rebuild)
 
     def _transform(df: DataFrame) -> DataFrame:
         dtype = df.schema[target].dataType
@@ -108,29 +133,9 @@ def hoist_field(
                     "(SURVEY.md §1.4) for the H2 branch."
                 )
             new_col = F.create_map(F.lit(field), col)  # H1 — wraps nulls too
-        elif isinstance(dtype, StringType) and not keep:
-            # H1 for JSON text: splice the document (or JSON null) under the
-            # JSON-escaped field name, and check that the result parses.
-            new_col = schemaless.parsed_or_raise(
-                F.concat(
-                    F.lit("{" + json.dumps(field) + ":"),
-                    F.coalesce(col, F.lit("null")),
-                    F.lit("}"),
-                ),
-                "hoist_field",
-            )
-        elif isinstance(dtype, StringType) and json_schema is not None:
-            # H2 omission for free: when every movable field is null the
-            # inner struct is null and to_json drops the key entirely.
-            rebuild = functools.partial(_struct_hoist, field=field, keep=keep)
-            return schemaless.jvm_step(df, target, json_schema, rebuild, "hoist_field")
-        elif isinstance(dtype, StringType):
-            # Divergence: getValueAsMap throws on null (:52-60); null
-            # passes through here, the engine-wide convention (D1).
-            return schemaless.arrow_step(df, target, _split, "hoist_field")
         else:
             # H6 / H1-primitive: wrap a bare value.
             new_col = F.struct(col.alias(field))
         return schemaless.with_target(df, target, new_col)
 
-    return _transform
+    return Smt(target, _transform, _plan)

@@ -25,13 +25,13 @@ Scale: a single codegen-capable JVM expression; no shuffle, no Python.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import MapType
 
+from kafka_custom_transforms_spark.operators.chain import Smt
 
-def to_json_string(target: str = "value") -> Callable[[DataFrame], DataFrame]:
+
+def to_json_string(target: str = "value") -> Smt:
     """Build a transform serializing a MapType ``target`` column to JSON text;
     everything else passes through (J3)."""
 
@@ -40,4 +40,4 @@ def to_json_string(target: str = "value") -> Callable[[DataFrame], DataFrame]:
             return df.withColumn(target, F.to_json(F.col(target)))
         return df  # J3 — same DataFrame object, the reference's same-record passthrough
 
-    return _transform
+    return Smt(target, _transform, lambda dtype: None)

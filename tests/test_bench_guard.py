@@ -552,3 +552,32 @@ def test_guard_refuses_verdict_across_core_counts(tmp_path, monkeypatch, capsys)
                 bench_guard.main()
             assert exc.value.code == code
         assert said in capsys.readouterr().out
+
+
+def test_core_count_records_anchor_their_own_count(tmp_path, monkeypatch):
+    """``BENCH_rNN_cK.json`` is round NN taken on K cores: it sorts in its
+    round, not before r01, and each (round, core count) keeps one anchor,
+    so an 8-core record is compared with the newest 8-core anchor."""
+    import json
+
+    def record(name, cpus, q):
+        line = json.dumps({"metric": "m", "value": q, "queries": {"q": q}})
+        (tmp_path / name).write_text(json.dumps({"cpus": cpus, "tail": line}))
+
+    record("BENCH_r15.json", 32, 1.0)
+    record("BENCH_r15_c8.json", 8, 2.0)
+    record("BENCH_r16_c8.json", 8, 2.05)
+    record("BENCH_r16.json", 32, 1.02)
+    (tmp_path / "BENCH_r16_repro.json").write_text(
+        json.dumps({"metric": "m", "value": 1.01, "queries": {"q": 1.01}}))
+    monkeypatch.setattr(bench_guard, "REPO", str(tmp_path))
+    assert bench_guard._baseline_key("BENCH_r16_c8.json") == (16, 0)
+    assert bench_guard._baseline_key("BENCH_r16_c8_repro.json") == (16, 1)
+    assert [(n, b["cpus"]) for n, b in bench_guard._load_records()] == [
+        ("BENCH_r15_c8.json", 8), ("BENCH_r15.json", 32),
+        ("BENCH_r16_c8.json", 8), ("BENCH_r16_repro.json", 32),
+    ]
+    assert bench_guard.load_baseline(8)[0] == "BENCH_r16_c8.json"
+    assert bench_guard.load_baseline(32)[0] == "BENCH_r16_repro.json"
+    assert bench_guard.load_baseline()[0] == "BENCH_r16_repro.json"
+    assert bench_guard.load_baseline(4)[0] == "BENCH_r16_repro.json"

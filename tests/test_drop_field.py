@@ -10,7 +10,7 @@ import re
 import pytest
 from pyspark.sql import Row, functions as F
 
-from kafka_custom_transforms_spark import drop_fields, hoist_field
+from kafka_custom_transforms_spark import drop_fields, hoist_field, transform_chain
 from kafka_custom_transforms_spark.operators.schemaless import malformed_json, not_json_object
 
 
@@ -114,6 +114,19 @@ def test_non_object_json_raises_on_every_json_path(spark, path, value):
     got = [r.value for r in transform(ok).collect()]
     assert got[0] == ('{"f":null}' if wrap else None)
     assert json.loads(got[1]) in ({"b": 2}, {"a": 1, "f": {"b": 2}}, {"f": {"a": 1, "b": 2}})
+
+
+@pytest.mark.parametrize("wrap", [False, True])
+@pytest.mark.parametrize("schema", ["a int, b int", None])
+def test_fused_chain_raises_with_first_step_name(spark, schema, wrap):
+    """A chain runs the JSON steps on a column as one step, which raises
+    with its first step's name: step by step the same name raises for
+    every input, since later steps only see objects the first one wrote."""
+    hoist = hoist_field("f") if wrap else hoist_field("f", ["a"], json_schema=schema and "b int")
+    chain = transform_chain(drop_fields(["a"], json_schema=schema), hoist)
+    for value, error in (("[1]", not_json_object), ('{"a":1,', malformed_json)):
+        with pytest.raises(Exception, match=re.escape(error("drop_fields"))):
+            chain(spark.createDataFrame([(value,)], "value string")).collect()
 
 
 def test_unmatched_paths_silently_ignored(spark):

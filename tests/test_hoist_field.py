@@ -5,11 +5,13 @@ keepInRootFieldNames=keepInRoot,keepInRoot2)."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 from pyspark.sql import Row, functions as F
 
 from kafka_custom_transforms_spark import hoist_field
+from kafka_custom_transforms_spark.operators.schemaless import malformed_json
 
 
 def _flat_struct_df(spark, should=42, keep1=1, keep2=2):
@@ -84,6 +86,26 @@ def test_json_wrap_all_including_null_and_primitive(spark):
     out = hoist_field("magic")(df)
     vals = [r.value for r in out.collect()]
     assert vals == ['{"magic":' + t + "}" for t in texts] + ['{"magic":null}']
+
+
+# Text after a complete JSON value, which Spark's JSON reader does not
+# read: each either closes the spliced object or the spliced array early,
+# never both.
+_WRAP_EDGE_TEXTS = ["1}", '{"a":1}}', "1]", '1,"x":1', "[]]", "1}]", '{"k":"]"}', ' {"a":1} ', "1 2", '"x"]']
+
+
+@pytest.mark.parametrize("text", _WRAP_EDGE_TEXTS)
+def test_json_wrap_checks_like_json_loads(spark, text):
+    """H1 wraps exactly the texts ``json.loads`` accepts, spliced as is, and
+    raises ``malformed_json`` for the rest."""
+    df = spark.createDataFrame([(text,)], "value string")
+    try:
+        json.loads(text)
+    except json.JSONDecodeError:
+        with pytest.raises(Exception, match=re.escape(malformed_json("hoist_field"))):
+            hoist_field("f")(df).collect()
+    else:
+        assert hoist_field("f")(df).collect()[0].value == '{"f":' + text + "}"
 
 
 def test_json_wrap_escapes_field_name(spark):

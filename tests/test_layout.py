@@ -40,13 +40,12 @@ def test_z_value_rejects_wide_bits(spark):
         z_value(F.lit(1), F.lit(1), bits=32)
 
 
-def test_zorder_layout_concentrates_matches_in_fewer_files(spark):
+def test_zorder_layout_concentrates_matches_in_fewer_files(spark, tmp_path):
     """The point of the layout key, measured: write the same table (a) in
     arbitrary order and (b) range-partitioned+sorted by z — under a
     two-dimensional range predicate, the z-ordered layout puts every
     matching row in strictly fewer files, which is exactly what file-level
     min/max skipping prunes at scale."""
-    import tempfile
 
     from kafka_custom_transforms_spark.sources.tables import load_table
 
@@ -54,7 +53,7 @@ def test_zorder_layout_concentrates_matches_in_fewer_files(spark):
         "event_id", "user_id", F.expr("event_id % 128").alias("hb")
     )
     z = z_value(F.col("user_id"), F.col("hb"), bits=8)
-    d = tempfile.mkdtemp(prefix="kcts-zorder-")
+    d = str(tmp_path)
     n_files = 16
     ev.repartition(n_files).write.parquet(d + "/plain")
     (

@@ -3,15 +3,14 @@ across micro-batches (final-snapshot parity is oracle-checked)."""
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import functions as F
 
 from kafka_custom_transforms_spark.streaming.leaderboard import running_topk
 
 
-def test_versions_accumulate_counts_across_batches(spark):
-    d = tempfile.mkdtemp(prefix="kcts-lb-test-")
+def test_versions_accumulate_counts_across_batches(spark, tmp_path):
+    d = str(tmp_path)
     spark.createDataFrame(
         [("a", 1), ("a", 1), ("a", 2)], "event_type string, user_id long"
     ).coalesce(1).write.parquet(d + "/staged/f1")

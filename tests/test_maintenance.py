@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import glob
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -20,9 +19,9 @@ def _parquet_files(path: str) -> list[str]:
     return glob.glob(path + "/**/*.parquet", recursive=True)
 
 
-def test_compact_to_target_file_count(spark):
+def test_compact_to_target_file_count(spark, tmp_path):
     docs = load_table(spark, SF, "documents")  # 500 rows
-    d = tempfile.mkdtemp(prefix="kcts-compact-")
+    d = str(tmp_path)
     n_files = compact_to_target(docs, d + "/out", target_rows_per_file=120)
     assert n_files == 5  # ceil(500/120)
     files = _parquet_files(d + "/out")
@@ -30,18 +29,18 @@ def test_compact_to_target_file_count(spark):
     assert spark.read.parquet(d + "/out").count() == 500
 
 
-def test_compact_single_file_floor(spark):
+def test_compact_single_file_floor(spark, tmp_path):
     docs = load_table(spark, SF, "documents").limit(10)
-    d = tempfile.mkdtemp(prefix="kcts-compact1-")
+    d = str(tmp_path)
     assert compact_to_target(docs, d + "/out", target_rows_per_file=1000) == 1
     assert len(_parquet_files(d + "/out")) == 1
 
 
-def test_dynamic_partition_overwrite_touches_only_written_partition(spark):
+def test_dynamic_partition_overwrite_touches_only_written_partition(spark, tmp_path):
     ev = load_table(spark, SF, "events").select(
         "event_id", "user_id", "event_type"
     )
-    d = tempfile.mkdtemp(prefix="kcts-dynover-")
+    d = str(tmp_path)
     # seed a partitioned table over all event types
     ev.write.partitionBy("event_type").parquet(d + "/t")
     before = {p: set(_parquet_files(p)) for p in glob.glob(d + "/t/event_type=*")}

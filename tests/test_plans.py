@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from kafka_custom_transforms_spark import drop_fields, hoist_field, transform_chain
+from kafka_custom_transforms_spark import drop_fields, hoist_field, to_json_string, transform_chain
 from kafka_custom_transforms_spark.plans.explain import (
     broadcast_join_count,
     has_pushed_filter,
@@ -61,13 +61,18 @@ def test_smt_chain_adds_no_shuffle(spark, sf_dir):
 
 def _expr_count(plan, cls: str) -> int:
     """Expressions of class ``cls`` over every node of a physical plan,
-    through adaptive plans and their query stages."""
+    through adaptive plans and their query stages. A runtime-replaced
+    expression counts in its replacement, ``invoke(<cls>Evaluator(...))``."""
 
     def seq(s):
         return [s.apply(i) for i in range(s.size())]
 
+    def matches(e) -> bool:
+        name = e.getClass().getSimpleName()
+        return name == cls or (name == "Invoke" and e.toString().startswith(f"invoke({cls}Evaluator("))
+
     def walk(e) -> int:
-        return (e.getClass().getSimpleName() == cls) + sum(walk(c) for c in seq(e.children()))
+        return matches(e) + sum(walk(c) for c in seq(e.children()))
 
     nodes = seq(plan.children())
     name = plan.getClass().getSimpleName()
@@ -101,6 +106,67 @@ def test_smt_json_schema_step_parses_once(spark):
     assert out.collect()[0].value == (
         '{"hdr":{"id":1,"ts":2},"payload":{"meta":{"src":"s"},"body":{"user":3,"amount":1.5}}}'
     )
+
+
+_SMT_VALUE = (
+    "hdr struct<id:bigint,ts:bigint>, meta struct<trace:string,src:string>, "
+    "body struct<user:bigint,amount:double,debug:string>"
+)
+_SMT_DROPPED = "hdr struct<id:bigint,ts:bigint>, meta struct<src:string>, body struct<user:bigint,amount:double>"
+_SMT_TEXT = (
+    '{"hdr":{"id":1,"ts":2},"meta":{"trace":"t","src":"s"},"body":{"user":3,"amount":1.5,"debug":"d"}}'
+)
+
+
+def _smt_steps(col: str, schema: bool) -> list:
+    drop = drop_fields(["meta.trace", "body.debug"], target=col, json_schema=_SMT_VALUE if schema else None)
+    keep = [] if col == "v_map" else ["hdr"]
+    hoist = hoist_field("payload", keep, target=col, json_schema=_SMT_DROPPED if schema else None)
+    return [drop, hoist, to_json_string(target=col)]
+
+
+def _column_plan(out, col: str):
+    one = out.select(col)
+    one.collect()
+    return one._jdf.queryExecution().executedPlan()
+
+
+def test_smt_chain_parses_once_per_column(spark):
+    """transform_chain runs consecutive JSON steps on a column as one step,
+    as in smt_drain: the steps of four representation columns interleave
+    (every SMT touches only its own column), yet the json_schema column is
+    parsed and written once (2 and 2 step by step) and the schema-free
+    column runs one Python UDF (two chained before)."""
+    df = spark.createDataFrame(
+        [(None, _SMT_TEXT, _SMT_TEXT, {"a": {"b": "c"}})],
+        f"v_struct struct<{_SMT_VALUE.replace(' struct', ':struct')}>, v_json_schema string, "
+        "v_json_udf string, v_map map<string,map<string,string>>",
+    )
+    per_col = [_smt_steps("v_struct", False), _smt_steps("v_json_schema", True),
+               _smt_steps("v_json_udf", False), _smt_steps("v_map", False)]
+    out = transform_chain(*(steps[i] for i in range(3) for steps in per_col))(df)
+    plan = _column_plan(out, "v_json_schema")
+    assert (_expr_count(plan, "JsonToStructs"), _expr_count(plan, "StructsToJson")) == (1, 1)
+    assert _expr_count(_column_plan(out, "v_json_udf"), "PythonUDF") == 1
+    row = out.collect()[0]
+    want = '{"hdr":{"id":1,"ts":2},"payload":{"meta":{"src":"s"},"body":{"user":3,"amount":1.5}}}'
+    assert (row.v_json_schema, row.v_json_udf) == (want, want)
+
+
+@pytest.mark.parametrize("between", ["opaque", "misfit"])
+def test_smt_chain_flushes_at_opaque_step_or_schema_misfit(spark, between):
+    """A callable that is not an SMT may read the column, and a schema that
+    is not the previous step's output type would read its to_json back
+    differently: both leave two parses."""
+    df = spark.createDataFrame([(_SMT_TEXT,)], "value string")
+    drop = drop_fields(["meta.trace", "body.debug"], json_schema=_SMT_VALUE)
+    hoist = hoist_field("payload", ["hdr"], json_schema=_SMT_DROPPED)
+    if between == "opaque":
+        chain = transform_chain(drop, lambda d: d, hoist)
+    else:
+        chain = transform_chain(drop, hoist_field("payload", ["hdr"], json_schema=_SMT_VALUE))
+    assert _expr_count(_column_plan(chain(df), "value"), "JsonToStructs") == 2
+    assert _expr_count(_column_plan(transform_chain(drop, hoist)(df), "value"), "JsonToStructs") == 1
 
 
 def test_smt_struct_ops_stay_in_codegen(spark, sf_dir):
@@ -197,16 +263,15 @@ def test_salted_agg_rejects_non_decomposable(spark, sf_dir):
         salted_agg(ev, ["event_type"], {"m": ("value", "avg")})
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
+def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     """Bucketed+sorted storage on the join key must yield a sort-merge join
     with ZERO Exchange nodes on the join inputs (the write paid the shuffle
     once) — the repeated-join pattern that matters most at 100 TB."""
-    import tempfile
 
     from kafka_custom_transforms_spark.plans.explain import plan_str
     from kafka_custom_transforms_spark.sources.bucketing import bucketed_equijoin
 
-    d = tempfile.mkdtemp(prefix="kcts-bucketed-test-")
+    d = str(tmp_path)
     orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     j = bucketed_equijoin(
@@ -221,18 +286,17 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     assert j.count() == plain
 
 
-def test_bucketed_aggregation_has_no_exchange(spark, sf_dir):
+def test_bucketed_aggregation_has_no_exchange(spark, sf_dir, tmp_path):
     """Aggregation on the bucket key must need ZERO Exchange nodes — the
     bucketed scan already provides the required distribution. This is the
     prescribed fix for map-side-combine saturation on high-cardinality
     group keys (the measured q18 byte step in SHUFFLE.md / SURVEY §8):
     bucketing the fact table turns the ~input-sized shuffle into none."""
-    import tempfile
 
     from kafka_custom_transforms_spark.plans.explain import plan_str
     from kafka_custom_transforms_spark.sources.bucketing import write_bucketed_table
 
-    d = tempfile.mkdtemp(prefix="kcts-bucketed-agg-test-")
+    d = str(tmp_path)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     write_bucketed_table(li, "kcts_bucketed_agg_li", ["l_orderkey"], 4, f"{d}/li")
     agg = (

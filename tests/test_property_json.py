@@ -136,3 +136,108 @@ def test_json_chain_matches_composed_models(spark, objs, paths):
         _model_hoist(_model_drop(o, "", set(paths)), "magic", set(keep)) for o in objs
     ]
     assert got == want
+
+
+# ---- fused chain == step by step (byte for byte) ----
+# transform_chain runs consecutive JSON steps on a column as one step: one
+# parse, the rebuilds or dict functions in order, one serialization. Each
+# step applied alone parses and writes its own text. The bytes must agree,
+# for the split hoist (H2) and the wrap-all (H1) folded into the run.
+
+JVM_VALUE = "a bigint, b double, c decimal(10,2), t timestamp, s string, n struct<x: bigint, y: struct<z: string>>"
+JVM_DROPPED = "a bigint, b double, c decimal(10,2), t timestamp, n struct<x: bigint, y: struct<>>"
+JVM_DROP = ["s", "n.y.z"]
+
+
+def _nullable(strategy):
+    return st.one_of(st.none(), strategy)
+
+
+_TIMESTAMPS = st.builds(
+    lambda secs, micros: f"{secs}.{micros:06d}",
+    st.integers(-(10**10), 10**10),
+    st.integers(0, 999_999),
+)
+JVM_DOCS = st.fixed_dictionaries(
+    {},
+    optional={
+        "a": _nullable(st.integers(-(2**63), 2**63 - 1)),
+        "b": _nullable(st.floats(allow_nan=False, allow_infinity=False)),
+        "c": _nullable(st.integers(-(10**10) + 1, 10**10 - 1).map(lambda cents: cents / 100)),
+        "s": _nullable(st.text(max_size=6)),
+        "n": _nullable(st.fixed_dictionaries(
+            {}, optional={"x": _nullable(st.integers(-5, 5)),
+                          "y": _nullable(st.fixed_dictionaries({}, optional={"z": _nullable(st.text(max_size=3))}))},
+        )),
+        "t": _nullable(_TIMESTAMPS),
+    },
+)
+ARROW_SCALARS = st.one_of(
+    st.none(),
+    st.sampled_from([1.0, -0.0, float("nan"), 10**39 + 7, -(10**40) + 1]),
+    st.floats(),
+    st.integers(),
+    st.text(st.characters(codec="utf-8", exclude_characters="\x00"), max_size=5),
+)
+ARROW_DOCS = st.recursive(
+    st.dictionaries(KEYS, ARROW_SCALARS, max_size=3),
+    lambda inner: st.dictionaries(KEYS, st.one_of(ARROW_SCALARS, inner, st.lists(st.one_of(ARROW_SCALARS, st.lists(ARROW_SCALARS, max_size=2)), max_size=3)), max_size=3),
+    max_leaves=8,
+)
+
+
+def _jvm_text(doc: dict) -> str:
+    """``doc`` as JSON text; a timestamp is written from its epoch seconds
+    with micros, in UTC."""
+    from datetime import datetime, timedelta, timezone
+
+    if doc.get("t") is not None:
+        secs, micros = (int(x) for x in doc["t"].split("."))
+        when = datetime(1970, 1, 1, tzinfo=timezone.utc) + timedelta(seconds=secs, microseconds=micros)
+        doc = {**doc, "t": when.strftime("%Y-%m-%dT%H:%M:%S.%fZ")}
+    return json.dumps(doc)
+
+
+def _fused_and_stepwise(spark, texts, drop, hoist):
+    df = spark.createDataFrame([(t,) for t in texts], "value string")
+    fused = transform_chain(drop, hoist, to_json_string())(df)
+    stepwise = to_json_string()(hoist(drop(df)))
+    return [r.value for r in fused.collect()], [r.value for r in stepwise.collect()]
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(docs=st.lists(_nullable(JVM_DOCS), min_size=1, max_size=6), wrap=st.booleans())
+def test_fused_jvm_chain_matches_stepwise_bytes(spark, docs, wrap):
+    texts = [None if d is None else _jvm_text(d) for d in docs]
+    drop = drop_fields(JVM_DROP, json_schema=JVM_VALUE)
+    hoist = hoist_field("p") if wrap else hoist_field("p", ["a", "t"], json_schema=JVM_DROPPED)
+    fused, stepwise = _fused_and_stepwise(spark, texts, drop, hoist)
+    assert fused == stepwise
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(docs=st.lists(_nullable(ARROW_DOCS), min_size=1, max_size=6), paths=PATHS, wrap=st.booleans())
+def test_fused_arrow_chain_matches_stepwise_bytes(spark, docs, paths, wrap):
+    texts = [None if d is None else json.dumps(d, ensure_ascii=False) for d in docs]
+    hoist = hoist_field("p") if wrap else hoist_field("p", ["k1", "parent"])
+    fused, stepwise = _fused_and_stepwise(spark, texts, drop_fields(paths or ["x"]), hoist)
+    assert fused == stepwise
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
+@given(drop=st.lists(st.sampled_from(["a", "s", "n", "n.x", "n.y", "n.y.z", "zz"]), max_size=3),
+       keep=st.lists(st.sampled_from(["a", "b", "c", "t", "s", "n"]), max_size=6))
+def test_jvm_plan_output_type_is_the_rebuilds(spark, drop, keep):
+    """The chain decides JVM fusion from each plan's declared output type
+    without asking Spark; it must be the type Spark gives the rebuild."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType
+
+    from kafka_custom_transforms_spark.operators.schemaless import _shape
+
+    df = spark.createDataFrame([("{}",)], "value string")
+    for smt in (drop_fields(drop or ["zz"], json_schema=JVM_VALUE), hoist_field("p", keep or ["a"], json_schema=JVM_VALUE)):
+        plan = smt.plan(StringType())
+        parsed = df.select(F.from_json("value", plan.schema).alias("v"))
+        built = parsed.select(plan.rebuild(F.col("v"), plan.schema)) if plan.rebuild else parsed
+        assert _shape(built.schema[0].dataType) == _shape(plan.out)

@@ -42,14 +42,13 @@ def test_partition_planning_gives_one_task_per_partition(spark):
     assert pids == 5
 
 
-def test_stream_reader_resumes_from_checkpoint_exactly_once(spark):
+def test_stream_reader_resumes_from_checkpoint_exactly_once(spark, tmp_path):
     """Kill-and-restart recovery: repeated availableNow runs against one
     checkpoint must drain the bounded stream with every offset delivered
     exactly once (the committed-offset contract)."""
-    import tempfile
 
     register_envelope_source(spark)
-    d = tempfile.mkdtemp(prefix="kcts-pystream-test-")
+    d = str(tmp_path)
     env = (
         spark.readStream.format("kcts_envelope")
         .option("rows_per_batch", 37)

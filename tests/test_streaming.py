@@ -3,8 +3,6 @@ watermarked dedup drops duplicates with bounded state."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 import uuid
 
 import pytest
@@ -25,11 +23,10 @@ def _run_stream(df, name):
 
 
 @pytest.fixture(scope="module")
-def staged_events(spark, sf_dir):
-    d = tempfile.mkdtemp()
+def staged_events(spark, sf_dir, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("staged_events"))
     load_table(spark, sf_dir, "events").limit(200).write.mode("overwrite").parquet(d + "/ev")
     yield d + "/ev"
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_chain_identical_batch_vs_stream(spark, staged_events):
@@ -98,7 +95,7 @@ def test_sessionize_streaming_state_plumbing(spark, staged_events):
     ]
 
 
-def test_sessionize_streaming_honors_renamed_columns(spark, staged_events):
+def test_sessionize_streaming_honors_renamed_columns(spark, staged_events, tmp_path):
     """Non-default key_col/ts_col must flow through the stateful update
     function (regression: the update fn once read pdf['ts'] literally and
     hard-coded the user_id output schema)."""
@@ -106,7 +103,7 @@ def test_sessionize_streaming_honors_renamed_columns(spark, staged_events):
 
     batch = spark.read.parquet(staged_events).withColumnRenamed("user_id", "uid") \
         .withColumnRenamed("ts", "event_ts")
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     batch.write.mode("overwrite").parquet(d + "/renamed")
     stream = spark.readStream.schema(batch.schema).parquet(d + "/renamed")
     out = sessionize(stream, key_col="uid", ts_col="event_ts", gap="30 minutes")
@@ -116,7 +113,6 @@ def test_sessionize_streaming_honors_renamed_columns(spark, staged_events):
         "uid", "n_events", "first_ts", "last_ts",
     ]
     assert session_schema(batch, "uid").startswith("uid bigint")
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_duration_parsing():
@@ -131,12 +127,10 @@ def test_duration_parsing():
         _duration_to_ms("soon")
 
 
-def test_parquet_sink_exactly_once(spark, staged_events):
-    import tempfile
-
+def test_parquet_sink_exactly_once(spark, staged_events, tmp_path):
     from kafka_custom_transforms_spark.streaming.sinks import write_parquet_stream
 
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     batch = spark.read.parquet(staged_events)
     stream = spark.readStream.schema(batch.schema).parquet(staged_events)
     q = write_parquet_stream(stream, d + "/out", d + "/ckpt")
@@ -147,22 +141,18 @@ def test_parquet_sink_exactly_once(spark, staged_events):
     q2 = write_parquet_stream(stream2, d + "/out", d + "/ckpt")
     q2.awaitTermination(120)
     assert spark.read.parquet(d + "/out").count() == 200
-    shutil.rmtree(d, ignore_errors=True)
 
 
-def test_foreach_batch_sink(spark, staged_events):
-    import tempfile
-
+def test_foreach_batch_sink(spark, staged_events, tmp_path):
     from kafka_custom_transforms_spark.streaming.sinks import write_foreach_batch
 
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     seen = []
     batch = spark.read.parquet(staged_events)
     stream = spark.readStream.schema(batch.schema).parquet(staged_events)
     q = write_foreach_batch(stream, lambda bdf, bid: seen.append((bid, bdf.count())), d + "/ckpt")
     q.awaitTermination(120)
     assert sum(n for _, n in seen) == 200
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_windowed_counts_stream_matches_batch(spark, staged_events):
@@ -211,12 +201,11 @@ def test_mixture_sample_is_stream_legal(spark, staged_events):
     assert got == want and 0 < len(got) < 200
 
 
-def test_upsert_parquet_sink_latest_per_key(spark):
+def test_upsert_parquet_sink_latest_per_key(spark, tmp_path):
     """MERGE-into-parquet via foreachBatch: stage user events as a file
     stream, upsert by user_id with event_id as the version — the final
     table holds exactly one row per user (the max-event_id row), and the
     pointer read never sees a partial write."""
-    import tempfile
 
     from pyspark.sql import Window, functions as F
 
@@ -226,7 +215,7 @@ def test_upsert_parquet_sink_latest_per_key(spark):
         upsert_parquet_sink,
     )
 
-    d = tempfile.mkdtemp(prefix="kcts-upsert-")
+    d = str(tmp_path)
     ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
         "event_id", "user_id", "event_type"
     )
@@ -257,7 +246,7 @@ def test_upsert_parquet_sink_latest_per_key(spark):
     assert len(got) == ev.select("user_id").distinct().count()
 
 
-def test_watermark_drops_late_rows_in_windowed_counts(spark):
+def test_watermark_drops_late_rows_in_windowed_counts(spark, tmp_path):
     """Late-data semantics pinned end to end: a record behind the
     CHECKPOINTED watermark is dropped from the streamed windowed
     aggregation, and on-time windows emit exactly the batch counts.
@@ -265,13 +254,12 @@ def test_watermark_drops_late_rows_in_windowed_counts(spark):
     delay and persists in the checkpoint); run 2 delivers a late record
     (behind that watermark -> dropped) plus a closer record that pushes
     the watermark past the on-time window end so it finally emits."""
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from kafka_custom_transforms_spark.streaming.windows import windowed_counts
 
-    d = tempfile.mkdtemp(prefix="kcts-late-")
+    d = str(tmp_path)
 
     def _stage(rows, sub):
         spark.createDataFrame(rows, "event_id long, ts_s string").select(
@@ -364,7 +352,7 @@ def test_sessionize_streaming_late_event_does_not_regress_session_end(spark):
     assert str(r["last_ts"]) == "2024-01-01 12:26:00"
 
 
-def test_upsert_sink_survives_pointer_dir_collision(spark):
+def test_upsert_sink_survives_pointer_dir_collision(spark, tmp_path):
     """Crash-replay/redeploy shape: a second run with a FRESH checkpoint
     replays batch ids whose versioned dirs already exist (and the pointer
     may name v{batch_id} itself). The sink must pick a fresh directory —
@@ -375,7 +363,7 @@ def test_upsert_sink_survives_pointer_dir_collision(spark):
         upsert_parquet_sink,
     )
 
-    d = tempfile.mkdtemp(prefix="kcts-upsert2-")
+    d = str(tmp_path)
     spark.createDataFrame(
         [(1, "a", 10), (2, "b", 11)], "k long, v string, seq long"
     ).coalesce(1).write.parquet(d + "/in/f0")
@@ -388,7 +376,6 @@ def test_upsert_sink_survives_pointer_dir_collision(spark):
     q2.awaitTermination()
     rows = sorted(map(tuple, read_upsert_table(spark, d + "/table").collect()))
     assert rows == [(1, "a", 10), (2, "b", 11)]
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_stream_full_outer_interval_matches_batch_full_join(spark, sf_dir):

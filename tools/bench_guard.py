@@ -90,32 +90,39 @@ def _bench_line(text: str) -> dict | None:
     return None
 
 
+# BENCH_rNN[_cK][_repro].json: round NN, a record taken on K cores (no
+# tag: the round's default count), an idle rerun of that round's record.
+_NAME = re.compile(r"_r(\d+)(?:_c(\d+))?(_repro)?\.json$")
+
+
 def _baseline_key(path: str) -> tuple[int, int]:
     """Sort key: round number, with a same-round ``*_repro`` file ranked
     ABOVE the official record. Official records are taken under whatever
     load the driver's machine happened to have (round 6's medians ran
     1.5-1.8x over idle on untouched plans); the committed repro files are
     idle-machine reruns, so they are the honest regression anchor."""
-    m = re.search(r"_r(\d+)(_repro)?\.json$", path)
+    m = _NAME.search(path)
     if not m:
         return (-1, 0)
-    return (int(m.group(1)), 1 if m.group(2) else 0)
+    return (int(m.group(1)), 1 if m.group(3) else 0)
 
 
 def _load_records() -> list[tuple[str, dict]]:
-    """All parseable committed bench records, one per round (the repro
-    outranks the same-round official — officials can be taken under
-    driver-machine load), in ascending round order. Malformed files
-    (truncated write → invalid JSON, non-dict top level, no bench line —
-    BENCH_r03.json's tail capture truncated the line's head) are skipped
-    with a note; they must not abort the guard. Each record's ``cpus`` is
-    its own field, else its round's official record's (an official record
-    wraps the bench line with the core count it ran on; older repro files
-    carry none)."""
+    """All parseable committed bench records, one anchor per (round, core
+    count) (the repro outranks the same-round official — officials can be
+    taken under driver-machine load), in ascending (round, cores) order.
+    Malformed files (truncated write → invalid JSON, non-dict top level, no
+    bench line — BENCH_r03.json's tail capture truncated the line's head)
+    are skipped with a note; they must not abort the guard. Each record's
+    ``cpus`` is its own field, else that of the official record of its
+    round and ``_cK`` tag (an official record wraps the bench line with the
+    core count it ran on; older repro files carry none)."""
     paths = sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json")), key=_baseline_key)
-    per_round: dict[int, tuple[tuple[int, int], str, dict]] = {}
-    official_cpus: dict[int, int] = {}
+    anchors: dict[tuple[int, int], tuple[tuple[int, int], str, dict]] = {}
+    official_cpus: dict[tuple[int, str | None], int] = {}
     for path in paths:
+        m = _NAME.search(path)
+        tag = (_baseline_key(path)[0], m and m.group(2))
         try:
             with open(path) as f:
                 raw = json.load(f)
@@ -130,21 +137,18 @@ def _load_records() -> list[tuple[str, dict]]:
             else:
                 bench = _bench_line(raw.get("tail", ""))
                 if raw.get("cpus"):
-                    official_cpus[_baseline_key(path)[0]] = raw["cpus"]
+                    official_cpus[tag] = raw["cpus"]
         if not bench:
             print(f"bench_guard: {os.path.basename(path)} has no parseable "
                   "bench line, skipping")
             continue
+        if "cpus" not in bench and tag in official_cpus:
+            bench = {**bench, "cpus": official_cpus[tag]}
         key = _baseline_key(path)
-        if key[0] not in per_round or key > per_round[key[0]][0]:
-            per_round[key[0]] = (key, os.path.basename(path), bench)
-    records = []
-    for r in sorted(per_round):
-        _, name, bench = per_round[r]
-        if "cpus" not in bench and r in official_cpus:
-            bench = {**bench, "cpus": official_cpus[r]}
-        records.append((name, bench))
-    return records
+        slot = (key[0], bench.get("cpus") or 0)
+        if slot not in anchors or key > anchors[slot][0]:
+            anchors[slot] = (key, os.path.basename(path), bench)
+    return [anchors[slot][1:] for slot in sorted(anchors)]
 
 
 def _median(xs: list[float]) -> float:
@@ -170,11 +174,17 @@ def _chain_ratio(pred: dict, cand: dict) -> float | None:
     return med
 
 
-def load_baseline() -> tuple[str, dict]:
+def load_baseline(cpus: int | None = None) -> tuple[str, dict]:
+    """The anchor for a record taken on ``cpus`` cores: the newest clean
+    record at that count, else (no record at that count, or ``cpus`` not
+    given) at the newest record's count."""
     records = _load_records()
     if not records:
         print("bench_guard: no parseable BENCH_r*.json baseline found")
         sys.exit(0)
+    counts = [b.get("cpus") for _, b in records]
+    cpus = cpus if cpus in counts else counts[-1]
+    records = [r for r, c in zip(records, counts) if c == cpus]
     # Clean-chain walk: the newest record anchors ONLY if it was itself a
     # clean measurement relative to the round before it; otherwise walk
     # back to the newest record that was (r13 verdict — a drift-poisoned
@@ -285,8 +295,8 @@ def cpu_mismatch(base: dict, cur: dict) -> str | None:
 
 
 def main() -> None:
-    base_name, base = load_baseline()
     cur = load_current(sys.argv[1:])
+    base_name, base = load_baseline(cur.get("cpus"))
     mismatch = cpu_mismatch(base, cur)
     if mismatch:
         print(f"bench_guard: NO VERDICT vs {base_name} — {mismatch}; bless a "

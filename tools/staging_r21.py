@@ -77,11 +77,10 @@ def stream_outer_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconciles to the purchase universe. Same sentinel/bucket machinery
     as the stream_outer_interval row (left side single-bucket so an
     unmatched purchase emits exactly ONE null row)."""
-    import tempfile
-
+    from __spark_entry__ import _scratch_dir
     from kafka_custom_transforms_spark.streaming.sinks import write_parquet_stream
 
-    d = tempfile.mkdtemp(prefix="kcts-ssevict-")
+    d = _scratch_dir("kcts-ssevict-")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     sentinel = ev.agg(F.max("ts").alias("m")).select(
         F.lit(-1).cast("long").alias("event_id"),
