@@ -51,11 +51,10 @@ def _struct_hoist(col: Column, schema: StructType, field: str, keep: list[str]) 
         return None  # H5 — nothing moves, transform is the identity
     # Field metadata (the Connect schema basics slot) rides the aliases
     # through the rebuild — SchemaUtil.copySchemaBasics parity.
-    inner = F.struct(
-        *[col.getField(n).alias(n, metadata=schema[n].metadata) for n in movable]
-    )
-    any_set = functools.reduce(operator.or_, [col.getField(n).isNotNull() for n in movable])
-    members = [col.getField(n).alias(n, metadata=schema[n].metadata) for n in root_fields]
+    child = {f.name: col.getField(f.name) for f in schema.fields}
+    inner = F.struct(*[child[n].alias(n, metadata=schema[n].metadata) for n in movable])
+    any_set = functools.reduce(operator.or_, [child[n].isNotNull() for n in movable])
+    members = [child[n].alias(n, metadata=schema[n].metadata) for n in root_fields]
     members.append(F.when(any_set, inner).alias(field))
     return F.struct(*members)
 

@@ -11,16 +11,18 @@ once per chain (PAPER.md §1.1): ``transform_chain`` groups the runs
 (:func:`joins`), a step applied alone is a run of one.
 
 SQL NULL passes through (D1); a non-object raises :func:`not_json_object`
-(requireMap / getValueAsMap); text that does not parse, or on the JVM
-route does not fit the schema, :func:`malformed_json` — always with the
-name of the run's first step, since every later step sees only the
-objects it builds. A wrap-all that starts a run splices the text and checks
-its output with :func:`parsed_or_raise`; one that ends a run wraps the
-object the run built, which needs no check.
+(requireMap / getValueAsMap); text that does not parse as one JSON
+value, or on the JVM route does not fit the schema,
+:func:`malformed_json` — always with the name of the run's first step,
+since every later step sees only the objects it builds. A wrap-all that
+starts a run splices the text and checks its output with
+:func:`parsed_or_raise`; one that ends a run wraps the object the run
+built, which needs no check.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 from collections.abc import Callable, Sequence
@@ -34,6 +36,8 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StringType, StructFi
 # fills with the raw text of a record it cannot parse into the schema.
 PARSED = "__smt_parsed"
 CORRUPT = "__smt_corrupt"
+# The key jvm_step parses a record's text under.
+_SPLICED = "v"
 
 # jvm_step's object test in Python: Java regex whitespace (\s), then "{".
 _OBJECT_PREFIX = re.compile(r"[ \t\n\x0b\f\r]*\{")
@@ -48,7 +52,14 @@ def malformed_json(transform: str) -> str:
 
 
 def as_struct_type(schema: DataType | str) -> StructType:
-    return schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    return schema if isinstance(schema, StructType) else _from_ddl(schema)
+
+
+@functools.cache
+def _from_ddl(ddl: str) -> StructType:
+    """A DDL string's struct type: one JVM round trip per distinct string,
+    not one per ``plan()`` call."""
+    return StructType.fromDDL(ddl)
 
 
 def with_target(df: DataFrame, target: str, value: Column) -> DataFrame:
@@ -147,25 +158,36 @@ def jvm_step(df: DataFrame, target: str, run: Sequence[JvmPlan], wrap: str | Non
     ``from_json`` (inline, each gets its own pruned parse). The byte-prefix
     object test decides almost every record before the regex, which copies
     the string (1M-record noop-sink run, 4 vCPUs: regex alone ~4% of a
-    drop's wall time, prefix-first none)."""
+    drop's wall time, prefix-first none).
+
+    The text is parsed spliced under a key and checked spliced into
+    ``[...]``, the two splices :func:`parsed_or_raise` checks for a wrap,
+    so text after the object (``{"a":1}}``, ``{"a":1}]``, ``{"a":1},1``)
+    is :func:`malformed_json`, as it is for ``json.loads``. The ``[...]``
+    check reads ``array<struct<>>``, which skips every field, where
+    ``array<string>`` would write each record back as text."""
     head = run[0]
     text, value = F.col(target), None
     for p in run:
         if p.rebuild is not None:
-            value = p.rebuild(F.col(PARSED) if value is None else value, p.schema)
+            value = p.rebuild(F.col(PARSED)[_SPLICED] if value is None else value, p.schema)
     doc = text if value is None else F.to_json(value)
     if wrap is not None:
         doc = F.concat(F.lit(_opening(wrap)), doc, F.lit("}"))
     is_object = text.startswith("{") | text.rlike(r"^\s*\{")
+    listed = F.from_json(F.concat(F.lit("["), text, F.lit("]")), ArrayType(StructType()))
+    malformed = F.col(PARSED)[CORRUPT].isNotNull() | listed.isNull()
     checked = (
-        F.when(is_object & F.col(PARSED)[CORRUPT].isNotNull(), F.raise_error(F.lit(malformed_json(head.transform))))
+        F.when(is_object & malformed, F.raise_error(F.lit(malformed_json(head.transform))))
         .when(is_object, doc)
         .when(text.isNotNull(), F.raise_error(F.lit(not_json_object(head.transform))))
     )
     if wrap is not None:
         checked = checked.otherwise(F.lit(_opening(wrap) + "null}"))
-    with_corrupt = StructType([*head.schema.fields, StructField(CORRUPT, StringType())])
-    parse = F.from_json(text, with_corrupt, {"columnNameOfCorruptRecord": CORRUPT})
+    spliced = StructType([StructField(_SPLICED, head.schema), StructField(CORRUPT, StringType())])
+    parse = F.from_json(
+        F.concat(F.lit(_opening(_SPLICED)), text, F.lit("}")), spliced, {"columnNameOfCorruptRecord": CORRUPT}
+    )
     return with_target(df.withColumn(PARSED, parse), target, checked).drop(PARSED)
 
 

@@ -10,6 +10,14 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
     (e.g. 2000+) or set ``spark.sql.adaptive.coalescePartitions.*``.
   - Broadcast threshold left at default 10 MB; operators that *know* a side is
     small (dimension tables, query vectors, centroids) broadcast explicitly.
+  - Python workers fork from the engine's daemon (:data:`DAEMON_MODULE`),
+    PySpark's own daemon with archive import caches kept across tasks: every
+    Python task otherwise re-reads the directories of ``pyspark.zip``, the
+    py4j zip and the spark-core jar (a median 291 ms per task on 4 vCPUs;
+    see ``daemon``). The workers must be able to import the package, as every
+    package UDF already needs, since cloudpickle references package
+    functions by module. Opt out with
+    ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``.
 """
 
 from __future__ import annotations
@@ -17,6 +25,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The module Python workers fork from (``spark.python.daemon.module``).
+DAEMON_MODULE = "kafka_custom_transforms_spark.daemon"
 
 
 def get_spark(
@@ -38,6 +49,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .config("spark.sql.parquet.filterPushdown", "true")
         # The driver testdata stores TIMESTAMP(NANOS), which Spark 4 rejects
         # by default; read nanos as longs session-wide (load_table converts

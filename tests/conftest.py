@@ -7,6 +7,8 @@ import os
 import pytest
 from pyspark.sql import SparkSession
 
+from kafka_custom_transforms_spark.session import DAEMON_MODULE
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
@@ -20,6 +22,7 @@ def spark() -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", "6g")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -76,6 +76,12 @@ _BAD_JSON = {
     "null": not_json_object,
     "[1,": not_json_object,
     '{"a":1,': malformed_json,
+    # Text after a complete object, which from_json alone stops before.
+    '{"a":1}}': malformed_json,
+    '{"a":1}]': malformed_json,
+    '{"a":1},"x":1': malformed_json,
+    '{"a":1},1': malformed_json,
+    '{"a":1} 1': malformed_json,
     _MISFIT: malformed_json,
 }
 

@@ -59,17 +59,19 @@ def test_smt_chain_adds_no_shuffle(spark, sf_dir):
     assert shuffle_count(out) == 0
 
 
-def _expr_count(plan, cls: str) -> int:
-    """Expressions of class ``cls`` over every node of a physical plan,
-    through adaptive plans and their query stages. A runtime-replaced
-    expression counts in its replacement, ``invoke(<cls>Evaluator(...))``."""
+def _expr_count(plan, cls: str, returns: str | None = None) -> int:
+    """Expressions of class ``cls`` (of type ``returns``, e.g. ``"struct"``,
+    when given) over every node of a physical plan, through adaptive plans
+    and their query stages. A runtime-replaced expression counts in its
+    replacement, ``invoke(<cls>Evaluator(...))``."""
 
     def seq(s):
         return [s.apply(i) for i in range(s.size())]
 
     def matches(e) -> bool:
         name = e.getClass().getSimpleName()
-        return name == cls or (name == "Invoke" and e.toString().startswith(f"invoke({cls}Evaluator("))
+        found = name == cls or (name == "Invoke" and e.toString().startswith(f"invoke({cls}Evaluator("))
+        return found and (returns is None or e.dataType().typeName() == returns)
 
     def walk(e) -> int:
         return matches(e) + sum(walk(c) for c in seq(e.children()))
@@ -80,14 +82,20 @@ def _expr_count(plan, cls: str) -> int:
         nodes.append(plan.executedPlan())
     elif name.endswith("QueryStageExec"):
         nodes.append(plan.plan())
-    return sum(walk(e) for e in seq(plan.expressions())) + sum(_expr_count(n, cls) for n in nodes)
+    return sum(walk(e) for e in seq(plan.expressions())) + sum(_expr_count(n, cls, returns) for n in nodes)
+
+
+def _json_parses(plan) -> tuple[int, int]:
+    """``from_json`` with a schema, and ``[text]`` checks (``array<string>``)."""
+    return _expr_count(plan, "JsonToStructs", "struct"), _expr_count(plan, "JsonToStructs", "array")
 
 
 def test_smt_json_schema_step_parses_once(spark):
     """One JSON parse per json_schema step: the parse sits in its own
     projection, so the fields the rebuild reads do not each get a pruned
     from_json of their own (6 for this drop and 4 for this hoist when the
-    parse was inline, 10 for the chain). Shape of the smt_drain value."""
+    parse was inline, 10 for the chain); each parse has one ``[text]``
+    check. Shape of the smt_drain value."""
     value = (
         "hdr struct<id:bigint,ts:bigint>, meta struct<trace:string,src:string>, "
         "body struct<user:bigint,amount:double,debug:string>"
@@ -102,7 +110,7 @@ def test_smt_json_schema_step_parses_once(spark):
     )
     for out, parses in ((drop(df), 1), (hoist(df), 1), (hoist(drop(df)), 2)):
         out.collect()
-        assert _expr_count(out._jdf.queryExecution().executedPlan(), "JsonToStructs") == parses
+        assert _json_parses(out._jdf.queryExecution().executedPlan()) == (parses, parses)
     assert out.collect()[0].value == (
         '{"hdr":{"id":1,"ts":2},"payload":{"meta":{"src":"s"},"body":{"user":3,"amount":1.5}}}'
     )
@@ -146,7 +154,7 @@ def test_smt_chain_parses_once_per_column(spark):
                _smt_steps("v_json_udf", False), _smt_steps("v_map", False)]
     out = transform_chain(*(steps[i] for i in range(3) for steps in per_col))(df)
     plan = _column_plan(out, "v_json_schema")
-    assert (_expr_count(plan, "JsonToStructs"), _expr_count(plan, "StructsToJson")) == (1, 1)
+    assert (*_json_parses(plan), _expr_count(plan, "StructsToJson")) == (1, 1, 1)
     assert _expr_count(_column_plan(out, "v_json_udf"), "PythonUDF") == 1
     row = out.collect()[0]
     want = '{"hdr":{"id":1,"ts":2},"payload":{"meta":{"src":"s"},"body":{"user":3,"amount":1.5}}}'
@@ -165,8 +173,8 @@ def test_smt_chain_flushes_at_opaque_step_or_schema_misfit(spark, between):
         chain = transform_chain(drop, lambda d: d, hoist)
     else:
         chain = transform_chain(drop, hoist_field("payload", ["hdr"], json_schema=_SMT_VALUE))
-    assert _expr_count(_column_plan(chain(df), "value"), "JsonToStructs") == 2
-    assert _expr_count(_column_plan(transform_chain(drop, hoist)(df), "value"), "JsonToStructs") == 1
+    assert _json_parses(_column_plan(chain(df), "value")) == (2, 2)
+    assert _json_parses(_column_plan(transform_chain(drop, hoist)(df), "value")) == (1, 1)
 
 
 def test_smt_struct_ops_stay_in_codegen(spark, sf_dir):
