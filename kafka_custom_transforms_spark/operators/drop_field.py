@@ -7,7 +7,7 @@ matching the reference default.
 
 Semantics replicated exactly:
   D1  null-value passthrough (DropField.java:45-46) — a null target column
-      stays null (each struct rebuild sits under ``F.when(col.isNotNull(), ...)``).
+      stays null (each struct rebuild sits under ``IF(col IS NULL, NULL, ...)``).
   D2  path predicate: keep a field iff its full dotted path is not in
       ``paths``; exact string match, no escaping (DropField.java:63-65).
       Paths that match nothing are silently ignored, as in the reference.
@@ -26,59 +26,50 @@ plays the role of the reference's per-record ``schema == null`` check —
 StructType = schema'd, MapType / JSON StringType = schemaless.
 
 Scale: the struct and map paths are pure Catalyst expressions (no shuffle, no
-Python, whole-stage-codegen capable); the JSON paths are ``schemaless`` steps.
+Python, whole-stage-codegen capable), written as Spark SQL text
+(``sqltext``); the JSON paths are ``schemaless`` steps.
 """
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import DataType, MapType, StringType, StructField, StructType
+from pyspark.sql.types import DataType, MapType, StringType, StructType
 
 from kafka_custom_transforms_spark.operators import schemaless
 from kafka_custom_transforms_spark.operators.chain import Smt
+from kafka_custom_transforms_spark.operators.sqltext import Expr, Struct, Value, is_struct, lit, opened
 
 
-def _rebuild_struct(col: Column, schema: StructType, prefix: str, dropset: set[str]) -> Column:
+def _dropped(value: Value, prefix: str, dropset: set[str]) -> Struct:
     """Struct rebuild omitting dropped paths. Unlike ``dropFields`` it keeps
     field order, allows empty structs and keeps nulls at every level; kept
     fields carry their ``StructField.metadata`` (the reference's schema
     basics, SchemaUtil.copySchemaBasics via DropField.java:107)."""
-    kept: list[Column] = []
-    for f in schema.fields:
-        p = prefix + f.name
+    s = opened(value)
+    kept = []
+    for name, child in s.fields:
+        p = prefix + name
         if p in dropset:
             continue
-        child = col.getField(f.name)
-        if isinstance(f.dataType, StructType) and any(d.startswith(p + ".") for d in dropset):
-            rebuilt = _rebuild_struct(child, f.dataType, p + ".", dropset)
-            kept.append(F.when(child.isNotNull(), rebuilt).alias(f.name, metadata=f.metadata))
-        else:
-            kept.append(child.alias(f.name, metadata=f.metadata))
-    if not kept:
-        return F.expr("struct()")
-    return F.struct(*kept)
+        if is_struct(child) and any(d.startswith(p + ".") for d in dropset):
+            child = _dropped(child, p + ".", dropset)
+        kept.append((name, child))
+    return Struct(s.null, tuple(kept), s.metadata)
 
 
-def _drop_from_map(col: Column, dtype: MapType, prefix: Column, paths_lit: Column) -> Column:
+def _drop_from_map(value: Expr, prefix: str, paths: str, depth: int = 0) -> Expr:
     """Map-path drop: static recursion to the map type's depth; key prefixes
-    are data-dependent so the dotted path is assembled as a column expression
-    and membership-tested against the literal paths array (D3 semantics:
+    are data-dependent so the dotted path is assembled in SQL and
+    membership-tested against the literal ``paths`` array (D3 semantics:
     descend only into map-typed values; arrays stay opaque)."""
-    out = F.map_filter(col, lambda k, v: ~F.array_contains(paths_lit, F.concat(prefix, k)))
-    if isinstance(dtype.valueType, MapType):
-        inner_t = dtype.valueType
-
-        def _desc(k: Column, v: Column) -> Column:
-            return F.when(
-                v.isNotNull(),
-                _drop_from_map(v, inner_t, F.concat(prefix, k, F.lit(".")), paths_lit),
-            ).otherwise(v)
-
-        out = F.transform_values(out, _desc)
-    return out
+    k, v = f"__smt_k{depth}", f"__smt_v{depth}"
+    out = f"map_filter({value.sql}, ({k}, {v}) -> NOT array_contains({paths}, concat({prefix}, {k})))"
+    inner_t = value.dtype.valueType
+    if isinstance(inner_t, MapType):
+        inner = _drop_from_map(Expr(v, inner_t), f"concat({prefix}, {k}, '.')", paths, depth + 1)
+        out = f"transform_values({out}, ({k}, {v}) -> IF({v} IS NULL, {v}, {inner.sql}))"
+    return Expr(out, value.dtype)
 
 
 def _prune_json_obj(obj: object, prefix: str, dropset: set[str]) -> object:
@@ -94,22 +85,6 @@ def _prune_json_obj(obj: object, prefix: str, dropset: set[str]) -> object:
             continue
         out[k] = _prune_json_obj(v, p + ".", dropset) if isinstance(v, dict) else v
     return out
-
-
-def _dropped_type(schema: StructType, prefix: str, dropset: set[str]) -> StructType:
-    """The type :func:`_rebuild_struct` builds from ``schema``, which a chain
-    compares with the next step's declared schema without a Spark analysis
-    (one per step would sit in every stream start)."""
-    fields = []
-    for f in schema.fields:
-        p = prefix + f.name
-        if p in dropset:
-            continue
-        t = f.dataType
-        if isinstance(t, StructType) and any(d.startswith(p + ".") for d in dropset):
-            t = _dropped_type(t, p + ".", dropset)
-        fields.append(StructField(f.name, t))
-    return StructType(fields)
 
 
 def drop_fields(
@@ -133,30 +108,24 @@ def drop_fields(
             raise ValueError(f"drop_fields: every path must be a non-empty string, got {p!r}")
     dropset = set(paths)
 
-    def _plan(dtype: DataType) -> schemaless.Plan | None:
-        if not dropset or not isinstance(dtype, StringType):
-            return None
-        if json_schema is None:
-            return schemaless.ArrowPlan("drop_fields", lambda obj: _prune_json_obj(obj, "", dropset))
-        schema = schemaless.as_struct_type(json_schema)
-        rebuild = functools.partial(_rebuild_struct, prefix="", dropset=dropset)
-        return schemaless.JvmPlan("drop_fields", schema, _dropped_type(schema, "", dropset), rebuild)
+    def _rebuild(value: Value) -> Struct:
+        return _dropped(value, "", dropset)
 
-    def _transform(df: DataFrame) -> DataFrame:
+    def _plan(dtype: DataType):
         if not dropset:
-            return df  # reference default config is the identity (DropField.java:27-28)
-        dtype = df.schema[target].dataType
-        col = F.col(target)
+            return None  # reference default config is the identity (DropField.java:27-28)
         if isinstance(dtype, StructType):
-            new_col = F.when(col.isNotNull(), _rebuild_struct(col, dtype, "", dropset))
-        elif isinstance(dtype, MapType):
-            paths_lit = F.array(*[F.lit(p) for p in sorted(dropset)])
-            new_col = _drop_from_map(col, dtype, F.lit(""), paths_lit)
-        else:
-            raise TypeError(
-                f"drop_fields: target column {target!r} has unsupported type {dtype}; expected "
-                "struct (schema'd), map or JSON string (schemaless; DropField.java:56)."
-            )
-        return schemaless.with_target(df, target, new_col)
+            return _rebuild
+        if isinstance(dtype, MapType):
+            paths_sql = "array(" + ", ".join(lit(p) for p in sorted(dropset)) + ")"
+            return lambda value: _drop_from_map(value, "''", paths_sql)
+        if isinstance(dtype, StringType):
+            if json_schema is None:
+                return schemaless.ArrowPlan("drop_fields", lambda obj: _prune_json_obj(obj, "", dropset))
+            return schemaless.JvmPlan("drop_fields", schemaless.as_struct_type(json_schema), _rebuild)
+        raise TypeError(
+            f"drop_fields: target column {target!r} has unsupported type {dtype}; expected "
+            "struct (schema'd), map or JSON string (schemaless; DropField.java:56)."
+        )
 
-    return Smt(target, _transform, _plan)
+    return Smt(target, _plan)

@@ -26,46 +26,30 @@ Behavior branches replicated:
   H7  output-map mutability (:76) — N/A under Spark's immutable columns.
   H8  Key/Value variants — the ``target`` parameter.
 
-Scale: pure Catalyst expressions everywhere except the schema-free JSON
-keep_in_root path (``schemaless.arrow_step``). No shuffle anywhere.
+Scale: pure Catalyst expressions, written as Spark SQL text (``sqltext``),
+everywhere except the schema-free JSON keep_in_root path
+(``schemaless.arrow_step``). No shuffle anywhere.
 """
 
 from __future__ import annotations
 
-import functools
-import operator
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import DataType, MapType, StringType, StructField, StructType
+from pyspark.sql.types import DataType, MapType, StringType, StructType
 
 from kafka_custom_transforms_spark.operators import schemaless
 from kafka_custom_transforms_spark.operators.chain import Smt
+from kafka_custom_transforms_spark.operators.sqltext import Expr, Struct, Value, is_null, lit, opened
 
 
-def _struct_hoist(col: Column, schema: StructType, field: str, keep: list[str]) -> Column | None:
-    """H3/H4/H5: build the hoisted struct, or None for the identity case."""
-    root_fields = [f.name for f in schema.fields if f.name in keep]
-    movable = [f.name for f in schema.fields if f.name not in keep]
-    if not movable:
-        return None  # H5 — nothing moves, transform is the identity
-    # Field metadata (the Connect schema basics slot) rides the aliases
-    # through the rebuild — SchemaUtil.copySchemaBasics parity.
-    child = {f.name: col.getField(f.name) for f in schema.fields}
-    inner = F.struct(*[child[n].alias(n, metadata=schema[n].metadata) for n in movable])
-    any_set = functools.reduce(operator.or_, [child[n].isNotNull() for n in movable])
-    members = [child[n].alias(n, metadata=schema[n].metadata) for n in root_fields]
-    members.append(F.when(any_set, inner).alias(field))
-    return F.struct(*members)
-
-
-def _hoisted_type(schema: StructType, field: str, keep: list[str]) -> StructType | None:
-    """The type :func:`_struct_hoist` builds from ``schema``, or None for
-    the identity case (see ``drop_field._dropped_type``)."""
-    movable = [f for f in schema.fields if f.name not in keep]
-    if not movable:
-        return None
-    return StructType([f for f in schema.fields if f.name in keep] + [StructField(field, StructType(movable))])
+def _hoisted(value: Value, field: str, keep: set[str]) -> Struct:
+    """H3/H4: the hoisted struct. Field metadata (the Connect schema basics
+    slot) rides each field's value through the rebuild —
+    SchemaUtil.copySchemaBasics parity."""
+    s = opened(value)
+    moved = tuple((n, x) for n, x in s.fields if n not in keep)
+    inner = Struct(" AND ".join(is_null(x) for _, x in moved), moved)
+    return Struct(s.null, tuple((n, x) for n, x in s.fields if n in keep) + ((field, inner),), s.metadata)
 
 
 def hoist_field(
@@ -90,8 +74,7 @@ def hoist_field(
     """
     if not isinstance(field, str) or not field:
         raise ValueError("hoist_field: 'field' is required (reference NO_DEFAULT_VALUE)")
-    keep = list(keep_in_root)
-    keepset = set(keep)
+    keepset = set(keep_in_root)
 
     def _split(obj: dict) -> dict:
         root = {k: v for k, v in obj.items() if k in keepset}
@@ -100,10 +83,27 @@ def hoist_field(
             root[field] = inner
         return root
 
-    def _plan(dtype: DataType) -> schemaless.Plan | None:
-        if not isinstance(dtype, StringType):
+    def _rebuild(schema: StructType):
+        """H5: None when nothing moves (the identity)."""
+        if all(f.name in keepset for f in schema.fields):
             return None
-        if not keep:
+        return lambda value: _hoisted(value, field, keepset)
+
+    def _plan(dtype: DataType):
+        if isinstance(dtype, StructType):
+            return _rebuild(dtype)
+        if isinstance(dtype, MapType):
+            if keepset:
+                raise ValueError(
+                    "hoist_field: keep_in_root over a MapType column would need a "
+                    "heterogeneous value type; use the JSON string representation "
+                    "(SURVEY.md §1.4) for the H2 branch."
+                )
+            # H1 — wraps nulls too
+            return lambda v: Expr(f"map({lit(field)}, {v.sql})", MapType(StringType(), v.dtype, v.nullable), False)
+        if not isinstance(dtype, StringType):
+            return lambda v: Struct(None, ((field, v),))  # H6 / H1-primitive: wrap a bare value
+        if not keepset:
             return schemaless.Wrap("hoist_field", field)  # H1
         if json_schema is None:
             # Divergence: getValueAsMap throws on null (:52-60); null
@@ -112,29 +112,6 @@ def hoist_field(
         # H2 omission for free: when every movable field is null the
         # inner struct is null and to_json drops the key entirely.
         schema = schemaless.as_struct_type(json_schema)
-        hoisted = _hoisted_type(schema, field, keep)
-        rebuild = functools.partial(_struct_hoist, field=field, keep=keep) if hoisted else None
-        return schemaless.JvmPlan("hoist_field", schema, hoisted or schema, rebuild)
+        return schemaless.JvmPlan("hoist_field", schema, _rebuild(schema))
 
-    def _transform(df: DataFrame) -> DataFrame:
-        dtype = df.schema[target].dataType
-        col = F.col(target)
-        if isinstance(dtype, StructType):
-            hoisted = _struct_hoist(col, dtype, field, keep)
-            if hoisted is None:
-                return df  # H5
-            new_col = F.when(col.isNotNull(), hoisted)
-        elif isinstance(dtype, MapType):
-            if keep:
-                raise ValueError(
-                    "hoist_field: keep_in_root over a MapType column would need a "
-                    "heterogeneous value type; use the JSON string representation "
-                    "(SURVEY.md §1.4) for the H2 branch."
-                )
-            new_col = F.create_map(F.lit(field), col)  # H1 — wraps nulls too
-        else:
-            # H6 / H1-primitive: wrap a bare value.
-            new_col = F.struct(col.alias(field))
-        return schemaless.with_target(df, target, new_col)
-
-    return Smt(target, _transform, _plan)
+    return Smt(target, _plan)

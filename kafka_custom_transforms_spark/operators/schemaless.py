@@ -5,10 +5,11 @@ column (SURVEY.md §1.4). Only this module parses, checks and writes it
 back. An SMT supplies a :class:`Plan` for its step: a struct -> struct
 rebuild under a declared schema (:class:`JvmPlan`), a dict -> dict
 function (:class:`ArrowPlan`) or hoist_field's wrap-all (:class:`Wrap`).
-:func:`apply` runs a run of plans on one column as one step, so a chain
+:func:`apply` turns a run of plans on one column into one step, so a chain
 parses and serializes once per run, as Kafka Connect's converter does
 once per chain (PAPER.md §1.1): ``transform_chain`` groups the runs
-(:func:`joins`), a step applied alone is a run of one.
+(:func:`joins`), a step applied alone is a run of one. The JVM routes are
+Spark SQL text (``sqltext``); only the Arrow route is a Column.
 
 SQL NULL passes through (D1); a non-object raises :func:`not_json_object`
 (requireMap / getValueAsMap); text that does not parse as one JSON
@@ -29,17 +30,22 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StringType, StructField, StructType
 
-# Reserved names: a JVM step's parsed value, and its field that from_json
-# fills with the raw text of a record it cannot parse into the schema.
+from kafka_custom_transforms_spark.operators.sqltext import Expr, Value, ddl, dtype, ident, lit, render
+
+# Reserved names: the prefix of a JVM step's parsed-value column, and its
+# field that from_json fills with the raw text of a record it cannot parse
+# into the schema.
 PARSED = "__smt_parsed"
 CORRUPT = "__smt_corrupt"
 # The key jvm_step parses a record's text under.
 _SPLICED = "v"
 
-# jvm_step's object test in Python: Java regex whitespace (\s), then "{".
+# jvm_step's object test, a Java regex, and the same test in Python:
+# whitespace (\s), then "{".
+_OBJECT_REGEX = r"^\s*\{"
 _OBJECT_PREFIX = re.compile(r"[ \t\n\x0b\f\r]*\{")
 
 
@@ -62,27 +68,23 @@ def _from_ddl(ddl: str) -> StructType:
     return StructType.fromDDL(ddl)
 
 
-def with_target(df: DataFrame, target: str, value: Column) -> DataFrame:
-    """``df`` with ``target`` replaced by ``value``, keeping the target's own
-    metadata — the envelope-level schema basics (Connect name/version/doc)
-    that ``withColumn`` drops (SchemaUtil.copySchemaBasics parity)."""
-    out = df.withColumn(target, value)
-    md = df.schema[target].metadata
-    return out.withMetadata(target, md) if md else out
-
-
-Rebuild = Callable[[Column, StructType], Column]
+Rebuild = Callable[[Value], Value]
 
 
 @dataclass(frozen=True)
 class JvmPlan:
-    """``rebuild(value, schema)`` of the JSON parsed with ``schema``; its
-    result has type ``out`` (a ``None`` rebuild keeps the value)."""
+    """``rebuild`` of the JSON parsed with ``schema`` (a ``None`` rebuild
+    keeps the value)."""
 
     transform: str
     schema: StructType
-    out: StructType
     rebuild: Rebuild | None
+
+    @property
+    def out(self) -> DataType:
+        """The rebuild's type, read off its SQL without asking Spark."""
+        parsed = Expr("parsed", self.schema)
+        return self.schema if self.rebuild is None else dtype(self.rebuild(parsed))
 
 
 @dataclass(frozen=True)
@@ -116,10 +118,12 @@ def _shape(t: DataType) -> DataType:
 
 
 def joins(run: Sequence[Plan], plan: Plan) -> bool:
-    """Whether ``plan`` can extend ``run`` (which does not end in a wrap):
-    a wrap ends any run; an Arrow step follows Arrow steps; a JVM step
-    follows JVM steps whose output type is its declared schema, so reading
-    the previous step's ``to_json`` back would give the value it has."""
+    """Whether ``plan`` can extend ``run``: a wrap ends any run; an Arrow
+    step follows Arrow steps; a JVM step follows JVM steps whose output
+    type is its declared schema, so reading the previous step's
+    ``to_json`` back would give the value it has."""
+    if isinstance(run[-1], Wrap):
+        return False
     if isinstance(plan, Wrap):
         return not isinstance(run[-1], JvmPlan) or any(p.rebuild for p in run)
     if isinstance(plan, ArrowPlan):
@@ -127,15 +131,19 @@ def joins(run: Sequence[Plan], plan: Plan) -> bool:
     return isinstance(run[-1], JvmPlan) and _shape(run[-1].out) == _shape(plan.schema)
 
 
-def apply(df: DataFrame, target: str, run: Sequence[Plan]) -> DataFrame:
-    """One step for a run of plans on ``target`` (see :func:`joins`)."""
+def apply(run: Sequence[Plan], target: str, parsed: str) -> tuple[Column | None, Column]:
+    """One step for a run of plans on column ``target`` (see :func:`joins`):
+    its parse column, to be named ``parsed`` (None when it has none), and
+    its value."""
     wrap = run[-1].field if isinstance(run[-1], Wrap) else None
     body = run[:-1] if wrap is not None else run
+    text = ident(target)
     if not body:
-        return with_target(df, target, _wrap_text(F.col(target), wrap, run[0].transform))
+        spliced = f"concat({lit(_opening(wrap))}, coalesce({text}, 'null'), '}}')"
+        return None, F.expr(parsed_or_raise(spliced, f"concat('[', {text}, ']')", run[0].transform))
     if isinstance(body[0], JvmPlan):
-        return jvm_step(df, target, body, wrap)
-    return arrow_step(df, target, body, wrap)
+        return tuple(F.expr(sql) for sql in jvm_step(body, text, ident(parsed), wrap))
+    return None, arrow_step(body, text, wrap)
 
 
 def _opening(field: str) -> str:
@@ -143,22 +151,15 @@ def _opening(field: str) -> str:
     return "{" + json.dumps(field) + ":"
 
 
-def _wrap_text(text: Column, field: str, transform: str) -> Column:
-    """H1 over JSON text: splice the document (or JSON null) under the
-    JSON-escaped field name, and check that the result parses."""
-    spliced = F.concat(F.lit(_opening(field)), F.coalesce(text, F.lit("null")), F.lit("}"))
-    return parsed_or_raise(spliced, F.concat(F.lit("["), text, F.lit("]")), transform)
-
-
-def jvm_step(df: DataFrame, target: str, run: Sequence[JvmPlan], wrap: str | None = None) -> DataFrame:
-    """``to_json`` of the run's rebuilds over the JSON text in ``target``,
-    parsed once with the first plan's schema; a run of ``None`` rebuilds
-    keeps the text. ``wrap`` puts the result under that field. The parse
-    has its own projection, so the rebuilds' fields share one
-    ``from_json`` (inline, each gets its own pruned parse). The byte-prefix
-    object test decides almost every record before the regex, which copies
-    the string (1M-record noop-sink run, 4 vCPUs: regex alone ~4% of a
-    drop's wall time, prefix-first none).
+def jvm_step(run: Sequence[JvmPlan], text: str, parsed: str, wrap: str | None = None) -> tuple[str, str]:
+    """``to_json`` of the run's rebuilds over the JSON ``text``, parsed
+    once with the first plan's schema into the column ``parsed``; a run of
+    ``None`` rebuilds keeps the text. ``wrap`` puts the result under that
+    field. The parse has its own projection, so the rebuilds' fields share
+    one ``from_json`` (inline, each gets its own pruned parse). The
+    byte-prefix object test decides almost every record before the regex,
+    which copies the string (1M-record noop-sink run, 4 vCPUs: regex alone
+    ~4% of a drop's wall time, prefix-first none).
 
     The text is parsed spliced under a key and checked spliced into
     ``[...]``, the two splices :func:`parsed_or_raise` checks for a wrap,
@@ -167,31 +168,32 @@ def jvm_step(df: DataFrame, target: str, run: Sequence[JvmPlan], wrap: str | Non
     check reads ``array<struct<>>``, which skips every field, where
     ``array<string>`` would write each record back as text."""
     head = run[0]
-    text, value = F.col(target), None
+    value = None
     for p in run:
         if p.rebuild is not None:
-            value = p.rebuild(F.col(PARSED)[_SPLICED] if value is None else value, p.schema)
-    doc = text if value is None else F.to_json(value)
+            value = p.rebuild(Expr(f"{parsed}.{ident(_SPLICED)}", head.schema) if value is None else value)
+    doc = text if value is None else f"to_json({render(value)})"
+    orelse = ""
     if wrap is not None:
-        doc = F.concat(F.lit(_opening(wrap)), doc, F.lit("}"))
-    is_object = text.startswith("{") | text.rlike(r"^\s*\{")
-    listed = F.from_json(F.concat(F.lit("["), text, F.lit("]")), ArrayType(StructType()))
-    malformed = F.col(PARSED)[CORRUPT].isNotNull() | listed.isNull()
+        doc = f"concat({lit(_opening(wrap))}, {doc}, '}}')"
+        orelse = f" ELSE {lit(_opening(wrap) + 'null}')}"
+    is_object = f"(startswith({text}, '{{') OR {text} RLIKE {lit(_OBJECT_REGEX)})"
+    listed = f"from_json(concat('[', {text}, ']'), 'array<struct<>>')"
+    malformed = f"({parsed}.{ident(CORRUPT)} IS NOT NULL OR {listed} IS NULL)"
     checked = (
-        F.when(is_object & malformed, F.raise_error(F.lit(malformed_json(head.transform))))
-        .when(is_object, doc)
-        .when(text.isNotNull(), F.raise_error(F.lit(not_json_object(head.transform))))
+        f"CASE WHEN {is_object} AND {malformed} THEN raise_error({lit(malformed_json(head.transform))}) "
+        f"WHEN {is_object} THEN {doc} "
+        f"WHEN {text} IS NOT NULL THEN raise_error({lit(not_json_object(head.transform))}){orelse} END"
     )
-    if wrap is not None:
-        checked = checked.otherwise(F.lit(_opening(wrap) + "null}"))
     spliced = StructType([StructField(_SPLICED, head.schema), StructField(CORRUPT, StringType())])
-    parse = F.from_json(
-        F.concat(F.lit(_opening(_SPLICED)), text, F.lit("}")), spliced, {"columnNameOfCorruptRecord": CORRUPT}
+    parse = (
+        f"from_json(concat({lit(_opening(_SPLICED))}, {text}, '}}'), {lit(ddl(spliced))}, "
+        f"map('columnNameOfCorruptRecord', {lit(CORRUPT)}))"
     )
-    return with_target(df.withColumn(PARSED, parse), target, checked).drop(PARSED)
+    return parse, checked
 
 
-def parsed_or_raise(doc: Column, listed: Column, transform: str) -> Column:
+def parsed_or_raise(doc: str, listed: str, transform: str) -> str:
     """``doc`` (JSON object text) when Spark's JSON reader parses both it
     and ``listed`` (the spliced value in ``[...]``), else
     :func:`malformed_json` — two tokenizing passes, no Python. A reader
@@ -199,19 +201,20 @@ def parsed_or_raise(doc: Column, listed: Column, transform: str) -> Column:
     the splice it leaves unclosed: ``1}`` closes the object early but not
     the array, ``1]`` the array but not the object. Duplicate keys and
     NaN/Infinity pass, as they do for ``json.loads``."""
-    only_corrupt = StructType([StructField(CORRUPT, StringType())])
-    options = {"columnNameOfCorruptRecord": CORRUPT, "allowSingleQuotes": "false"}
-    corrupt = F.from_json(doc, only_corrupt, options)[CORRUPT]
-    as_array = F.from_json(listed, ArrayType(StringType()), {"allowSingleQuotes": "false"})
-    ok = corrupt.isNull() & (listed.isNull() | as_array.isNotNull())
-    return F.when(ok, doc).otherwise(F.raise_error(F.lit(malformed_json(transform))))
+    strict = "'allowSingleQuotes', 'false'"
+    only_corrupt = lit(ddl(StructType([StructField(CORRUPT, StringType())])))
+    options = f"map('columnNameOfCorruptRecord', {lit(CORRUPT)}, {strict})"
+    corrupt = f"from_json({doc}, {only_corrupt}, {options}).{ident(CORRUPT)}"
+    as_array = f"from_json({listed}, 'array<string>', map({strict}))"
+    ok = f"{corrupt} IS NULL AND ({listed} IS NULL OR {as_array} IS NOT NULL)"
+    return f"CASE WHEN {ok} THEN {doc} ELSE raise_error({lit(malformed_json(transform))}) END"
 
 
-def arrow_step(df: DataFrame, target: str, run: Sequence[ArrowPlan], wrap: str | None = None) -> DataFrame:
-    """The run's functions over each JSON object in ``target`` in one
-    Arrow-batched UDF: one ``json.loads`` and one ``json.dumps`` per
-    record, ``wrap`` putting the result under that field; lossless (null
-    entries and ``{}`` survive), the slow path."""
+def arrow_step(run: Sequence[ArrowPlan], text: str, wrap: str | None = None) -> Column:
+    """The run's functions over each JSON object in ``text`` (a column
+    reference) in one Arrow-batched UDF: one ``json.loads`` and one
+    ``json.dumps`` per record, ``wrap`` putting the result under that
+    field; lossless (null entries and ``{}`` survive), the slow path."""
     transform = run[0].transform
     fns = [p.fn for p in run]
     null = None if wrap is None else _opening(wrap) + "null}"
@@ -233,4 +236,4 @@ def arrow_step(df: DataFrame, target: str, run: Sequence[ArrowPlan], wrap: str |
 
         return s.map(one)
 
-    return with_target(df, target, _step(F.col(target)))
+    return _step(F.col(text))

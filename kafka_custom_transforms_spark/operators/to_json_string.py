@@ -25,19 +25,20 @@ Scale: a single codegen-capable JVM expression; no shuffle, no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import MapType
+from pyspark.sql.types import DataType, MapType, StringType
 
 from kafka_custom_transforms_spark.operators.chain import Smt
+from kafka_custom_transforms_spark.operators.sqltext import Expr
 
 
 def to_json_string(target: str = "value") -> Smt:
     """Build a transform serializing a MapType ``target`` column to JSON text;
-    everything else passes through (J3)."""
+    everything else passes through (J3) as the same DataFrame object, the
+    reference's same-record passthrough."""
 
-    def _transform(df: DataFrame) -> DataFrame:
-        if isinstance(df.schema[target].dataType, MapType):
-            return df.withColumn(target, F.to_json(F.col(target)))
-        return df  # J3 — same DataFrame object, the reference's same-record passthrough
+    def _plan(dtype: DataType):
+        if isinstance(dtype, MapType):
+            return lambda v: Expr(f"to_json({v.sql})", StringType(), v.nullable)
+        return None
 
-    return Smt(target, _transform, lambda dtype: None)
+    return Smt(target, _plan)

@@ -14,10 +14,11 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
     PySpark's own daemon with archive import caches kept across tasks: every
     Python task otherwise re-reads the directories of ``pyspark.zip``, the
     py4j zip and the spark-core jar (a median 291 ms per task on 4 vCPUs;
-    see ``daemon``). The workers must be able to import the package, as every
-    package UDF already needs, since cloudpickle references package
-    functions by module. Opt out with
-    ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``.
+    see ``daemon``). The workers import it, and every package UDF, by module
+    name, so ``spark.executorEnv.PYTHONPATH`` starts with the directory that
+    holds the package, ahead of any value in ``extra_conf``: workers import
+    the package wherever the driver runs, whatever its ``PYTHONPATH``. Opt
+    out with ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``.
 """
 
 from __future__ import annotations
@@ -28,6 +29,9 @@ from pyspark.sql import SparkSession
 
 # The module Python workers fork from (``spark.python.daemon.module``).
 DAEMON_MODULE = "kafka_custom_transforms_spark.daemon"
+# The Python workers' PYTHONPATH, and the directory that holds the package.
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -76,6 +80,9 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    path = conf.get(_WORKER_PATH)
+    conf[_WORKER_PATH] = os.pathsep.join([_PACKAGE_PARENT, path] if path else [_PACKAGE_PARENT])
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

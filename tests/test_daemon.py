@@ -91,3 +91,40 @@ def test_get_spark_workers_use_archive_finders():
     assert out.returncode == 0, out.stderr[-2000:]
     kinds = json.loads(out.stdout.strip().splitlines()[-1])
     assert kinds == [json.dumps(["kafka_custom_transforms_spark.daemon.ArchiveFinder"])]
+
+
+_OUTSIDE_CHECKOUT = textwrap.dedent(
+    """
+    import sys
+    sys.path.insert(0, sys.argv[1])
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from kafka_custom_transforms_spark.session import get_spark
+
+    spark = get_spark("kcts-daemon-path-test", cpus=2)
+
+    @F.pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    local = spark.createDataFrame([(1,), (2,)], "x long").collect()
+    rows = spark.range(0, 8, 1, 4).select(plus_one("id").alias("y")).collect()
+    print(len(local), sorted(r.y for r in rows))
+    spark.stop()
+    """
+)
+
+
+def test_get_spark_workers_import_the_package_outside_the_checkout(tmp_path):
+    """A driver that imports the package through ``sys.path`` alone, from
+    another directory and with no ``PYTHONPATH``, still starts its workers
+    from the daemon: ``get_spark`` puts the package's directory on the
+    workers' ``PYTHONPATH``."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_CHECKOUT, ROOT], cwd=tmp_path, env=env, capture_output=True, text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "2 [1, 2, 3, 4, 5, 6, 7, 8]"

@@ -236,6 +236,62 @@ def test_schema_basics_metadata_survive_rebuild(spark):
     assert hf.dataType["payload"].dataType["b"].metadata == {}
 
 
+def _has_cast(df) -> bool:
+    return "cast(" in df._jdf.queryExecution().optimizedPlan().toString().lower()
+
+
+def test_schema_basics_metadata_survive_fused_runs(spark):
+    """A chain's struct run (drop then hoist, one expression) keeps field
+    metadata two levels down, through a rebuilt and a moved struct, and a
+    JSON run keeps its target's metadata. Spark gives a field the metadata
+    of the field it references, so only the metadata of a rebuilt struct
+    needs a cast to the static output type; without one the optimized
+    plan holds no ``Cast``."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+    def value_type(p_metadata: dict) -> StructType:
+        p = StructType(
+            [StructField("q", IntegerType(), True, {"doc": "field q"}), StructField("r", IntegerType())]
+        )
+        m = StructType([StructField("n", IntegerType(), True, {"doc": "field n"})])
+        return StructType(
+            [
+                StructField("a", IntegerType(), True, {"doc": "field a"}),
+                StructField("m", m, True, {"doc": "field m"}),
+                StructField("p", p, True, p_metadata),
+            ]
+        )
+
+    envelope = {"connect.name": "com.example.Rec", "doc": "envelope"}
+    chain = transform_chain(drop_fields(["p.r"]), hoist_field("payload", keep_in_root=["a"]))
+    for p_metadata in ({}, {"doc": "field p"}):
+        schema = StructType([StructField("value", value_type(p_metadata), True, envelope)])
+        out = chain(spark.createDataFrame([((1, (2,), (3, 4)),), (None,)], schema))
+        vf = out.schema["value"]
+        assert vf.metadata == envelope
+        assert vf.dataType["a"].metadata == {"doc": "field a"}
+        payload = vf.dataType["payload"]
+        assert payload.metadata == {}
+        assert payload.dataType["m"].metadata == {"doc": "field m"}
+        assert payload.dataType["m"].dataType["n"].metadata == {"doc": "field n"}
+        assert payload.dataType["p"].metadata == p_metadata
+        assert payload.dataType["p"].dataType["q"].metadata == {"doc": "field q"}
+        assert [r.value and r.value.asDict(recursive=True) for r in out.collect()] == [
+            {"a": 1, "payload": {"m": {"n": 2}, "p": {"q": 3}}}, None
+        ]
+        assert _has_cast(out) == bool(p_metadata)
+
+    text = StructType([StructField("value", StringType(), True, envelope)])
+    js = spark.createDataFrame([('{"a":1,"b":2}',)], text)
+    for chain in (
+        transform_chain(drop_fields(["a"], json_schema="a int, b int"), hoist_field("f")),
+        transform_chain(drop_fields(["a"]), hoist_field("f")),
+    ):
+        got = chain(js)
+        assert got.schema["value"].metadata == envelope
+        assert got.collect()[0].value == '{"f":{"b":2}}'
+
+
 def test_json_udf_path_matches_schema_path_property(spark):
     """Hypothesis sweep (r10, verdict item 7): the Arrow step
     (schemaless.arrow_step running _prune_json_obj) and the JVM step

@@ -161,6 +161,44 @@ def test_smt_chain_parses_once_per_column(spark):
     assert (row.v_json_schema, row.v_json_udf) == (want, want)
 
 
+def _smt_drain_shaped(spark):
+    df = spark.createDataFrame(
+        [(None, _SMT_TEXT, _SMT_TEXT, {"a": {"b": "c"}})],
+        f"v_struct struct<{_SMT_VALUE.replace(' struct', ':struct')}>, v_json_schema string, "
+        "v_json_udf string, v_map map<string,map<string,string>>",
+    )
+    per_col = [_smt_steps("v_struct", False), _smt_steps("v_json_schema", True),
+               _smt_steps("v_json_udf", False), _smt_steps("v_map", False)]
+    return df, transform_chain(*(steps[i] for i in range(3) for steps in per_col))
+
+
+def test_smt_chain_build_round_trips(spark, monkeypatch):
+    """Building the smt_drain-shaped chain writes each column's steps as
+    one SQL expression, so the build makes at most 300 py4j round trips
+    (about 1,800 when every step composed PySpark Columns node by node,
+    11-21 round trips per node). The struct column's drop and hoist are
+    one expression, so one Project."""
+    import gc
+
+    from py4j.java_gateway import GatewayClient
+
+    df, chain = _smt_drain_shaped(spark)
+    chain(df)  # the DDL strings' types are cached from here on
+    calls = []
+    send = GatewayClient.send_command
+    monkeypatch.setattr(GatewayClient, "send_command", lambda self, *a, **k: calls.append(1) or send(self, *a, **k))
+    gc.collect()
+    gc.disable()
+    try:
+        out = chain(df)
+    finally:
+        gc.enable()
+        monkeypatch.undo()
+    assert len(calls) <= 300, len(calls)
+    projects = _column_plan(out, "v_struct").toString().count("Project [")
+    assert projects == 1, _column_plan(out, "v_struct").toString()
+
+
 @pytest.mark.parametrize("between", ["opaque", "misfit"])
 def test_smt_chain_flushes_at_opaque_step_or_schema_misfit(spark, between):
     """A callable that is not an SMT may read the column, and a schema that

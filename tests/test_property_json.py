@@ -229,15 +229,16 @@ def test_fused_arrow_chain_matches_stepwise_bytes(spark, docs, paths, wrap):
        keep=st.lists(st.sampled_from(["a", "b", "c", "t", "s", "n"]), max_size=6))
 def test_jvm_plan_output_type_is_the_rebuilds(spark, drop, keep):
     """The chain decides JVM fusion from each plan's declared output type
-    without asking Spark; it must be the type Spark gives the rebuild."""
+    without asking Spark; it must be the type Spark gives the rebuild's
+    SQL, nullability included."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType
 
-    from kafka_custom_transforms_spark.operators.schemaless import _shape
+    from kafka_custom_transforms_spark.operators.sqltext import Expr, render
 
     df = spark.createDataFrame([("{}",)], "value string")
     for smt in (drop_fields(drop or ["zz"], json_schema=JVM_VALUE), hoist_field("p", keep or ["a"], json_schema=JVM_VALUE)):
         plan = smt.plan(StringType())
         parsed = df.select(F.from_json("value", plan.schema).alias("v"))
-        built = parsed.select(plan.rebuild(F.col("v"), plan.schema)) if plan.rebuild else parsed
-        assert _shape(built.schema[0].dataType) == _shape(plan.out)
+        built = parsed.select(F.expr(render(plan.rebuild(Expr("v", plan.schema))))) if plan.rebuild else parsed
+        assert built.schema[0].dataType == plan.out
