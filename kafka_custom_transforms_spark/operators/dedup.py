@@ -513,8 +513,13 @@ def simhash_pairs(
     )
 
 
+# Wide SimHash: both halves of one md5 per shingle, as two 56-bit longs.
+BITS_PER_LONG = 56
+N_LONGS = 2
+
+
 @functools.lru_cache(maxsize=8)
-def _simhash_text_sig_udf(k: int, bits_per_long: int = 56, n_longs: int = 2):
+def _simhash_text_sig_udf(k: int):
     """Text -> wide-SimHash signature in ONE Arrow pass over the
     ``texthash`` kernel: distinct k-grams (:func:`grams`), both md5 halves
     (:func:`md5_56`), and the per-bit majority votes (r16, guide
@@ -529,14 +534,12 @@ def _simhash_text_sig_udf(k: int, bits_per_long: int = 56, n_longs: int = 2):
     test-pinned. Null and sub-k texts yield NULL (callers pre-filter,
     same contract as shingle_sets). Docs with >= 32768 shingles raise,
     matching the agg form's lane limit."""
-    if n_longs != 2 or bits_per_long != 56:
-        raise ValueError("wide signatures are fixed at 2 x 56 bits (one md5)")
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def text_sig(texts: pd.Series) -> pd.Series:
-        shifts = np.arange(bits_per_long, dtype=np.int64)
+        shifts = np.arange(BITS_PER_LONG, dtype=np.int64)
         lanes = np.int64(1) << shifts
         out = []
         for t in texts:
@@ -559,9 +562,7 @@ def _simhash_text_sig_udf(k: int, bits_per_long: int = 56, n_longs: int = 2):
     return text_sig
 
 
-def simhash_signatures_wide(
-    sets: DataFrame, bits_per_long: int = 56, n_longs: int = 2
-) -> DataFrame:
+def simhash_signatures_wide(sets: DataFrame) -> DataFrame:
     """(id, sig0, sig1): a 112-bit SimHash as two 56-bit longs, oracle-
     reproducible (both halves of ONE md5 per shingle — md5 yields 128 bits,
     of which the 60-bit signature wasted half). The wide signature's purpose
@@ -578,12 +579,10 @@ def simhash_signatures_wide(
     A bit's vote is positive iff 2*set_count > n_shingles — algebraically
     identical to the +1/-1 SUM formulation (sum = 2*set_count - n), ties
     vote 0 in both."""
-    if n_longs != 2 or bits_per_long != 56:
-        raise ValueError("wide signatures are fixed at 2 x 56 bits (one md5)")
     lanes = 4
-    packs_per_long = bits_per_long // lanes  # 14
+    packs_per_long = BITS_PER_LONG // lanes  # 14
     hashes = sets.select("id", F.explode(F.col("sh")).alias("s")).select(
-        "id", *[md5_hash56(F.col("s"), i).alias(f"h{i}") for i in range(n_longs)]
+        "id", *[md5_hash56(F.col("s"), i).alias(f"h{i}") for i in range(N_LONGS)]
     )
 
     def _packed(i: int, p: int) -> Column:
@@ -598,7 +597,7 @@ def simhash_signatures_wide(
 
     aggs = [
         F.sum(_packed(i, p)).alias(f"p{i}_{p}")
-        for i in range(n_longs)
+        for i in range(N_LONGS)
         for p in range(packs_per_long)
     ] + [F.count(F.lit(1)).alias("n_sh")]
     agged = hashes.groupBy("id").agg(*aggs)
@@ -616,7 +615,7 @@ def simhash_signatures_wide(
     # way: one Arrow numpy pass, with no JVM expression form.
     import numpy as np
 
-    pack_cols = [f"p{i}_{p}" for i in range(n_longs) for p in range(packs_per_long)]
+    pack_cols = [f"p{i}_{p}" for i in range(N_LONGS) for p in range(packs_per_long)]
 
     def _assemble(batches):
         for pdf in batches:
@@ -629,7 +628,7 @@ def simhash_signatures_wide(
                 # 32-bit lanes / 56 aggs).
                 raise ValueError("simhash_signatures_wide: >32767 shingles in one doc")
             out = {"id": pdf["id"]}
-            for i in range(n_longs):
+            for i in range(N_LONGS):
                 sig = np.zeros(len(pdf), dtype=np.int64)
                 for p in range(packs_per_long):
                     pack = pdf[f"p{i}_{p}"].to_numpy(dtype=np.int64)
@@ -696,8 +695,6 @@ def simhash_pairs_wide(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_k: int = 3,
-    bits_per_long: int = 56,
-    n_longs: int = 2,
     max_hamming: int = 15,
     chunks: int | None = None,
     checkpoint: str = "local",
@@ -780,15 +777,15 @@ def simhash_pairs_wide(
             text_col=text_col,
             min_tokens=shingle_k,
         )
-        s = _simhash_text_sig_udf(shingle_k, bits_per_long, n_longs)(F.col("_txt"))
+        s = _simhash_text_sig_udf(shingle_k)(F.col("_txt"))
         raw_sigs = src.select("id", s.alias("_s")).select(
-            "id", *[F.col("_s")[i].alias(f"sig{i}") for i in range(n_longs)]
+            "id", *[F.col("_s")[i].alias(f"sig{i}") for i in range(N_LONGS)]
         )
     else:
         sets = shingle_sets(df, id_col, text_col, shingle_k, shingler)
-        raw_sigs = simhash_signatures_wide(sets, bits_per_long, n_longs)
+        raw_sigs = simhash_signatures_wide(sets)
     sigs = _materialize(raw_sigs, checkpoint)
-    sig_names = [f"sig{i}" for i in range(n_longs)]
+    sig_names = [f"sig{i}" for i in range(N_LONGS)]
     ham = functools.reduce(
         lambda acc, name: acc
         + F.bit_count(F.col(f"a.{name}").bitwiseXOR(F.col(f"b.{name}"))),
@@ -800,7 +797,7 @@ def simhash_pairs_wide(
         # c slices such that missing up to max_hamming of them still leaves
         # TWO intact: hamming <= c-2 <=> some chunk-pair band matches.
         c = max_hamming + 2
-        layout = _and_band_layout(bits_per_long * n_longs, bits_per_long, c)
+        layout = _and_band_layout(BITS_PER_LONG * N_LONGS, BITS_PER_LONG, c)
         sv = [
             F.shiftright(F.col(f"sig{li}"), off).bitwiseAND(F.lit((1 << wdt) - 1))
             for li, off, wdt in layout
@@ -833,10 +830,10 @@ def simhash_pairs_wide(
     else:
         if max_hamming >= chunks:
             raise ValueError("pigeonhole requires max_hamming < chunks")
-        if chunks % n_longs or bits_per_long % (chunks // n_longs):
+        if chunks % N_LONGS or BITS_PER_LONG % (chunks // N_LONGS):
             raise ValueError("chunks must split evenly across the signature longs")
-        per_long = chunks // n_longs
-        w = bits_per_long // per_long
+        per_long = chunks // N_LONGS
+        w = BITS_PER_LONG // per_long
         mask = (1 << w) - 1
         bands = sigs.select(
             "id",
@@ -850,7 +847,7 @@ def simhash_pairs_wide(
                             .bitwiseAND(F.lit(mask))
                             .alias("sv"),
                         )
-                        for i in range(n_longs)
+                        for i in range(N_LONGS)
                         for cc in range(per_long)
                     ]
                 )

@@ -28,7 +28,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructType
 
 from kafka_custom_transforms_spark.operators.chain import Transform, transform_chain
-from kafka_custom_transforms_spark.operators.schemaless import as_struct_type
+from kafka_custom_transforms_spark.operators.schemaless import PARSED, as_struct_type, read
+from kafka_custom_transforms_spark.operators.sqltext import ident
 
 
 def split_mixed(
@@ -39,24 +40,32 @@ def split_mixed(
     """Split a JSON-string column into the two-column mixed representation.
 
     ``is_structured`` marks records that carry a schema (the stand-in for a
-    Connect record whose ``schema != null``); those are parsed with
-    ``schema`` into ``{target}_struct``, the rest keep their raw JSON text
-    in ``{target}_json``. The original column is replaced by the pair.
+    Connect record whose ``schema != null``); those are read with
+    ``schema`` into ``{target}_struct`` by ``schemaless.read``, which
+    raises ``not_json_object("split_mixed")`` for a value that is not an
+    object and ``malformed_json("split_mixed")`` for text that does not
+    parse or does not fit the schema. The rest keep their raw JSON text in
+    ``{target}_json``, unread. SQL NULL passes through. The original
+    column is replaced by the pair.
     """
     if is_structured is None:
         raise ValueError("split_mixed: is_structured predicate is required")
     if schema is None:
         raise ValueError("split_mixed: schema for the structured branch is required")
-    sch = as_struct_type(schema)
+    parsed = f"{PARSED}0"
+    parse, checked = read(ident(target), ident(parsed), "split_mixed", as_struct_type(schema), lambda v: v)
 
     def _transform(df: DataFrame) -> DataFrame:
-        col = F.col(target)
-        return df.withColumns(
-            {
-                f"{target}_struct": F.when(is_structured, F.from_json(col, sch)),
-                f"{target}_json": F.when(~is_structured, col),
-            }
-        ).drop(target)
+        return (
+            df.withColumn(parsed, F.when(is_structured, F.expr(parse)))
+            .withColumns(
+                {
+                    f"{target}_struct": F.when(is_structured, F.expr(checked)),
+                    f"{target}_json": F.when(~is_structured, F.col(target)),
+                }
+            )
+            .drop(target, parsed)
+        )
 
     return _transform
 

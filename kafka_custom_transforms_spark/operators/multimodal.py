@@ -125,33 +125,6 @@ def decode_payload(df: DataFrame) -> DataFrame:
     return df.mapInPandas(_decode, schema=DECODED_SCHEMA)
 
 
-RESIZED_SCHEMA = "doc_id bigint, mime string, out_width int, out_height int, data binary"
-
-
-def resize_images(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Resize plan for image rows: Arrow-batched ``mapInPandas`` whose body
-    would call PIL's thumbnail/resize. STUB: the payload passes through and
-    only the target geometry is attached — the schema, batch shape, row
-    filter and partition behavior are the real artifact."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mimes = pdf["meta"].map(lambda s: s["mime"])
-            keep = mimes.str.startswith("image/")
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"][keep],
-                    "mime": mimes[keep],
-                    "out_width": width,
-                    "out_height": height,
-                    "data": pdf["data"][keep],  # stub: real impl re-encodes
-                }
-            )
-            yield out
-
-    return df.mapInPandas(_resize, schema=RESIZED_SCHEMA)
-
-
 def frame_sample(df: DataFrame, every_nth: int = 10) -> DataFrame:
     """Frame-sampling plan for video rows: emits (doc_id, frame_idx) for
     every ``every_nth`` frame — pure expressions (sequence + explode), the

@@ -15,10 +15,11 @@ SQL NULL passes through (D1); a non-object raises :func:`not_json_object`
 (requireMap / getValueAsMap); text that does not parse as one JSON
 value, or on the JVM route does not fit the schema,
 :func:`malformed_json` — always with the name of the run's first step,
-since every later step sees only the objects it builds. A wrap-all that
-starts a run splices the text and checks its output with
-:func:`parsed_or_raise`; one that ends a run wraps the object the run
-built, which needs no check.
+since every later step sees only the objects it builds. Every JVM read of
+such text goes through :func:`read`, under one set of parser options that
+accepts what ``json.loads`` accepts: a JVM run, a wrap-all that starts a
+run (any value, no schema; one that ends a run wraps the object the run
+built, which needs no check) and ``mixed.split_mixed``.
 """
 
 from __future__ import annotations
@@ -35,15 +36,18 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StringType, StructFi
 
 from kafka_custom_transforms_spark.operators.sqltext import Expr, Value, ddl, dtype, ident, lit, render
 
-# Reserved names: the prefix of a JVM step's parsed-value column, and its
+# Reserved names: the prefix of a read's parsed-value column, and its
 # field that from_json fills with the raw text of a record it cannot parse
 # into the schema.
 PARSED = "__smt_parsed"
 CORRUPT = "__smt_corrupt"
-# The key jvm_step parses a record's text under.
+# The key :func:`read` parses a record's text under.
 _SPLICED = "v"
+# Spark's JSON reader options of every read: strings in double quotes
+# only, as for json.loads; the corrupt-record field of a failed parse.
+_OPTIONS = f"map('allowSingleQuotes', 'false', 'columnNameOfCorruptRecord', '{CORRUPT}')"
 
-# jvm_step's object test, a Java regex, and the same test in Python:
+# :func:`read`'s object test, a Java regex, and the same test in Python:
 # whitespace (\s), then "{".
 _OBJECT_REGEX = r"^\s*\{"
 _OBJECT_PREFIX = re.compile(r"[ \t\n\x0b\f\r]*\{")
@@ -135,15 +139,10 @@ def apply(run: Sequence[Plan], target: str, parsed: str) -> tuple[Column | None,
     """One step for a run of plans on column ``target`` (see :func:`joins`):
     its parse column, to be named ``parsed`` (None when it has none), and
     its value."""
-    wrap = run[-1].field if isinstance(run[-1], Wrap) else None
-    body = run[:-1] if wrap is not None else run
-    text = ident(target)
-    if not body:
-        spliced = f"concat({lit(_opening(wrap))}, coalesce({text}, 'null'), '}}')"
-        return None, F.expr(parsed_or_raise(spliced, f"concat('[', {text}, ']')", run[0].transform))
-    if isinstance(body[0], JvmPlan):
-        return tuple(F.expr(sql) for sql in jvm_step(body, text, ident(parsed), wrap))
-    return None, arrow_step(body, text, wrap)
+    if isinstance(run[0], ArrowPlan):
+        wrap = run[-1].field if isinstance(run[-1], Wrap) else None
+        return None, arrow_step(run[:-1] if wrap is not None else run, ident(target), wrap)
+    return tuple(F.expr(sql) for sql in jvm_step(run, ident(target), ident(parsed)))
 
 
 def _opening(field: str) -> str:
@@ -151,63 +150,66 @@ def _opening(field: str) -> str:
     return "{" + json.dumps(field) + ":"
 
 
-def jvm_step(run: Sequence[JvmPlan], text: str, parsed: str, wrap: str | None = None) -> tuple[str, str]:
-    """``to_json`` of the run's rebuilds over the JSON ``text``, parsed
-    once with the first plan's schema into the column ``parsed``; a run of
-    ``None`` rebuilds keeps the text. ``wrap`` puts the result under that
-    field. The parse has its own projection, so the rebuilds' fields share
-    one ``from_json`` (inline, each gets its own pruned parse). The
-    byte-prefix object test decides almost every record before the regex,
-    which copies the string (1M-record noop-sink run, 4 vCPUs: regex alone
-    ~4% of a drop's wall time, prefix-first none).
+def read(
+    text: str, parsed: str, transform: str, schema: StructType | None, doc: Callable[[str], str], null: str = "NULL"
+) -> tuple[str, str]:
+    """The one JSON reader of the JVM routes, for ``text`` (SQL of a
+    string): the parse, to be the column ``parsed`` (its own projection, so
+    the fields read off it share one ``from_json``; inline, each gets its
+    own pruned parse), and the checked value: ``null`` for SQL NULL, else
+    ``doc`` of the parsed value's SQL. With a ``schema`` the text must be
+    an object (:func:`not_json_object`) and is parsed with it; with none
+    any JSON value passes. The byte-prefix object test decides almost
+    every record before the regex, which copies the string (1M-record
+    noop-sink run, 4 vCPUs: regex alone ~4% of a drop's wall time).
 
-    The text is parsed spliced under a key and checked spliced into
-    ``[...]``, the two splices :func:`parsed_or_raise` checks for a wrap,
-    so text after the object (``{"a":1}}``, ``{"a":1}]``, ``{"a":1},1``)
-    is :func:`malformed_json`, as it is for ``json.loads``. The ``[...]``
-    check reads ``array<struct<>>``, which skips every field, where
-    ``array<string>`` would write each record back as text."""
-    head = run[0]
-    value = None
-    for p in run:
-        if p.rebuild is not None:
-            value = p.rebuild(Expr(f"{parsed}.{ident(_SPLICED)}", head.schema) if value is None else value)
-    doc = text if value is None else f"to_json({render(value)})"
-    orelse = ""
-    if wrap is not None:
-        doc = f"concat({lit(_opening(wrap))}, {doc}, '}}')"
-        orelse = f" ELSE {lit(_opening(wrap) + 'null}')}"
-    is_object = f"(startswith({text}, '{{') OR {text} RLIKE {lit(_OBJECT_REGEX)})"
-    listed = f"from_json(concat('[', {text}, ']'), 'array<struct<>>')"
-    malformed = f"({parsed}.{ident(CORRUPT)} IS NOT NULL OR {listed} IS NULL)"
+    The text is :func:`malformed_json` unless Spark's JSON reader, with
+    :data:`_OPTIONS`, reads two splices: under a key, with the schema (a
+    misfit sets the corrupt-record field), and in ``[...]`` as
+    ``array<struct<>>`` for an object (which skips every field) or
+    ``array<string>`` for any value. A reader stops at the end of the
+    first value, so text after it is seen only by the splice it leaves
+    unclosed: ``1}`` closes the object early but not the array, ``1]`` the
+    array but not the object. What passes is what ``json.loads`` reads:
+    no single quotes, while duplicate keys and NaN/Infinity pass."""
+    fields = [StructField(_SPLICED, schema)] if schema is not None else []
+    spliced = StructType([*fields, StructField(CORRUPT, StringType())])
+    parse = f"from_json(concat({lit(_opening(_SPLICED))}, {text}, '}}'), {lit(ddl(spliced))}, {_OPTIONS})"
+    items = "'array<string>'" if schema is None else "'array<struct<>>'"
+    listed = f"from_json(concat('[', {text}, ']'), {items}, {_OPTIONS})"
+    not_object = ""
+    if schema is not None:
+        is_object = f"(startswith({text}, '{{') OR {text} RLIKE {lit(_OBJECT_REGEX)})"
+        not_object = f"WHEN NOT {is_object} THEN raise_error({lit(not_json_object(transform))}) "
     checked = (
-        f"CASE WHEN {is_object} AND {malformed} THEN raise_error({lit(malformed_json(head.transform))}) "
-        f"WHEN {is_object} THEN {doc} "
-        f"WHEN {text} IS NOT NULL THEN raise_error({lit(not_json_object(head.transform))}){orelse} END"
-    )
-    spliced = StructType([StructField(_SPLICED, head.schema), StructField(CORRUPT, StringType())])
-    parse = (
-        f"from_json(concat({lit(_opening(_SPLICED))}, {text}, '}}'), {lit(ddl(spliced))}, "
-        f"map('columnNameOfCorruptRecord', {lit(CORRUPT)}))"
+        f"CASE WHEN {text} IS NULL THEN {null} {not_object}"
+        f"WHEN {parsed}.{ident(CORRUPT)} IS NOT NULL OR {listed} IS NULL "
+        f"THEN raise_error({lit(malformed_json(transform))}) "
+        f"ELSE {doc(f'{parsed}.{ident(_SPLICED)}')} END"
     )
     return parse, checked
 
 
-def parsed_or_raise(doc: str, listed: str, transform: str) -> str:
-    """``doc`` (JSON object text) when Spark's JSON reader parses both it
-    and ``listed`` (the spliced value in ``[...]``), else
-    :func:`malformed_json` — two tokenizing passes, no Python. A reader
-    stops at the end of the first value, so text after it is seen only by
-    the splice it leaves unclosed: ``1}`` closes the object early but not
-    the array, ``1]`` the array but not the object. Duplicate keys and
-    NaN/Infinity pass, as they do for ``json.loads``."""
-    strict = "'allowSingleQuotes', 'false'"
-    only_corrupt = lit(ddl(StructType([StructField(CORRUPT, StringType())])))
-    options = f"map('columnNameOfCorruptRecord', {lit(CORRUPT)}, {strict})"
-    corrupt = f"from_json({doc}, {only_corrupt}, {options}).{ident(CORRUPT)}"
-    as_array = f"from_json({listed}, 'array<string>', map({strict}))"
-    ok = f"{corrupt} IS NULL AND ({listed} IS NULL OR {as_array} IS NOT NULL)"
-    return f"CASE WHEN {ok} THEN {doc} ELSE raise_error({lit(malformed_json(transform))}) END"
+def jvm_step(run: Sequence[Plan], text: str, parsed: str) -> tuple[str, str]:
+    """:func:`read` of the JSON ``text`` into the column ``parsed`` for a
+    run of JVM plans, which an H1 wrap may end: ``to_json`` of the run's
+    rebuilds over the value parsed once with the first plan's schema (a
+    run of ``None`` rebuilds keeps the text), put under the wrap's field.
+    A wrap alone reads any value with no schema and splices the text."""
+    wrap = run[-1].field if isinstance(run[-1], Wrap) else None
+    body = run[:-1] if wrap is not None else run
+    schema = body[0].schema if body else None
+
+    def doc(v: str) -> str:
+        value = None
+        for p in body:
+            if p.rebuild is not None:
+                value = p.rebuild(Expr(v, schema) if value is None else value)
+        out = text if value is None else f"to_json({render(value)})"
+        return out if wrap is None else f"concat({lit(_opening(wrap))}, {out}, '}}')"
+
+    null = "NULL" if wrap is None else lit(_opening(wrap) + "null}")
+    return read(text, parsed, run[0].transform, schema, doc, null)
 
 
 def arrow_step(run: Sequence[ArrowPlan], text: str, wrap: str | None = None) -> Column:

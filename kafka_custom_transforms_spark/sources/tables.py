@@ -31,20 +31,6 @@ _TS_COLS: dict[str, tuple[str, ...]] = {
     "lineitem": ("l_shipdate",),
 }
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 # Schema cache for repeated reads of the same parquet path (r15
 # optimization, guide §6 driver-side metadata): ``spark.read.parquet``
 # re-reads the footer for schema inference on EVERY call — measured
@@ -112,6 +98,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

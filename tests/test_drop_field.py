@@ -82,6 +82,9 @@ _BAD_JSON = {
     '{"a":1},"x":1': malformed_json,
     '{"a":1},1': malformed_json,
     '{"a":1} 1': malformed_json,
+    # Single quotes, which json.loads rejects, on every path.
+    "{'a':1,'b':2}": malformed_json,
+    '{"a":1,"b":\'x\'}': malformed_json,
     _MISFIT: malformed_json,
 }
 

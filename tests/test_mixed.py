@@ -5,7 +5,9 @@ parity with the reference's per-record ``schema == null`` branch
 from __future__ import annotations
 
 import json
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_custom_transforms_spark import drop_fields, hoist_field, transform_chain
@@ -14,6 +16,7 @@ from kafka_custom_transforms_spark.operators.mixed import (
     mixed_smt,
     split_mixed,
 )
+from kafka_custom_transforms_spark.operators.schemaless import malformed_json, not_json_object
 
 
 def _chain():
@@ -79,3 +82,25 @@ def test_mixed_runs_on_stream(spark, tmp_path):
     q.awaitTermination()
     got = {r.id: r.value for r in spark.sql("select * from mixed_stream_t").collect()}
     assert got == {i: '{"payload":{"uid":%d}}' % i for i in range(4)}
+
+
+@pytest.mark.parametrize(
+    "value, error",
+    [
+        ('{"k":1,', malformed_json),
+        ("[1]", not_json_object),
+        ("{'k':1}", malformed_json),
+        ('{"k":"x","uid":5}', malformed_json),
+    ],
+)
+def test_split_mixed_reads_structured_json_like_the_schemaless_branch(spark, value, error):
+    """A structured record is read with the one checked JSON reader: text
+    that does not parse, is not an object, uses single quotes or does not
+    fit the schema raises the schemaless branch's error (it used to come
+    out as ``{}`` or lose the misfit field). The same text on a schemaless
+    row reaches ``_json`` unread, and SQL NULL passes through."""
+    split = split_mixed(target="value", is_structured=F.col("id") % 2 == 1, schema="k int, uid bigint")
+    with pytest.raises(Exception, match=re.escape(error("split_mixed"))):
+        split(spark.createDataFrame([(1, value)], "id long, value string")).collect()
+    rows = split(spark.createDataFrame([(0, value), (1, None), (0, None)], "id long, value string")).collect()
+    assert [(r.value_struct, r.value_json) for r in rows] == [(None, value), (None, None), (None, None)]

@@ -72,17 +72,6 @@ def test_frame_sample(docs):
     assert {r.doc_id for r in rows} == vids
 
 
-def test_resize_stub_plumbing(docs):
-    att = multimodal.attach_payload(docs)
-    out = multimodal.resize_images(att, width=128, height=128)
-    rows = out.collect()
-    assert len(rows) > 0
-    assert all(r.mime.startswith("image/") for r in rows)
-    assert all((r.out_width, r.out_height) == (128, 128) for r in rows)
-    n_images = att.filter(F.col("meta.mime") == "image/png").count()
-    assert len(rows) == n_images
-
-
 def test_bmp_decoder_parses_real_bytes(spark):
     """decode_bmp must read the actual pixel array: flipping ONE pixel byte
     (same length, same header) changes the decoded mean."""

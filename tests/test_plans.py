@@ -177,8 +177,12 @@ def test_smt_chain_build_round_trips(spark, monkeypatch):
     one SQL expression, so the build makes at most 300 py4j round trips
     (about 1,800 when every step composed PySpark Columns node by node,
     11-21 round trips per node). The struct column's drop and hoist are
-    one expression, so one Project."""
+    one expression, so one Project. Only the building thread's calls
+    count: py4j's finalizer thread sends the deletes of collected Java
+    objects in the background, several hundred during the build when
+    earlier tests left garbage."""
     import gc
+    import threading
 
     from py4j.java_gateway import GatewayClient
 
@@ -186,7 +190,14 @@ def test_smt_chain_build_round_trips(spark, monkeypatch):
     chain(df)  # the DDL strings' types are cached from here on
     calls = []
     send = GatewayClient.send_command
-    monkeypatch.setattr(GatewayClient, "send_command", lambda self, *a, **k: calls.append(1) or send(self, *a, **k))
+    building_thread = threading.get_ident()
+
+    def counted(self, *a, **k):
+        if threading.get_ident() == building_thread:
+            calls.append(1)
+        return send(self, *a, **k)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
     gc.collect()
     gc.disable()
     try:
