@@ -427,10 +427,9 @@ def _dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide 112-bit SimHash near-dup pairs: packed vote lanes, pigeonhole-exact banding (chunks > max hamming), Arrow-assembled signatures."""
-    # Wide (112-bit) signature: same result set as the 60-bit/hamming<=12
-    # configuration (sf0.01 measured gap: true pairs <= 13, nearest
-    # non-pair 34) with 7-bit slices instead of 4-bit — ~7.5x fewer random
-    # slice collisions feeding the banded join.
+    # 16 slices of 7 bits (sf0.01 measured gap: true pairs at hamming <= 13,
+    # nearest non-pair at 34); the chunks pin keeps the OR layout with no
+    # corpus-size estimate.
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_pairs_wide(docs, shingle_k=3, max_hamming=15, chunks=16)
 

@@ -3,7 +3,7 @@
 The reference SMT library has no notion of dedup at all (SURVEY.md §2.4);
 this is an engine-surface extension operator.  Every pairwise dedup
 operator in this package (``dedup.minhash_lsh_pairs``,
-``dedup.simhash_pairs``, ``dedup.ngram_jaccard_pairs``,
+``dedup.simhash_pairs_wide``, ``dedup.ngram_jaccard_pairs``,
 ``dedup.embedding_dup_pairs``) emits dup PAIRS — but a real training-data
 pipeline must resolve pairs into clusters and keep exactly one survivor
 per cluster, because near-duplication is transitive in practice (A~B and

@@ -17,17 +17,20 @@ Five families, each picked for a different scale/accuracy trade-off:
     rarest-first prefix is indexed and self-joined, which provably loses no
     pair at the threshold while removing hot-shingle quadratic fan-out;
     candidates are verified on the full sets. No cross join.
-  - :func:`simhash_pairs` — 60-bit SimHash over word shingles using the
-    md5-prefix hash (bit-identical in DuckDB, so the oracle can recompute
-    it), with pigeonhole banding: hamming distance <= t is *guaranteed* to
-    collide on at least one of c > t signature chunks, so banding loses no
-    recall — the banded plan is exactly equivalent to the O(n^2) scan.
+  - :func:`simhash_pairs_wide` — 112-bit SimHash over word shingles (both
+    56-bit halves of one md5 per shingle, bit-identical in DuckDB, so the
+    oracle can recompute it), with pigeonhole banding: hamming distance
+    <= t is *guaranteed* to collide on at least one of c > t signature
+    slices (or, above ~100k docs, on one of the slice pairs of c = t + 2
+    slices), so banding loses no recall — the banded plan is exactly
+    equivalent to the O(n^2) scan.
   - :func:`embedding_dup_pairs` — cosine near-duplicate pairs over an
     embedding column; an exact distributed block self-join up to 2M rows,
     SRP-LSH (random-hyperplane) bucketing from similarity.py above it.
 
 All pair outputs are (a_id, b_id) with a_id < b_id, integer-only — chosen so
 DuckDB oracles compare exactly (no float formatting in the hashed output).
+Every candidate generator's banded self-join is :func:`_colliding_pairs`.
 """
 
 from __future__ import annotations
@@ -48,7 +51,6 @@ from kafka_custom_transforms_spark.functions.texthash import (
     md5_56,
     md5_60,
     md5_hash56,
-    md5_hash60,
     minhash_perms,
     minhash_signature_map,
     tokens,
@@ -135,6 +137,25 @@ def _materialize(df: DataFrame, mode: str) -> DataFrame:
     if mode == "none":
         return df
     raise ValueError(f"checkpoint mode must be local|reliable|none, got {mode!r}")
+
+
+def _colliding_pairs(
+    rows: DataFrame, keys: list[str], keep: Column | None = None
+) -> DataFrame:
+    """The banded self-join: distinct (a_id, b_id), a_id < b_id, over the
+    ``id``s of ``rows`` that agree on every ``keys`` column. ``keep`` is an
+    optional extra predicate over the ``a.``/``b.`` sides, evaluated in the
+    join stage so only the pairs it keeps reach the distinct's shuffle."""
+    cond = F.col("a.id") < F.col("b.id")
+    if keep is not None:
+        cond = cond & keep
+    return (
+        rows.alias("a")
+        .join(rows.alias("b"), keys)
+        .filter(cond)
+        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
+        .distinct()
+    )
 
 
 def _text_fanout(
@@ -298,13 +319,7 @@ def minhash_lsh_pairs(
     buckets = sig.select(
         "id", F.explode(band_hashes(F.col("sig"), bands, r)).alias("b")
     ).select("id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    cand = (
-        buckets.alias("a")
-        .join(buckets.alias("b"), ["band", "bh"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .distinct()
-    )
+    cand = _colliding_pairs(buckets, ["band", "bh"])
     # No eager checkpoint of cand: it appears exactly ONCE in the verify
     # tree, and broadcast_cand evaluates it exactly once (the broadcast
     # exchange collects it from the checkpointed sig, never re-running
@@ -372,13 +387,7 @@ def prefix_filter_candidates(sets: DataFrame, threshold: float) -> DataFrame:
         .filter(F.col("rn") <= prefix_len)
         .select("id", "s")
     )
-    return (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "s")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .distinct()
-    )
+    return _colliding_pairs(prefix, ["s"])
 
 
 def _verify_jaccard(
@@ -424,93 +433,6 @@ def ngram_jaccard_pairs(
     sets = _materialize(shingle_sets(df, id_col, text_col, shingle_k), checkpoint)
     cand = prefix_filter_candidates(sets, threshold)
     return _verify_jaccard(sets, cand, threshold)
-
-
-def simhash_signatures(sets: DataFrame, bits: int = 60) -> DataFrame:
-    """(id, sig): SimHash over shingle sets using the oracle-reproducible
-    60-bit md5-prefix hash. Majority vote per bit; ties (sum == 0) vote 0.
-
-    Shaped as explode + per-bit SUM aggregates (not array-lambda folds) so
-    every expression stays inside whole-stage codegen; map-side partial
-    aggregation collapses the exploded rows before the single shuffle on id
-    — same scale shape as the MinHash signature plan.
-    """
-    hashes = sets.select("id", F.explode(F.col("sh")).alias("s")).select(
-        "id", md5_hash60(F.col("s")).alias("h")
-    )
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"c{b}")
-        for b in range(bits)
-    ]
-    agged = hashes.groupBy("id").agg(*votes)
-    sig = functools.reduce(
-        lambda acc, b: acc.bitwiseOR(
-            F.when(F.col(f"c{b}") > 0, F.lit(2 ** b).cast("long")).otherwise(F.lit(0).cast("long"))
-        ),
-        range(bits),
-        F.lit(0).cast("long"),
-    )
-    return agged.select("id", sig.alias("sig"))
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    bits: int = 60,
-    max_hamming: int = 5,
-    chunks: int = 10,
-    checkpoint: str = "local",
-) -> DataFrame:
-    """Pairs with SimHash hamming distance <= max_hamming.
-
-    Pigeonhole banding: the 60-bit signature is split into ``chunks`` equal
-    slices; two signatures within hamming t < chunks must agree on at least
-    one slice, so an equi-join on (chunk_idx, slice_value) finds *all* such
-    pairs — banding is exact here, not approximate. Candidates are then
-    filtered on true hamming distance. DuckDB oracle recomputes the identical
-    signature (md5-prefix hash) and brute-forces all pairs.
-    """
-    if max_hamming >= chunks:
-        raise ValueError("pigeonhole requires max_hamming < chunks")
-    if bits % chunks:
-        raise ValueError("bits must be divisible by chunks")
-    w = bits // chunks
-    mask = (1 << w) - 1
-    sets = shingle_sets(df, id_col, text_col, shingle_k)
-    # Materialize the signatures (one small row per doc): both sides of the
-    # banded self-join would otherwise recompute the explode+agg pipeline.
-    sigs = _materialize(simhash_signatures(sets, bits), checkpoint)
-    slices = sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("sig"), c * w).bitwiseAND(F.lit(mask)).alias("sv"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("cs"),
-    ).select("id", "sig", F.col("cs.chunk").alias("chunk"), F.col("cs.sv").alias("sv"))
-    # The hamming filter runs INSIDE the join stage (codegen, no
-    # materialization) so only true near-dup pairs reach the distinct's
-    # shuffle — with narrow slices the raw join fan-out is large and would
-    # otherwise dominate the query.
-    ham = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
-    return (
-        slices.alias("a")
-        .join(slices.alias("b"), ["chunk", "sv"])
-        .filter((F.col("a.id") < F.col("b.id")) & (ham <= F.lit(max_hamming)))
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .distinct()
-    )
 
 
 # Wide SimHash: both halves of one md5 per shingle, as two 56-bit longs.
@@ -565,7 +487,7 @@ def _simhash_text_sig_udf(k: int):
 def simhash_signatures_wide(sets: DataFrame) -> DataFrame:
     """(id, sig0, sig1): a 112-bit SimHash as two 56-bit longs, oracle-
     reproducible (both halves of ONE md5 per shingle — md5 yields 128 bits,
-    of which the 60-bit signature wasted half). The wide signature's purpose
+    of which a 60-bit prefix would waste half). The wide signature's purpose
     is scale: at the same RELATIVE hamming threshold, doubling the bits
     doubles the exact-pigeonhole chunk budget, so slices widen from 4 to
     7-8 bits and random slice collisions — the banded join's fan-out driver
@@ -643,22 +565,28 @@ def simhash_signatures_wide(sets: DataFrame) -> DataFrame:
     )
 
 
-def _and_band_layout(total_bits: int, bits_per_long: int, chunks: int) -> list:
-    """Partition ``total_bits`` into ``chunks`` contiguous slices that never
-    span a long boundary: (long_idx, shift, width) per slice.  Slice counts
-    are split across longs proportionally, widths as evenly as the per-long
-    budget allows — pigeonhole needs disjoint coverage, not equal widths."""
-    n_longs = total_bits // bits_per_long
-    if chunks < n_longs:
+def _band_layout(chunks: int) -> list:
+    """Partition the 112 signature bits into ``chunks`` contiguous slices
+    that never span a long boundary: (long_idx, shift, width) per slice.
+    Slice counts are split across longs as evenly as possible, widths as
+    evenly as the per-long budget allows — pigeonhole needs disjoint
+    coverage, not equal widths."""
+    if chunks < N_LONGS:
         raise ValueError(
-            f"_and_band_layout: need at least one slice per signature long "
-            f"(chunks={chunks} < n_longs={n_longs})"
+            f"_band_layout: need at least one slice per signature long "
+            f"(chunks={chunks} < n_longs={N_LONGS})"
         )
-    base, extra = divmod(chunks, n_longs)
+    if chunks > N_LONGS * BITS_PER_LONG:
+        # a zero-width slice matches every pair: a silent all-pairs join
+        raise ValueError(
+            f"_band_layout: a slice needs at least one bit "
+            f"(chunks={chunks} > {N_LONGS * BITS_PER_LONG} signature bits)"
+        )
+    base, extra = divmod(chunks, N_LONGS)
     out = []
-    for li in range(n_longs):
+    for li in range(N_LONGS):
         n_slices = base + (1 if li < extra else 0)
-        wbase, wextra = divmod(bits_per_long, n_slices)
+        wbase, wextra = divmod(BITS_PER_LONG, n_slices)
         off = 0
         for s in range(n_slices):
             wdt = wbase + (1 if s < wextra else 0)
@@ -683,11 +611,11 @@ AND_BAND_CROSSOVER = 100_000
 _EST_DOC_ROW_BYTES = 256
 
 
-def _estimate_rows(df: DataFrame, assumed_row_bytes: int = _EST_DOC_ROW_BYTES) -> int | None:
+def _estimate_rows(df: DataFrame) -> int | None:
     """Corpus-size estimate from plan statistics (:func:`plan_bytes`, no
     Spark job). None when the statistics are unknown."""
     size = plan_bytes(df)
-    return None if size is None else size // max(assumed_row_bytes, 1)
+    return None if size is None else size // _EST_DOC_ROW_BYTES
 
 
 def simhash_pairs_wide(
@@ -699,70 +627,50 @@ def simhash_pairs_wide(
     chunks: int | None = None,
     checkpoint: str = "local",
     shingler: str = "arrow",
-    band_and: int | None = None,
-    n_rows: int | None = None,
 ) -> DataFrame:
-    """Pairs with wide-SimHash hamming distance <= max_hamming — the scale
-    variant of :func:`simhash_pairs` (SCALE.md: wide signatures cut slice-
-    collision fan-out).
+    """Pairs with SimHash hamming distance <= max_hamming (SCALE.md: wide
+    signatures cut slice-collision fan-out).
 
     112-bit signature (both md5 halves as 56-bit longs) with exact pigeonhole
-    banding: ``chunks`` slices, hamming <= max_hamming < chunks guarantees
-    agreement on >= 1 slice. At the defaults the slices are 7 bits wide
-    (vs 4 bits for the 60-bit/15-chunk configuration at the same relative
+    banding: ``chunks`` slices (:func:`_band_layout`), hamming <= max_hamming
+    < chunks guarantees agreement on >= 1 slice. At the defaults the slices
+    are 7 bits wide (vs 4 bits for a 60-bit signature at the same relative
     threshold), so a random pair collides on some slice far less often.
     Measured at sf0.1 (5000 docs): banded-join fan-out drops 7.2x (24.1M ->
     3.36M joined rows; max bucket 471 -> 85). Wall time at sf0.1 is parity
     (~9s both) because fixed costs — shingling, md5, codegen compile —
     dominate 5000 docs; the fan-out term grows with n^2/2^w while every
     fixed cost grows with n, so the 7.2x is what survives at corpus scale.
-    The sf0.01 corpus margin is wide (true pairs at hamming <= 13, nearest
-    non-pair at 34), so max_hamming=15 reproduces the 60-bit result set
-    there exactly.
 
-    ``band_and=2`` is the corpus-scale dial for the SAME result set: band on
-    all C(c,2) chunk PAIRS with c = max_hamming + 2 slices, so hamming <=
-    c-2 = max_hamming still pigeonhole-guarantees a matching band — recall
-    stays exact while a random collision needs ~13 agreeing bits instead
-    of 7.  Measured on the decorrelated x30 stress replica (150k docs,
-    r11): candidate tuples drop 1.45B -> 197M (7.4x, and the ratio is a
-    constant factor on the n^2 term) for an 8.5x LINEAR band-row cost
-    (2.4M -> 20.4M rows).
-
-    ``band_and=None`` (the default) auto-dispatches on the corpus size —
-    the same promote-the-measured-crossover move :func:`plan_srp_lsh` made
-    for the SRP quadratic, so a caller at 1M docs no longer needs to read
-    this docstring to avoid the OR-banding n^2 collision term: AND banding
-    above :data:`AND_BAND_CROSSOVER` (measured ~100k docs: loses 2.1x at
-    50k to the 136-struct band explode, wins 1.4x at 150k, widening with
-    n), OR banding below it.  ``n_rows`` supplies a known corpus size;
-    when absent the size is ESTIMATED from plan statistics with no Spark
-    job (:func:`_estimate_rows` — safe because both layouts produce the
-    identical pair set, so a misestimate costs only the bounded AND
-    overhead), and only a stats-less plan (mapInPandas-backed input,
-    UNKNOWN sentinel) pays one count() job at plan-construction time —
-    the documented last resort.  Pinning ``chunks`` pins the OR layout
-    (chunk count is meaningless under AND banding), so it also pins
-    band_and=1 with no job of any kind — the registry row at 5k docs does
-    exactly that.  Explicit ``band_and`` overrides everything.
+    Large corpora band on slice PAIRS instead (AND banding) for the SAME
+    result set: all C(c,2) pairs of c = max_hamming + 2 slices, so hamming
+    <= c-2 = max_hamming still pigeonhole-guarantees a matching band while
+    a random collision needs ~13 agreeing bits instead of 7. Measured on
+    the decorrelated x30 stress replica (150k docs, r11): candidate tuples
+    drop 1.45B -> 197M (7.4x, a constant factor on the n^2 term) for an
+    8.5x LINEAR band-row cost (2.4M -> 20.4M rows). The layout follows the
+    corpus size: AND at or above :data:`AND_BAND_CROSSOVER` (measured ~100k
+    docs: loses 2.1x at 50k to the 136-struct band explode, wins 1.4x at
+    150k, widening with n), OR with 16 slices below it. The size is
+    ESTIMATED from plan statistics with no Spark job (:func:`_estimate_rows`
+    — safe because both layouts produce the identical pair set, so a
+    misestimate costs only the bounded AND overhead); only a stats-less
+    plan (UNKNOWN sentinel) pays one count() job at plan-construction time.
+    Pinning ``chunks`` pins the OR layout with no job of any kind — the
+    registry row at 5k docs does exactly that.
     """
-    if band_and is None:
-        if chunks is not None:
-            band_and = 1  # an explicit OR-band layout is a band_and=1 pin
-        else:
-            n = n_rows if n_rows is not None else _estimate_rows(df)
-            if n is None:
-                n = df.count()  # stats-less plan: the documented last resort
-            band_and = 2 if n >= AND_BAND_CROSSOVER else 1
-    if band_and not in (1, 2):
-        raise ValueError("band_and must be 1 (OR banding) or 2 (chunk-pair AND banding)")
-    if band_and == 2 and chunks is not None:
-        raise ValueError(
-            "chunks is not used with band_and=2 (the slice count is fixed at "
-            "c = max_hamming + 2 to keep the pigeonhole guarantee tight)"
-        )
     if chunks is None:
-        chunks = 16
+        n = _estimate_rows(df)
+        if n is None:
+            n = df.count()  # stats-less plan: the documented last resort
+        # A band is `width` slices. AND: max_hamming flipped bits leave two
+        # of c = max_hamming + 2 slices intact, so some slice pair matches.
+        width, c = (2, max_hamming + 2) if n >= AND_BAND_CROSSOVER else (1, 16)
+    else:
+        width, c = 1, chunks
+    if width == 1 and max_hamming >= c:
+        raise ValueError("pigeonhole requires max_hamming < chunks")
+    layout = _band_layout(c)
     # Signature form: 'arrow' fuses tokenize + shingle + md5 + votes into
     # ONE Arrow pass (r16, guide §4.1/§4.2 — the split chain crossed the
     # Python boundary twice with an interpreted per-shingle md5 HOF
@@ -793,75 +701,36 @@ def simhash_pairs_wide(
         F.bit_count(F.col(f"a.{sig_names[0]}").bitwiseXOR(F.col(f"b.{sig_names[0]}"))),
     )
 
-    if band_and == 2:
-        # c slices such that missing up to max_hamming of them still leaves
-        # TWO intact: hamming <= c-2 <=> some chunk-pair band matches.
-        c = max_hamming + 2
-        layout = _and_band_layout(BITS_PER_LONG * N_LONGS, BITS_PER_LONG, c)
-        sv = [
-            F.shiftright(F.col(f"sig{li}"), off).bitwiseAND(F.lit((1 << wdt) - 1))
-            for li, off, wdt in layout
-        ]
-        # The two slice values stay SEPARATE join columns: packing them into
-        # one long (sv_i * 2^max_w + sv_j) overflows 64 bits whenever a slice
-        # is >= 32 bits wide (small max_hamming -> few, wide slices), which
-        # ANSI mode turns into a runtime SparkArithmeticException.
-        bands = sigs.select(
-            "id",
-            *sig_names,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i * c + j).alias("chunk"),
-                            sv[i].alias("sv"),
-                            sv[j].alias("sv2"),
-                        )
-                        for i, j in itertools.combinations(range(c), 2)
-                    ]
-                )
-            ).alias("cs"),
-        ).select(
-            "id", *sig_names,
-            F.col("cs.chunk").alias("chunk"),
-            F.col("cs.sv").alias("sv"),
-            F.col("cs.sv2").alias("sv2"),
-        )
-    else:
-        if max_hamming >= chunks:
-            raise ValueError("pigeonhole requires max_hamming < chunks")
-        if chunks % N_LONGS or BITS_PER_LONG % (chunks // N_LONGS):
-            raise ValueError("chunks must split evenly across the signature longs")
-        per_long = chunks // N_LONGS
-        w = BITS_PER_LONG // per_long
-        mask = (1 << w) - 1
-        bands = sigs.select(
-            "id",
-            *sig_names,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i * per_long + cc).alias("chunk"),
-                            F.shiftright(F.col(f"sig{i}"), cc * w)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("sv"),
-                        )
-                        for i in range(N_LONGS)
-                        for cc in range(per_long)
-                    ]
-                )
-            ).alias("cs"),
-        ).select("id", *sig_names, F.col("cs.chunk").alias("chunk"), F.col("cs.sv").alias("sv"))
-
-    join_keys = ["chunk", "sv", "sv2"] if band_and == 2 else ["chunk", "sv"]
-    return (
-        bands.alias("a")
-        .join(bands.alias("b"), join_keys)
-        .filter((F.col("a.id") < F.col("b.id")) & (ham <= F.lit(max_hamming)))
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .distinct()
+    sv = [
+        F.shiftright(F.col(f"sig{li}"), off).bitwiseAND(F.lit((1 << wdt) - 1))
+        for li, off, wdt in layout
+    ]
+    # A band's slice values stay SEPARATE join columns: packing a pair into
+    # one long (sv_i * 2^max_w + sv_j) overflows 64 bits whenever a slice
+    # is >= 32 bits wide (small max_hamming -> few, wide slices), which
+    # ANSI mode turns into a runtime SparkArithmeticException.
+    sv_names = ["sv", "sv2"][:width]
+    bands = sigs.select(
+        "id",
+        *sig_names,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(chunk).alias("chunk"),
+                        *[sv[i].alias(name) for i, name in zip(band, sv_names)],
+                    )
+                    for chunk, band in enumerate(itertools.combinations(range(c), width))
+                ]
+            )
+        ).alias("cs"),
+    ).select(
+        "id",
+        *sig_names,
+        F.col("cs.chunk").alias("chunk"),
+        *[F.col(f"cs.{name}").alias(name) for name in sv_names],
     )
+    return _colliding_pairs(bands, ["chunk", *sv_names], ham <= F.lit(max_hamming))
 
 
 def _derive_n_blocks(
@@ -1100,13 +969,7 @@ def embedding_dup_pairs(
         buckets = hyperplane_buckets(
             df, dim, id_col, vec_col, tables=lsh_tables, bits_per_table=lsh_bits
         )
-        cand = (
-            buckets.alias("a")
-            .join(buckets.alias("b"), ["table", "bucket"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-            .distinct()
-        )
+        cand = _colliding_pairs(buckets, ["table", "bucket"])
         verified = (
             cand.join(vecs.select(F.col("id").alias("a_id"), F.col("v").alias("va")), "a_id")
             .join(vecs.select(F.col("id").alias("b_id"), F.col("v").alias("vb")), "b_id")

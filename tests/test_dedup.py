@@ -87,24 +87,6 @@ def test_minhash_equals_exact_jaccard(docs):
     assert len(lsh) > 0  # corpus has planted near-dups
 
 
-def test_simhash_banding_is_exhaustive(docs):
-    """Pigeonhole banding (chunks > max_hamming) must find exactly the
-    brute-force pair set."""
-    banded = _pairs(dedup.simhash_pairs(docs, max_hamming=12, chunks=15))
-    # brute force: all-pairs hamming over collected signatures
-    sets = dedup.shingle_sets(docs, "doc_id", "text", 3)
-    sigs = {r.id: r.sig for r in dedup.simhash_signatures(sets).collect()}
-    ids = sorted(sigs)
-    brute = sorted(
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if bin(sigs[a] ^ sigs[b]).count("1") <= 12
-    )
-    assert banded == brute
-    assert len(banded) > 0
-
-
 def test_embedding_methods_agree(emb):
     """Both exact embedding-dedup paths must produce the identical pair set:
     the distributed block self-join (default) and the pure-JVM join, the
@@ -361,8 +343,9 @@ def test_checkpoint_modes_agree(spark, docs, tmp_path):
     base = _pairs(dedup.minhash_lsh_pairs(docs, checkpoint="local"))
     assert _pairs(dedup.minhash_lsh_pairs(docs, checkpoint="reliable")) == base
     assert _pairs(dedup.minhash_lsh_pairs(docs, checkpoint="none")) == base
-    sh_base = _pairs(dedup.simhash_pairs(docs, checkpoint="local"))
-    assert _pairs(dedup.simhash_pairs(docs, checkpoint="reliable")) == sh_base
+    sh_base = _pairs(dedup.simhash_pairs_wide(docs, chunks=16, checkpoint="local"))
+    for mode in ("reliable", "none"):
+        assert _pairs(dedup.simhash_pairs_wide(docs, chunks=16, checkpoint=mode)) == sh_base
     with pytest.raises(ValueError, match="checkpoint mode"):
         dedup.minhash_lsh_pairs(docs, checkpoint="bogus")
 
@@ -370,11 +353,6 @@ def test_checkpoint_modes_agree(spark, docs, tmp_path):
 def test_minhash_validates_config(docs):
     with pytest.raises(ValueError, match="divisible"):
         dedup.minhash_lsh_pairs(docs, num_perm=100, bands=32)
-
-
-def test_simhash_validates_config(docs):
-    with pytest.raises(ValueError, match="pigeonhole"):
-        dedup.simhash_pairs(docs, max_hamming=15, chunks=15)
 
 
 def test_minhash_expression_variant_matches_agg(spark):
@@ -595,13 +573,16 @@ def test_input_nonempty_signatures_identical_and_single_shingle_eval(
     assert n_arrow(single) == n_arrow(dup) - 1
 
 
-def test_simhash_wide_banding_is_exhaustive(docs):
+@pytest.mark.parametrize("max_hamming,chunks", [(15, 16), (12, 15)])
+def test_simhash_wide_banding_is_exhaustive(docs, max_hamming, chunks):
     """Wide (2x56-bit) pigeonhole banding must equal brute force over the
-    collected wide signatures (the exactness guarantee; agreement with the
-    60-bit pair set is data-dependent on borderline pairs — the wide
-    signature is the better hamming estimator of the two — so it is not
-    asserted; the oracle recomputes the wide configuration bit-identically)."""
-    banded = _pairs(dedup.simhash_pairs_wide(docs, max_hamming=15, chunks=16))
+    collected wide signatures (the exactness guarantee; the oracle
+    recomputes the wide configuration bit-identically). An uneven chunk
+    count (15 = 8 + 7 slices of 7 and 8 bits) is as exact as an even one:
+    pigeonhole needs disjoint coverage, not equal widths."""
+    banded = _pairs(
+        dedup.simhash_pairs_wide(docs, max_hamming=max_hamming, chunks=chunks)
+    )
     sets = dedup.shingle_sets(docs, "doc_id", "text", 3)
     sigs = {
         (r.id): (r.sig0, r.sig1)
@@ -614,7 +595,7 @@ def test_simhash_wide_banding_is_exhaustive(docs):
         for b in ids[i + 1 :]
         if bin(sigs[a][0] ^ sigs[b][0]).count("1")
         + bin(sigs[a][1] ^ sigs[b][1]).count("1")
-        <= 15
+        <= max_hamming
     )
     assert banded == brute
     assert len(banded) > 0
@@ -623,36 +604,40 @@ def test_simhash_wide_banding_is_exhaustive(docs):
 def test_simhash_wide_validates_config(docs):
     with pytest.raises(ValueError, match="pigeonhole"):
         dedup.simhash_pairs_wide(docs, max_hamming=16, chunks=16)
-    with pytest.raises(ValueError, match="split evenly"):
-        dedup.simhash_pairs_wide(docs, max_hamming=10, chunks=15)
-    with pytest.raises(ValueError, match="band_and"):
-        dedup.simhash_pairs_wide(docs, band_and=3)
 
 
-def test_simhash_wide_and_banding_same_pairs(docs):
-    """band_and=2 (chunk-pair AND banding, the corpus-scale dial) must
-    return EXACTLY the OR-banding pair set: c = max_hamming + 2 slices
-    keeps the pigeonhole guarantee tight (hamming <= c-2), so recall is
-    exact by construction, not by data margin."""
-    or_pairs = _pairs(dedup.simhash_pairs_wide(docs, max_hamming=15, chunks=16))
-    and_pairs = _pairs(dedup.simhash_pairs_wide(docs, max_hamming=15, band_and=2))
+def _or_and_pairs(docs, monkeypatch, max_hamming):
+    """Pair sets of the OR plan (crossover above any corpus) and the AND
+    plan (crossover 0) of the same configuration."""
+    monkeypatch.setattr(dedup, "AND_BAND_CROSSOVER", 10**18)
+    or_pairs = _pairs(dedup.simhash_pairs_wide(docs, max_hamming=max_hamming))
+    monkeypatch.setattr(dedup, "AND_BAND_CROSSOVER", 0)
+    and_pairs = _pairs(dedup.simhash_pairs_wide(docs, max_hamming=max_hamming))
+    return or_pairs, and_pairs
+
+
+def test_simhash_wide_and_banding_same_pairs(docs, monkeypatch):
+    """Chunk-pair AND banding (the corpus-scale layout) must return EXACTLY
+    the OR-banding pair set: c = max_hamming + 2 slices keeps the
+    pigeonhole guarantee tight (hamming <= c-2), so recall is exact by
+    construction, not by data margin."""
+    or_pairs, and_pairs = _or_and_pairs(docs, monkeypatch, 15)
     assert and_pairs == or_pairs
     assert len(and_pairs) > 0
 
 
-def test_simhash_wide_and_banding_wide_slices_no_overflow(docs):
+def test_simhash_wide_and_banding_wide_slices_no_overflow(docs, monkeypatch):
     """max_hamming=1 gives c=3 slices up to 56 bits wide: the band keys must
     join as two separate columns (a packed sv_i*2^w + sv_j key overflows
     64 bits under ANSI mode for any slice >= 32 bits). Equality with the
     OR form still holds at this threshold."""
-    or_pairs = _pairs(dedup.simhash_pairs_wide(docs, max_hamming=1, chunks=16))
-    and_pairs = _pairs(dedup.simhash_pairs_wide(docs, max_hamming=1, band_and=2))
+    or_pairs, and_pairs = _or_and_pairs(docs, monkeypatch, 1)
     assert and_pairs == or_pairs
 
 
-def test_simhash_wide_band_and_auto_dispatch(docs):
-    """band_and=None must dispatch on the corpus size at the measured
-    ~100k-doc crossover (AND_BAND_CROSSOVER): below it the OR-banding plan
+def test_simhash_wide_band_and_auto_dispatch(docs, monkeypatch):
+    """Without a chunks pin the layout follows the corpus size at
+    AND_BAND_CROSSOVER (measured ~100k docs): below it the OR-banding plan
     (no sv2 join column), at/above it the chunk-pair AND plan (sv2
     present) — and the dispatched AND plan still returns EXACTLY the OR
     pair set. Pinning chunks pins the OR layout regardless of size (chunk
@@ -661,23 +646,19 @@ def test_simhash_wide_band_and_auto_dispatch(docs):
     def plan(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
-    lo = dedup.simhash_pairs_wide(
-        docs, max_hamming=15, n_rows=dedup.AND_BAND_CROSSOVER - 1
-    )
-    hi = dedup.simhash_pairs_wide(
-        docs, max_hamming=15, n_rows=dedup.AND_BAND_CROSSOVER
-    )
+    # the real crossover: the tiny corpus, estimated from plan statistics
+    # (no count job), bands OR
+    assert "sv2" not in plan(dedup.simhash_pairs_wide(docs, max_hamming=15))
+    est = dedup._estimate_rows(docs)
+    monkeypatch.setattr(dedup, "AND_BAND_CROSSOVER", est + 1)
+    lo = dedup.simhash_pairs_wide(docs, max_hamming=15)
+    monkeypatch.setattr(dedup, "AND_BAND_CROSSOVER", est)
+    hi = dedup.simhash_pairs_wide(docs, max_hamming=15)
     assert "sv2" not in plan(lo)
     assert "sv2" in plan(hi)
     assert _pairs(hi) == _pairs(lo)  # dispatch changes the plan, never the pairs
     # chunks pin -> OR layout even above the crossover
-    pinned = dedup.simhash_pairs_wide(
-        docs, max_hamming=15, chunks=16, n_rows=10 * dedup.AND_BAND_CROSSOVER
-    )
-    assert "sv2" not in plan(pinned)
-    # auto without n_rows estimates the tiny corpus from plan statistics
-    # (no count job) -> OR banding
-    assert "sv2" not in plan(dedup.simhash_pairs_wide(docs, max_hamming=15))
+    assert "sv2" not in plan(dedup.simhash_pairs_wide(docs, max_hamming=15, chunks=16))
 
 
 def test_estimate_rows_uses_plan_statistics(docs, spark):
@@ -695,13 +676,14 @@ def test_estimate_rows_uses_plan_statistics(docs, spark):
     assert dedup._estimate_rows(statless) is None
 
 
-def test_simhash_wide_and_banding_rejects_chunks(docs):
-    """band_and=2 fixes the slice count at c = max_hamming + 2; a
-    user-supplied chunks value must raise, not be silently ignored."""
-    with pytest.raises(ValueError, match="chunks is not used"):
-        dedup.simhash_pairs_wide(docs, max_hamming=15, chunks=16, band_and=2)
+def test_simhash_wide_and_banding_rejects_chunks():
+    """The band layout needs at least one slice per signature long and at
+    least one bit per slice (a zero-width slice would match every pair)."""
     with pytest.raises(ValueError, match="at least one slice per signature long"):
-        dedup._and_band_layout(112, 56, 1)
+        dedup._band_layout(1)
+    with pytest.raises(ValueError, match="at least one bit"):
+        dedup._band_layout(113)
+    assert min(wdt for _, _, wdt in dedup._band_layout(112)) == 1
 
 
 def test_and_band_layout_covers_bits_disjointly():
@@ -710,7 +692,7 @@ def test_and_band_layout_covers_bits_disjointly():
     hence a matching band — for ANY 15-bit corruption."""
     import random
 
-    layout = dedup._and_band_layout(112, 56, 17)
+    layout = dedup._band_layout(17)
     assert len(layout) == 17
     per_long = {}
     for li, off, wdt in layout:
@@ -829,6 +811,7 @@ def test_duplicate_spans_window_hashes_match_spec(spark, sf_dir):
     spec (md5_hash60 of every k-token window, [] under k tokens or on
     null) on real corpus text plus null and sub-k documents, and the
     operator must give null text (0 spans, 0 dups) rather than crash."""
+    from kafka_custom_transforms_spark.functions.texthash import md5_hash60
     from kafka_custom_transforms_spark.sources.tables import load_table
 
     k = 8
@@ -844,7 +827,7 @@ def test_duplicate_spans_window_hashes_match_spec(spark, sf_dir):
         n >= k,
         F.transform(
             F.sequence(F.lit(1), n - k + 1),
-            lambda i: dedup.md5_hash60(F.concat_ws(" ", F.slice(toks, i, k))),
+            lambda i: md5_hash60(F.concat_ws(" ", F.slice(toks, i, k))),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     both = docs.select(
@@ -1019,7 +1002,7 @@ def test_and_band_layout_pigeonhole_property():
     rng = random.Random(11)
     for mh in range(1, 21):
         c = mh + 2
-        layout = dedup._and_band_layout(112, 56, c)
+        layout = dedup._band_layout(c)
         assert len(layout) == c
         per_long: dict[int, int] = {}
         for li, off, wdt in layout:
@@ -1066,6 +1049,7 @@ def test_minhash_store_fused_matches_jvm(spark, sf_dir):
     per-permutation min aggregates) on real corpus text plus null and
     sub-k documents — same ids kept (>= k tokens), same 32-long
     signatures."""
+    from kafka_custom_transforms_spark.functions.texthash import md5_hash60
     from kafka_custom_transforms_spark.sources.tables import load_table
 
     extra = spark.createDataFrame(
@@ -1077,7 +1061,7 @@ def test_minhash_store_fused_matches_jvm(spark, sf_dir):
     p = F.lit(dedup.MERSENNE_P)
     sets = dedup.shingle_sets(docs, "doc_id", "text", 3, shingler="jvm")
     exploded = sets.select(
-        "id", F.explode(F.transform("sh", lambda s: F.pmod(dedup.md5_hash60(s), p))).alias("h")
+        "id", F.explode(F.transform("sh", lambda s: F.pmod(md5_hash60(s), p))).alias("h")
     )
     perms = dedup.minhash_perms(32, 42)
     mins = [

@@ -256,6 +256,25 @@ def test_ngram_jaccard_has_no_cross_join(spark, sf_dir):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
+def test_dedup_simhash_is_one_banded_self_join(spark, sf_dir):
+    """The benchmarked dedup_simhash row pins chunks=16, so it bands OR:
+    its physical plan holds ONE join, an equi-join on (chunk, sv) whose
+    own condition evaluates the hamming predicate (only true pairs reach
+    the distinct's shuffle), and no AND-band sv2 key anywhere."""
+    import re
+
+    q = entry_mod.queries()["dedup_simhash"](spark, sf_dir)
+    plan = q._jdf.queryExecution().sparkPlan().toString()
+    joins = re.findall(r"\w*(?:Join|CartesianProduct)\b.*", plan)
+    assert len(joins) == 1, plan
+    keys = re.match(r"\w+ \[([^\]]*)\], \[([^\]]*)\], Inner, (.*)", joins[0])
+    assert keys, joins[0]
+    for side in keys.group(1, 2):
+        assert re.sub(r"#\d+L?", "", side) == "chunk, sv", joins[0]
+    assert re.search(r"bit_count\(.*\) <= 15\)", keys.group(3)), joins[0]
+    assert "sv2" not in plan
+
+
 def test_topn_pagination_is_take_ordered(spark, sf_dir):
     """Pagination must be two-phase top-k: the full-table sort compiles to
     TakeOrderedAndProject (per-partition top-N, bounded merge), and the only
